@@ -43,7 +43,9 @@ _MAT_RETAIN = 2
 #: invocation.  The memo holds METADATA only (the StructType the artifact's
 #: own writer produced — artifact schemas are fixed shapes in this
 #: codebase); the data itself is re-read from parquet on every execution,
-#: so no result ever crosses invocations.
+#: so no result ever crosses invocations.  ``parts.swap_dir`` (the only
+#: place a live artifact tree is replaced) drops the entries under the
+#: swapped path, so a rebuilt artifact with a new shape is re-inferred.
 _ARTIFACT_SCHEMAS: dict[tuple[int, str], object] = {}
 
 

@@ -455,19 +455,22 @@ _CLUSTER_COLLECT_CAP = 65536
 
 
 def _numeric_or_string(dtype) -> bool:
-    from pyspark.sql.types import NumericType, StringType
+    """Id types whose Python ordering equals Spark's ``MIN``: integers, and
+    strings (UTF-8 byte order is code-point order).  Floats stay out: NaN
+    compares false in Python but is the largest value to Spark."""
+    from pyspark.sql.types import IntegralType, StringType
 
-    return isinstance(dtype, (NumericType, StringType))
+    return isinstance(dtype, (IntegralType, StringType))
 
 
 def _dup_clusters_driver(spark, rows, id_type) -> DataFrame:
     """Union-find over the collected edge list; returns the identical
     ``(doc_id, cluster_id)`` relation min-label propagation converges to.
     Path-compressed find + union-by-attachment to the smaller label keeps
-    it O(E·α); cluster_id is the MIN member per component — for numeric ids
-    Python ``min`` is SQL ``MIN``, and for ASCII string ids Python's
-    code-point order equals Spark's binary UTF-8 order (non-ASCII ids take
-    the distributed path via :func:`_numeric_or_string` gating by the
+    it O(E·α); cluster_id is the MIN member per component — for integer ids
+    Python ``min`` is SQL ``MIN``, and for string ids (ASCII or not)
+    Python's code-point order equals Spark's binary UTF-8 order.  Other id
+    types take the distributed path (:func:`_numeric_or_string` gates the
     caller)."""
     from pyspark.sql.types import StructField, StructType
 

@@ -22,6 +22,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from qradar_restapi_kafka_datapipeline_spark.parts import epochs
+
 
 def compact_rollup(
     spark: SparkSession,
@@ -79,15 +81,6 @@ def _count_files(root: str) -> int:
     return n
 
 
-def _count_epochs(root: str) -> int:
-    import os
-
-    try:
-        return sum(1 for d in os.listdir(root) if d.startswith("epoch="))
-    except FileNotFoundError:
-        return 0
-
-
 def index_debt_report(spark: SparkSession, path: str, kind: str) -> dict:
     """Measure a maintained index artifact's compaction debt.
 
@@ -138,8 +131,8 @@ def index_debt_report(spark: SparkSession, path: str, kind: str) -> dict:
     tomb_path = f"{path}/tombstones" if kind != "parts" else ""
     n_files = sum(_count_files(d) for d in data_dirs)
     n_stream_epochs = (
-        _count_epochs(os.path.join(path, stream)) if stream else
-        _count_epochs(path) if kind == "parts" else 0
+        len(epochs(spark, os.path.join(path, stream))) if stream else
+        len(epochs(spark, path)) if kind == "parts" else 0
     )
     total = rel.count()
     masked = 0

@@ -735,65 +735,20 @@ def phash_index_streaming(
     import os
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.parts import replay_epochs
 
-    src = spark.table(source).select("doc_id", "text")
     base = scratch_dir("phash_ix_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    keyed = src.withColumn(
-        "__b", F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
-    )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     parts = os.path.join(base, "hash_parts")
-    ckpt = os.path.join(base, "ckpt")
+    ckpt = replay_epochs(
+        spark, spark.table(source).select("doc_id", "text"), ["doc_id"],
+        n_batches, base, parts,
+        lambda batch: image_dhash(attach_textured_bmp_payload(batch)).select(
+            "doc_id", "hash_hi", "hash_lo"
+        ),
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     if _parts_out is not None:
         _parts_out.extend([parts, ckpt])
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        inc = image_dhash(attach_textured_bmp_payload(batch)).select(
-            "doc_id", "hash_hi", "hash_lo"
-        )
-        inc.write.mode("overwrite").parquet(
-            os.path.join(parts, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()  # replay overwrites its own epoch part — idempotent
     merged = (
         f"SELECT doc_id, hash_hi, hash_lo FROM parquet.`{parts}`"
     )

@@ -822,34 +822,17 @@ def hysteresis_streaming(
     import shutil
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.parts import replay_epochs
 
     src_rel = spark.table("events").select(
         F.col("event_id"), F.col("event_type"), F.col("ts")
     )
     base = scratch_dir("hyst_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(F.xxhash64("event_id"), F.lit(n_batches))
-    keyed = src_rel.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     rates_path = os.path.join(base, "rates")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
 
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def rates(batch: DataFrame) -> DataFrame:
         batch.createOrReplaceTempView("__hyst_batch")
-        inc = spark_.sql(
+        return batch.sparkSession.sql(
             """
             SELECT event_type, unix_millis(ts) DIV 86400000 AS day_id,
                    CAST(COUNT(*) AS BIGINT) AS rate
@@ -857,37 +840,12 @@ def hysteresis_streaming(
             GROUP BY event_type, unix_millis(ts) DIV 86400000
             """
         )
-        inc.write.mode("overwrite").parquet(
-            os.path.join(rates_path, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src_rel.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
     try:
-        try:
-            run()
-        except Exception:
-            if _crash_after_write_epoch is None:
-                raise
-            run()
+        replay_epochs(
+            spark, src_rel, ["event_id"], n_batches, base, rates_path, rates,
+            crash_after_write_epoch=_crash_after_write_epoch,
+        )
         merged = (
             "SELECT event_type, day_id, CAST(SUM(rate) AS BIGINT) AS rate "
             f"FROM parquet.`{rates_path}` GROUP BY event_type, day_id"

@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from qradar_restapi_kafka_datapipeline_spark.operators.dedup import cosine_expr
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    exists,
+    heal_swap,
+    replay_epochs,
+    swap_dir,
+)
 
 
 def knn_bruteforce(
@@ -711,16 +717,14 @@ def _merged_assignments(spark, path: str, probed: list[int],
         .select(id_col, vec_col, "list_id")
     )
     stream = f"{path}/assignments_stream"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath(stream)):
+    if exists(spark, stream):
         rel = rel.unionByName(
             read_artifact(spark, stream, base_path=stream)
             .where(F.col("list_id").isin(probed))
             .select(id_col, vec_col, "list_id")
         )
     tomb = f"{path}/tombstones"
-    if fs.exists(hpath(tomb)):
+    if exists(spark, tomb):
         # deletes are a BROADCAST anti-join: the tombstone log is bounded
         # between rebuilds (a rebuild compacts it away), so the probe scan
         # stays file-pruned and the filter is map-side.
@@ -871,13 +875,9 @@ def ivf_append_streaming(
     ``_crash_after_write_epoch``: crash-injection hook (raise once AFTER
     the part write — the widest failure window — then restart from the
     same checkpoint; the replayed epoch overwrites its own part)."""
-    import os
     import shutil
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
     # r13: driver-side sort of the bounded centroid rows (see
     # knn_ivf_from_index — the orderBy cost a sampling pass + sort stage)
@@ -887,56 +887,14 @@ def ivf_append_streaming(
     )
     cents = [list(r["cv"]) for r in cent_rows]
     base = scratch_dir("ivf_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(F.xxhash64(id_col), F.lit(n_batches))
-    keyed = new_emb.select(id_col, vec_col).withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        p = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), p)
-        os.utime(p, (now + 10 * i, now + 10 * i))
-
-    stream_path = f"{path}/assignments_stream"
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        _assign(batch, cents, 1, id_col, vec_col).write.mode(
-            "overwrite"
-        ).partitionBy("list_id").parquet(
-            os.path.join(stream_path, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(keyed.drop("__b").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
     try:
-        try:
-            run()
-        except Exception:
-            if _crash_after_write_epoch is None:
-                raise
-            run()
+        replay_epochs(
+            spark, new_emb.select(id_col, vec_col), [id_col], n_batches,
+            base, f"{path}/assignments_stream",
+            lambda batch: _assign(batch, cents, 1, id_col, vec_col),
+            partition_by="list_id",
+            crash_after_write_epoch=_crash_after_write_epoch,
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -974,74 +932,30 @@ def ivfpq_append_streaming(
     ``_crash_after_write_epoch``: crash-injection hook (raise once AFTER
     the part write, restart from the same checkpoint — the replay
     test)."""
-    import os
     import shutil
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
-    base = scratch_dir("ivfpq_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    keyed = new_emb.select("vec_id", "embedding").withColumn(
-        "__b", F.pmod(F.xxhash64("vec_id"), F.lit(n_batches))
-    )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        p = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), p)
-        os.utime(p, (now + 10 * i, now + 10 * i))
-
-    stream_path = f"{path}/codes_stream"
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        if batch.isEmpty():
-            return
+    def codes(batch: DataFrame) -> DataFrame:
         sp = batch.sparkSession
         batch.createOrReplaceTempView("__ivfpq_app_batch")
         assign = sp.sql(
             ivf_assign_sql("spark", f"{path}/centroids", dim, 1,
                            "__ivfpq_app_batch")
         ).select("vec_id", "list_id")
-        codes = sp.sql(
+        return sp.sql(
             pq_codes_sql("spark", f"{path}/codebooks", m, dim // m,
                          "__ivfpq_app_batch")
-        )
-        codes.join(assign, "vec_id").write.mode("overwrite").partitionBy(
-            "list_id"
-        ).parquet(os.path.join(stream_path, f"epoch={epoch}"))
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after code-part write (replay test)"
-            )
+        ).join(assign, "vec_id")
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(keyed.drop("__b").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
+    base = scratch_dir("ivfpq_stream_")
     try:
-        try:
-            run()
-        except Exception:
-            if _crash_after_write_epoch is None:
-                raise
-            run()
+        replay_epochs(
+            spark, new_emb.select("vec_id", "embedding"), ["vec_id"],
+            n_batches, base, f"{path}/codes_stream", codes,
+            partition_by="list_id",
+            crash_after_write_epoch=_crash_after_write_epoch,
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1082,9 +996,6 @@ def compact_ivf_index(spark, path: str,
     :func:`rebalance_ivf_index`, so :func:`recover_ivf_index` heals a
     mid-swap crash of either operation.  Returns the number of live
     vectors in the compacted tree."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     recover_ivf_index(spark, path)
     rel = (
         spark.read.option("basePath", f"{path}/assignments")
@@ -1092,13 +1003,13 @@ def compact_ivf_index(spark, path: str,
         .select(id_col, vec_col, "list_id")
     )
     stream = f"{path}/assignments_stream"
-    if fs.exists(hpath(stream)):
+    if exists(spark, stream):
         rel = rel.unionByName(
             spark.read.option("basePath", stream).parquet(stream)
             .select(id_col, vec_col, "list_id")
         )
     tomb = f"{path}/tombstones"
-    if fs.exists(hpath(tomb)):
+    if exists(spark, tomb):
         rel = rel.join(
             F.broadcast(spark.read.parquet(tomb).select(id_col).distinct()),
             id_col, "left_anti",
@@ -1115,22 +1026,18 @@ def compact_ivf_index(spark, path: str,
             "schemaless empty tree — drop the index directory instead, or "
             "rebuild with build_ivf_index once new vectors exist."
         )
-    tmp, old = f"{path}.__rebal_tmp", f"{path}.__rebal_old"
-    fs.delete(hpath(tmp), True)
-    # centroids pass through unchanged (the quantizer is the index's
-    # identity; compaction only reorganizes storage)
-    spark.read.parquet(f"{path}/centroids").coalesce(1).write.parquet(
-        f"{tmp}/centroids"
-    )
-    rel.write.partitionBy("list_id").parquet(f"{tmp}/assignments")
-    n = spark.read.parquet(f"{tmp}/assignments").count()
-    if not fs.rename(hpath(path), hpath(old)):
-        raise RuntimeError(f"compact_ivf_index: could not stage out {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))
-        raise RuntimeError(f"compact_ivf_index: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
-    return n
+
+    def write(tmp: str) -> int:
+        # centroids pass through unchanged (the quantizer is the index's
+        # identity; compaction only reorganizes storage)
+        spark.read.parquet(f"{path}/centroids").coalesce(1).write.parquet(
+            f"{tmp}/centroids"
+        )
+        rel.write.partitionBy("list_id").parquet(f"{tmp}/assignments")
+        return spark.read.parquet(f"{tmp}/assignments").count()
+
+    return swap_dir(spark, path, *_rebal_staging(path), write,
+                    "compact_ivf_index")
 
 
 def compact_ivfpq_index(spark, path: str) -> int:
@@ -1146,9 +1053,6 @@ def compact_ivfpq_index(spark, path: str) -> int:
     ``__rebal_tmp``/``__rebal_old`` names, so :func:`recover_ivf_index`
     heals a mid-swap crash of this operation too.  Returns the number
     of live vectors in the compacted tree."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     recover_ivf_index(spark, path)
     rel = (
         spark.read.option("basePath", f"{path}/codes")
@@ -1156,13 +1060,13 @@ def compact_ivfpq_index(spark, path: str) -> int:
         .select("vec_id", "mi", "j", "list_id")
     )
     stream = f"{path}/codes_stream"
-    if fs.exists(hpath(stream)):
+    if exists(spark, stream):
         rel = rel.unionByName(
             spark.read.option("basePath", stream).parquet(stream)
             .select("vec_id", "mi", "j", "list_id")
         )
     tomb = f"{path}/tombstones"
-    if fs.exists(hpath(tomb)):
+    if exists(spark, tomb):
         rel = rel.join(
             F.broadcast(spark.read.parquet(tomb).select("vec_id").distinct()),
             "vec_id", "left_anti",
@@ -1173,56 +1077,36 @@ def compact_ivfpq_index(spark, path: str) -> int:
             "tombstones (every vector deleted) — drop the index directory "
             "instead, or rebuild with build_ivfpq_index once vectors exist."
         )
-    tmp, old = f"{path}.__rebal_tmp", f"{path}.__rebal_old"
-    fs.delete(hpath(tmp), True)
-    # the two trained artifacts pass through unchanged (they are the
-    # index's identity; compaction only reorganizes the code storage)
-    for art in ("centroids", "codebooks"):
-        spark.read.parquet(f"{path}/{art}").coalesce(1).write.parquet(
-            f"{tmp}/{art}"
+
+    def write(tmp: str) -> int:
+        # the two trained artifacts pass through unchanged (they are the
+        # index's identity; compaction only reorganizes the code storage)
+        for art in ("centroids", "codebooks"):
+            spark.read.parquet(f"{path}/{art}").coalesce(1).write.parquet(
+                f"{tmp}/{art}"
+            )
+        rel.write.partitionBy("list_id").parquet(f"{tmp}/codes")
+        return (
+            spark.read.parquet(f"{tmp}/codes")
+            .select("vec_id").distinct().count()
         )
-    rel.write.partitionBy("list_id").parquet(f"{tmp}/codes")
-    n = (
-        spark.read.parquet(f"{tmp}/codes")
-        .select("vec_id").distinct().count()
-    )
-    if not fs.rename(hpath(path), hpath(old)):
-        raise RuntimeError(f"compact_ivfpq_index: could not stage out {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))
-        raise RuntimeError(f"compact_ivfpq_index: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
-    return n
+
+    return swap_dir(spark, path, *_rebal_staging(path), write,
+                    "compact_ivfpq_index")
+
+
+def _rebal_staging(path: str) -> tuple[str, str]:
+    """``(tmp, old)`` staging dirs of the IVF/IVF-PQ index swaps."""
+    return f"{path}.__rebal_tmp", f"{path}.__rebal_old"
 
 
 def recover_ivf_index(spark, path: str) -> str:
-    """Self-heal a rebalance killed between its two renames (the one crash
+    """Self-heal a rebalance or compaction killed mid-swap (the one crash
     point where the live index is briefly absent — the staged-out tree
-    sits intact at ``path.__rebal_old``).  Same protocol as
-    :func:`...sketches.recover_sketch_parts`; idempotent, called
-    automatically by :func:`rebalance_ivf_index`."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, old = f"{path}.__rebal_tmp", f"{path}.__rebal_old"
-    did = "ok"
-    if not fs.exists(hpath(path)) and fs.exists(hpath(old)):
-        if not fs.rename(hpath(old), hpath(path)):
-            raise RuntimeError(f"recover_ivf_index: cannot restore {old}")
-        did = "restored_old"
-    elif fs.exists(hpath(path)) and fs.exists(hpath(old)):
-        # Crash landed between the tmp→path stage-in and the old-tree
-        # delete: the swap evidently completed, so the stale staged-out
-        # copy is garbage.  Reclaiming it here (ADVICE r8) also removes
-        # the rename-onto-existing-dir ambiguity a SECOND mid-swap crash
-        # would hit (Hadoop local FS either fails the stage-out rename or
-        # nests the live tree inside the stale one).
-        fs.delete(hpath(old), True)
-        did = "dropped_stale_old"
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-        did = "dropped_tmp" if did == "ok" else did
-    return did
+    sits intact at ``path.__rebal_old``): :func:`...parts.heal_swap` over
+    this layout's staging dirs.  Idempotent, called automatically by
+    :func:`rebalance_ivf_index` and both compactors."""
+    return heal_swap(spark, path, *_rebal_staging(path))
 
 
 def rebalance_ivf_index(
@@ -1261,9 +1145,6 @@ def rebalance_ivf_index(
     candidates-per-probe, so per-query scan cost stays O(√n·nprobe)
     as the corpus keeps growing.  Pass an int to pin geometry (the
     small-SF gate entries do, for hash stability)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     recover_ivf_index(spark, path)
     emb = (
         spark.read.option("basePath", f"{path}/assignments")
@@ -1271,7 +1152,7 @@ def rebalance_ivf_index(
         .select(id_col, vec_col)
     )
     stream = f"{path}/assignments_stream"
-    if fs.exists(hpath(stream)):
+    if exists(spark, stream):
         # fold the streamed per-epoch log (ivf_append_streaming) into the
         # retrained tree — the rebuild IS the log's compaction; the swap
         # stages the whole old dir (log included) out, so the new index
@@ -1281,7 +1162,7 @@ def rebalance_ivf_index(
             .select(id_col, vec_col)
         )
     tomb = f"{path}/tombstones"
-    if fs.exists(hpath(tomb)):
+    if exists(spark, tomb):
         # honor tombstones (delete_from_ivf_index): the rebuild drops the
         # deleted rows physically and the swap clears the log.
         emb = emb.join(
@@ -1295,21 +1176,17 @@ def rebalance_ivf_index(
     cents = _train_ivf_centroids(
         emb, int(n_centroids), id_col, vec_col, sample_n, iters
     )
-    tmp, old = f"{path}.__rebal_tmp", f"{path}.__rebal_old"
-    fs.delete(hpath(tmp), True)
-    spark.createDataFrame(
-        [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.parquet(f"{tmp}/centroids")
-    _assign(emb, cents, 1, id_col, vec_col).write.partitionBy(
-        "list_id"
-    ).parquet(f"{tmp}/assignments")
-    if not fs.rename(hpath(path), hpath(old)):
-        raise RuntimeError(f"rebalance_ivf_index: could not stage out {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))  # restore the live index
-        raise RuntimeError(f"rebalance_ivf_index: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
+
+    def write(tmp: str) -> None:
+        spark.createDataFrame(
+            [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
+            "cid INT, cv ARRAY<DOUBLE>",
+        ).coalesce(1).write.parquet(f"{tmp}/centroids")
+        _assign(emb, cents, 1, id_col, vec_col).write.partitionBy(
+            "list_id"
+        ).parquet(f"{tmp}/assignments")
+
+    swap_dir(spark, path, *_rebal_staging(path), write, "rebalance_ivf_index")
     return n
 
 
@@ -1807,9 +1684,7 @@ def _merged_codes(spark, path: str, probed: list[int]) -> DataFrame:
         .select("vec_id", "mi", "j", "list_id")
     )
     stream = f"{path}/codes_stream"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath(stream)):
+    if exists(spark, stream):
         rel = rel.unionByName(
             read_artifact(spark, stream, base_path=stream)
             .where(F.col("list_id").isin(probed))
@@ -1872,9 +1747,7 @@ def knn_ivfpq_from_index(
     )
     codes = _merged_codes(spark, path, probed)
     tomb = f"{path}/tombstones"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    tfs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if tfs.exists(hpath(tomb)):
+    if exists(spark, tomb):
         # same tombstone-log convention as the raw-vector index
         # (delete_from_ivf_index): broadcast anti-join on the code scan,
         # so deleted vectors can neither rank nor enter a refine
@@ -1900,51 +1773,57 @@ def knn_ivfpq_from_index(
     probes_view = unique_view(F.broadcast(probes), "__ivfpq_probes")
     lut = pq_lut_sql("spark", f"{path}/codebooks", m, dim // m, query_max,
                      source_view)
-    if refine_k is not None:
-        codes_rel = f"SELECT vec_id, mi, j, list_id FROM {codes_view}"
-        probes_rel = f"SELECT q_id, list_id FROM {probes_view}"
-        shortlist_rel = None
-        n_id_in = None
-        if query_max * refine_k <= 4_096:
-            # bounded serve: land the ADC shortlist (≤ queries×refine_k
-            # rows) driver-side, re-read the raw vectors through an
-            # IN-list pushed to the parquet scan.
-            pairs = spark.sql(
-                "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut,
-                                          refine_k)
-            ).select("q_id", "n_id").collect()
-            vals = ", ".join(
-                f"({int(r['q_id'])}, {int(r['n_id'])})" for r in pairs
+    # analysis binds the views eagerly (CLAUDE.md r12): drop them once the
+    # returned statement is analysed, so serves leave the catalog unchanged
+    try:
+        if refine_k is not None:
+            codes_rel = f"SELECT vec_id, mi, j, list_id FROM {codes_view}"
+            probes_rel = f"SELECT q_id, list_id FROM {probes_view}"
+            shortlist_rel = None
+            n_id_in = None
+            if query_max * refine_k <= 4_096:
+                # bounded serve: land the ADC shortlist (≤ queries×refine_k
+                # rows) driver-side, re-read the raw vectors through an
+                # IN-list pushed to the parquet scan.
+                pairs = spark.sql(
+                    "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut,
+                                              refine_k)
+                ).select("q_id", "n_id").collect()
+                vals = ", ".join(
+                    f"({int(r['q_id'])}, {int(r['n_id'])})" for r in pairs
+                )
+                shortlist_rel = (
+                    f"SELECT * FROM (VALUES {vals}) AS sl(q_id, n_id)"
+                    if pairs else
+                    "SELECT CAST(NULL AS BIGINT) AS q_id, "
+                    "CAST(NULL AS BIGINT) AS n_id WHERE 1 = 0"
+                )
+                n_id_in = [int(r["n_id"]) for r in pairs]
+            return spark.sql(
+                _ivfpq_refine_sql(
+                    "spark",
+                    codes_rel,
+                    probes_rel,
+                    lut,
+                    _vec_rel_sql("spark", source_view),
+                    refine_k,
+                    k,
+                    dim,
+                    shortlist_rel=shortlist_rel,
+                    n_id_in=n_id_in,
+                )
             )
-            shortlist_rel = (
-                f"SELECT * FROM (VALUES {vals}) AS sl(q_id, n_id)"
-                if pairs else
-                "SELECT CAST(NULL AS BIGINT) AS q_id, "
-                "CAST(NULL AS BIGINT) AS n_id WHERE 1 = 0"
-            )
-            n_id_in = [int(r["n_id"]) for r in pairs]
         return spark.sql(
-            _ivfpq_refine_sql(
-                "spark",
-                codes_rel,
-                probes_rel,
+            "WITH " + _ivfpq_rank_sql(
+                f"SELECT vec_id, mi, j, list_id FROM {codes_view}",
+                f"SELECT q_id, list_id FROM {probes_view}",
                 lut,
-                _vec_rel_sql("spark", source_view),
-                refine_k,
                 k,
-                dim,
-                shortlist_rel=shortlist_rel,
-                n_id_in=n_id_in,
             )
         )
-    return spark.sql(
-        "WITH " + _ivfpq_rank_sql(
-            f"SELECT vec_id, mi, j, list_id FROM {codes_view}",
-            f"SELECT q_id, list_id FROM {probes_view}",
-            lut,
-            k,
-        )
-    )
+    finally:
+        for view in (codes_view, probes_view):
+            spark.catalog.dropTempView(view)
 
 
 def ivfpq_recall_report(

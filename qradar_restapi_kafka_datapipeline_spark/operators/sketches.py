@@ -24,6 +24,13 @@ shared text both engines, rounded at 6 dp (+1e-9).
 
 from __future__ import annotations
 
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    heal_swap,
+    list_names,
+    replay_epochs,
+    swap_dir,
+)
+
 # defaults sized for the gate corpora; at 100 TB these are config knobs —
 # the sketch stays d*w (CM) / 2^p (HLL) cells regardless of data volume
 CM_D = 4
@@ -485,7 +492,9 @@ def kmv_jaccard(
         views.append(unique_view(lit, "__kmv_sk"))
     va, vb = views
     est_u = kmv_estimate_sql("spark", "SELECT h FROM u", k)
-    return spark.sql(f"""
+    # analysis binds the views eagerly (CLAUDE.md r12): drop them once the
+    # statement is analysed, so calls leave the catalog unchanged
+    out = spark.sql(f"""
     WITH u AS (
       SELECT h FROM (
         SELECT DISTINCT h
@@ -509,6 +518,9 @@ def kmv_jaccard(
                  * eu.distinct_est + 1e-9, 6) AS intersection_est
     FROM ov, eu
     """)
+    for view in views:
+        spark.catalog.dropTempView(view)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -991,65 +1003,21 @@ def hdr_sketch_streaming(
     are hash-checked against the whole-corpus oracle."""
     import os
 
-    from pyspark.sql import functions as F
-
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
-    src_rel = spark.table("events").select("event_id", "value")
-    base = scratch_dir("hdr_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(F.xxhash64("event_id"), F.lit(n_batches))
-    keyed = src_rel.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    cells_path = os.path.join(base, "cells")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def cells(batch):
         batch.createOrReplaceTempView("__hdr_batch")
-        inc = spark_.sql(hdr_cells_sql("spark", int_expr, "__hdr_batch", m))
-        inc.write.mode("overwrite").parquet(
-            os.path.join(cells_path, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after cells-part write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src_rel.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        return batch.sparkSession.sql(
+            hdr_cells_sql("spark", int_expr, "__hdr_batch", m)
         )
 
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()
+    base = scratch_dir("hdr_stream_")
+    cells_path = os.path.join(base, "cells")
+    replay_epochs(
+        spark, spark.table("events").select("event_id", "value"),
+        ["event_id"], n_batches, base, cells_path, cells,
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     merged = (
         "SELECT hk, CAST(SUM(c) AS BIGINT) AS c "
         f"FROM parquet.`{cells_path}` GROUP BY hk"
@@ -1096,68 +1064,23 @@ def cm_sketch_streaming(
     from pyspark.sql import functions as F
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
-    src_rel = spark.table("events").select(
-        F.col("event_id"), F.expr(key_expr).alias("k")
-    )
-    base = scratch_dir("cm_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(F.xxhash64("event_id"), F.lit(n_batches))
-    keyed = src_rel.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    cells_path = os.path.join(base, "cells")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def cells(batch):
         batch.createOrReplaceTempView("__cm_batch")
-        inc = spark_.sql(cm_cells_sql("spark", "k", "__cm_batch", d, w))
-        # overwrite of the epoch-keyed part is the whole commit protocol:
-        # replay rewrites the same path with the same deterministic batch
-        inc.write.mode("overwrite").parquet(
-            os.path.join(cells_path, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src_rel.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        return batch.sparkSession.sql(
+            cm_cells_sql("spark", "k", "__cm_batch", d, w)
         )
 
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        # restart from the same checkpoint: the failed epoch replays with
-        # the same batch id and overwrites its own part — idempotent
-        run()
+    base = scratch_dir("cm_stream_")
+    cells_path = os.path.join(base, "cells")
+    replay_epochs(
+        spark,
+        spark.table("events").select(
+            F.col("event_id"), F.expr(key_expr).alias("k")
+        ),
+        ["event_id"], n_batches, base, cells_path, cells,
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     cells_rel = (
         "SELECT i, col, CAST(SUM(c) AS BIGINT) AS c "
         f"FROM parquet.`{cells_path}` GROUP BY i, col"
@@ -1322,66 +1245,23 @@ def hll_cube_streaming(
     from pyspark.sql import functions as F
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
-    src_rel = spark.table("events").select(
-        "event_id", "ts", F.expr(key_expr).alias("k")
-    )
-    base = scratch_dir("hll_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(F.xxhash64("event_id"), F.lit(n_batches))
-    keyed = src_rel.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    cube_path = os.path.join(base, "cube")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def registers(batch):
         batch.createOrReplaceTempView("__hll_batch")
-        inc = spark_.sql(
+        return batch.sparkSession.sql(
             hll_hourly_registers_sql("spark", "k", "__hll_batch", p)
         )
-        inc.write.mode("overwrite").parquet(
-            os.path.join(cube_path, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after register-part write (replay test)"
-            )
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src_rel.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()
+    base = scratch_dir("hll_stream_")
+    cube_path = os.path.join(base, "cube")
+    replay_epochs(
+        spark,
+        spark.table("events").select(
+            "event_id", "ts", F.expr(key_expr).alias("k")
+        ),
+        ["event_id"], n_batches, base, cube_path, registers,
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     div = "DIV"
     daily = f"""
       SELECT hour_id {div} 24 AS day_id, bucket, MAX(r) AS r
@@ -1438,12 +1318,7 @@ def last_committed_epoch(checkpoint_dir: str, spark=None) -> int:
 
     commits = os.path.join(checkpoint_dir, "commits")
     if spark is not None:
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(commits)
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hp):
-            return -1
-        names = [st.getPath().getName() for st in fs.listStatus(hp)]
+        names = list_names(spark, commits)
         return max((int(f) for f in names if f.isdigit()), default=-1)
     try:
         ids = [int(f) for f in os.listdir(commits) if f.isdigit()]
@@ -1492,9 +1367,6 @@ def compact_sketch_parts(
         max_epoch = committed if max_epoch is None else min(
             max_epoch, committed
         )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     recover_sketch_parts(spark, path)  # self-heal a prior killed compactor
     cur = spark.read.parquet(path)  # partition discovery yields `epoch`
     if max_epoch is not None:
@@ -1510,16 +1382,11 @@ def compact_sketch_parts(
     )
     if carry is not None:
         merged = merged.unionByName(carry.select(*merged.columns))
-    tmp, old = f"{path}.__compact_tmp", f"{path}.__compact_old"
-    fs.delete(hpath(tmp), True)
-    merged.coalesce(1).write.partitionBy("epoch").parquet(tmp)
-    fs.delete(hpath(old), True)
-    if not fs.rename(hpath(path), hpath(old)):
-        raise RuntimeError(f"compact_sketch_parts: could not stage out {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))  # restore the live tree
-        raise RuntimeError(f"compact_sketch_parts: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
+    swap_dir(
+        spark, path, *_compact_staging(path),
+        lambda tmp: merged.coalesce(1).write.partitionBy("epoch").parquet(tmp),
+        "compact_sketch_parts",
+    )
     return n_parts
 
 
@@ -1650,26 +1517,20 @@ def hll_rolling_distinct(
     return spark.sql(hll_grouped_estimate_sql("spark", win, "day_id", p))
 
 
+def _compact_staging(path: str) -> tuple[str, str]:
+    """``(tmp, old)`` staging dirs of a parts-tree compaction swap
+    (:func:`compact_sketch_parts`, :func:`...text.compact_tf_parts`)."""
+    return f"{path}.__compact_tmp", f"{path}.__compact_old"
+
+
 def recover_sketch_parts(spark, path: str) -> str:
-    """Startup repair for a compactor killed BETWEEN its two renames — the
-    one crash point where the live path is briefly absent (the staged-out
-    tree sits at ``path.__compact_old``, fully intact).  Rename it back
-    and drop any staged temp; idempotent, called automatically by
-    :func:`compact_sketch_parts`.  Returns what it did ("ok" /
-    "restored_old" / "dropped_tmp")."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, old = f"{path}.__compact_tmp", f"{path}.__compact_old"
-    did = "ok"
-    if not fs.exists(hpath(path)) and fs.exists(hpath(old)):
-        if not fs.rename(hpath(old), hpath(path)):
-            raise RuntimeError(f"recover_sketch_parts: cannot restore {old}")
-        did = "restored_old"
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-        did = "dropped_tmp" if did == "ok" else did
-    return did
+    """Startup repair for a compactor killed mid-swap:
+    :func:`...parts.heal_swap` over the ``path.__compact_*`` staging dirs
+    (restore the staged-out tree, drop a stale copy or a staged temp).
+    Idempotent, called automatically by :func:`compact_sketch_parts`.
+    Returns what it did (``ok`` / ``restored_old`` / ``dropped_stale_old``
+    / ``dropped_tmp``)."""
+    return heal_swap(spark, path, *_compact_staging(path))
 
 
 def kmv_daily_sketches_sql(

@@ -41,6 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.parts import epoch_path, epochs
+
 #: kinds whose tombstone log lives flat at ``{path}/tombstones`` keyed by
 #: the index's id column
 _FLAT_KINDS = {
@@ -73,16 +75,7 @@ class RegisteredIndex:
 
 def _next_epoch(spark, parts: str) -> int:
     """1 + the highest existing ``epoch=N`` part (0 for a fresh tree)."""
-    import os
-
-    try:
-        return 1 + max(
-            (int(d.split("=", 1)[1]) for d in os.listdir(parts)
-             if d.startswith("epoch=")),
-            default=-1,
-        )
-    except FileNotFoundError:
-        return 0
+    return 1 + max(epochs(spark, parts), default=-1)
 
 
 def takedown(
@@ -130,9 +123,8 @@ def takedown(
             # the streamed-serve tombstone-parts convention: land one new
             # immutable epoch part; readers SELECT DISTINCT doc_id over
             # the tree, so a replayed call's extra part collapses away
-            epoch = _next_epoch(spark, ix.path)
             dedup.write.mode("overwrite").parquet(
-                f"{ix.path}/epoch={epoch}"
+                epoch_path(ix.path, _next_epoch(spark, ix.path))
             )
         else:
             raise ValueError(

@@ -16,6 +16,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    delete,
+    epoch_path,
+    exists,
+    heal_swap,
+    most_severe,
+    replay_epochs,
+    swap_dir,
+)
+
 # ---------------------------------------------------------------------------
 # language ID — marker-phrase counting (deterministic heuristic)
 # ---------------------------------------------------------------------------
@@ -1420,41 +1430,29 @@ def delete_from_text_index(spark, path: str, ids) -> None:
 def _text_index_tombstones(spark, path: str):
     """The distinct tombstoned doc ids at ``path``, or None if the log
     doesn't exist (shared by the serve and compaction paths)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     tomb = f"{path}/tombstones"
-    if not fs.exists(hpath(tomb)):
+    if not exists(spark, tomb):
         return None
     from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
 
     return read_artifact(spark, tomb).select("doc_id").distinct()
 
 
+def _index_staging(path: str, name: str) -> tuple[str, str]:
+    """``(tmp, old)`` staging dirs of a text-index relation swap."""
+    return f"{path}/.{name}_compact_tmp", f"{path}/.{name}_compact_old"
+
+
 def recover_text_index_norms(spark, path: str) -> str:
-    """Startup repair for a norms OR postings swap killed BETWEEN its two
-    renames (the round-7 `recover_sketch_parts` contract applied to the
-    text index): if the live dir is absent but the staged-out copy
-    exists, rename it back; drop any stale staging dir.  Idempotent;
-    called automatically by :func:`compact_text_index`."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    did = "ok"
-    for name in ("norms", "postings"):
-        live = f"{path}/{name}"
-        tmp = f"{path}/.{name}_compact_tmp"
-        old = f"{path}/.{name}_compact_old"
-        if not fs.exists(hpath(live)) and fs.exists(hpath(old)):
-            if not fs.rename(hpath(old), hpath(live)):
-                raise RuntimeError(
-                    f"recover_text_index_norms: cannot restore {old}"
-                )
-            did = "restored_old"
-        if fs.exists(hpath(tmp)):
-            fs.delete(hpath(tmp), True)
-            did = "dropped_tmp" if did == "ok" else did
-    return did
+    """Startup repair for a norms OR postings swap killed mid-swap (the
+    round-7 `recover_sketch_parts` contract applied to the text index):
+    :func:`...parts.heal_swap` over both relations' staging dirs; returns
+    the more severe outcome.  Idempotent; called automatically by
+    :func:`compact_text_index`."""
+    return most_severe([
+        heal_swap(spark, f"{path}/{name}", *_index_staging(path, name))
+        for name in ("norms", "postings")
+    ])
 
 
 def compact_text_index(
@@ -1486,70 +1484,48 @@ def compact_text_index(
 
     recover_text_index_norms(spark, path)  # self-heal a prior mid-swap kill
     tomb = _text_index_tombstones(spark, path)
-    jvm0 = spark._jvm
-    hpath0 = jvm0.org.apache.hadoop.fs.Path
-    fs0 = hpath0(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    postings = f"{path}/postings"
     if tomb is not None:
         # Filtered rewrite of the whole postings tree (can't reuse
-        # compact_rollup — it rewrites layout, not rows): stage the
-        # anti-joined relation, swap with the same two-rename protocol as
-        # norms below, healed by recover_text_index_norms.
+        # compact_rollup — it rewrites layout, not rows), swapped in like
+        # norms below.
         filtered = (
-            spark.read.option("basePath", f"{path}/postings")
-            .parquet(f"{path}/postings")
+            spark.read.option("basePath", postings).parquet(postings)
             .join(F.broadcast(tomb), "doc_id", "left_anti")
             .repartition("bucket_group")
         )
-        ptmp = f"{path}/.postings_compact_tmp"
-        pold = f"{path}/.postings_compact_old"
-        filtered.write.mode("overwrite").partitionBy("bucket_group").parquet(
-            ptmp
+        swap_dir(
+            spark, postings, *_index_staging(path, "postings"),
+            lambda tmp: filtered.write.mode("overwrite")
+            .partitionBy("bucket_group").parquet(tmp),
+            "compact_text_index",
         )
-        fs0.delete(hpath0(pold), True)
-        if not fs0.rename(hpath0(f"{path}/postings"), hpath0(pold)):
-            raise RuntimeError("compact_text_index: could not stage-out postings")
-        if not fs0.rename(hpath0(ptmp), hpath0(f"{path}/postings")):
-            fs0.rename(hpath0(pold), hpath0(f"{path}/postings"))
-            raise RuntimeError(f"compact_text_index: rename failed for {ptmp}")
-        fs0.delete(hpath0(pold), True)
-        n = spark.read.parquet(f"{path}/postings").select(
+        n = spark.read.parquet(postings).select(
             "bucket_group"
         ).distinct().count()
     else:
         n = compact_rollup(
             spark,
-            f"{path}/postings",
+            postings,
             target_files_per_partition,
             partition_col="bucket_group",
         )
     # norms is small and unpartitioned: Spark refuses an in-place overwrite
     # of a path it is reading, so stage to a dotted temp dir (invisible to
-    # listings) and swap with dir renames.  Swap order matters (ADVICE r5):
-    # move the LIVE dir aside first, then rename the staged copy in — every
-    # crash point leaves either the old or the new norms readable, and a
-    # rename failure restores the old dir instead of leaving the index with
-    # no norms at all.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = f"{path}/.norms_compact_tmp"
-    old = f"{path}/.norms_compact_old"
+    # listings) and swap it in.
     norms = spark.read.parquet(f"{path}/norms")
     if tomb is not None:
         norms = norms.join(F.broadcast(tomb), "doc_id", "left_anti")
-    norms.coalesce(1).write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath(old), True)  # stale leftover from a prior crash
-    if not fs.rename(hpath(f"{path}/norms"), hpath(old)):
-        raise RuntimeError(f"compact_text_index: could not stage-out norms")
-    if not fs.rename(hpath(tmp), hpath(f"{path}/norms")):
-        fs.rename(hpath(old), hpath(f"{path}/norms"))  # restore live index
-        raise RuntimeError(f"compact_text_index: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
+    swap_dir(
+        spark, f"{path}/norms", *_index_staging(path, "norms"),
+        lambda tmp: norms.coalesce(1).write.mode("overwrite").parquet(tmp),
+        "compact_text_index",
+    )
     if tomb is not None:
         # both swaps committed: the log's rows are physically gone, so the
         # log itself can drop (a crash before this line is harmless — the
         # anti-joins are no-ops on the already-dropped rows)
-        fs.delete(hpath(f"{path}/tombstones"), True)
+        delete(spark, f"{path}/tombstones")
     return n
 
 
@@ -1861,18 +1837,7 @@ def append_to_hybrid_index(
     from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    live, tmp, old = (
-        f"{path}/posts", f"{path}/.posts_swap_tmp", f"{path}/.posts_swap_old"
-    )
-    # heal a prior mid-swap kill (same contract as recover_text_index_norms)
-    if not fs.exists(hpath(live)) and fs.exists(hpath(old)):
-        if not fs.rename(hpath(old), hpath(live)):
-            raise RuntimeError(f"append_to_hybrid_index: cannot restore {old}")
-    fs.delete(hpath(tmp), True)
-
+    _recover_hybrid_index(spark, path)  # heal a prior mid-swap kill
     src = unique_view(
         _spread(spark.table(new_source), by="doc_id"), "__ahi_spread_src"
     )
@@ -1898,19 +1863,8 @@ def append_to_hybrid_index(
     _dedup_new(
         spark.sql(bigram_tf_sql("spark", src)), f"{path}/btf"
     ).write.mode("append").parquet(f"{path}/btf")
-    spark.sql(
-        hashed_embedding_postings_sql(
-            "spark", dim,
-            tf_rel=f"(SELECT doc_id, feat, c FROM parquet.`{path}/btf`)",
-        )
-    ).write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath(old), True)
-    if not fs.rename(hpath(live), hpath(old)):
-        raise RuntimeError("append_to_hybrid_index: could not stage-out posts")
-    if not fs.rename(hpath(tmp), hpath(live)):
-        fs.rename(hpath(old), hpath(live))
-        raise RuntimeError(f"append_to_hybrid_index: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
+    _swap_hybrid(spark, path, "posts", _hybrid_posts(spark, path, dim),
+                 "append_to_hybrid_index")
 
 
 def delete_from_hybrid_index(spark, path: str, ids) -> None:
@@ -1960,38 +1914,71 @@ def compact_hybrid_index(spark, path: str, dim: int = 4096) -> None:
     behind the two-rename protocol; crash ordering is safe because the
     log is deleted last (interrupted states keep masking via
     :func:`hybrid_index_rels`)."""
+    _recover_hybrid_index(spark, path)  # heal a prior mid-swap kill
     tomb = _text_index_tombstones(spark, path)
     if tomb is None:
         return
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def swap_in(name: str, df) -> None:
-        live = f"{path}/{name}"
-        tmp = f"{path}/.{name}_swap_tmp"
-        old = f"{path}/.{name}_swap_old"
-        if not fs.exists(hpath(live)) and fs.exists(hpath(old)):
-            if not fs.rename(hpath(old), hpath(live)):
-                raise RuntimeError(f"compact_hybrid_index: cannot restore {old}")
-        fs.delete(hpath(tmp), True)
-        df.write.mode("overwrite").parquet(tmp)
-        fs.delete(hpath(old), True)
-        if not fs.rename(hpath(live), hpath(old)):
-            raise RuntimeError(f"compact_hybrid_index: could not stage out {name}")
-        if not fs.rename(hpath(tmp), hpath(live)):
-            fs.rename(hpath(old), hpath(live))
-            raise RuntimeError(f"compact_hybrid_index: rename failed for {name}")
-        fs.delete(hpath(old), True)
-
     b = F.broadcast(tomb)
-    swap_in("tf", spark.read.parquet(f"{path}/tf").join(b, "doc_id", "left_anti"))
-    swap_in("btf", spark.read.parquet(f"{path}/btf").join(b, "doc_id", "left_anti"))
-    swap_in("posts", spark.sql(hashed_embedding_postings_sql(
+    for name in ("tf", "btf"):
+        _swap_hybrid(
+            spark, path, name,
+            spark.read.parquet(f"{path}/{name}").join(b, "doc_id", "left_anti"),
+            "compact_hybrid_index",
+        )
+    _swap_hybrid(spark, path, "posts", _hybrid_posts(spark, path, dim),
+                 "compact_hybrid_index")
+    delete(spark, f"{path}/tombstones")
+
+
+def _hybrid_staging(path: str, name: str) -> tuple[str, str]:
+    """``(tmp, old)`` staging dirs of a hybrid-artifact relation swap."""
+    return f"{path}/.{name}_swap_tmp", f"{path}/.{name}_swap_old"
+
+
+def _recover_hybrid_index(spark, path: str) -> str:
+    """Startup repair of the hybrid artifact: :func:`...parts.heal_swap`
+    over the tf, btf and posts swaps; returns the most severe outcome."""
+    return most_severe([
+        heal_swap(spark, f"{path}/{name}", *_hybrid_staging(path, name))
+        for name in ("tf", "btf", "posts")
+    ])
+
+
+def _swap_hybrid(spark, path: str, name: str, df, what: str) -> None:
+    """Swap ``df`` in as the hybrid artifact's ``name`` relation."""
+    swap_dir(
+        spark, f"{path}/{name}", *_hybrid_staging(path, name),
+        lambda tmp: df.write.mode("overwrite").parquet(tmp), what,
+    )
+
+
+def _hybrid_posts(spark, path: str, dim: int):
+    """The hybrid artifact's postings, re-derived from its stored btf."""
+    return spark.sql(hashed_embedding_postings_sql(
         "spark", dim,
         tf_rel=f"(SELECT doc_id, feat, c FROM parquet.`{path}/btf`)",
-    )))
-    fs.delete(hpath(f"{path}/tombstones"), True)
+    ))
+
+
+def _replay_docs(spark, source: str, n_batches: int, prefix: str, part_of,
+                 crash_after_write_epoch, parts_out) -> str:
+    """Replay the ``(doc_id, text)`` documents of ``source`` split by
+    doc_id into per-epoch ``tf_parts`` under a fresh scratch dir; returns
+    the parts dir (``parts_out`` gets it and the checkpoint)."""
+    import os
+
+    from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
+
+    base = scratch_dir(prefix)
+    parts = os.path.join(base, "tf_parts")
+    ckpt = replay_epochs(
+        spark, spark.table(source).select("doc_id", "text"), ["doc_id"],
+        n_batches, base, parts, part_of,
+        crash_after_write_epoch=crash_after_write_epoch,
+    )
+    if parts_out is not None:
+        parts_out.extend([parts, ckpt])
+    return parts
 
 
 def bm25_index_streaming(
@@ -2026,78 +2013,16 @@ def bm25_index_streaming(
     the part write, restart from the same checkpoint — the replay test).
     ``_parts_out``: appends the parts/checkpoint dirs for tests that
     compact or inspect the tree."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
-
-    src = spark.table(source).select("doc_id", "text")
-    base = scratch_dir("bm25_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    keyed = src.withColumn(
-        "__b", F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
-    )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    parts = os.path.join(base, "tf_parts")
-    ckpt = os.path.join(base, "ckpt")
-    if _parts_out is not None:
-        _parts_out.extend([parts, ckpt])
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def tf(batch):
         batch.createOrReplaceTempView("__bm25_batch")
-        inc = spark_.sql(
+        return batch.sparkSession.sql(
             "SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf FROM "
             f"({token_positions_sql('spark', '__bm25_batch')}) t "
             "WHERE word != '' GROUP BY doc_id, word"
         )
-        # the epoch-keyed overwrite IS the commit protocol: a replayed
-        # batch rewrites the same path with the same deterministic rows
-        inc.write.mode("overwrite").parquet(
-            os.path.join(parts, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        # restart from the same checkpoint: the failed epoch replays with
-        # the same batch id and overwrites its own part — idempotent
-        run()
+    parts = _replay_docs(spark, source, n_batches, "bm25_stream_", tf,
+                         _crash_after_write_epoch, _parts_out)
     merged = f"(SELECT doc_id, word, tf FROM parquet.`{parts}`)"
     return spark.sql(bm25_topk_sql("spark", query_doc, k, tf_rel=merged))
 
@@ -2126,73 +2051,15 @@ def chunk_index_streaming(
     is what the gate oracle (static one-shot DuckDB) checks.  At 100 TB
     this is RAG index FRESHNESS: new documents contribute chunks with
     one bounded tokenize+chunk pass, no corpus rescan."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
-
-    src = spark.table(source).select("doc_id", "text")
-    base = scratch_dir("chunk_ix_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    keyed = src.withColumn(
-        "__b", F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
-    )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    parts = os.path.join(base, "tf_parts")
-    ckpt = os.path.join(base, "ckpt")
-    if _parts_out is not None:
-        _parts_out.extend([parts, ckpt])
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        spark_ = batch.sparkSession
-        if batch.isEmpty():
-            return
+    def chunk_tf(batch):
         batch.createOrReplaceTempView("__chunk_ix_batch")
-        inc = spark_.sql(bigram_tf_sql(
+        return batch.sparkSession.sql(bigram_tf_sql(
             "spark",
             _chunk_composite_rel("spark", size, stride, "__chunk_ix_batch"),
         ))
-        inc.write.mode("overwrite").parquet(
-            os.path.join(parts, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after increment write (replay test)"
-            )
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()  # replay overwrites its own epoch part — idempotent
+    parts = _replay_docs(spark, source, n_batches, "chunk_ix_stream_",
+                         chunk_tf, _crash_after_write_epoch, _parts_out)
     merged = f"(SELECT doc_id, feat, c FROM parquet.`{parts}`)"
     cp_sql = hashed_embedding_postings_sql("spark", dim, tf_rel=merged)
     return spark.sql(chunk_knn_sql(
@@ -2491,59 +2358,15 @@ def _stream_delete_parts(
     import os
 
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
     base = scratch_dir("text_del_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    keyed = deletes_df.select("doc_id").distinct().withColumn(
-        "__b", F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
-    )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"d{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     parts = os.path.join(base, "del_parts")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
-
-    def fold(batch, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.select("doc_id").distinct().write.mode("overwrite").parquet(
-            os.path.join(parts, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after tombstone-part write (replay test)"
-            )
-
-    def run() -> None:
-        stream = (
-            spark.readStream.schema("doc_id BIGINT")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()  # replay overwrites its own epoch part — idempotent
+    replay_epochs(
+        spark, deletes_df.select(F.col("doc_id").cast("bigint")).distinct(),
+        ["doc_id"], n_batches, base, parts,
+        lambda batch: batch.select("doc_id").distinct(),
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     return parts
 
 
@@ -2657,21 +2480,16 @@ def compact_tf_parts(
     tombstones apply at ``doc_id DIV key_mult``).  Same two-rename swap
     protocol as the index compactions; serve-before ≡ serve-after is
     pytest-pinned.  Returns the number of live rows."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(parts).getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp, old = f"{parts}.__compact_tmp", f"{parts}.__compact_old"
-    # heal-at-entry (ADVICE r12): a kill between the two renames leaves the
-    # live parts dir absent with the data staged at __compact_old — restore
-    # it, same contract as recover_ivf_index / recover_text_index_norms.
-    if not fs.exists(hpath(parts)) and fs.exists(hpath(old)):
-        if not fs.rename(hpath(old), hpath(parts)):
-            raise RuntimeError(f"compact_tf_parts: cannot restore {old}")
-    fs.delete(hpath(tmp), True)
+    from qradar_restapi_kafka_datapipeline_spark.operators.sketches import (
+        _compact_staging,
+        recover_sketch_parts,
+    )
+
+    recover_sketch_parts(spark, parts)  # heal-at-entry (ADVICE r12)
     rel = spark.read.option("basePath", parts).parquet(parts)
     data_cols = [c for c in rel.columns if c != "epoch"]
     rel = rel.select(*data_cols)
-    if del_parts is not None and fs.exists(hpath(del_parts)):
+    if del_parts is not None and exists(spark, del_parts):
         tomb = (
             spark.read.option("basePath", del_parts).parquet(del_parts)
             .select("doc_id").distinct()
@@ -2685,14 +2503,13 @@ def compact_tf_parts(
             F.broadcast(tomb.withColumnRenamed("doc_id", "__tomb_id")),
             key == F.col("__tomb_id"), "left_anti",
         )
-    rel.write.mode("overwrite").parquet(f"{tmp}/epoch=0")
-    n = spark.read.parquet(f"{tmp}/epoch=0").count()
-    if not fs.rename(hpath(parts), hpath(old)):
-        raise RuntimeError(f"compact_tf_parts: could not stage out {parts}")
-    if not fs.rename(hpath(tmp), hpath(parts)):
-        fs.rename(hpath(old), hpath(parts))
-        raise RuntimeError(f"compact_tf_parts: rename failed for {tmp}")
-    fs.delete(hpath(old), True)
+
+    def write(tmp: str) -> int:
+        rel.write.mode("overwrite").parquet(epoch_path(tmp, 0))
+        return spark.read.parquet(epoch_path(tmp, 0)).count()
+
+    n = swap_dir(spark, parts, *_compact_staging(parts), write,
+                 "compact_tf_parts")
     if del_parts is not None:
-        fs.delete(hpath(del_parts), True)
+        delete(spark, del_parts)
     return n

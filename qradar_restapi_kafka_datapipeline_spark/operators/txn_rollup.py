@@ -53,6 +53,7 @@ from qradar_restapi_kafka_datapipeline_spark.operators.rollup import (
     DEFAULT_TIME_COL,
     summing_rollup,
 )
+from qradar_restapi_kafka_datapipeline_spark.parts import hadoop_fs
 
 
 class TxnRollupTable:
@@ -61,11 +62,7 @@ class TxnRollupTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._fs = self._Path(self.path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
+        self._fs, self._Path = hadoop_fs(spark, self.path)
         # Single-writer contract ⇒ this instance's view of the log only
         # changes through its own _write_commit, so the epoch set and the
         # latest commit are cached after ONE full scan.  Without the cache a

@@ -71,8 +71,12 @@ class Pipeline:
     ) -> QueryRun | None:
         """One (customer, query) unit of the full run: execute → normalize →
         hourly summing roll-up to the sanitized table path (B15).  Returns
-        None for view-shaped results, which manage their own grain."""
+        None for view-shaped results, which manage their own grain, and for
+        a unit whose sink still holds no data file after the merge (a first
+        merge of an empty search result writes a tree with no data file,
+        which has no schema to read back)."""
         from qradar_restapi_kafka_datapipeline_spark.operators.normalize import normalize
+        from qradar_restapi_kafka_datapipeline_spark.parts import has_data_files
 
         df = self.run_query(
             qname, customer, start_time, stop_time, event_processor=event_processor
@@ -83,6 +87,8 @@ class Pipeline:
         table = table_name(customer, qname)
         path = f"{self.sink_base}/{table}"
         merge_rollup(self.spark, norm, path, measure=measure, time_col=time_col)
+        if not has_data_files(self.spark, path):
+            return None
         rows = self.spark.read.parquet(path).count()
         return QueryRun(customer, qname, table, rows)
 

@@ -16,13 +16,17 @@ rows and the union over batches equals the batch relation row-for-row.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from qradar_restapi_kafka_datapipeline_spark.operators.pii import pii_redact_sql
 from qradar_restapi_kafka_datapipeline_spark.operators.text import (
     lang_id_sql,
     quality_score_sql,
     word_count_sql,
+)
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    hash_batches,
+    land,
+    replay_epochs,
 )
 
 
@@ -52,28 +56,13 @@ def curate_documents_streaming(spark, sf_dir: str, n_batches: int = 3) -> DataFr
     import os
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
 
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     base = scratch_dir("curation_stream_")
-    src = os.path.join(base, "landing")
-    os.makedirs(src)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(src, f"b{i}.parquet")
-        _write_split(
-            docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)) == i), path
-        )
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = land(
+        spark, hash_batches(docs, ["doc_id"], n_batches),
+        os.path.join(base, "landing"),
     )
     stream.createOrReplaceTempView("__curation_stream")
     scored = spark.sql(curation_projection_sql("spark", "__curation_stream"))
@@ -120,62 +109,19 @@ def dsir_apply_streaming(
     from qradar_restapi_kafka_datapipeline_spark.operators.curation import (
         dsir_apply_sql,
     )
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
     docs = spark.sql(f"SELECT doc_id, text FROM {new_batch_sql} nb")
     base = scratch_dir("dsir_stream_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(
-            docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)) == i),
-            path,
-        )
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     out = os.path.join(base, "scored")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
 
-    def fold(batch, epoch: int) -> None:
-        if batch.isEmpty():
-            return
+    def scored(batch: DataFrame) -> DataFrame:
         batch.createOrReplaceTempView("__dsir_stream_batch")
-        scored = batch.sparkSession.sql(
+        return batch.sparkSession.sql(
             dsir_apply_sql("spark", artifact, "__dsir_stream_batch")
         )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after scored-part write (replay test)"
-            )
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()
+    replay_epochs(
+        spark, docs, ["doc_id"], n_batches, base, out, scored,
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
     return spark.read.parquet(out).select("doc_id", "dsir_score", "keep")

@@ -25,6 +25,12 @@ from qradar_restapi_kafka_datapipeline_spark.operators.rollup import (
     DEFAULT_TIME_COL,
     merge_rollup,
 )
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    hadoop_fs,
+    hash_batches,
+    land,
+    replay_epochs,
+)
 
 
 def streaming_rollup_exact(
@@ -57,11 +63,8 @@ def streaming_rollup_exact(
         # Hadoop FS API, not os.path: checkpoint may be s3a://, hdfs://, ...;
         # foreachBatch runs on the driver, so one FS round-trip per epoch.
         spark_ = batch.sparkSession
-        jvm = spark_._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{checkpoint}/_committed_epochs/{epoch}"
-        )
-        fs = marker.getFileSystem(spark_._jsc.hadoopConfiguration())
+        fs, hpath = hadoop_fs(spark_, checkpoint)
+        marker = hpath(f"{checkpoint}/_committed_epochs/{epoch}")
         if fs.exists(marker):  # replayed epoch — already merged
             return
         if batch.isEmpty():
@@ -83,55 +86,25 @@ def streaming_rollup_exact(
     return writer.start()
 
 
-def _write_split(df: DataFrame, path: str) -> None:
-    """Land one replay batch as a single parquet FILE at ``path``, written by
-    SPARK (executors write, the driver only renames the part file) — the
-    replay harness never materializes the corpus driver-side, so its shape
-    stays honest at any scale."""
-    import glob
-    import os
-    import shutil
-
-    tmp = path + "_tmpdir"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
-
-
 def _qevents_replay_stream(spark, n_batches: int):
     """The qevents roll-up columns as an ``n_batches``-file stream, split by a
     deterministic row hash so rows of the same hour land in different batches
     and the aggregate-add path (not just first-insert) is exercised.  Splits
-    are written BY SPARK (:func:`_write_split`) — no driver materialization.
+    are written BY SPARK (:func:`...parts.land`) — no driver materialization.
     Returns ``(streaming DataFrame, base dir)``."""
     import os
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
 
     cols = spark.table("qevents").select("ts", "domainId", "eventName", "eventCount")
     base = scratch_dir("rollup_stream_")
-    src = os.path.join(base, "landing")
-    os.makedirs(src)
-
     # deterministic hash split: any split yields the same merged result —
     # that invariance is exactly what the parity entries assert
-    split = F.pmod(
-        F.xxhash64(F.unix_micros("ts"), "domainId", "eventName", "eventCount"),
-        F.lit(n_batches),
+    batches = hash_batches(
+        cols,
+        [F.unix_micros("ts"), "domainId", "eventName", "eventCount"],
+        n_batches,
     )
-    keyed = cols.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(src, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema(cols.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    return stream, base
+    return land(spark, batches, os.path.join(base, "landing")), base
 
 
 def rollup_events_streaming(spark, sf_dir: str, n_batches: int = 3) -> DataFrame:
@@ -198,7 +171,7 @@ def rollup_events_streaming_watermarked(
     row lands within ``watermark`` of the running max event time and nothing
     is dropped — making the append-mode windowed aggregate equal the batch
     ``GROUP BY hour`` exactly.  Batches are the ``n_batches`` NTILE ranges of
-    the time order, written BY SPARK (:func:`_write_split`) — the harness
+    the time order, written BY SPARK (:func:`...parts.land`) — the harness
     never materializes the corpus to the driver.  Two far-future sentinel
     batches push the final watermark past every real window's end so the last
     windows flush (append mode only emits a window once the watermark passes
@@ -206,17 +179,14 @@ def rollup_events_streaming_watermarked(
     result.
     """
     import os
-    from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    from datetime import datetime, timedelta, timezone
 
     from pyspark.sql.window import Window
 
+    from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
+
     cols = spark.table("qevents").select("ts", "domainId", "eventName", "eventCount")
     base = scratch_dir("rollup_wm_stream_")
-    src = os.path.join(base, "landing")
-    os.makedirs(src)
 
     # ntile over the global time order = contiguous event-time ranges (the
     # one-partition sort is the harness's price for a totally-ordered replay;
@@ -224,31 +194,13 @@ def rollup_events_streaming_watermarked(
     keyed = cols.withColumn(
         "__b", F.ntile(n_batches).over(Window.orderBy("ts")) - 1
     )
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(src, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    y2034_us = 2_019_686_400 * 1_000_000
-    for j, ts_us in enumerate([y2034_us, y2034_us + 86_400_000_000]):
-        sent = pa.table(
-            {
-                "ts": pa.array([ts_us], pa.timestamp("us", tz="UTC")),
-                "domainId": pa.array([-1], pa.int64()),
-                "eventName": pa.array(["__sentinel__"], pa.string()),
-                "eventCount": pa.array([0], pa.int64()),
-            }
-        )
-        path = os.path.join(src, f"z{j}.parquet")
-        pq.write_table(sent, path)
-        os.utime(path, (now + 10 * (n_batches + j), now + 10 * (n_batches + j)))
-
-    stream = (
-        spark.readStream.schema(cols.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    batches = [keyed.where(F.col("__b") == i).drop("__b") for i in range(n_batches)]
+    y2034 = datetime(2034, 1, 1, tzinfo=timezone.utc)
+    batches += [
+        spark.createDataFrame([(ts, -1, "__sentinel__", 0)], cols.schema)
+        for ts in (y2034, y2034 + timedelta(days=1))
+    ]
+    stream = land(spark, batches, os.path.join(base, "landing"))
     out, ckpt = os.path.join(base, "rollup"), os.path.join(base, "ckpt")
     streaming_rollup_watermarked(
         stream, out, ckpt, measure="eventCount", time_col="ts", watermark=watermark
@@ -337,59 +289,17 @@ def globalview_streaming_parts(
         *_VIEW_DIMS,
     )
     base = scratch_dir("gv_stream_parts_")
-    landing = os.path.join(base, "landing")
-    os.makedirs(landing)
-    split = F.pmod(
-        F.xxhash64(F.unix_micros("ts"), *_VIEW_DIMS, "eventCount"),
-        F.lit(n_batches),
-    )
-    keyed = cols.withColumn("__b", split)
-    now = 1_700_000_000
-    for i in range(n_batches):
-        path = os.path.join(landing, f"b{i}.parquet")
-        _write_split(keyed.where(F.col("__b") == i).drop("__b"), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     parts = os.path.join(base, "view_parts")
-    ckpt = os.path.join(base, "ckpt")
-    armed = {"epoch": _crash_after_write_epoch}
 
-    def fold(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
+    def view_part(batch: DataFrame) -> DataFrame:
         batch.createOrReplaceTempView("__gvs_batch")
-        inc = spark_.sql(globalview_sql(view, "__gvs_batch"))
-        inc.write.mode("overwrite").parquet(
-            os.path.join(parts, f"epoch={epoch}")
-        )
-        if armed["epoch"] is not None and epoch >= armed["epoch"]:
-            armed["epoch"] = None
-            raise RuntimeError(
-                "injected crash after view-part write (replay test)"
-            )
+        return batch.sparkSession.sql(globalview_sql(view, "__gvs_batch"))
 
-    def run() -> None:
-        stream = (
-            spark.readStream.schema(keyed.drop("__b").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    try:
-        run()
-    except Exception:
-        if _crash_after_write_epoch is None:
-            raise
-        run()  # replay overwrites its own epoch part — idempotent
+    replay_epochs(
+        spark, cols, [F.unix_micros("ts"), *_VIEW_DIMS, "eventCount"],
+        n_batches, base, parts, view_part,
+        crash_after_write_epoch=_crash_after_write_epoch,
+    )
 
     dims = ", ".join(_VIEW_DIMS)
     return spark.sql(

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from qradar_restapi_kafka_datapipeline_spark.parts import hash_batches, land
+
 SESSION_OUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -413,9 +415,6 @@ def incremental_dedup_streaming(
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import (
         _snapshot_fingerprint,
     )
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     fp = _snapshot_fingerprint("text", prefix_words)
@@ -426,22 +425,12 @@ def incremental_dedup_streaming(
     )
 
     base = scratch_dir("incr_dedup_stream_")
-    src = os.path.join(base, "landing")
-    os.makedirs(src)
-    now = 1_700_000_000
     new_docs = docs.where("doc_id % 7 = 0")
-    for i in range(n_batches):
-        path = os.path.join(src, f"b{i}.parquet")
-        _write_split(
-            new_docs.where(F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)) == i),
-            path,
-        )
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
     stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        land(
+            spark, hash_batches(new_docs, ["doc_id"], n_batches),
+            os.path.join(base, "landing"),
+        )
         .select(fp.alias("fingerprint"))
         .dropDuplicates(["fingerprint"])
     )
@@ -488,9 +477,6 @@ def first_seen_streaming(spark, sf_dir: str) -> DataFrame:
     from qradar_restapi_kafka_datapipeline_spark.sources.registry import (
         load_tables,
     )
-    from qradar_restapi_kafka_datapipeline_spark.streaming.rollup_stream import (
-        _write_split,
-    )
 
     load_tables(spark, sf_dir)
     events = spark.table("events").select("event_id", "ts", "user_id", "event_type")
@@ -500,22 +486,10 @@ def first_seen_streaming(spark, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("d")).distinct().collect())
 
     base = scratch_dir("first_seen_stream_")
-    src = os.path.join(base, "landing")
-    os.makedirs(src)
-    now = 1_700_000_000
-    for i, d in enumerate(days):
-        path = os.path.join(src, f"b{i:03d}.parquet")
-        _write_split(events.where(F.to_date("ts") == F.lit(d)), path)
-        os.utime(path, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema(
-            "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .dropDuplicates(["user_id", "event_type"])
-    )
+    stream = land(
+        spark, [events.where(F.to_date("ts") == F.lit(d)) for d in days],
+        os.path.join(base, "landing"),
+    ).dropDuplicates(["user_id", "event_type"])
     out, ckpt = os.path.join(base, "first"), os.path.join(base, "ckpt")
     (
         stream.writeStream.format("parquet")

@@ -1,0 +1,227 @@
+"""The shared parts/swap/recovery protocol (``parts.py``) and the fixes
+that ride on it: one recovery contract for every staging layout, schema
+memo invalidation on swap, empty pipeline units, the union-find gate and
+temp-view hygiene of the bounded serves."""
+
+import os
+
+import pytest
+
+from qradar_restapi_kafka_datapipeline_spark import engine
+from qradar_restapi_kafka_datapipeline_spark import parts as P
+from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
+from qradar_restapi_kafka_datapipeline_spark.operators import similarity as S
+from qradar_restapi_kafka_datapipeline_spark.operators import sketches as K
+from qradar_restapi_kafka_datapipeline_spark.operators import text as T
+
+
+def _tree(path: str, content: str) -> None:
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, "marker"), "w") as f:
+        f.write(content)
+
+
+def _content(path: str) -> str:
+    with open(os.path.join(path, "marker")) as f:
+        return f.read()
+
+
+#: layout → (recover(spark, root), live dir, tmp dir, old dir) under root —
+#: the four staging conventions on disk
+LAYOUTS = {
+    "parts_compact": (
+        K.recover_sketch_parts,
+        lambda r: r, lambda r: f"{r}.__compact_tmp",
+        lambda r: f"{r}.__compact_old",
+    ),
+    "ivf_rebal": (
+        S.recover_ivf_index,
+        lambda r: r, lambda r: f"{r}.__rebal_tmp",
+        lambda r: f"{r}.__rebal_old",
+    ),
+    "text_index": (
+        T.recover_text_index_norms,
+        lambda r: f"{r}/norms", lambda r: f"{r}/.norms_compact_tmp",
+        lambda r: f"{r}/.norms_compact_old",
+    ),
+    "hybrid_swap": (
+        T._recover_hybrid_index,
+        lambda r: f"{r}/posts", lambda r: f"{r}/.posts_swap_tmp",
+        lambda r: f"{r}/.posts_swap_old",
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_recovery_contract_every_layout(spark, tmp_path, layout):
+    recover, live_of, tmp_of, old_of = LAYOUTS[layout]
+    root = str(tmp_path / "artifact")
+    live, tmp, old = live_of(root), tmp_of(root), old_of(root)
+
+    # killed between the two renames: only the staged-out tree is left
+    _tree(old, "old")
+    assert recover(spark, root) == "restored_old"
+    assert _content(live) == "old" and not os.path.exists(old)
+
+    # killed after the second rename: the swap completed, old is garbage
+    _tree(old, "stale")
+    assert recover(spark, root) == "dropped_stale_old"
+    assert not os.path.exists(old) and _content(live) == "old"
+
+    # killed while staging: the leftover temp is dropped
+    _tree(tmp, "tmp")
+    assert recover(spark, root) == "dropped_tmp"
+    assert not os.path.exists(tmp) and _content(live) == "old"
+
+    assert recover(spark, root) == "ok"
+    assert recover(spark, root) == "ok"
+
+
+def _parts_tree(spark, root: str, cols: str, rows_by_epoch) -> None:
+    for epoch, rows in enumerate(rows_by_epoch):
+        spark.createDataFrame(rows, cols).write.parquet(
+            P.epoch_path(root, epoch)
+        )
+
+
+def test_parts_compactors_drop_a_stale_staged_out_tree(spark, tmp_path):
+    """A completed swap that was killed before deleting its staged-out
+    tree must not break the next compaction (tf parts used to rename the
+    live tree onto the stale one)."""
+    cells = str(tmp_path / "cells")
+    _parts_tree(spark, cells, "i INT, col INT, c BIGINT",
+                [[(0, 1, 2), (0, 2, 1)], [(0, 1, 5)]])
+    _tree(f"{cells}.__compact_old", "stale")
+    assert K.compact_sketch_parts(spark, cells, ("i", "col"), {"c": "sum"}) == 2
+    assert not os.path.exists(f"{cells}.__compact_old")
+    got = {tuple(r) for r in spark.read.parquet(cells)
+           .select("i", "col", "c").collect()}
+    assert got == {(0, 1, 7), (0, 2, 1)}
+
+    tf = str(tmp_path / "tf_parts")
+    _parts_tree(spark, tf, "doc_id BIGINT, word STRING, tf BIGINT",
+                [[(1, "a", 2)], [(2, "b", 1), (3, "c", 4)]])
+    _tree(f"{tf}.__compact_old", "stale")
+    assert T.compact_tf_parts(spark, tf) == 3
+    assert not os.path.exists(f"{tf}.__compact_old")
+    assert P.epochs(spark, tf) == [0]
+
+
+def test_epoch_listing(spark, tmp_path):
+    root = str(tmp_path / "del_parts")
+    assert P.epochs(spark, root) == []
+    for e in (0, 3, 1):
+        os.makedirs(P.epoch_path(root, e))
+    os.makedirs(os.path.join(root, "_spark_metadata"))
+    assert P.epochs(spark, root) == [0, 1, 3]
+
+
+def test_swap_drops_memoized_schema_of_the_swapped_tree(spark, tmp_path):
+    path = str(tmp_path / "index" / "norms")
+    spark.createDataFrame([(1, 2)], "doc_id BIGINT, n2 BIGINT") \
+        .write.parquet(path)
+    other = str(tmp_path / "index" / "stoplist")
+    spark.createDataFrame([("a b",)], "feat STRING").write.parquet(other)
+    assert engine.read_artifact(spark, path).columns == ["doc_id", "n2"]
+    assert engine.read_artifact(spark, other).columns == ["feat"]
+    key = (id(spark), path)
+    memo = engine._ARTIFACT_SCHEMAS[key]
+
+    # a steady re-open keeps the memo hit
+    engine.read_artifact(spark, path)
+    assert engine._ARTIFACT_SCHEMAS[key] is memo
+
+    new = spark.createDataFrame([(1, 2, 3.0)],
+                                "doc_id BIGINT, n2 BIGINT, w DOUBLE")
+    P.swap_dir(spark, path, f"{path}.tmp", f"{path}.old",
+               lambda tmp: new.write.parquet(tmp), "test")
+    assert engine.read_artifact(spark, path).columns == ["doc_id", "n2", "w"]
+    assert engine.read_artifact(spark, path).collect()[0]["w"] == 3.0
+    # only the swapped tree was forgotten
+    assert (id(spark), other) in engine._ARTIFACT_SCHEMAS
+
+
+def test_pipeline_skips_empty_unit_then_merges(spark, sf_dir, tmp_path):
+    from qradar_restapi_kafka_datapipeline_spark.pipeline import Pipeline
+    from qradar_restapi_kafka_datapipeline_spark.sources.registry import (
+        register_qevents,
+    )
+    from qradar_restapi_kafka_datapipeline_spark.views import (
+        register_globalviews,
+        register_ref_sets,
+    )
+
+    register_qevents(spark, sf_dir)
+    register_globalviews(spark)
+    register_ref_sets(spark)
+    q = ["AllowedOutboundTraffic"]
+    p = Pipeline(spark, sink_base=str(tmp_path / "sinks"))
+    # a window with no event at all: skipped, not failed
+    assert p.run_all(["customer_1"], "2030-01-01 00:00:00",
+                     "2030-01-02 00:00:00", query_names=q) == []
+    runs = p.run_all(["customer_1"], "2024-01-01 00:00:00",
+                     "2024-01-21 00:00:00", query_names=q)
+    fresh = Pipeline(spark, sink_base=str(tmp_path / "fresh")).run_all(
+        ["customer_1"], "2024-01-01 00:00:00", "2024-01-21 00:00:00",
+        query_names=q,
+    )
+    assert len(runs) == 1 and runs[0].rows == fresh[0].rows > 0
+
+    def rows(base):
+        df = spark.read.parquet(f"{base}/{runs[0].table}")
+        return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
+
+    assert rows(tmp_path / "sinks") == rows(tmp_path / "fresh")
+
+
+def _clusters(df):
+    return sorted((r["doc_id"], r["cluster_id"]) for r in df.collect())
+
+
+def test_union_find_matches_distributed_min_label(spark, monkeypatch):
+    # chains, a star, a cycle and a 2-node component
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (10, 13),
+             (20, 21), (21, 22), (22, 20), (30, 31), (41, 40), (7, 4)]
+    pairs = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT")
+    driver = _clusters(D.dup_clusters(pairs))
+    monkeypatch.setattr(D, "_CLUSTER_COLLECT_CAP", 1)
+    distributed = _clusters(D.dup_clusters(pairs))
+    assert distributed == driver
+    assert dict(driver)[7] == 1 and dict(driver)[41] == 40
+
+    str_pairs = spark.createDataFrame(
+        [("b", "a"), ("é", "b"), ("z", "y")], "id_a STRING, id_b STRING"
+    )
+    monkeypatch.setattr(D, "_CLUSTER_COLLECT_CAP", 65536)
+    driver = _clusters(D.dup_clusters(str_pairs))
+    monkeypatch.setattr(D, "_CLUSTER_COLLECT_CAP", 1)
+    assert _clusters(D.dup_clusters(str_pairs)) == driver
+
+
+def test_union_find_gate_keeps_float_ids_distributed(spark, monkeypatch):
+    def boom(*a, **k):
+        raise AssertionError("float ids must not take the driver path")
+
+    monkeypatch.setattr(D, "_dup_clusters_driver", boom)
+    pairs = spark.createDataFrame([(1.0, 2.0), (2.0, 3.0)],
+                                  "id_a DOUBLE, id_b DOUBLE")
+    assert _clusters(D.dup_clusters(pairs)) == [(1.0, 1.0), (2.0, 1.0),
+                                                (3.0, 1.0)]
+    assert D._numeric_or_string(pairs.schema["id_a"].dataType) is False
+
+
+def test_bounded_serves_leave_no_temp_views(spark, tables, tmp_path):
+    base = str(tmp_path / "ivfpq")
+    S.build_ivfpq_index(spark, spark.table("embeddings"), base)
+    K.kmv_jaccard(spark).collect()
+    S.knn_ivfpq_from_index(spark, base, dim=64, refine_k=6).collect()
+    n = len(spark.catalog.listTables())
+    for i in range(20):
+        S.knn_ivfpq_from_index(
+            spark, base, dim=64, refine_k=6 if i % 2 else None
+        )
+        K.kmv_jaccard(spark)
+    assert len(spark.catalog.listTables()) == n
+    # the returned plans stay valid after their views are dropped
+    assert S.knn_ivfpq_from_index(spark, base, dim=64).count() > 0
+    assert K.kmv_jaccard(spark).count() == 1
