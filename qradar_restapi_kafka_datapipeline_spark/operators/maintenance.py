@@ -22,7 +22,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from qradar_restapi_kafka_datapipeline_spark.parts import epochs
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    epochs,
+    index_kind,
+    read_merged,
+    read_tombstones,
+    stream_log,
+    tombstone_log,
+)
 
 
 def compact_rollup(
@@ -59,16 +66,8 @@ def compact_rollup(
 # 100 TB the operational question is WHEN to compact, and the answer needs
 # numbers: how many part files the serve must open, how many epochs the
 # stream log holds, and what fraction of the stored rows every serve pays
-# to scan-then-anti-join away.
+# to scan-then-anti-join away.  The layouts are parts.INDEX_KINDS.
 # ---------------------------------------------------------------------------
-
-#: kind → (primary data relation, stream-log subdir or None, id column)
-_INDEX_LAYOUT: dict[str, tuple[str, str | None, str]] = {
-    "text": ("postings", None, "doc_id"),
-    "hybrid": ("tf", None, "doc_id"),
-    "ivf": ("assignments", "assignments_stream", "vec_id"),
-    "ivfpq": ("codes", "codes_stream", "vec_id"),
-}
 
 
 def _count_files(root: str) -> int:
@@ -102,49 +101,22 @@ def index_debt_report(spark: SparkSession, path: str, kind: str) -> dict:
     scale this is a metadata query against table statistics, not a data
     pass per user query).
     """
-    import os
-
-    if kind == "parts":
-        # per-epoch parts tree (compact_tf_parts' input): path IS the tree
-        data_dirs, stream, id_col = [path], None, "doc_id"
-        rel = spark.read.option("basePath", path).parquet(path)
-        rel = rel.select([c for c in rel.columns if c != "epoch"])
-    elif kind in _INDEX_LAYOUT:
-        main, stream, id_col = _INDEX_LAYOUT[kind]
-        data_dirs = [os.path.join(path, main)]
-        rel = (
-            spark.read.option("basePath", data_dirs[0])
-            .parquet(data_dirs[0])
-        )
-        if stream is not None:
-            sdir = os.path.join(path, stream)
-            if os.path.isdir(sdir):
-                data_dirs.append(sdir)
-                srel = spark.read.option("basePath", sdir).parquet(sdir)
-                rel = rel.select(id_col).unionByName(srel.select(id_col))
-    else:
-        raise ValueError(f"index_debt_report: unknown kind {kind!r}")
-
-    # "parts" trees keep their tombstones in a SEPARATE del-parts tree
-    # (the streamed-serve convention) — their debt here is parts-count
-    # debt; masked-fraction debt is measured on the flat-log kinds.
-    tomb_path = f"{path}/tombstones" if kind != "parts" else ""
-    n_files = sum(_count_files(d) for d in data_dirs)
-    n_stream_epochs = (
-        len(epochs(spark, os.path.join(path, stream))) if stream else
-        len(epochs(spark, path)) if kind == "parts" else 0
-    )
+    data, stream, id_col, _ = index_kind(kind, "index_debt_report")
+    # a "parts" tree (compact_tf_parts' input) IS the path: its epoch parts
+    # are its stream debt, and its tombstones live in a SEPARATE del-parts
+    # tree (the streamed-serve convention), so no masked debt shows here
+    base = path if data is None else f"{path}/{data}"
+    log = stream_log(path, kind) if stream else None
+    n_files = _count_files(base) + (_count_files(log) if log else 0)
+    n_stream_epochs = len(epochs(spark, log or base))
+    rel = read_merged(spark, path, kind, [id_col])
     total = rel.count()
     masked = 0
     n_tomb = 0
-    if tomb_path and os.path.isdir(tomb_path):
-        tomb = spark.read.parquet(tomb_path).select(id_col).distinct()
+    tomb = read_tombstones(spark, tombstone_log(path), id_col)
+    if tomb is not None:
         n_tomb = tomb.count()
-        masked = (
-            rel.select(id_col)
-            .join(F.broadcast(tomb), id_col, "left_semi")
-            .count()
-        )
+        masked = rel.join(F.broadcast(tomb), id_col, "left_semi").count()
     return {
         "kind": kind,
         "n_files": n_files,
@@ -182,13 +154,12 @@ def vacuum_index(
     the threshold trigger itself is pytest-pinned.
 
     Note: a FULLY-deleted index (every row tombstoned) makes the
-    ivf/ivfpq compactors raise — that is the documented drop-the-
-    directory state, surfaced loudly rather than auto-destroyed here.
+    text/ivf/ivfpq compactors raise before staging anything — that is the
+    documented drop-the-directory state, surfaced loudly rather than
+    auto-destroyed here.
     """
-    from qradar_restapi_kafka_datapipeline_spark.operators import (
-        similarity as _S,
-    )
-    from qradar_restapi_kafka_datapipeline_spark.operators import text as _T
+    import importlib
+    import inspect
 
     report = index_debt_report(spark, path, kind)
     trip = (
@@ -198,16 +169,10 @@ def vacuum_index(
     )
     if not trip:
         return {**report, "action": "none"}
-    if kind == "text":
-        _T.compact_text_index(spark, path)
-    elif kind == "hybrid":
-        _T.compact_hybrid_index(spark, path, dim=dim)
-    elif kind == "ivf":
-        _S.compact_ivf_index(spark, path)
-    elif kind == "ivfpq":
-        _S.compact_ivfpq_index(spark, path)
-    elif kind == "parts":
-        _T.compact_tf_parts(spark, path)
+    module, name = index_kind(kind, "vacuum_index")[3].split(".")
+    compact = getattr(importlib.import_module(f"{__package__}.{module}"), name)
+    kw = {"dim": dim} if "dim" in inspect.signature(compact).parameters else {}
+    compact(spark, path, **kw)
     return {**report, "action": "compacted",
             "after": index_debt_report(spark, path, kind)}
 

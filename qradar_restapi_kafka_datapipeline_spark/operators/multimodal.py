@@ -778,6 +778,7 @@ def phash_index_delete_streaming(
     from qradar_restapi_kafka_datapipeline_spark.operators.text import (
         _stream_delete_parts,
     )
+    from qradar_restapi_kafka_datapipeline_spark.parts import anti_join_sql
 
     po: list = []
     phash_index_streaming(spark, max_hamming, n_batches, source,
@@ -790,11 +791,8 @@ def phash_index_delete_streaming(
     )
     if _parts_out is not None:
         _parts_out.extend([parts, del_parts])
-    merged = (
-        f"SELECT t.doc_id, t.hash_hi, t.hash_lo FROM parquet.`{parts}` t "
-        f"LEFT ANTI JOIN (SELECT DISTINCT doc_id FROM "
-        f"parquet.`{del_parts}`) d ON d.doc_id = t.doc_id"
-    )
+    merged = anti_join_sql(f"parquet.`{parts}`",
+                           ["doc_id", "hash_hi", "hash_lo"], del_parts)
     return spark.sql(phash_clusters_sql("spark", merged, max_hamming))
 
 

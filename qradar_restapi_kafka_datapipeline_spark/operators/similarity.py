@@ -18,10 +18,15 @@ from pyspark.sql.window import Window
 
 from qradar_restapi_kafka_datapipeline_spark.operators.dedup import cosine_expr
 from qradar_restapi_kafka_datapipeline_spark.parts import (
-    exists,
+    INDEX_KINDS,
+    append_tombstones,
     heal_swap,
+    read_live,
     replay_epochs,
+    require_live,
+    stream_log,
     swap_dir,
+    tombstone_log,
 )
 
 
@@ -701,42 +706,15 @@ def build_ivf_index(
 
 def _merged_assignments(spark, path: str, probed: list[int],
                         id_col: str, vec_col: str) -> DataFrame:
-    """The index's full assignment relation: the one-shot ``assignments/``
-    tree UNIONed with any streamed per-epoch parts under
-    ``assignments_stream/epoch=N/list_id=L/`` (:func:`ivf_append_streaming`).
-    Both trees are list_id-partitioned, so the probed-lists predicate
-    file-prunes each independently — the streamed log costs a query
-    nothing beyond its own probed files."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
-
-    rel = (
-        read_artifact(
-            spark, f"{path}/assignments", base_path=f"{path}/assignments"
-        )
-        .where(F.col("list_id").isin(probed))
-        .select(id_col, vec_col, "list_id")
-    )
-    stream = f"{path}/assignments_stream"
-    if exists(spark, stream):
-        rel = rel.unionByName(
-            read_artifact(spark, stream, base_path=stream)
-            .where(F.col("list_id").isin(probed))
-            .select(id_col, vec_col, "list_id")
-        )
-    tomb = f"{path}/tombstones"
-    if exists(spark, tomb):
-        # deletes are a BROADCAST anti-join: the tombstone log is bounded
-        # between rebuilds (a rebuild compacts it away), so the probe scan
-        # stays file-pruned and the filter is map-side.
-        dels = F.broadcast(
-            read_artifact(spark, tomb).select(id_col).distinct()
-        )
-        rel = rel.join(dels, id_col, "left_anti")
-    return rel
+    """The index's live assignments in the ``probed`` lists: base tree ∪
+    streamed parts (:func:`ivf_append_streaming`) − tombstones
+    (:func:`delete_from_ivf_index`), via :func:`...parts.read_live`."""
+    return read_live(spark, path, "ivf", [id_col, vec_col, "list_id"],
+                     id_col, probed)
 
 
-#: bounded-serve collect budget (rows) for the probe relation: aligned with
-#: the refine shortlist's literal cap (the janino/SQL-literal posture) —
+#: bounded-serve collect budget (rows) for the probe relation, and the
+#: IVF-PQ refine shortlist's literal cap (the janino/SQL-literal posture) —
 #: far above any online serve batch, far below anything that could stress
 #: the driver.  Larger batches keep the fully distributed path.
 _SERVE_COLLECT_CAP = 4096
@@ -890,7 +868,7 @@ def ivf_append_streaming(
     try:
         replay_epochs(
             spark, new_emb.select(id_col, vec_col), [id_col], n_batches,
-            base, f"{path}/assignments_stream",
+            base, stream_log(path, "ivf"),
             lambda batch: _assign(batch, cents, 1, id_col, vec_col),
             partition_by="list_id",
             crash_after_write_epoch=_crash_after_write_epoch,
@@ -920,7 +898,7 @@ def ivfpq_append_streaming(
     the vector (the shared rounded/tie-broken :func:`pq_codes_sql`), so
     the streamed log's union IS the one-shot encode relation row-for-row
     — serving through :func:`knn_ivfpq_from_index` (which unions the log
-    via :func:`_merged_codes`) is hash-equal to a one-shot build's codes
+    via :func:`...parts.read_live`) is hash-equal to a one-shot build's codes
     over the same artifacts, and the gate oracle proves it by replaying
     the WHOLE pipeline from the artifacts over the full corpus.  Both
     trees stay list_id-partitioned, so probed-list file pruning is
@@ -952,7 +930,7 @@ def ivfpq_append_streaming(
     try:
         replay_epochs(
             spark, new_emb.select("vec_id", "embedding"), ["vec_id"],
-            n_batches, base, f"{path}/codes_stream", codes,
+            n_batches, base, stream_log(path, "ivfpq"), codes,
             partition_by="list_id",
             crash_after_write_epoch=_crash_after_write_epoch,
         )
@@ -976,9 +954,7 @@ def delete_from_ivf_index(
     Idempotent — deleting an id twice, or an id not in the index, is a
     no-op by anti-join semantics.  No list is rewritten at delete time,
     so deletes are O(|ids|) regardless of index size."""
-    ids.select(id_col).distinct().write.mode("append").parquet(
-        f"{path}/tombstones"
-    )
+    append_tombstones(ids, tombstone_log(path), id_col)
 
 
 def compact_ivf_index(spark, path: str,
@@ -996,48 +972,8 @@ def compact_ivf_index(spark, path: str,
     :func:`rebalance_ivf_index`, so :func:`recover_ivf_index` heals a
     mid-swap crash of either operation.  Returns the number of live
     vectors in the compacted tree."""
-    recover_ivf_index(spark, path)
-    rel = (
-        spark.read.option("basePath", f"{path}/assignments")
-        .parquet(f"{path}/assignments")
-        .select(id_col, vec_col, "list_id")
-    )
-    stream = f"{path}/assignments_stream"
-    if exists(spark, stream):
-        rel = rel.unionByName(
-            spark.read.option("basePath", stream).parquet(stream)
-            .select(id_col, vec_col, "list_id")
-        )
-    tomb = f"{path}/tombstones"
-    if exists(spark, tomb):
-        rel = rel.join(
-            F.broadcast(spark.read.parquet(tomb).select(id_col).distinct()),
-            id_col, "left_anti",
-        )
-    # Explicit empty-state guard (ADVICE r11): a full-delete (every vector
-    # tombstoned — the legitimate GDPR wipe state) would otherwise write a
-    # partitioned tree with zero part files and die at the read-back with an
-    # opaque "unable to infer schema".  Fail BEFORE any staging with a clear
-    # message; the live index is untouched.
-    if rel.limit(1).count() == 0:
-        raise ValueError(
-            f"compact_ivf_index: index at {path} is empty after applying "
-            "tombstones (every vector deleted). Compaction cannot produce a "
-            "schemaless empty tree — drop the index directory instead, or "
-            "rebuild with build_ivf_index once new vectors exist."
-        )
-
-    def write(tmp: str) -> int:
-        # centroids pass through unchanged (the quantizer is the index's
-        # identity; compaction only reorganizes storage)
-        spark.read.parquet(f"{path}/centroids").coalesce(1).write.parquet(
-            f"{tmp}/centroids"
-        )
-        rel.write.partitionBy("list_id").parquet(f"{tmp}/assignments")
-        return spark.read.parquet(f"{tmp}/assignments").count()
-
-    return swap_dir(spark, path, *_rebal_staging(path), write,
-                    "compact_ivf_index")
+    return _compact_lists(spark, path, "ivf", [id_col, vec_col, "list_id"],
+                          id_col, ("centroids",), "compact_ivf_index")
 
 
 def compact_ivfpq_index(spark, path: str) -> int:
@@ -1053,46 +989,33 @@ def compact_ivfpq_index(spark, path: str) -> int:
     ``__rebal_tmp``/``__rebal_old`` names, so :func:`recover_ivf_index`
     heals a mid-swap crash of this operation too.  Returns the number
     of live vectors in the compacted tree."""
+    return _compact_lists(spark, path, "ivfpq",
+                          ["vec_id", "mi", "j", "list_id"], "vec_id",
+                          ("centroids", "codebooks"), "compact_ivfpq_index")
+
+
+def _compact_lists(spark, path: str, kind: str, cols: list[str], id_col: str,
+                   trained: tuple[str, ...], what: str) -> int:
+    """The IVF/IVF-PQ compaction: heal, then swap in one list_id-partitioned
+    tree of base ∪ stream − tombstones beside the unchanged ``trained``
+    artifacts (the index's identity).  Returns the live vector count."""
     recover_ivf_index(spark, path)
-    rel = (
-        spark.read.option("basePath", f"{path}/codes")
-        .parquet(f"{path}/codes")
-        .select("vec_id", "mi", "j", "list_id")
-    )
-    stream = f"{path}/codes_stream"
-    if exists(spark, stream):
-        rel = rel.unionByName(
-            spark.read.option("basePath", stream).parquet(stream)
-            .select("vec_id", "mi", "j", "list_id")
-        )
-    tomb = f"{path}/tombstones"
-    if exists(spark, tomb):
-        rel = rel.join(
-            F.broadcast(spark.read.parquet(tomb).select("vec_id").distinct()),
-            "vec_id", "left_anti",
-        )
-    if rel.limit(1).count() == 0:
-        raise ValueError(
-            f"compact_ivfpq_index: index at {path} is empty after applying "
-            "tombstones (every vector deleted) — drop the index directory "
-            "instead, or rebuild with build_ivfpq_index once vectors exist."
-        )
+    rel = read_live(spark, path, kind, cols, id_col)
+    require_live(rel, what, path)
+    data = INDEX_KINDS[kind][0]
 
     def write(tmp: str) -> int:
-        # the two trained artifacts pass through unchanged (they are the
-        # index's identity; compaction only reorganizes the code storage)
-        for art in ("centroids", "codebooks"):
+        for art in trained:
             spark.read.parquet(f"{path}/{art}").coalesce(1).write.parquet(
                 f"{tmp}/{art}"
             )
-        rel.write.partitionBy("list_id").parquet(f"{tmp}/codes")
+        rel.write.partitionBy("list_id").parquet(f"{tmp}/{data}")
         return (
-            spark.read.parquet(f"{tmp}/codes")
-            .select("vec_id").distinct().count()
+            spark.read.parquet(f"{tmp}/{data}")
+            .select(id_col).distinct().count()
         )
 
-    return swap_dir(spark, path, *_rebal_staging(path), write,
-                    "compact_ivfpq_index")
+    return swap_dir(spark, path, *_rebal_staging(path), write, what)
 
 
 def _rebal_staging(path: str) -> tuple[str, str]:
@@ -1146,29 +1069,9 @@ def rebalance_ivf_index(
     as the corpus keeps growing.  Pass an int to pin geometry (the
     small-SF gate entries do, for hash stability)."""
     recover_ivf_index(spark, path)
-    emb = (
-        spark.read.option("basePath", f"{path}/assignments")
-        .parquet(f"{path}/assignments")
-        .select(id_col, vec_col)
-    )
-    stream = f"{path}/assignments_stream"
-    if exists(spark, stream):
-        # fold the streamed per-epoch log (ivf_append_streaming) into the
-        # retrained tree — the rebuild IS the log's compaction; the swap
-        # stages the whole old dir (log included) out, so the new index
-        # starts with an empty log.
-        emb = emb.unionByName(
-            spark.read.option("basePath", stream).parquet(stream)
-            .select(id_col, vec_col)
-        )
-    tomb = f"{path}/tombstones"
-    if exists(spark, tomb):
-        # honor tombstones (delete_from_ivf_index): the rebuild drops the
-        # deleted rows physically and the swap clears the log.
-        emb = emb.join(
-            F.broadcast(spark.read.parquet(tomb).select(id_col).distinct()),
-            id_col, "left_anti",
-        )
+    # the rebuild IS the compaction: the streamed log folds in, tombstoned
+    # rows drop, and the swap stages the whole old dir (logs included) out
+    emb = read_live(spark, path, "ivf", [id_col, vec_col], id_col)
     n = emb.count()
     if n_centroids == "auto":
         n_centroids = auto_nlist(n)
@@ -1669,30 +1572,6 @@ def build_ivfpq_index(
     ).parquet(f"{path}/codes")
 
 
-def _merged_codes(spark, path: str, probed: list[int]) -> DataFrame:
-    """The IVF-PQ index's full code relation: the one-shot ``codes/``
-    tree UNIONed with any streamed per-epoch parts under
-    ``codes_stream/epoch=N/list_id=L/`` (:func:`ivfpq_append_streaming`)
-    — the compressed-index twin of :func:`_merged_assignments`.  Both
-    trees are list_id-partitioned, so the probed-lists predicate
-    file-prunes each independently."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
-
-    rel = (
-        read_artifact(spark, f"{path}/codes", base_path=f"{path}/codes")
-        .where(F.col("list_id").isin(probed))
-        .select("vec_id", "mi", "j", "list_id")
-    )
-    stream = f"{path}/codes_stream"
-    if exists(spark, stream):
-        rel = rel.unionByName(
-            read_artifact(spark, stream, base_path=stream)
-            .where(F.col("list_id").isin(probed))
-            .select("vec_id", "mi", "j", "list_id")
-        )
-    return rel
-
-
 def knn_ivfpq_from_index(
     spark,
     path: str,
@@ -1745,23 +1624,11 @@ def knn_ivfpq_from_index(
         [(int(r["q_id"]), int(r["list_id"])) for r in probe_rows],
         "q_id BIGINT, list_id INT",
     )
-    codes = _merged_codes(spark, path, probed)
-    tomb = f"{path}/tombstones"
-    if exists(spark, tomb):
-        # same tombstone-log convention as the raw-vector index
-        # (delete_from_ivf_index): broadcast anti-join on the code scan,
-        # so deleted vectors can neither rank nor enter a refine
-        # shortlist; a rebuild compacts the log away.
-        from qradar_restapi_kafka_datapipeline_spark.engine import (
-            read_artifact,
-        )
-
-        codes = codes.join(
-            F.broadcast(
-                read_artifact(spark, tomb).select("vec_id").distinct()
-            ),
-            "vec_id", "left_anti",
-        )
+    # base ∪ streamed codes (ivfpq_append_streaming) in the probed lists,
+    # tombstones (delete_from_ivf_index) masked on the code scan, so
+    # deleted vectors can neither rank nor enter a refine shortlist
+    codes = read_live(spark, path, "ivfpq", ["vec_id", "mi", "j", "list_id"],
+                      "vec_id", probed)
     # ADVICE r13: per-invocation view names (engine.unique_view) — fixed
     # global names were safe only while this was the sole view-registering
     # serve in the takedown pool; unique names make it reentrant under any
@@ -1781,7 +1648,7 @@ def knn_ivfpq_from_index(
             probes_rel = f"SELECT q_id, list_id FROM {probes_view}"
             shortlist_rel = None
             n_id_in = None
-            if query_max * refine_k <= 4_096:
+            if query_max * refine_k <= _SERVE_COLLECT_CAP:
                 # bounded serve: land the ADC shortlist (≤ queries×refine_k
                 # rows) driver-side, re-read the raw vectors through an
                 # IN-list pushed to the parquet scan.

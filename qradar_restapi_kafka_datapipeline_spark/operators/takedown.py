@@ -10,17 +10,18 @@ Design, and why replay is trivially safe:
 
 - Every per-index delete in this engine is an IDEMPOTENT tombstone append
   (``delete_from_text_index`` / ``delete_from_hybrid_index`` /
-  ``delete_from_ivf_index`` — text.py:1290,1787, similarity.py:990): the
+  ``delete_from_ivf_index``, all :func:`...parts.append_tombstones`): the
   log is append-only, every reader collapses it with DISTINCT, and no
   index structure is rewritten at delete time.  A takedown that crashes
   mid-fan-out therefore needs NO undo or journal: re-running the same
   call re-appends (duplicate rows collapse) and completes the indexes the
   crash skipped.  O(|ids|) per index regardless of index size.
-- The doc↔vec id mapping is explicit: indexes declare their id column
-  (``doc_id`` for the text-side artifacts, ``vec_id`` for the vector
-  indexes); the one incoming id set is renamed per index (the identity
-  doc_id == vec_id mapping the testdata uses), or routed through an
-  ``id_map`` relation when the deployment keys vectors differently.
+- The doc↔vec id mapping is explicit: each kind declares its id column
+  in :data:`...parts.INDEX_KINDS` (``doc_id`` for the text-side
+  artifacts, ``vec_id`` for the vector indexes); the one incoming id set
+  is renamed per index (the identity doc_id == vec_id mapping the
+  testdata uses), or routed through an ``id_map`` relation when the
+  deployment keys vectors differently.
 - Ids absent from an index are no-ops by anti-join semantics — the verb
   never needs to know which indexes actually contain a given document.
 
@@ -41,16 +42,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
-from qradar_restapi_kafka_datapipeline_spark.parts import epoch_path, epochs
-
-#: kinds whose tombstone log lives flat at ``{path}/tombstones`` keyed by
-#: the index's id column
-_FLAT_KINDS = {
-    "text": "doc_id",
-    "hybrid": "doc_id",
-    "ivf": "vec_id",
-    "ivfpq": "vec_id",
-}
+from qradar_restapi_kafka_datapipeline_spark.parts import (
+    append_tombstones,
+    epoch_path,
+    epochs,
+    index_kind,
+    tombstone_log,
+)
 
 
 @dataclass(frozen=True)
@@ -71,11 +69,6 @@ class RegisteredIndex:
     name: str
     kind: str
     path: str
-
-
-def _next_epoch(spark, parts: str) -> int:
-    """1 + the highest existing ``epoch=N`` part (0 for a fresh tree)."""
-    return 1 + max(epochs(spark, parts), default=-1)
 
 
 def takedown(
@@ -102,34 +95,26 @@ def takedown(
     """
     dedup = ids.select("doc_id").distinct()
     n = dedup.count()
-    vec_ids = None
+    ids_by_col = {
+        "doc_id": dedup,
+        "vec_id": (
+            id_map.join(F.broadcast(dedup), "doc_id").select("vec_id")
+            if id_map is not None
+            else dedup.select(F.col("doc_id").alias("vec_id"))
+        ),
+    }
     report: dict[str, int] = {}
     for i, ix in enumerate(indexes):
-        if ix.kind in ("ivf", "ivfpq"):
-            if vec_ids is None:
-                if id_map is not None:
-                    vec_ids = (
-                        id_map.join(F.broadcast(dedup), "doc_id")
-                        .select("vec_id").distinct()
-                    )
-                else:
-                    vec_ids = dedup.select(
-                        F.col("doc_id").alias("vec_id")
-                    )
-            vec_ids.write.mode("append").parquet(f"{ix.path}/tombstones")
-        elif ix.kind in ("text", "hybrid"):
-            dedup.write.mode("append").parquet(f"{ix.path}/tombstones")
-        elif ix.kind == "parts":
+        data, _, id_col, _ = index_kind(ix.kind, f"takedown {ix.name!r}")
+        if data is None:
             # the streamed-serve tombstone-parts convention: land one new
             # immutable epoch part; readers SELECT DISTINCT doc_id over
             # the tree, so a replayed call's extra part collapses away
-            dedup.write.mode("overwrite").parquet(
-                epoch_path(ix.path, _next_epoch(spark, ix.path))
-            )
+            epoch = 1 + max(epochs(spark, ix.path), default=-1)
+            dedup.write.mode("overwrite").parquet(epoch_path(ix.path, epoch))
         else:
-            raise ValueError(
-                f"takedown: unknown index kind {ix.kind!r} for {ix.name!r}"
-            )
+            append_tombstones(ids_by_col[id_col], tombstone_log(ix.path),
+                              id_col)
         report[ix.name] = n
         if _crash_after is not None and i == _crash_after:
             raise RuntimeError(

@@ -17,13 +17,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qradar_restapi_kafka_datapipeline_spark.parts import (
+    anti_join,
+    anti_join_sql,
+    append_tombstones,
     delete,
     epoch_path,
     exists,
     heal_swap,
     most_severe,
+    read_tombstones,
     replay_epochs,
+    require_live,
     swap_dir,
+    tombstone_log,
 )
 
 # ---------------------------------------------------------------------------
@@ -1324,12 +1330,9 @@ def text_knn_from_index(
     )
     if exclude_id is not None:
         cand = cand.where(F.col("doc_id") != exclude_id)
-    tomb = _text_index_tombstones(spark, path)
-    if tomb is not None:
-        # same tombstone-log convention as the IVF index: broadcast
-        # anti-join on the candidate scan, so a deleted document can
-        # never rank; compaction drops the rows physically.
-        cand = cand.join(F.broadcast(tomb), "doc_id", "left_anti")
+    # tombstones (delete_from_text_index) masked on the candidate scan, so
+    # a deleted document can never rank; compaction drops the rows
+    cand = anti_join(cand, read_tombstones(spark, tombstone_log(path)))
     dots = (
         cand.groupBy("doc_id")
         .agg(F.sum(F.col("w") * F.col("qw")).cast("long").alias("d"))
@@ -1422,20 +1425,7 @@ def delete_from_text_index(spark, path: str, ids) -> None:
     delete adds duplicate ids; every reader collapses them with
     DISTINCT) and crash-safe (a torn append leaves at most a missing
     part file, never a corrupt index)."""
-    ids.select("doc_id").distinct().write.mode("append").parquet(
-        f"{path}/tombstones"
-    )
-
-
-def _text_index_tombstones(spark, path: str):
-    """The distinct tombstoned doc ids at ``path``, or None if the log
-    doesn't exist (shared by the serve and compaction paths)."""
-    tomb = f"{path}/tombstones"
-    if not exists(spark, tomb):
-        return None
-    from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
-
-    return read_artifact(spark, tomb).select("doc_id").distinct()
+    append_tombstones(ids, tombstone_log(path))
 
 
 def _index_staging(path: str, name: str) -> tuple[str, str]:
@@ -1476,28 +1466,29 @@ def compact_text_index(
     convention).  Crash ordering is safe at every point: postings swap,
     then norms swap, then log delete — a kill between any two leaves the
     tombstone log in place, so the serve anti-join still masks, and the
-    next compaction's drops are no-ops on already-dropped rows.
+    next compaction's drops are no-ops on already-dropped rows.  A full
+    delete (every document tombstoned) raises ``ValueError`` before
+    anything is staged, leaving the index and its log as they were.
     """
     from qradar_restapi_kafka_datapipeline_spark.operators.maintenance import (
         compact_rollup,
     )
 
     recover_text_index_norms(spark, path)  # self-heal a prior mid-swap kill
-    tomb = _text_index_tombstones(spark, path)
+    tomb = read_tombstones(spark, tombstone_log(path))
     postings = f"{path}/postings"
     if tomb is not None:
         # Filtered rewrite of the whole postings tree (can't reuse
         # compact_rollup — it rewrites layout, not rows), swapped in like
         # norms below.
-        filtered = (
-            spark.read.option("basePath", postings).parquet(postings)
-            .join(F.broadcast(tomb), "doc_id", "left_anti")
-            .repartition("bucket_group")
+        live = anti_join(
+            spark.read.option("basePath", postings).parquet(postings), tomb
         )
+        require_live(live, "compact_text_index", path)
         swap_dir(
             spark, postings, *_index_staging(path, "postings"),
-            lambda tmp: filtered.write.mode("overwrite")
-            .partitionBy("bucket_group").parquet(tmp),
+            lambda tmp: live.repartition("bucket_group").write
+            .mode("overwrite").partitionBy("bucket_group").parquet(tmp),
             "compact_text_index",
         )
         n = spark.read.parquet(postings).select(
@@ -1513,9 +1504,7 @@ def compact_text_index(
     # norms is small and unpartitioned: Spark refuses an in-place overwrite
     # of a path it is reading, so stage to a dotted temp dir (invisible to
     # listings) and swap it in.
-    norms = spark.read.parquet(f"{path}/norms")
-    if tomb is not None:
-        norms = norms.join(F.broadcast(tomb), "doc_id", "left_anti")
+    norms = anti_join(spark.read.parquet(f"{path}/norms"), tomb)
     swap_dir(
         spark, f"{path}/norms", *_index_staging(path, "norms"),
         lambda tmp: norms.coalesce(1).write.mode("overwrite").parquet(tmp),
@@ -1525,7 +1514,7 @@ def compact_text_index(
         # both swaps committed: the log's rows are physically gone, so the
         # log itself can drop (a crash before this line is harmless — the
         # anti-joins are no-ops on the already-dropped rows)
-        delete(spark, f"{path}/tombstones")
+        delete(spark, tombstone_log(path))
     return n
 
 
@@ -1870,9 +1859,7 @@ def append_to_hybrid_index(
 def delete_from_hybrid_index(spark, path: str, ids) -> None:
     """Tombstone deletes for the hybrid artifact — same append-only log
     convention as every other maintained index (idempotent, O(|ids|))."""
-    ids.select("doc_id").distinct().write.mode("append").parquet(
-        f"{path}/tombstones"
-    )
+    append_tombstones(ids, tombstone_log(path))
 
 
 def hybrid_index_rels(spark, path: str) -> tuple[str, str]:
@@ -1889,18 +1876,14 @@ def hybrid_index_rels(spark, path: str) -> tuple[str, str]:
       contract) until :func:`compact_hybrid_index` re-derives the
       postings from the remaining bigram-tf, after which the whole
       artifact is rebuild-exact again (pytest-pinned)."""
-    tomb = _text_index_tombstones(spark, path)
     tf = f"parquet.`{path}/tf`"
     posts = f"parquet.`{path}/posts`"
-    if tomb is None:
+    log = tombstone_log(path)
+    if not exists(spark, log):
         return tf, posts
-    anti = (
-        f"LEFT ANTI JOIN (SELECT DISTINCT doc_id FROM "
-        f"parquet.`{path}/tombstones`) __hd ON __hd.doc_id = t.doc_id"
-    )
     return (
-        f"(SELECT t.doc_id, t.word, t.tf FROM {tf} t {anti})",
-        f"(SELECT t.doc_id, t.bucket, t.w FROM {posts} t {anti})",
+        anti_join_sql(tf, ["doc_id", "word", "tf"], log),
+        anti_join_sql(posts, ["doc_id", "bucket", "w"], log),
     )
 
 
@@ -1915,19 +1898,18 @@ def compact_hybrid_index(spark, path: str, dim: int = 4096) -> None:
     log is deleted last (interrupted states keep masking via
     :func:`hybrid_index_rels`)."""
     _recover_hybrid_index(spark, path)  # heal a prior mid-swap kill
-    tomb = _text_index_tombstones(spark, path)
+    tomb = read_tombstones(spark, tombstone_log(path))
     if tomb is None:
         return
-    b = F.broadcast(tomb)
     for name in ("tf", "btf"):
         _swap_hybrid(
             spark, path, name,
-            spark.read.parquet(f"{path}/{name}").join(b, "doc_id", "left_anti"),
+            anti_join(spark.read.parquet(f"{path}/{name}"), tomb),
             "compact_hybrid_index",
         )
     _swap_hybrid(spark, path, "posts", _hybrid_posts(spark, path, dim),
                  "compact_hybrid_index")
-    delete(spark, f"{path}/tombstones")
+    delete(spark, tombstone_log(path))
 
 
 def _hybrid_staging(path: str, name: str) -> tuple[str, str]:
@@ -2409,11 +2391,8 @@ def text_index_delete_streaming(
     if _parts_out is not None:
         _parts_out.extend([parts, del_parts])
     # stage 3: serve from merged parts minus merged tombstones
-    merged = (
-        f"(SELECT t.doc_id, t.word, t.tf FROM parquet.`{parts}` t "
-        f"LEFT ANTI JOIN (SELECT DISTINCT doc_id FROM "
-        f"parquet.`{del_parts}`) d ON d.doc_id = t.doc_id)"
-    )
+    merged = anti_join_sql(f"parquet.`{parts}`", ["doc_id", "word", "tf"],
+                           del_parts)
     return spark.sql(bm25_topk_sql("spark", query_doc, k, tf_rel=merged))
 
 
@@ -2453,12 +2432,8 @@ def chunk_index_delete_streaming(
     )
     if _parts_out is not None:
         _parts_out.extend([parts, del_parts])
-    merged = (
-        f"(SELECT t.doc_id, t.feat, t.c FROM parquet.`{parts}` t "
-        f"LEFT ANTI JOIN (SELECT DISTINCT doc_id FROM "
-        f"parquet.`{del_parts}`) d "
-        f"ON d.doc_id = t.doc_id DIV {CHUNK_ID_MULT})"
-    )
+    merged = anti_join_sql(f"parquet.`{parts}`", ["doc_id", "feat", "c"],
+                           del_parts, key_mult=CHUNK_ID_MULT)
     cp_sql = hashed_embedding_postings_sql("spark", dim, tf_rel=merged)
     rem = unique_view(
         spark.table(source).where(f"NOT ({delete_pred})"), "__cidel_rem"
@@ -2487,22 +2462,10 @@ def compact_tf_parts(
 
     recover_sketch_parts(spark, parts)  # heal-at-entry (ADVICE r12)
     rel = spark.read.option("basePath", parts).parquet(parts)
-    data_cols = [c for c in rel.columns if c != "epoch"]
-    rel = rel.select(*data_cols)
-    if del_parts is not None and exists(spark, del_parts):
-        tomb = (
-            spark.read.option("basePath", del_parts).parquet(del_parts)
-            .select("doc_id").distinct()
-        )
-        # integer DIV decodes the document from a composite chunk id
-        key = (
-            F.expr(f"doc_id DIV {key_mult}") if key_mult > 1
-            else F.col("doc_id")
-        )
-        rel = rel.join(
-            F.broadcast(tomb.withColumnRenamed("doc_id", "__tomb_id")),
-            key == F.col("__tomb_id"), "left_anti",
-        )
+    rel = rel.select(*[c for c in rel.columns if c != "epoch"])
+    if del_parts is not None:
+        rel = anti_join(rel, read_tombstones(spark, del_parts),
+                        key_mult=key_mult)
 
     def write(tmp: str) -> int:
         rel.write.mode("overwrite").parquet(epoch_path(tmp, 0))

@@ -16,6 +16,10 @@ Three mechanisms, each implemented here once:
   the new tree intact.
 - **Recovery.**  :func:`heal_swap` repairs the states a killed swap leaves
   behind; every compactor calls it on entry.
+- **Tombstones and the merged read.**  A delete appends ids to a tombstone
+  log (:func:`append_tombstones`); serves and compactors read base tree ∪
+  stream log − tombstones (:func:`read_live`).  :data:`INDEX_KINDS` maps
+  each maintained-index kind to its layout.
 
 All filesystem access goes through the Hadoop FileSystem API
 (:func:`hadoop_fs`), so the same code serves local, HDFS and object-store
@@ -26,9 +30,12 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable, Iterable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from qradar_restapi_kafka_datapipeline_spark import engine
 
 #: mtime of the first landed batch file; later files are 10 s apart, so a
 #: ``maxFilesPerTrigger=1`` file stream reads them one per micro-batch, in
@@ -206,8 +213,6 @@ def replay_epochs(
 def _forget_schemas(live: str) -> None:
     """Drop the memoized artifact schemas at or under ``live``: the tree
     there was just replaced and may carry a different column set."""
-    from qradar_restapi_kafka_datapipeline_spark import engine
-
     live = live.rstrip("/")
     for key in list(engine._ARTIFACT_SCHEMAS):
         if key[1] == live or key[1].startswith(live + "/"):
@@ -276,3 +281,118 @@ def most_severe(outcomes: Iterable[str]) -> str:
     """The most severe of several :func:`heal_swap` outcomes (``"ok"`` for
     none) — the summary for a layout that heals more than one tree."""
     return max(outcomes, key=_HEAL_OUTCOMES.index, default="ok")
+
+
+# --- tombstone logs and the merged read ----------------------------------------
+
+#: kind → (data relation under the index dir, or None when the path IS an
+#: epoch-parts tree; stream-log subdir or None; id column; compactor, as
+#: ``module.function`` under ``operators/``)
+INDEX_KINDS: dict[str, tuple[str | None, str | None, str, str]] = {
+    "text": ("postings", None, "doc_id", "text.compact_text_index"),
+    "hybrid": ("tf", None, "doc_id", "text.compact_hybrid_index"),
+    "ivf": ("assignments", "assignments_stream", "vec_id",
+            "similarity.compact_ivf_index"),
+    "ivfpq": ("codes", "codes_stream", "vec_id",
+              "similarity.compact_ivfpq_index"),
+    "parts": (None, None, "doc_id", "text.compact_tf_parts"),
+}
+
+
+def index_kind(kind: str, what: str) -> tuple:
+    """The :data:`INDEX_KINDS` row of ``kind``; ``ValueError`` if unknown."""
+    if kind not in INDEX_KINDS:
+        raise ValueError(f"{what}: unknown index kind {kind!r}")
+    return INDEX_KINDS[kind]
+
+
+def stream_log(path: str, kind: str) -> str:
+    """The stream-log tree (``epoch=N/list_id=L`` parts) of an index."""
+    return f"{path}/{INDEX_KINDS[kind][1]}"
+
+
+def tombstone_log(path: str) -> str:
+    """The flat tombstone log of the maintained index at ``path``."""
+    return f"{path}/tombstones"
+
+
+def append_tombstones(ids: DataFrame, log: str, id_col: str = "doc_id") -> None:
+    """Append the distinct ``id_col`` values of ``ids`` to the tombstone
+    log ``log``: O(|ids|), nothing is rewritten, and a repeated delete
+    only adds duplicates, which every reader collapses with DISTINCT."""
+    ids.select(id_col).distinct().write.mode("append").parquet(log)
+
+
+def read_tombstones(spark, log: str, id_col: str = "doc_id") -> DataFrame | None:
+    """The distinct ids of the tombstone log (or parts tree) ``log``, or
+    ``None`` when it is absent (one ``exists`` call, no Spark job)."""
+    if not exists(spark, log):
+        return None
+    return engine.read_artifact(spark, log).select(id_col).distinct()
+
+
+def anti_join(rel: DataFrame, tomb: DataFrame | None, id_col: str = "doc_id",
+              key_mult: int = 1) -> DataFrame:
+    """``rel`` minus the ids in ``tomb`` (``None`` masks nothing), as a
+    map-side broadcast anti-join: the log is bounded between compactions.
+    ``key_mult``: composite-id radix — a doc-grain tombstone masks every
+    row whose ``id_col DIV key_mult`` it names (chunk ids)."""
+    if tomb is None:
+        return rel
+    if key_mult == 1:
+        return rel.join(F.broadcast(tomb), id_col, "left_anti")
+    tomb = F.broadcast(tomb.withColumnRenamed(id_col, "__tomb_id"))
+    key = F.expr(f"{id_col} DIV {key_mult}")
+    return rel.join(tomb, key == F.col("__tomb_id"), "left_anti")
+
+
+def anti_join_sql(rel: str, cols: list[str], log: str, key_mult: int = 1) -> str:
+    """:func:`anti_join` as a parenthesized SQL relation: ``rel``'s
+    ``cols`` minus the ``doc_id`` values of the tombstone log ``log``."""
+    key = f"t.doc_id DIV {key_mult}" if key_mult > 1 else "t.doc_id"
+    return (
+        f"(SELECT {', '.join('t.' + c for c in cols)} FROM {rel} t "
+        f"LEFT ANTI JOIN (SELECT DISTINCT doc_id FROM parquet.`{log}`) d "
+        f"ON d.doc_id = {key})"
+    )
+
+
+def read_merged(spark, path: str, kind: str, cols: list[str],
+                probed: list[int] | None = None) -> DataFrame:
+    """The ``kind`` index's base tree ∪ its stream log, projected to
+    ``cols``, each opened through ``engine.read_artifact``.  ``probed``
+    adds ``list_id IN (probed)`` to each side, so each list_id-partitioned
+    tree file-prunes on its own."""
+    data, stream, _, _ = INDEX_KINDS[kind]
+    roots = [path if data is None else f"{path}/{data}"]
+    if stream is not None and exists(spark, stream_log(path, kind)):
+        roots.append(stream_log(path, kind))
+
+    def tree(root: str) -> DataFrame:
+        rel = engine.read_artifact(spark, root, base_path=root)
+        if probed is not None:
+            rel = rel.where(F.col("list_id").isin(probed))
+        return rel.select(*cols)
+
+    return reduce(DataFrame.unionByName, map(tree, roots))
+
+
+def read_live(spark, path: str, kind: str, cols: list[str], id_col: str,
+              probed: list[int] | None = None) -> DataFrame:
+    """:func:`read_merged` minus the index's tombstones: the rows a serve
+    sees and a compaction keeps."""
+    tomb = read_tombstones(spark, tombstone_log(path), id_col)
+    return anti_join(read_merged(spark, path, kind, cols, probed), tomb, id_col)
+
+
+def require_live(rel: DataFrame, what: str, path: str) -> None:
+    """Raise ``ValueError`` before a compaction stages anything when every
+    row of ``rel`` is tombstoned: the rewrite would leave a tree with no
+    data file, from which no reader can infer a schema."""
+    if rel.limit(1).count() == 0:
+        raise ValueError(
+            f"{what}: index at {path} is empty after applying tombstones "
+            "(every row deleted). Compaction cannot produce a schemaless "
+            "empty tree — drop the index directory instead, or rebuild the "
+            "index once new rows exist."
+        )

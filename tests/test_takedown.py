@@ -53,6 +53,8 @@ def _tombstones(spark, path):
 def test_takedown_reaches_every_registered_index(spark, docs, tmp_path):
     base = str(tmp_path / "cat")
     catalog = _build_catalog(spark, docs, base)
+    S.build_ivfpq_index(spark, spark.table("embeddings"), f"{base}/ivfpq")
+    catalog.append(TD.RegisteredIndex("ivfpq", "ivfpq", f"{base}/ivfpq"))
     ids = docs.where("doc_id % 9 = 0").select("doc_id")
     n = ids.distinct().count()
     report = TD.takedown(spark, ids, catalog)
@@ -62,6 +64,7 @@ def test_takedown_reaches_every_registered_index(spark, docs, tmp_path):
     assert _tombstones(spark, f"{base}/text/tombstones") == want
     assert _tombstones(spark, f"{base}/hybrid/tombstones") == want
     assert _tombstones(spark, f"{base}/ivf/tombstones") == want  # vec_id
+    assert _tombstones(spark, f"{base}/ivfpq/tombstones") == want
     assert _tombstones(spark, f"{base}/del_parts") == want
     # parts kind landed the streamed-serve epoch layout
     assert os.listdir(f"{base}/del_parts") != [] and all(
@@ -82,6 +85,12 @@ def test_takedown_reaches_every_registered_index(spark, docs, tmp_path):
         spark, f"{base}/ivf", emb.where("vec_id < 10"), k=3
     ).collect()
     assert rows and not any(int(r["n_id"]) % 9 == 0 for r in rows)
+    # and the compressed index, ranked and refined
+    for kw in ({}, {"refine_k": 30}):
+        rows = S.knn_ivfpq_from_index(
+            spark, f"{base}/ivfpq", dim=64, **kw
+        ).collect()
+        assert rows and not any(int(r["n_id"]) % 9 == 0 for r in rows)
 
 
 def test_takedown_crash_mid_fanout_replays_to_same_state(

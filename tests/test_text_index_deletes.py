@@ -186,6 +186,38 @@ def test_persisted_index_delete_serves_remaining(spark, docs, tmp_path):
     assert [(r["n_id"], r["cos"]) for r in serve(5)] == got
 
 
+def test_persisted_index_full_delete_compaction_fails_loudly(
+    spark, docs, tmp_path
+):
+    """Compacting a text index whose every document is tombstoned raises
+    before staging anything (the IVF compactors' contract), so the
+    postings tree and the log survive and the serve still answers —
+    with zero rows — instead of a schemaless postings tree breaking
+    every later read."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import (
+        maintenance as MA,
+    )
+
+    base = str(tmp_path / "full_wipe")
+    T.build_text_index(spark, base, dim=4096)
+    T.delete_from_text_index(spark, base, docs.select("doc_id"))
+    with pytest.raises(ValueError, match="empty after applying tombstones"):
+        T.compact_text_index(spark, base)
+    with pytest.raises(ValueError, match="empty after applying tombstones"):
+        MA.vacuum_index(spark, base, "text", max_masked_fraction=0.0)
+
+    def data_files(root):
+        return [f for _, _, fs in os.walk(root) for f in fs
+                if f.endswith(".parquet")]
+
+    assert data_files(f"{base}/tombstones")
+    assert data_files(f"{base}/postings")
+    qtext = docs.where("doc_id = 0").first()["text"]
+    assert T.text_knn_from_index(
+        spark, base, qtext, k=5, dim=4096, query_id=0
+    ).count() == 0
+
+
 def test_hybrid_artifact_append_equals_rebuild(spark, docs, tmp_path):
     """The hybrid artifact's maintenance verb: the word-tf and bigram-tf
     relations are per-doc LOCAL (append is exact), and the postings'

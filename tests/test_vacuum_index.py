@@ -21,6 +21,29 @@ def docs(spark, tables):
     return spark.table("documents")
 
 
+def _assert_vacuum_clears_masked_debt(spark, base, kind, id_col, data, dels,
+                                      serve):
+    """The ``kind`` index at ``base`` holds tombstones for ``dels``: its
+    masked debt counts exactly the deleted ids' rows of the ``data``
+    relation, and a zero-threshold vacuum compacts them away with the
+    serve unchanged."""
+    deleted = [r[id_col] for r in dels.distinct().collect()]
+    n_masked = spark.read.parquet(data).where(
+        F.col(id_col).isin(deleted)
+    ).count()
+    report = MA.index_debt_report(spark, base, kind)
+    assert report["n_tombstones"] == len(deleted)
+    assert report["masked_rows"] == n_masked > 0
+    before = serve()
+    out = MA.vacuum_index(spark, base, kind, max_masked_fraction=0.0)
+    assert out["action"] == "compacted"
+    assert out["after"]["masked_rows"] == 0
+    assert out["after"]["n_tombstones"] == 0
+    assert out["after"]["total_rows"] == report["total_rows"] - n_masked
+    assert not os.path.exists(f"{base}/tombstones")
+    assert serve() == before
+
+
 def test_debt_report_measures_masked_fraction_ivf(spark, tables, tmp_path):
     emb = spark.table("embeddings")
     base = str(tmp_path / "ivf")
@@ -77,6 +100,21 @@ def test_vacuum_trips_on_masked_fraction_and_is_value_neutral(
     )
     assert after == before
 
+    # the compressed index: its masked debt is every code row (m per
+    # vector) of the deleted ids
+    pq = str(tmp_path / "ivfpq_vac")
+    S.build_ivfpq_index(spark, emb, pq)
+    dels = emb.where("vec_id % 9 = 0").select("vec_id")
+    S.delete_from_ivf_index(spark, pq, dels)
+    _assert_vacuum_clears_masked_debt(
+        spark, pq, "ivfpq", "vec_id", f"{pq}/codes", dels,
+        lambda: sorted(
+            tuple(r) for r in S.knn_ivfpq_from_index(
+                spark, pq, dim=64, refine_k=30
+            ).collect()
+        ),
+    )
+
 
 def test_vacuum_text_index_masked_fraction(spark, docs, tmp_path):
     base = str(tmp_path / "tix")
@@ -104,6 +142,24 @@ def test_vacuum_text_index_masked_fraction(spark, docs, tmp_path):
         ).collect()
     ]
     assert after == before
+
+    # the hybrid artifact: masked debt is the deleted docs' tf rows; its
+    # BM25 side is rebuild-exact under the mask, so compaction keeps it
+    hyb = str(tmp_path / "hybrid")
+    T.build_hybrid_text_index(spark, hyb)
+    T.delete_from_hybrid_index(spark, hyb, dels)
+
+    def bm25():
+        tf_rel, _ = T.hybrid_index_rels(spark, hyb)
+        return sorted(
+            (r["doc_id"], r["score"], r["rk"]) for r in spark.sql(
+                T.bm25_topk_sql("spark", query_doc=1, k=10, tf_rel=tf_rel)
+            ).collect()
+        )
+
+    _assert_vacuum_clears_masked_debt(
+        spark, hyb, "hybrid", "doc_id", f"{hyb}/tf", dels, bm25
+    )
 
 
 def test_vacuum_parts_tree_trips_on_file_count(spark, docs):
