@@ -13,6 +13,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -36,33 +37,40 @@ _MAT_GENERATIONS: dict[str, list[str]] = {}
 _MAT_RETAIN = 2
 
 
-#: (session id, path) → parquet schema of a maintained-index artifact
-#: (round 14, VERDICT r13 #6 / guide §5-§6): every ``spark.read.parquet``
-#: of an index artifact pays a 1-task footer job for schema inference, so
-#: a composed serve touching four indexes paid a dozen footer jobs per
-#: invocation.  The memo holds METADATA only (the StructType the artifact's
-#: own writer produced — artifact schemas are fixed shapes in this
-#: codebase); the data itself is re-read from parquet on every execution,
-#: so no result ever crosses invocations.  ``parts.swap_dir`` (the only
-#: place a live artifact tree is replaced) drops the entries under the
-#: swapped path, so a rebuilt artifact with a new shape is re-inferred.
-_ARTIFACT_SCHEMAS: dict[tuple[int, str], object] = {}
+#: The one store of session-scoped compute-once state: SparkSession →
+#: {key: value}.  Weak keys: the state lives exactly as long as its session
+#: object (a bare ``id()`` key could be reused by a later session and hand
+#: it a stale value).  A stored value that references its own session
+#: keeps the entry alive for the process lifetime — the WeakKeyDictionary
+#: caveat; ``entry_queries.setup``'s AQLFrontend is such a value.
+_SESSION_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def session_state(spark) -> dict:
+    """``spark``'s compute-once store (see ``_SESSION_STATE``)."""
+    return _SESSION_STATE.setdefault(spark, {})
 
 
 def read_artifact(spark, path: str, base_path: str | None = None):
     """Open a maintained-index parquet artifact, memoizing its schema per
-    (session, path): the first open infers from footers (the unavoidable
-    1-task job), subsequent opens supply the schema explicitly and skip
-    it.  ``base_path`` preserves partition columns for partitioned trees."""
-    key = (id(spark), base_path or path)
+    (session, path) under ``("artifact_schema", path)``: every
+    ``spark.read.parquet`` of an index artifact pays a 1-task footer job
+    for schema inference, so the first open infers and later opens supply
+    the schema explicitly.  Only METADATA is memoized (artifact schemas are
+    fixed shapes); the data is re-read on every execution, and
+    ``parts.swap_dir`` (the only place a live tree is replaced) drops the
+    entries under the swapped path.  ``base_path`` preserves partition
+    columns for partitioned trees."""
+    memo = session_state(spark)
+    key = ("artifact_schema", base_path or path)
     reader = spark.read
     if base_path is not None:
         reader = reader.option("basePath", base_path)
-    schema = _ARTIFACT_SCHEMAS.get(key)
+    schema = memo.get(key)
     if schema is not None:
         return reader.schema(schema).parquet(path)
     df = reader.parquet(path)
-    _ARTIFACT_SCHEMAS[key] = df.schema
+    memo[key] = df.schema
     return df
 
 

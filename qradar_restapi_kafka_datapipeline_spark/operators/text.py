@@ -1852,7 +1852,7 @@ def append_to_hybrid_index(
     _dedup_new(
         spark.sql(bigram_tf_sql("spark", src)), f"{path}/btf"
     ).write.mode("append").parquet(f"{path}/btf")
-    _swap_hybrid(spark, path, "posts", _hybrid_posts(spark, path, dim),
+    _hybrid_swap(spark, path, "posts", _hybrid_posts(spark, path, dim),
                  "append_to_hybrid_index")
 
 
@@ -1902,12 +1902,12 @@ def compact_hybrid_index(spark, path: str, dim: int = 4096) -> None:
     if tomb is None:
         return
     for name in ("tf", "btf"):
-        _swap_hybrid(
+        _hybrid_swap(
             spark, path, name,
             anti_join(spark.read.parquet(f"{path}/{name}"), tomb),
             "compact_hybrid_index",
         )
-    _swap_hybrid(spark, path, "posts", _hybrid_posts(spark, path, dim),
+    _hybrid_swap(spark, path, "posts", _hybrid_posts(spark, path, dim),
                  "compact_hybrid_index")
     delete(spark, tombstone_log(path))
 
@@ -1926,7 +1926,7 @@ def _recover_hybrid_index(spark, path: str) -> str:
     ])
 
 
-def _swap_hybrid(spark, path: str, name: str, df, what: str) -> None:
+def _hybrid_swap(spark, path: str, name: str, df, what: str) -> None:
     """Swap ``df`` in as the hybrid artifact's ``name`` relation."""
     swap_dir(
         spark, f"{path}/{name}", *_hybrid_staging(path, name),
@@ -2292,6 +2292,19 @@ def _swap_qp(sql: str, qname: str) -> str:
     )
 
 
+def chunk_postings(
+    spark,
+    size: int = 64,
+    stride: int = 48,
+    dim: int = 1024,
+    source: str = "documents",
+):
+    """The chunk postings relation (the index-build half of chunk
+    retrieval), unmaterialized."""
+    chunks_rel = _chunk_composite_rel("spark", size, stride, source)
+    return spark.sql(hashed_embedding_postings_sql("spark", dim, chunks_rel))
+
+
 def build_chunk_postings(
     spark,
     size: int = 64,
@@ -2299,15 +2312,14 @@ def build_chunk_postings(
     dim: int = 1024,
     source: str = "documents",
 ) -> str:
-    """Materialize the chunk postings relation (the index-build half of
-    chunk retrieval) and return its view name — callers memoize it per
-    (session, corpus) so repeated queries pay only the bounded rank."""
+    """Materialize :func:`chunk_postings` and return its view name.  The
+    fixed materialize key keeps only the newest generations, so a caller
+    that reuses the view across queries materializes
+    :func:`chunk_postings` under its own key instead."""
     from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
 
-    chunks_rel = _chunk_composite_rel("spark", size, stride, source)
     return materialize_view(
-        spark,
-        spark.sql(hashed_embedding_postings_sql("spark", dim, chunks_rel)),
+        spark, chunk_postings(spark, size, stride, dim, source),
         "__chunk_postings",
     )
 

@@ -214,9 +214,12 @@ def _forget_schemas(live: str) -> None:
     """Drop the memoized artifact schemas at or under ``live``: the tree
     there was just replaced and may carry a different column set."""
     live = live.rstrip("/")
-    for key in list(engine._ARTIFACT_SCHEMAS):
-        if key[1] == live or key[1].startswith(live + "/"):
-            engine._ARTIFACT_SCHEMAS.pop(key, None)
+    for memo in list(engine._SESSION_STATE.values()):
+        for key in list(memo):
+            if key[0] == "artifact_schema" and (
+                key[1] == live or key[1].startswith(live + "/")
+            ):
+                memo.pop(key, None)
 
 
 def swap_dir(

@@ -236,3 +236,35 @@ def test_gate_window_leads_registry_and_is_fully_oracled():
         "streaming_ivfpq_append",
     ):
         assert any(n.startswith(prefix) for n in GATE_WINDOW), prefix
+
+
+def test_emitting_entries_read_their_own_emitted_dir():
+    """An emitted-keys oracle re-derives the values of the rows its OWN
+    Spark runner wrote to ``_emit_dir(name)``.  Emitted dirs are named by
+    registry key, so an oracle reading ``<_emit_dir(x)>/*.parquet`` for a
+    registry key ``x`` must be entry ``x`` itself — two entries sharing a
+    dir would check one entry's rows against the other's oracle.  (Shared
+    trained artifacts such as ``bpe_vocab`` are not registry keys.)"""
+    import re
+
+    from qradar_restapi_kafka_datapipeline_spark.entry_queries import (
+        _emit_dir,
+        registry,
+    )
+
+    reg = registry()
+    emitted = re.compile(
+        r"read_parquet\('" + re.escape(_emit_dir("")) + r"([^/']+)/\*\.parquet'\)"
+    )
+    own = set()
+    for name, q in reg.items():
+        for dir_name in emitted.findall(q.oracle or ""):
+            if dir_name in reg:
+                assert dir_name == name, (name, dir_name)
+                own.add(name)
+    assert {
+        "knn_ivf_cosine", "knn_ivf_persisted", "knn_ivf_appended",
+        "streaming_ivf_append_parity", "knn_ivf_deleted",
+        "knn_ivf_rebalanced", "takedown_all_indexes_parity",
+        "semantic_dedup_pairs",
+    } <= own

@@ -124,12 +124,13 @@ def test_swap_drops_memoized_schema_of_the_swapped_tree(spark, tmp_path):
     spark.createDataFrame([("a b",)], "feat STRING").write.parquet(other)
     assert engine.read_artifact(spark, path).columns == ["doc_id", "n2"]
     assert engine.read_artifact(spark, other).columns == ["feat"]
-    key = (id(spark), path)
-    memo = engine._ARTIFACT_SCHEMAS[key]
+    schemas = engine.session_state(spark)
+    key = ("artifact_schema", path)
+    memo = schemas[key]
 
     # a steady re-open keeps the memo hit
     engine.read_artifact(spark, path)
-    assert engine._ARTIFACT_SCHEMAS[key] is memo
+    assert schemas[key] is memo
 
     new = spark.createDataFrame([(1, 2, 3.0)],
                                 "doc_id BIGINT, n2 BIGINT, w DOUBLE")
@@ -138,7 +139,7 @@ def test_swap_drops_memoized_schema_of_the_swapped_tree(spark, tmp_path):
     assert engine.read_artifact(spark, path).columns == ["doc_id", "n2", "w"]
     assert engine.read_artifact(spark, path).collect()[0]["w"] == 3.0
     # only the swapped tree was forgotten
-    assert (id(spark), other) in engine._ARTIFACT_SCHEMAS
+    assert ("artifact_schema", other) in schemas
 
 
 def test_pipeline_skips_empty_unit_then_merges(spark, sf_dir, tmp_path):

@@ -274,9 +274,7 @@ def test_ivf_index_scan_prunes_to_probed_lists(spark, reg, sf_dir):
     """The persisted-IVF serving contract: the assignments scan must carry a
     list_id PartitionFilter (the probed lists as a static IN), so per-query
     scan cost is bounded by nprobe partitions regardless of index size."""
-    from qradar_restapi_kafka_datapipeline_spark.entry_queries import (
-        _IVF_INDEX_MEMO,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.engine import session_state
     from qradar_restapi_kafka_datapipeline_spark.operators.similarity import (
         knn_ivf_from_index,
     )
@@ -284,7 +282,7 @@ def test_ivf_index_scan_prunes_to_probed_lists(spark, reg, sf_dir):
     reg["knn_ivf_persisted"].run(spark, sf_dir)  # builds + memoizes the index
     df = knn_ivf_from_index(
         spark,
-        _IVF_INDEX_MEMO[(id(spark), sf_dir)],
+        session_state(spark)[("once", sf_dir, "knn_ivf_persisted")],
         spark.table("embeddings").where("vec_id < 10"),
         k=3,
     )
@@ -302,16 +300,14 @@ def test_ivfpq_codes_scan_prunes_and_reads_no_vectors(spark, reg, sf_dir):
     list_id PartitionFilter (file-pruned to the probed lists) AND must not
     read an embedding column anywhere — the whole point of PQ is that the
     serve path touches codes, the LUT, and nothing vector-shaped."""
-    from qradar_restapi_kafka_datapipeline_spark.entry_queries import (
-        _IVFPQ_MEMO,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.engine import session_state
     from qradar_restapi_kafka_datapipeline_spark.operators.similarity import (
         knn_ivfpq_from_index,
     )
 
     reg["knn_ivfpq_persisted"].run(spark, sf_dir)  # builds + memoizes
     df = knn_ivfpq_from_index(
-        spark, _IVFPQ_MEMO[(id(spark), sf_dir)], dim=64
+        spark, session_state(spark)[("once", sf_dir, "ivfpq")], dim=64
     )
     plan = _formatted_plan(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -331,9 +327,7 @@ def test_text_index_scan_prunes_to_query_groups(spark, reg, sf_dir):
     carry a bucket_group PartitionFilter (the query's posting groups as a
     static IN), so per-query scan cost is bounded by the query's features
     regardless of index size — the IVF probed-lists contract, for text."""
-    from qradar_restapi_kafka_datapipeline_spark.entry_queries import (
-        _TEXT_INDEX_MEMO,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.engine import session_state
     from qradar_restapi_kafka_datapipeline_spark.operators.text import (
         text_knn_from_index,
     )
@@ -341,7 +335,7 @@ def test_text_index_scan_prunes_to_query_groups(spark, reg, sf_dir):
     reg["text_knn_indexed"].run(spark, sf_dir)  # builds + memoizes the index
     qtext = spark.table("documents").where("doc_id = 1").first()["text"]
     df = text_knn_from_index(
-        spark, _TEXT_INDEX_MEMO[(id(spark), sf_dir)], qtext, k=3,
+        spark, session_state(spark)[("once", sf_dir, "text_index")], qtext, k=3,
         query_id=1, exclude_id=1,
     )
     plan = _formatted_plan(df)
