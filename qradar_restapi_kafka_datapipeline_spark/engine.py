@@ -14,6 +14,7 @@ import os
 import shutil
 import tempfile
 import weakref
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
@@ -24,12 +25,10 @@ _SCRATCH_ROOT: str | None = None
 # used to register it under a FIXED global temp-view name and never unpersist:
 # repeated invocations in a long-lived session accumulated executor storage
 # and clobbered the shared names.  One registry keyed by operator: the next
-# invocation releases the previous relation, and every view name gets a
-# per-invocation suffix so concurrently-held plans never alias each other.
-import itertools as _itertools
-
+# invocation releases the previous relation.  Shared relations are handed
+# around as DataFrames and reach SQL text only as ``spark.sql`` keyword
+# arguments, which register a uuid-named view for the analysis and drop it.
 _PERSISTED: dict[str, object] = {}
-_VIEW_SEQ = _itertools.count()
 #: materialize_view generations per key, newest last (ADVICE r5 low):
 #: keeping the last 2 lets plans returned by the PREVIOUS invocation stay
 #: valid while bounding scratch growth in long-lived driver sessions.
@@ -74,39 +73,24 @@ def read_artifact(spark, path: str, base_path: str | None = None):
     return df
 
 
-def unique_view(df, key: str) -> str:
-    """Register ``df`` as a temp view under a fresh per-invocation name."""
-    name = f"{key}_{next(_VIEW_SEQ)}"
-    df.createOrReplaceTempView(name)
-    return name
-
-
 def persist_tracked(df, key: str):
     """Persist ``df``, releasing the relation the SAME operator persisted
     previously.  Callers that still hold a prior invocation's DataFrame lose
-    only its cache (it recomputes), never its correctness."""
+    only its cache (it recomputes), never its correctness.
+
+    CAVEAT (measured, round 4): Spark's CacheManager does NOT substitute a
+    cached plan that is referenced through a ``WITH`` CTE — a single
+    ``WITH post AS (SELECT ... FROM {post})`` consumer re-executes the full
+    lineage per reference (0 InMemoryRelation in the optimized plan).  Use
+    this only for DataFrame-API consumers (joins built on the returned
+    relation object); SQL-CTE consumers must use :func:`materialize_view`.
+    """
     prev = _PERSISTED.pop(key, None)
     if prev is not None:
         prev.unpersist()
     df = df.persist()
     _PERSISTED[key] = df
     return df
-
-
-def persist_view(df, key: str) -> str:
-    """:func:`persist_tracked` + a fresh per-invocation temp-view name.
-
-    CAVEAT (measured, round 4): Spark's CacheManager does NOT substitute a
-    cached plan that is referenced through a ``WITH`` CTE — a single
-    ``WITH post AS (SELECT ... FROM <this view>)`` consumer re-executes the
-    full lineage per reference (0 InMemoryRelation in the optimized plan).
-    Use this only for DataFrame-API consumers (joins built on the returned
-    relation object); SQL-CTE consumers must use :func:`materialize_view`.
-    """
-    df = persist_tracked(df, key)
-    name = f"{key}_{next(_VIEW_SEQ)}"
-    df.createOrReplaceTempView(name)
-    return name
 
 
 #: share_view's cutover between persisted blocks and scratch parquet.
@@ -128,20 +112,23 @@ def input_size_bytes(df) -> int | None:
             return None
         total = 0
         for f in files:
-            p = f[len("file:"):] if f.startswith("file:") else f
-            total += os.path.getsize(p)
+            u = urlparse(f)
+            if u.scheme not in ("file", ""):
+                return None
+            total += os.path.getsize(unquote(u.path))
         return total
     except Exception:
         return None
 
 
-def share_view(spark, df, key: str, approx_rows: int | None = None) -> str:
-    """Size-aware shared view for SQL-CTE consumers of a CHEAP-lineage
-    relation (VERDICT r4 #1).
+def share_view(spark, df, key: str, approx_rows: int | None = None):
+    """Size-aware shared relation for SQL-CTE consumers of a CHEAP-lineage
+    relation (VERDICT r4 #1); pass the returned DataFrame to SQL as a
+    ``spark.sql`` keyword argument.
 
     ``approx_rows`` is the caller's metadata-only estimate of the relation's
     row count (e.g. input bytes for a gram relation — never a scan).  Small
-    relations take :func:`persist_view`; large or unknown relations take
+    relations take :func:`persist_tracked`; large or unknown relations take
     :func:`materialize_view` — the plan that survives 100 TB, where
     persisted blocks would pin executor storage and evict.
 
@@ -161,18 +148,19 @@ def share_view(spark, df, key: str, approx_rows: int | None = None) -> str:
     substitution has been observed NOT to reach (round-4 finding).
     """
     if approx_rows is not None and approx_rows <= SHARE_SMALL_MAX_ROWS:
-        return persist_view(df, key)
+        return persist_tracked(df, key)
     return materialize_view(spark, df, key)
 
 
-def materialize_view(spark, df, key: str) -> str:
-    """Write ``df`` to per-process scratch parquet once and register the
-    read-back relation under a fresh temp-view name.
+def materialize_view(spark, df, key: str):
+    """Write ``df`` to per-process scratch parquet once and return the
+    read-back relation (no catalog entry: consumers pass it to SQL as a
+    ``spark.sql`` keyword argument).
 
     The compute-once mechanism for relations consumed via SQL ``WITH`` CTEs
     (postings, gram positions): Spark shares no common subplans across CTE
     references AND CacheManager substitution does not reach through CTE
-    definitions (see :func:`persist_view`), so caching silently recomputes
+    definitions (see :func:`persist_tracked`), so caching silently recomputes
     the pipeline per reference — materialized parquet makes every reference
     a cheap columnar scan instead.  This is also the plan that survives
     100 TB: the shared relation exists once on storage, and each consumer
@@ -190,13 +178,11 @@ def materialize_view(spark, df, key: str) -> str:
     """
     path = scratch_dir(f"mat_{key.strip('_')}_")
     df.write.mode("overwrite").parquet(path)
-    name = f"{key}_{next(_VIEW_SEQ)}"
-    spark.read.parquet(path).createOrReplaceTempView(name)
     gens = _MAT_GENERATIONS.setdefault(key, [])
     gens.append(path)
     while len(gens) > _MAT_RETAIN:
         shutil.rmtree(gens.pop(0), ignore_errors=True)
-    return name
+    return spark.read.parquet(path)
 
 
 def scratch_dir(prefix: str) -> str:

@@ -71,11 +71,11 @@ _ONCE_SEQ = itertools.count()
 
 def _once_view(
     spark: SparkSession, sf: str, name: str, make_df: Callable[[], DataFrame]
-) -> str:
+) -> DataFrame:
     """:func:`_once` over ``engine.materialize_view(make_df())``, under a
     materialize key unique to this memo entry: the generation GC keeps only
     the newest ``_MAT_RETAIN`` artifacts per key, so a key shared with any
-    other caller would eventually delete the stored view's files."""
+    other caller would eventually delete the stored relation's files."""
     return _once(spark, sf, name, lambda: engine.materialize_view(
         spark, make_df(), f"__{name}_{next(_ONCE_SEQ)}"
     ))
@@ -89,9 +89,9 @@ def _lsh_pairs_085(spark: SparkSession, sf: str):
     (not persist): consumed across separate actions, expensive lineage."""
     from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
 
-    return spark.table(_once_view(spark, sf, "lsh_pairs_085", lambda: (
+    return _once_view(spark, sf, "lsh_pairs_085", lambda: (
         D.minhash_lsh_pairs(spark.table("documents"), threshold=0.85)
-    )))
+    ))
 
 
 def _bpe_tokens_for(spark: SparkSession, sf: str) -> list[str]:
@@ -1066,7 +1066,6 @@ def _sketch_entries(q: dict[str, Q]) -> None:
                 f" FROM ({K.hdr_hourly_cells_sql('spark')}) h"
                 " GROUP BY hour_id DIV 24, hk"
             ),
-            g_type="BIGINT",
         ),
         K.hdr_daily_direct_sql("duckdb"),
     )
@@ -1176,7 +1175,7 @@ def _sketch_entries(q: dict[str, Q]) -> None:
         cnts = _once_view(
             spark, sf, "dsir_cnts", lambda: spark.sql(C.dsir_cnts_sql("spark"))
         )
-        return spark.sql(C.dsir_rank_sql("spark", cnts))
+        return spark.sql(C.dsir_rank_sql("spark", "{cnts}"), cnts=cnts)
 
     q["curate_dsir_topk"] = _df_entry(_dsir_run, C.dsir_scores_sql("duckdb"))
     # Frozen-selector incremental apply (the IVF/PQ/BPE/classifier artifact
@@ -3807,11 +3806,12 @@ def _north_star_entries(q: dict[str, Q]) -> None:
             # back-fills cores the others free, instead of serializing
             # four driver-bound pipelines.  Spark's scheduler runs
             # concurrent jobs FIFO within one application; the builds
-            # share no temp views (unique_view names are per-invocation)
-            # and write to disjoint paths, so the artifacts are byte-wise
-            # the ones the sequential code produced.  The takedown
-            # fan-out itself stays SEQUENTIAL — its crash-after-Nth-index
-            # replay contract (pytest-pinned) is ordering-based.
+            # share no temp views (spark.sql's DataFrame arguments take
+            # per-call uuid names) and write to disjoint paths, so the
+            # artifacts are byte-wise the ones the sequential code
+            # produced.  The takedown fan-out itself stays SEQUENTIAL —
+            # its crash-after-Nth-index replay contract (pytest-pinned)
+            # is ordering-based.
             # ADVICE r13: inheritable_thread_target — under pinned-thread
             # mode (default since 3.2) plain pool threads leak py4j/JVM
             # threads on exit and do NOT inherit thread-local properties
@@ -4059,9 +4059,7 @@ def _north_star_entries(q: dict[str, Q]) -> None:
         dp = _once_view(spark, sf, "doc_postings", lambda: spark.sql(
             T.hashed_embedding_postings_sql("spark", 1024)
         ))
-        return T.chunk_knn(
-            spark, chunk_postings_view=cp, doc_postings_view=dp
-        )
+        return T.chunk_knn(spark, chunk_postings_df=cp, doc_postings_df=dp)
 
     q["text_chunk_knn"] = Q(
         run=_chunk_knn_run,

@@ -108,16 +108,14 @@ def boilerplate_coverage(
     the returned plan reads ``g`` lazily — callers that materialize and move
     on release it via ``spark.catalog.clearCache()``.
     """
-    from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked, unique_view
+    from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    spread_view = unique_view(
-        _spread(spark.table(source), by="doc_id"), "__boilerplate_spread_src"
-    )
     g = persist_tracked(
         spark.sql(
-            f"WITH {_ngram_cte('spark', spread_view)} "
-            "SELECT doc_id, source, ngram FROM g"
+            f"WITH {_ngram_cte('spark', '{src}')} "
+            "SELECT doc_id, source, ngram FROM g",
+            src=_spread(spark.table(source), by="doc_id"),
         ),
         "__boilerplate_g",
     )

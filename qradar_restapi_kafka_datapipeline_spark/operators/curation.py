@@ -802,7 +802,8 @@ def dsir_scores(
         spark, spark.sql(dsir_cnts_sql("spark", dim, source)), "__dsir_cnts"
     )
     return spark.sql(
-        dsir_rank_sql("spark", cnts, target_where, dim, top_k, source)
+        dsir_rank_sql("spark", "{cnts}", target_where, dim, top_k, source),
+        cnts=cnts,
     )
 
 
@@ -826,51 +827,56 @@ def corpus_funnel(spark, top_k: int = 200) -> DataFrame:
         decontaminate_train,
     )
 
-    decon_v = materialize_view(
+    decon = materialize_view(
         spark, decontaminate_train(spark.table("documents")), "__funnel_decon"
     )
-    curated_v = materialize_view(
-        spark, spark.sql(curate_corpus_sql("spark", table=decon_v)),
+    curated = materialize_view(
+        spark, spark.sql(curate_corpus_sql("spark", table="{decon}"), decon=decon),
         "__funnel_curated",
     )
     # DSIR scores need text; curated output is the audit projection
     sel_src = materialize_view(
         spark,
         spark.sql(
-            f"SELECT c.doc_id, d.source, d.text "
-            f"FROM {curated_v} c JOIN {decon_v} d ON d.doc_id = c.doc_id"
+            "SELECT c.doc_id, d.source, d.text "
+            "FROM {curated} c JOIN {decon} d ON d.doc_id = c.doc_id",
+            curated=curated,
+            decon=decon,
         ),
         "__funnel_selsrc",
     )
-    cnts_v = materialize_view(
-        spark, spark.sql(dsir_cnts_sql("spark", source=sel_src)),
+    cnts = materialize_view(
+        spark, spark.sql(dsir_cnts_sql("spark", source="{src}"), src=sel_src),
         "__funnel_cnts",
     )
-    selected_v = materialize_view(
+    selected = materialize_view(
         spark,
         spark.sql(
-            f"SELECT r.doc_id, s.source FROM ("
-            + dsir_rank_sql("spark", cnts_v, top_k=top_k, source=sel_src)
-            + f") r JOIN {sel_src} s ON s.doc_id = r.doc_id"
+            "SELECT r.doc_id, s.source FROM ("
+            + dsir_rank_sql("spark", "{cnts}", top_k=top_k, source="{src}")
+            + ") r JOIN {src} s ON s.doc_id = r.doc_id",
+            cnts=cnts,
+            src=sel_src,
         ),
         "__funnel_selected",
     )
-    mixed_v = materialize_view(
+    mixed = materialize_view(
         spark,
-        spark.sql(mix_temperature_sql("spark", table=selected_v)),
+        spark.sql(mix_temperature_sql("spark", table="{selected}"), selected=selected),
         "__funnel_mixed",
     )
+    stages = {
+        "decontaminated": decon,
+        "curated": curated,
+        "selected": selected,
+        "mixed": mixed,
+    }
     report = " UNION ALL ".join(
         f"SELECT '{stage}' AS stage, source, CAST(COUNT(*) AS BIGINT) AS n "
-        f"FROM {view} GROUP BY source"
-        for stage, view in (
-            ("decontaminated", decon_v),
-            ("curated", curated_v),
-            ("selected", selected_v),
-            ("mixed", mixed_v),
-        )
+        f"FROM {{{stage}}} GROUP BY source"
+        for stage in stages
     )
-    return spark.sql(report)
+    return spark.sql(report, **stages)
 
 
 def corpus_funnel_oracle_sql(top_k: int = 200) -> str:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.engine import input_size_bytes
 from qradar_restapi_kafka_datapipeline_spark.operators.text import normalized_md5
 
 
@@ -50,33 +51,19 @@ def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
     # shuffle the full text for nothing.  Estimate splits from local file
     # sizes when the paths are inspectable; non-local/opaque paths fall back
     # to the conservative repartition.
-    if files:
-        import os
-        from urllib.parse import unquote, urlparse
+    total = input_size_bytes(df)
+    if total is not None:
+        import re as _re
 
-        try:
-            total = 0
-            for f in files:
-                u = urlparse(f)
-                if u.scheme not in ("file", ""):
-                    raise OSError("non-local path")
-                total += os.path.getsize(unquote(u.path))
-            import re as _re
-
-            raw = spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            )
-            m = _re.match(r"(\d+)\s*([kmgt]?)b?$", raw.strip().lower())
-            if not m:
-                raise ValueError(raw)
+        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        m = _re.match(r"(\d+)\s*([kmgt]?)b?$", raw.strip().lower())
+        if m:
             max_split = int(m.group(1)) * {
                 "": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4,
             }[m.group(2)]
             est_splits = max(len(files), total // max_split)
             if est_splits >= target:
                 return df
-        except (OSError, ValueError):
-            pass
     return df.repartition(target, F.col(by)) if by else df.repartition(target)
 
 
@@ -1624,16 +1611,13 @@ def exact_substring_pairs(
     materialized plan — checkpoint blocks when the input is small (the
     scratch-parquet write was a fixed ~1 s tax at bench scale), scratch
     parquet when large/unknown (see engine.share_view)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import (
-        input_size_bytes,
-        share_view,
-        unique_view,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.engine import share_view
 
     src = spark.table(source)
     est = input_size_bytes(src)  # ~1 gram row per compressed byte, high side
-    spread_view = unique_view(_spread(src, by="doc_id"), "__ess_spread_src")
-    grams = spark.sql(_gram_positions_sql("spark", n, spread_view))
+    grams = spark.sql(
+        _gram_positions_sql("spark", n, "{src}"), src=_spread(src, by="doc_id")
+    )
     if max_gram_doc_freq is not None:
         df_counts = grams.groupBy("h").agg(
             F.countDistinct("doc_id").alias("__df")
@@ -1646,9 +1630,11 @@ def exact_substring_pairs(
         # the df-cap adds an aggregate + semi-join to the lineage — no
         # longer cheap to recompute per CTE reference at any size
         est = None
-    grams_view = share_view(spark, grams, "__ess_grams", approx_rows=est)
-    gsel = f"SELECT doc_id, i, h FROM {grams_view}"
-    return spark.sql(f"WITH {_substring_runs_sql(gsel, gsel, n, min_run)}")
+    gsel = "SELECT doc_id, i, h FROM {grams}"
+    return spark.sql(
+        f"WITH {_substring_runs_sql(gsel, gsel, n, min_run)}",
+        grams=share_view(spark, grams, "__ess_grams", approx_rows=est),
+    )
 
 
 def _token_positions_sql(dialect: str, source: str) -> str:
@@ -1744,23 +1730,21 @@ def exact_substring_remove(
     (the inlined SQL form pays the explode + per-gram md5 twice for the
     self-join plus once more for tokens; CTE consumers bypass the cache —
     see engine.share_view / engine.materialize_view)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import (
-        input_size_bytes,
-        share_view,
-        unique_view,
-    )
+    from qradar_restapi_kafka_datapipeline_spark.engine import share_view
 
     src = spark.table(source)
     est = input_size_bytes(src)
-    spread_view = unique_view(_spread(src, by="doc_id"), "__essr_spread_src")
-    grams_view = share_view(
+    spread = _spread(src, by="doc_id")
+    grams = share_view(
         spark,
-        spark.sql(_gram_positions_sql("spark", n, spread_view)),
+        spark.sql(_gram_positions_sql("spark", n, "{src}"), src=spread),
         "__essr_grams",
         approx_rows=est,
     )
     return spark.sql(
         exact_substring_remove_sql(
-            "spark", n, min_run, source=spread_view, grams_rel=grams_view
-        )
+            "spark", n, min_run, source="{src}", grams_rel="{grams}"
+        ),
+        src=spread,
+        grams=grams,
     )

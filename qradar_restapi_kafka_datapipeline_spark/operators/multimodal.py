@@ -609,13 +609,11 @@ def image_phash_pairs(
     hashes = image_dhash(attach_textured_bmp_payload(docs)).select(
         "doc_id", "hash_hi", "hash_lo"
     )
-    name = materialize_view(spark, hashes, "__phash_hashes")
     return spark.sql(
         phash_pairs_expanded_sql(
-            "spark",
-            f"SELECT doc_id, hash_hi, hash_lo FROM {name}",
-            max_hamming,
-        )
+            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
+        ),
+        hashes=materialize_view(spark, hashes, "__phash_hashes"),
     )
 
 
@@ -693,13 +691,11 @@ def image_phash_clusters(
     hashes = image_dhash(attach_textured_bmp_payload(docs)).select(
         "doc_id", "hash_hi", "hash_lo"
     )
-    name = materialize_view(spark, hashes, "__phash_hashes")
     return spark.sql(
         phash_clusters_sql(
-            "spark",
-            f"SELECT doc_id, hash_hi, hash_lo FROM {name}",
-            max_hamming,
-        )
+            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
+        ),
+        hashes=materialize_view(spark, hashes, "__phash_hashes"),
     )
 
 
@@ -1151,13 +1147,11 @@ def audio_fingerprint_pairs(
     hashes = audio_fingerprint(attach_voiced_wav_payload(docs)).select(
         "doc_id", "hash_hi", "hash_lo"
     )
-    name = materialize_view(spark, hashes, "__audio_fp")
     return spark.sql(
         phash_pairs_expanded_sql(
-            "spark",
-            f"SELECT doc_id, hash_hi, hash_lo FROM {name}",
-            max_hamming,
-        )
+            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
+        ),
+        hashes=materialize_view(spark, hashes, "__audio_fp"),
     )
 
 
@@ -1180,13 +1174,11 @@ def audio_fingerprint_clusters(
     hashes = audio_fingerprint(attach_voiced_wav_payload(docs)).select(
         "doc_id", "hash_hi", "hash_lo"
     )
-    name = materialize_view(spark, hashes, "__audio_fp_cl")
     return spark.sql(
         phash_clusters_sql(
-            "spark",
-            f"SELECT doc_id, hash_hi, hash_lo FROM {name}",
-            max_hamming,
-        )
+            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
+        ),
+        hashes=materialize_view(spark, hashes, "__audio_fp_cl"),
     )
 
 

@@ -831,14 +831,14 @@ def hysteresis_streaming(
     rates_path = os.path.join(base, "rates")
 
     def rates(batch: DataFrame) -> DataFrame:
-        batch.createOrReplaceTempView("__hyst_batch")
         return batch.sparkSession.sql(
             """
             SELECT event_type, unix_millis(ts) DIV 86400000 AS day_id,
                    CAST(COUNT(*) AS BIGINT) AS rate
-            FROM __hyst_batch
+            FROM {batch}
             GROUP BY event_type, unix_millis(ts) DIV 86400000
-            """
+            """,
+            batch=batch,
         )
 
     try:

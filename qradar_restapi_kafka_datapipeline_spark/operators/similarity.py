@@ -916,14 +916,13 @@ def ivfpq_append_streaming(
 
     def codes(batch: DataFrame) -> DataFrame:
         sp = batch.sparkSession
-        batch.createOrReplaceTempView("__ivfpq_app_batch")
         assign = sp.sql(
-            ivf_assign_sql("spark", f"{path}/centroids", dim, 1,
-                           "__ivfpq_app_batch")
+            ivf_assign_sql("spark", f"{path}/centroids", dim, 1, "{batch}"),
+            batch=batch,
         ).select("vec_id", "list_id")
         return sp.sql(
-            pq_codes_sql("spark", f"{path}/codebooks", m, dim // m,
-                         "__ivfpq_app_batch")
+            pq_codes_sql("spark", f"{path}/codebooks", m, dim // m, "{batch}"),
+            batch=batch,
         ).join(assign, "vec_id")
 
     base = scratch_dir("ivfpq_stream_")
@@ -1620,77 +1619,58 @@ def knn_ivfpq_from_index(
     # one less execution of the assignment subplan per serve.
     probe_rows = probes.collect()
     probed = sorted({r["list_id"] for r in probe_rows})
-    probes = spark.createDataFrame(
-        [(int(r["q_id"]), int(r["list_id"])) for r in probe_rows],
-        "q_id BIGINT, list_id INT",
-    )
+    probes = spark.createDataFrame(probe_rows, probes.schema)
     # base ∪ streamed codes (ivfpq_append_streaming) in the probed lists,
     # tombstones (delete_from_ivf_index) masked on the code scan, so
     # deleted vectors can neither rank nor enter a refine shortlist
-    codes = read_live(spark, path, "ivfpq", ["vec_id", "mi", "j", "list_id"],
-                      "vec_id", probed)
-    # ADVICE r13: per-invocation view names (engine.unique_view) — fixed
-    # global names were safe only while this was the sole view-registering
-    # serve in the takedown pool; unique names make it reentrant under any
-    # caller threading (two concurrent ivfpq serves can no longer clobber
-    # each other between registration and spark.sql analysis).
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
-    codes_view = unique_view(codes, "__ivfpq_codes")
-    probes_view = unique_view(F.broadcast(probes), "__ivfpq_probes")
+    rels = {
+        "codes": read_live(spark, path, "ivfpq",
+                           ["vec_id", "mi", "j", "list_id"], "vec_id", probed),
+        "probes": F.broadcast(probes),
+    }
+    codes_rel = "SELECT vec_id, mi, j, list_id FROM {codes}"
+    probes_rel = "SELECT q_id, list_id FROM {probes}"
     lut = pq_lut_sql("spark", f"{path}/codebooks", m, dim // m, query_max,
                      source_view)
-    # analysis binds the views eagerly (CLAUDE.md r12): drop them once the
-    # returned statement is analysed, so serves leave the catalog unchanged
-    try:
-        if refine_k is not None:
-            codes_rel = f"SELECT vec_id, mi, j, list_id FROM {codes_view}"
-            probes_rel = f"SELECT q_id, list_id FROM {probes_view}"
-            shortlist_rel = None
-            n_id_in = None
-            if query_max * refine_k <= _SERVE_COLLECT_CAP:
-                # bounded serve: land the ADC shortlist (≤ queries×refine_k
-                # rows) driver-side, re-read the raw vectors through an
-                # IN-list pushed to the parquet scan.
-                pairs = spark.sql(
-                    "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut,
-                                              refine_k)
-                ).select("q_id", "n_id").collect()
-                vals = ", ".join(
-                    f"({int(r['q_id'])}, {int(r['n_id'])})" for r in pairs
-                )
-                shortlist_rel = (
-                    f"SELECT * FROM (VALUES {vals}) AS sl(q_id, n_id)"
-                    if pairs else
-                    "SELECT CAST(NULL AS BIGINT) AS q_id, "
-                    "CAST(NULL AS BIGINT) AS n_id WHERE 1 = 0"
-                )
-                n_id_in = [int(r["n_id"]) for r in pairs]
-            return spark.sql(
-                _ivfpq_refine_sql(
-                    "spark",
-                    codes_rel,
-                    probes_rel,
-                    lut,
-                    _vec_rel_sql("spark", source_view),
-                    refine_k,
-                    k,
-                    dim,
-                    shortlist_rel=shortlist_rel,
-                    n_id_in=n_id_in,
-                )
-            )
+    if refine_k is None:
         return spark.sql(
-            "WITH " + _ivfpq_rank_sql(
-                f"SELECT vec_id, mi, j, list_id FROM {codes_view}",
-                f"SELECT q_id, list_id FROM {probes_view}",
-                lut,
-                k,
-            )
+            "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut, k), **rels
         )
-    finally:
-        for view in (codes_view, probes_view):
-            spark.catalog.dropTempView(view)
+    shortlist_rel = None
+    n_id_in = None
+    if query_max * refine_k <= _SERVE_COLLECT_CAP:
+        # bounded serve: land the ADC shortlist (≤ queries×refine_k
+        # rows) driver-side, re-read the raw vectors through an
+        # IN-list pushed to the parquet scan.
+        pairs = spark.sql(
+            "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut, refine_k),
+            **rels,
+        ).select("q_id", "n_id").collect()
+        vals = ", ".join(
+            f"({int(r['q_id'])}, {int(r['n_id'])})" for r in pairs
+        )
+        shortlist_rel = (
+            f"SELECT * FROM (VALUES {vals}) AS sl(q_id, n_id)"
+            if pairs else
+            "SELECT CAST(NULL AS BIGINT) AS q_id, "
+            "CAST(NULL AS BIGINT) AS n_id WHERE 1 = 0"
+        )
+        n_id_in = [int(r["n_id"]) for r in pairs]
+    return spark.sql(
+        _ivfpq_refine_sql(
+            "spark",
+            codes_rel,
+            probes_rel,
+            lut,
+            _vec_rel_sql("spark", source_view),
+            refine_k,
+            k,
+            dim,
+            shortlist_rel=shortlist_rel,
+            n_id_in=n_id_in,
+        ),
+        **rels,
+    )
 
 
 def ivfpq_recall_report(

@@ -24,6 +24,8 @@ shared text both engines, rounded at 6 dp (+1e-9).
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+
 from qradar_restapi_kafka_datapipeline_spark.parts import (
     heal_swap,
     list_names,
@@ -463,8 +465,6 @@ def kmv_jaccard(
     are pinned as literals and the union/overlap algebra runs over the
     pins — the one-statement oracle form scans each set twice (CTE
     re-execution) and hash-proves the fused build equal."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     if key_expr is None:
         key_expr = kmv_user_day_key("spark")
     h = _h60("spark", "src.k", "'kmv'")
@@ -483,22 +483,14 @@ def kmv_jaccard(
         ) src
       ) d
     ) r WHERE rk <= {k}
-    """).collect()
-    views = []
-    for sid in (0, 1):
-        lit = spark.createDataFrame(
-            [(r["h"],) for r in both if r["set_id"] == sid], "h BIGINT"
-        )
-        views.append(unique_view(lit, "__kmv_sk"))
-    va, vb = views
+    """)
+    both = spark.createDataFrame(both.collect(), both.schema)
     est_u = kmv_estimate_sql("spark", "SELECT h FROM u", k)
-    # analysis binds the views eagerly (CLAUDE.md r12): drop them once the
-    # statement is analysed, so calls leave the catalog unchanged
-    out = spark.sql(f"""
+    return spark.sql(f"""
     WITH u AS (
       SELECT h FROM (
         SELECT DISTINCT h
-        FROM (SELECT h FROM {va} UNION ALL SELECT h FROM {vb}) uu
+        FROM (SELECT h FROM {{a}} UNION ALL SELECT h FROM {{b}}) uu
       ) d ORDER BY h ASC LIMIT {k}
     ),
     ov AS (
@@ -507,8 +499,8 @@ def kmv_jaccard(
              CAST(SUM(CASE WHEN ina.h IS NOT NULL AND inb.h IS NOT NULL
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_both
       FROM u
-      LEFT JOIN {va} ina ON ina.h = u.h
-      LEFT JOIN {vb} inb ON inb.h = u.h
+      LEFT JOIN {{a}} ina ON ina.h = u.h
+      LEFT JOIN {{b}} inb ON inb.h = u.h
     ),
     eu AS ({est_u})
     SELECT ov.n_union, ov.n_both,
@@ -517,10 +509,10 @@ def kmv_jaccard(
            ROUND((CAST(ov.n_both AS DOUBLE) / CAST(ov.n_union AS DOUBLE))
                  * eu.distinct_est + 1e-9, 6) AS intersection_est
     FROM ov, eu
-    """)
-    for view in views:
-        spark.catalog.dropTempView(view)
-    return out
+    """,
+        a=both.where("set_id = 0").select("h"),
+        b=both.where("set_id = 1").select("h"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -834,26 +826,19 @@ def hdr_grouped_quantiles(
     m: int = HDR_M,
     scale: int = 100,
     cells_rel: str | None = None,
-    g_type: str = "STRING",
 ):
     """Spark path: pin the bounded grouped cells as a literal relation
     (two CTE references otherwise re-scan the corpus) and rank over it."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     cells = spark.sql(
         cells_rel
         if cells_rel is not None
         else hdr_grouped_cells_sql("spark", group_expr, int_expr, source, m)
     )
-    lit = spark.createDataFrame(
-        [(r["g"], r["hk"], r["c"]) for r in cells.collect()],
-        f"g {g_type}, hk BIGINT, c BIGINT",
-    )
-    name = unique_view(lit, "__hdr_gcells")
     return spark.sql(
         hdr_grouped_quantiles_sql(
-            "spark", f"SELECT g, hk, c FROM {name}", qs_permille, m, scale
-        )
+            "spark", "SELECT g, hk, c FROM {cells}", qs_permille, m, scale
+        ),
+        cells=spark.createDataFrame(cells.collect(), cells.schema),
     )
 
 
@@ -966,21 +951,16 @@ def hdr_quantiles(
     statement form references the cells CTE twice and Spark re-executes a
     CTE per reference, re-scanning the corpus each time; CLAUDE.md), and
     rank over it."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     cells = spark.sql(
         cells_rel
         if cells_rel is not None
         else hdr_cells_sql("spark", int_expr, source, m)
     )
-    lit = spark.createDataFrame(
-        [(r["hk"], r["c"]) for r in cells.collect()], "hk BIGINT, c BIGINT"
-    )
-    name = unique_view(lit, "__hdr_cells")
     return spark.sql(
         hdr_quantiles_sql(
-            "spark", f"SELECT hk, c FROM {name}", qs_permille, m, scale
-        )
+            "spark", "SELECT hk, c FROM {cells}", qs_permille, m, scale
+        ),
+        cells=spark.createDataFrame(cells.collect(), cells.schema),
     )
 
 
@@ -1006,9 +986,8 @@ def hdr_sketch_streaming(
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
 
     def cells(batch):
-        batch.createOrReplaceTempView("__hdr_batch")
         return batch.sparkSession.sql(
-            hdr_cells_sql("spark", int_expr, "__hdr_batch", m)
+            hdr_cells_sql("spark", int_expr, "{batch}", m), batch=batch
         )
 
     base = scratch_dir("hdr_stream_")
@@ -1066,9 +1045,8 @@ def cm_sketch_streaming(
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
 
     def cells(batch):
-        batch.createOrReplaceTempView("__cm_batch")
         return batch.sparkSession.sql(
-            cm_cells_sql("spark", "k", "__cm_batch", d, w)
+            cm_cells_sql("spark", "k", "{batch}", d, w), batch=batch
         )
 
     base = scratch_dir("cm_stream_")
@@ -1247,9 +1225,8 @@ def hll_cube_streaming(
     from qradar_restapi_kafka_datapipeline_spark.engine import scratch_dir
 
     def registers(batch):
-        batch.createOrReplaceTempView("__hll_batch")
         return batch.sparkSession.sql(
-            hll_hourly_registers_sql("spark", "k", "__hll_batch", p)
+            hll_hourly_registers_sql("spark", "k", "{batch}", p), batch=batch
         )
 
     base = scratch_dir("hll_stream_")
@@ -1286,17 +1263,10 @@ def hist_quantiles(
     (:func:`hist_quantiles_full_sql`, kept as the oracle) references the
     cells three times and Spark re-executes a CTE per reference, re-scanning
     the corpus for each."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     cells = spark.sql(hist_cells_sql("spark", value_expr, source, lo, hi, bins))
-    lit = spark.createDataFrame(
-        [(r["bin"], r["c"]) for r in cells.collect()], "bin INT, c BIGINT"
-    )
-    name = unique_view(lit, "__hist_cells")
     return spark.sql(
-        hist_quantiles_sql(
-            "spark", f"SELECT bin, c FROM {name}", qs, lo, hi, bins
-        )
+        hist_quantiles_sql("spark", "SELECT bin, c FROM {cells}", qs, lo, hi, bins),
+        cells=spark.createDataFrame(cells.collect(), cells.schema),
     )
 
 
@@ -1489,8 +1459,6 @@ def hll_rolling_distinct(
     (days × 2^p) relation as a literal (the one-statement form embeds it
     twice — distinct-days and window sides — and Spark re-executes inline
     subqueries per reference), then window + estimate over the pin."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     div = "DIV"
     hourly = hll_hourly_registers_sql("spark", key_expr, source, p)
     day_regs = spark.sql(f"""
@@ -1498,23 +1466,21 @@ def hll_rolling_distinct(
       FROM ({hourly}) h
       GROUP BY hour_id {div} 24, bucket
     """)
-    lit = spark.createDataFrame(
-        [(r["day_id"], r["bucket"], r["r"]) for r in day_regs.collect()],
-        "day_id BIGINT, bucket BIGINT, r INT",
-    )
-    name = unique_view(lit, "__hll_dayregs")
     win = f"""
       SELECT /*+ BROADCAST(dd) */ dd.day_id, c.bucket, MAX(c.r) AS r
       FROM (
         SELECT dr.day_id + s.i AS t_day, dr.bucket, dr.r
-        FROM {name} dr
+        FROM {{regs}} dr
         CROSS JOIN ({_seeds("spark", window_days)}) s
       ) c
-      JOIN (SELECT DISTINCT day_id FROM {name}) dd
+      JOIN (SELECT DISTINCT day_id FROM {{regs}}) dd
         ON dd.day_id = c.t_day
       GROUP BY dd.day_id, c.bucket
     """
-    return spark.sql(hll_grouped_estimate_sql("spark", win, "day_id", p))
+    return spark.sql(
+        hll_grouped_estimate_sql("spark", win, "day_id", p),
+        regs=spark.createDataFrame(day_regs.collect(), day_regs.schema),
+    )
 
 
 def _compact_staging(path: str) -> tuple[str, str]:
@@ -1731,18 +1697,18 @@ def kmv_daily_rows(
     key_expr: str = "CAST(user_id AS STRING)",
     source: str = "events",
     k: int = KMV_K,
-) -> list:
+) -> DataFrame:
     """Collect the bounded daily cube (≤ days × k rows) — the ONE
-    corpus-touching pass the retention/cohort estimators share.  Callers
-    that answer repeated questions over the same corpus should collect
-    once and hand the rows to :func:`kmv_retention` / :func:`kmv_cohort`
-    (``daily_rows=``): the cube is the MAINTAINED artifact in production
-    (the streaming fold entries prove the per-epoch protocol), so
-    re-deriving it per query is a re-scan the posture forbids.  The
-    registry memoizes per (session, sf) in ``entry_queries``."""
-    return spark.sql(
-        kmv_daily_sketches_sql("spark", key_expr, source, k)
-    ).collect()
+    corpus-touching pass the retention/cohort estimators share — and pin
+    it as a literal relation.  Callers that answer repeated questions over
+    the same corpus should collect once and hand the pin to
+    :func:`kmv_retention` / :func:`kmv_cohort` (``daily_rows=``): the cube
+    is the MAINTAINED artifact in production (the streaming fold entries
+    prove the per-epoch protocol), so re-deriving it per query is a
+    re-scan the posture forbids.  The registry memoizes per (session, sf)
+    in ``entry_queries``."""
+    daily = spark.sql(kmv_daily_sketches_sql("spark", key_expr, source, k))
+    return spark.createDataFrame(daily.collect(), daily.schema)
 
 
 def kmv_cohort(
@@ -1751,29 +1717,21 @@ def kmv_cohort(
     key_expr: str = "CAST(user_id AS STRING)",
     source: str = "events",
     k: int = KMV_K,
-    daily_rows: list | None = None,
+    daily_rows: DataFrame | None = None,
 ):
     """Spark path: pin the bounded daily cube as a literal (the statement
     references ``daily`` twice and ``samp``/``fs`` twice each; Spark
     re-executes CTEs per reference — :func:`kmv_retention`'s posture).
-    ``daily_rows``: pre-collected cube (:func:`kmv_daily_rows`) — the
+    ``daily_rows``: pinned cube (:func:`kmv_daily_rows`) — the
     maintained-cube serving path; omitted → built here (one scan)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
-    rows = (
-        daily_rows
-        if daily_rows is not None
-        else kmv_daily_rows(spark, key_expr, source, k)
-    )
-    lit = spark.createDataFrame(
-        [(r["day_id"], r["h"]) for r in rows], "day_id BIGINT, h BIGINT"
-    )
-    name = unique_view(lit, "__kmv_daily_cohort")
+    if daily_rows is None:
+        daily_rows = kmv_daily_rows(spark, key_expr, source, k)
     return spark.sql(
         kmv_cohort_sql(
-            "spark", daily_rel=f"SELECT day_id, h FROM {name}",
+            "spark", daily_rel="SELECT day_id, h FROM {daily}",
             max_offset=max_offset, k=k,
-        )
+        ),
+        daily=daily_rows,
     )
 
 
@@ -1783,27 +1741,19 @@ def kmv_retention(
     key_expr: str = "CAST(user_id AS STRING)",
     source: str = "events",
     k: int = KMV_K,
-    daily_rows: list | None = None,
+    daily_rows: DataFrame | None = None,
 ):
     """Spark path: pin the bounded daily-sketch cube (days × k rows) as a
     literal — the one-statement form references ``daily`` three times
     (pairs, union build, sizes) and Spark re-executes a CTE per
     reference — then run the pair algebra over the pin.
-    ``daily_rows``: pre-collected cube (:func:`kmv_daily_rows`)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
-    rows = (
-        daily_rows
-        if daily_rows is not None
-        else kmv_daily_rows(spark, key_expr, source, k)
-    )
-    lit = spark.createDataFrame(
-        [(r["day_id"], r["h"]) for r in rows], "day_id BIGINT, h BIGINT"
-    )
-    name = unique_view(lit, "__kmv_daily")
+    ``daily_rows``: pinned cube (:func:`kmv_daily_rows`)."""
+    if daily_rows is None:
+        daily_rows = kmv_daily_rows(spark, key_expr, source, k)
     return spark.sql(
         kmv_retention_sql(
-            "spark", daily_rel=f"SELECT day_id, h FROM {name}",
+            "spark", daily_rel="SELECT day_id, h FROM {daily}",
             max_offset=max_offset, k=k,
-        )
+        ),
+        daily=daily_rows,
     )

@@ -510,14 +510,14 @@ def winnow_overlap(
     returned plan reads the persisted relation lazily — callers that
     materialize and move on release it via ``spark.catalog.clearCache()``.
     """
-    from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked, unique_view
+    from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    spread_view = unique_view(
-        _spread(spark.table(source), by="doc_id"), "__winnow_spread_src"
-    )
     fps = persist_tracked(
-        spark.sql(winnow_fingerprints_sql("spark", k, window, spread_view)),
+        spark.sql(
+            winnow_fingerprints_sql("spark", k, window, "{src}"),
+            src=_spread(spark.table(source), by="doc_id"),
+        ),
         "__winnow_fps",
     )
     a = fps.select(F.col("doc_id").alias("id_a"), "fp")
@@ -613,12 +613,11 @@ def tfidf_topk(spark, k: int = 3, source: str = "documents") -> DataFrame:
         f"SELECT doc_id, term, COUNT(*) AS tf FROM ({tok}) t "
         "GROUP BY doc_id, term"
     )
-    name = materialize_view(spark, tf, "__tfidf_tf")
     return spark.sql(
         tfidf_topk_sql(
-            "spark", k, source,
-            tf_rel=f"SELECT doc_id, term, tf FROM {name}",
-        )
+            "spark", k, source, tf_rel="SELECT doc_id, term, tf FROM {tf}"
+        ),
+        tf=materialize_view(spark, tf, "__tfidf_tf"),
     )
 
 
@@ -1078,23 +1077,29 @@ def hashed_semantic_pairs(
     the exhaustive join, guarded: if mean postings per doc exceed dim/2
     (every doc hits most buckets → the candidate join is quadratic), raise
     rather than silently run the wrong regime."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view, unique_view
+    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
     # materialize at EVERY size: the postings lineage (tokenize + hash +
     # df-rank window) is expensive, so recomputing it per CTE reference
     # loses even at sf0.1 (r5 three-way measurement in engine.share_view:
     # materialize 2.24 s / checkpoint 2.61 s / inline 3.64 s)
-    src = unique_view(_spread(spark.table(source), by="doc_id"), "__hse_spread_src")
-    posts = spark.sql(hashed_embedding_postings_sql("spark", dim, src))
-    posts_view = materialize_view(spark, posts, "__hse_post")
+    posts = materialize_view(
+        spark,
+        spark.sql(
+            hashed_embedding_postings_sql("spark", dim, "{src}"),
+            src=_spread(spark.table(source), by="doc_id"),
+        ),
+        "__hse_post",
+    )
+    rels = {"posts": posts}
     if prefix_m is None:
         # density guard for the explicitly-requested exhaustive regime: the
         # postings are persisted anyway, so this aggregate only fronts the
         # materialization the candidate join would pay regardless.
         from pyspark.sql import functions as F
 
-        stats = spark.table(posts_view).agg(
+        stats = posts.agg(
             F.count(F.lit(1)).alias("np"), F.countDistinct("doc_id").alias("nd")
         ).first()
         if stats["nd"] and stats["np"] / stats["nd"] > dim / 2:
@@ -1106,17 +1111,17 @@ def hashed_semantic_pairs(
                 "vocabulary), use the default prefix_m path, or cap the "
                 "input relation."
             )
-    topm_view = None
-    if prefix_m is not None:
+    else:
         # r13 (guide §2.4/§5): materialize the bounded top-m prefix
         # relation too — inlined, the df-rank window re-executed per
         # reference (both candidate sides + the occupancy-cap chain);
         # measured 12 scans / 4 windows in the capped entry's before plan.
-        topm_view = materialize_view(
+        rels["topm"] = materialize_view(
             spark,
-            spark.sql(semantic_topm_sql(
-                "spark", prefix_m, max_bucket_docs, posts_view
-            )),
+            spark.sql(
+                semantic_topm_sql("spark", prefix_m, max_bucket_docs, "{posts}"),
+                posts=posts,
+            ),
             "__hse_topm",
         )
     return spark.sql(
@@ -1125,10 +1130,11 @@ def hashed_semantic_pairs(
             dim,
             threshold,
             prefix_m=prefix_m,
-            posts_rel=posts_view,
+            posts_rel="{posts}",
             max_bucket_docs=max_bucket_docs,
-            topm_rel=topm_view,
-        )
+            topm_rel="{topm}" if "topm" in rels else None,
+        ),
+        **rels,
     )
 
 
@@ -1197,15 +1203,16 @@ def hashed_text_knn(
     """Production Spark form of :func:`hashed_text_knn_sql`: postings built
     once over the spread source and materialized at every size (expensive
     lineage — same measured rule as :func:`hashed_semantic_pairs`)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view, unique_view
+    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    src = unique_view(_spread(spark.table(source), by="doc_id"), "__htk_spread_src")
-    posts_view = materialize_view(
-        spark, spark.sql(hashed_embedding_postings_sql("spark", dim, src)), "__htk_post"
+    posts = spark.sql(
+        hashed_embedding_postings_sql("spark", dim, "{src}"),
+        src=_spread(spark.table(source), by="doc_id"),
     )
     return spark.sql(
-        hashed_text_knn_sql("spark", query_max, k, dim, posts_rel=posts_view)
+        hashed_text_knn_sql("spark", query_max, k, dim, posts_rel="{posts}"),
+        posts=materialize_view(spark, posts, "__htk_post"),
     )
 
 
@@ -1236,11 +1243,10 @@ def build_text_index(
     query that hashed it anyway would add false dot-product contributions.
     (Real search engines ship index-time analyzers for the same reason.)
     """
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    src = unique_view(_spread(spark.table(source), by="doc_id"), "__bti_spread_src")
-    posts = spark.sql(hashed_embedding_postings_sql("spark", dim, src))
+    src = _spread(spark.table(source), by="doc_id")
+    posts = spark.sql(hashed_embedding_postings_sql("spark", dim, "{src}"), src=src)
     posts.withColumn(
         "bucket_group", F.pmod(F.col("bucket"), F.lit(n_groups)).cast("int")
     ).write.mode("overwrite").partitionBy("bucket_group").parquet(
@@ -1249,16 +1255,17 @@ def build_text_index(
     spark.read.parquet(f"{path}/postings").groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("long").alias("n2")
     ).write.mode("overwrite").parquet(f"{path}/norms")
-    feats = bigram_feats_sql("spark", src)
+    feats = bigram_feats_sql("spark", "{src}")
     spark.sql(
         f"""
         WITH tf AS (SELECT doc_id, feat FROM ({feats}) f
                     GROUP BY doc_id, feat),
-        ndocs AS ({ndocs_ge2_tokens_sql("spark", src)})
+        ndocs AS ({ndocs_ge2_tokens_sql("spark", "{src}")})
         SELECT DISTINCT feat FROM (
           SELECT feat, COUNT(*) OVER (PARTITION BY feat) AS df FROM tf) x
         WHERE df * 2 > (SELECT n FROM ndocs)
-        """
+        """,
+        src=src,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stoplist")
 
 
@@ -1379,14 +1386,9 @@ def append_to_text_index(
     degrades retrieval (the IVF recall-contract posture).  Append postings
     are provably what the frozen featurizer emits — per-doc equality
     against :func:`_query_postings` is pytest-pinned."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    src = unique_view(_spread(spark.table(new_source), by="doc_id"), "__bta_spread_src")
-    stop_view = unique_view(
-        spark.read.parquet(f"{path}/stoplist"), "__bta_stoplist"
-    )
-    feats = bigram_feats_sql("spark", src)
+    feats = bigram_feats_sql("spark", "{src}")
     h = portable_hash60_sql("spark", "feat")
     posts = spark.sql(
         f"""
@@ -1394,7 +1396,7 @@ def append_to_text_index(
                     GROUP BY doc_id, feat),
         hashed AS (
           SELECT doc_id, {h} AS h, c FROM tf
-          WHERE feat NOT IN (SELECT feat FROM {stop_view})
+          WHERE feat NOT IN (SELECT feat FROM {{stop}})
         ),
         post AS (
           SELECT doc_id, CAST((h DIV 2) % {dim} AS BIGINT) AS bucket,
@@ -1403,7 +1405,9 @@ def append_to_text_index(
           FROM hashed GROUP BY 1, 2
         )
         SELECT doc_id, bucket, w FROM post WHERE w != 0
-        """
+        """,
+        src=_spread(spark.table(new_source), by="doc_id"),
+        stop=spark.read.parquet(f"{path}/stoplist"),
     )
     posts.withColumn(
         "bucket_group", F.pmod(F.col("bucket"), F.lit(n_groups)).cast("int")
@@ -1774,20 +1778,18 @@ def build_hybrid_text_index(
     materialization with vocabulary).  Takedown via the tombstone
     convention.  This builder is the one-shot form the gate's rebuild
     oracle recomputes — a stale artifact hash-fails."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
-    src = unique_view(
-        _spread(spark.table(source), by="doc_id"), "__bhi_spread_src"
-    )
-    tok = token_positions_sql("spark", src)
+    src = _spread(spark.table(source), by="doc_id")
+    tok = token_positions_sql("spark", "{src}")
     spark.sql(
         f"SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf "
-        f"FROM ({tok}) t WHERE word != '' GROUP BY doc_id, word"
+        f"FROM ({tok}) t WHERE word != '' GROUP BY doc_id, word",
+        src=src,
     ).write.mode("overwrite").parquet(f"{path}/tf")
-    spark.sql(bigram_tf_sql("spark", src)).write.mode("overwrite").parquet(
-        f"{path}/btf"
-    )
+    spark.sql(bigram_tf_sql("spark", "{src}"), src=src).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/btf")
     spark.sql(
         hashed_embedding_postings_sql(
             "spark", dim,
@@ -1823,13 +1825,10 @@ def append_to_hybrid_index(
     re-derive from the merged btf.  The probe joins broadcast the (batch
     -bounded) new-id set, so the stored-side scan is a pruned single
     -column pass — the O(batch) shape, never O(index)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
     _recover_hybrid_index(spark, path)  # heal a prior mid-swap kill
-    src = unique_view(
-        _spread(spark.table(new_source), by="doc_id"), "__ahi_spread_src"
-    )
+    src = _spread(spark.table(new_source), by="doc_id")
     new_ids = spark.table(new_source).select("doc_id").distinct()
 
     def _dedup_new(df, stored: str):
@@ -1841,16 +1840,17 @@ def append_to_hybrid_index(
         )
         return df.join(F.broadcast(present), "doc_id", "left_anti")
 
-    tok = token_positions_sql("spark", src)
+    tok = token_positions_sql("spark", "{src}")
     _dedup_new(
         spark.sql(
             f"SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf "
-            f"FROM ({tok}) t WHERE word != '' GROUP BY doc_id, word"
+            f"FROM ({tok}) t WHERE word != '' GROUP BY doc_id, word",
+            src=src,
         ),
         f"{path}/tf",
     ).write.mode("append").parquet(f"{path}/tf")
     _dedup_new(
-        spark.sql(bigram_tf_sql("spark", src)), f"{path}/btf"
+        spark.sql(bigram_tf_sql("spark", "{src}"), src=src), f"{path}/btf"
     ).write.mode("append").parquet(f"{path}/btf")
     _hybrid_swap(spark, path, "posts", _hybrid_posts(spark, path, dim),
                  "append_to_hybrid_index")
@@ -1996,11 +1996,11 @@ def bm25_index_streaming(
     ``_parts_out``: appends the parts/checkpoint dirs for tests that
     compact or inspect the tree."""
     def tf(batch):
-        batch.createOrReplaceTempView("__bm25_batch")
         return batch.sparkSession.sql(
             "SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf FROM "
-            f"({token_positions_sql('spark', '__bm25_batch')}) t "
-            "WHERE word != '' GROUP BY doc_id, word"
+            f"({token_positions_sql('spark', '{batch}')}) t "
+            "WHERE word != '' GROUP BY doc_id, word",
+            batch=batch,
         )
 
     parts = _replay_docs(spark, source, n_batches, "bm25_stream_", tf,
@@ -2034,11 +2034,12 @@ def chunk_index_streaming(
     this is RAG index FRESHNESS: new documents contribute chunks with
     one bounded tokenize+chunk pass, no corpus rescan."""
     def chunk_tf(batch):
-        batch.createOrReplaceTempView("__chunk_ix_batch")
-        return batch.sparkSession.sql(bigram_tf_sql(
-            "spark",
-            _chunk_composite_rel("spark", size, stride, "__chunk_ix_batch"),
-        ))
+        return batch.sparkSession.sql(
+            bigram_tf_sql(
+                "spark", _chunk_composite_rel("spark", size, stride, "{batch}")
+            ),
+            batch=batch,
+        )
 
     parts = _replay_docs(spark, source, n_batches, "chunk_ix_stream_",
                          chunk_tf, _crash_after_write_epoch, _parts_out)
@@ -2231,52 +2232,40 @@ def chunk_knn(
     stride: int = 48,
     dim: int = 1024,
     source: str = "documents",
-    chunk_postings_view: str | None = None,
-    doc_postings_view: str | None = None,
+    chunk_postings_df: DataFrame | None = None,
+    doc_postings_df: DataFrame | None = None,
 ):
     """Spark path: materialize the chunk postings once (tokenize + chunk +
     hash lineage, referenced twice downstream — the expensive-lineage
-    contract; pass ``chunk_postings_view`` to reuse a memoized one across
+    contract; pass ``chunk_postings_df`` to reuse a memoized one across
     queries, the serving posture), and PIN the ≤ dim-row query vector as a
     literal — the one-statement form re-derives the corpus-wide query
     postings per CTE reference (two extra tokenize passes).  With BOTH
-    memoized views supplied (``doc_postings_view`` for the query side), a
+    memoized relations supplied (``doc_postings_df`` for the query side), a
     repeated query pays only a pruned postings scan + the bounded rank."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import (
-        materialize_view,
-        unique_view,
-    )
-
-    cp_view = chunk_postings_view or build_chunk_postings(
-        spark, size, stride, dim, source
-    )
-    q_src = (
-        f"SELECT bucket, w FROM {doc_postings_view} "
-        f"WHERE doc_id = {query_doc}"
-        if doc_postings_view
-        else (
-            f"SELECT bucket, w FROM "
-            f"({hashed_embedding_postings_sql('spark', dim, source)}) qsrc "
-            f"WHERE doc_id = {query_doc}"
-        )
-    )
-    q_rows = spark.sql(q_src).collect()
-    qlit = spark.createDataFrame(
-        [(query_doc, r["bucket"], r["w"]) for r in q_rows],
-        "doc_id BIGINT, bucket BIGINT, w BIGINT",
-    )
-    qname = unique_view(qlit, "__chunk_qvec")
+    cp = chunk_postings_df
+    if cp is None:
+        cp = build_chunk_postings(spark, size, stride, dim, source)
+    q = (
+        doc_postings_df
+        if doc_postings_df is not None
+        else spark.sql(hashed_embedding_postings_sql("spark", dim, source))
+    ).where(f"doc_id = {query_doc}").select("doc_id", "bucket", "w")
     sql = chunk_knn_sql(
         "spark", query_doc, k, size, stride, dim, source,
-        chunk_postings_rel=f"SELECT doc_id, bucket, w FROM {cp_view}",
+        chunk_postings_rel="SELECT doc_id, bucket, w FROM {cp}",
     )
     # swap the inline query-postings derivation for the pinned vector
-    return spark.sql(_swap_qp(sql, qname))
+    return spark.sql(
+        _swap_qp(sql, "{qvec}"),
+        cp=cp,
+        qvec=spark.createDataFrame(q.collect(), q.schema),
+    )
 
 
 def _swap_qp(sql: str, qname: str) -> str:
     """Replace the ``qp AS (...)`` derivation in :func:`chunk_knn_sql`'s
-    output with a scan of the pinned query-vector view (same columns)."""
+    output with a scan of the pinned query-vector relation (same columns)."""
     head, _, rest = sql.partition("qp AS (")
     depth, i = 1, 0
     while depth and i < len(rest):
@@ -2311,10 +2300,10 @@ def build_chunk_postings(
     stride: int = 48,
     dim: int = 1024,
     source: str = "documents",
-) -> str:
-    """Materialize :func:`chunk_postings` and return its view name.  The
-    fixed materialize key keeps only the newest generations, so a caller
-    that reuses the view across queries materializes
+) -> DataFrame:
+    """Materialize :func:`chunk_postings` and return the read-back
+    relation.  The fixed materialize key keeps only the newest generations,
+    so a caller that reuses the relation across queries materializes
     :func:`chunk_postings` under its own key instead."""
     from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
 
@@ -2431,8 +2420,6 @@ def chunk_index_delete_streaming(
     query side featurizes against the REMAINING corpus too — deletion
     shifts corpus df statistics, and a query vector damped by the stale
     corpus would diverge from the rebuild."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
     po: list = []
     chunk_index_streaming(spark, query_doc, k, size, stride, dim, n_batches,
                           source, _parts_out=po)
@@ -2447,13 +2434,13 @@ def chunk_index_delete_streaming(
     merged = anti_join_sql(f"parquet.`{parts}`", ["doc_id", "feat", "c"],
                            del_parts, key_mult=CHUNK_ID_MULT)
     cp_sql = hashed_embedding_postings_sql("spark", dim, tf_rel=merged)
-    rem = unique_view(
-        spark.table(source).where(f"NOT ({delete_pred})"), "__cidel_rem"
+    return spark.sql(
+        chunk_knn_sql(
+            "spark", query_doc, k, size, stride, dim, "{rem}",
+            chunk_postings_rel=cp_sql,
+        ),
+        rem=spark.table(source).where(f"NOT ({delete_pred})"),
     )
-    return spark.sql(chunk_knn_sql(
-        "spark", query_doc, k, size, stride, dim, rem,
-        chunk_postings_rel=cp_sql,
-    ))
 
 
 def compact_tf_parts(

@@ -71,16 +71,22 @@ class Pipeline:
     ) -> QueryRun | None:
         """One (customer, query) unit of the full run: execute → normalize →
         hourly summing roll-up to the sanitized table path (B15).  Returns
-        None for view-shaped results, which manage their own grain, and for
-        a unit whose sink still holds no data file after the merge (a first
-        merge of an empty search result writes a tree with no data file,
-        which has no schema to read back)."""
-        from qradar_restapi_kafka_datapipeline_spark.operators.normalize import normalize
+        None for view-shaped results, which manage their own grain (a
+        GLOBALVIEW row carries ``ts``, neither of ``add_date``'s time
+        columns), and for a unit whose sink still holds no data file after
+        the merge (a first merge of an empty search result writes a tree
+        with no data file, which has no schema to read back)."""
+        from qradar_restapi_kafka_datapipeline_spark.operators.normalize import (
+            normalize,
+            rename_events,
+        )
         from qradar_restapi_kafka_datapipeline_spark.parts import has_data_files
 
         df = self.run_query(
             qname, customer, start_time, stop_time, event_processor=event_processor
         )
+        if not {"Start Time", "Time"} & set(rename_events(df).columns):
+            return None
         norm = normalize(df)
         if measure not in norm.columns or time_col not in norm.columns:
             return None

@@ -30,21 +30,26 @@ from qradar_restapi_kafka_datapipeline_spark.parts import (
 )
 
 
-def curation_projection_sql(dialect: str, source: str = "documents") -> str:
-    """The scored-document relation, one dialect-common definition.
+def curation_projection(dialect: str) -> list[str]:
+    """The scored-document columns, one dialect-common definition.
 
     ``redacted_chars`` rides the PII chain so the scrub is part of the
     streamed plan (the synthetic docs are clean, so it equals ``n_chars`` —
     the point is the expression runs per micro-batch, value-checked).
     """
-    return (
-        f"SELECT doc_id, {lang_id_sql('text')} AS lang_pred, "
-        f"{quality_score_sql('text', dialect)} AS quality, "
-        f"CAST({word_count_sql('text', dialect)} AS BIGINT) AS n_words, "
+    return [
+        "doc_id",
+        f"{lang_id_sql('text')} AS lang_pred",
+        f"{quality_score_sql('text', dialect)} AS quality",
+        f"CAST({word_count_sql('text', dialect)} AS BIGINT) AS n_words",
         f"CAST(length({pii_redact_sql('text', dialect)}) AS BIGINT) "
-        "AS redacted_chars "
-        f"FROM {source}"
-    )
+        "AS redacted_chars",
+    ]
+
+
+def curation_projection_sql(dialect: str, source: str = "documents") -> str:
+    """:func:`curation_projection` over ``source``."""
+    return f"SELECT {', '.join(curation_projection(dialect))} FROM {source}"
 
 
 def curate_documents_streaming(spark, sf_dir: str, n_batches: int = 3) -> DataFrame:
@@ -64,8 +69,9 @@ def curate_documents_streaming(spark, sf_dir: str, n_batches: int = 3) -> DataFr
         spark, hash_batches(docs, ["doc_id"], n_batches),
         os.path.join(base, "landing"),
     )
-    stream.createOrReplaceTempView("__curation_stream")
-    scored = spark.sql(curation_projection_sql("spark", "__curation_stream"))
+    # the projection's PII regexes carry literal braces, which spark.sql's
+    # DataFrame-argument formatting would read as placeholders
+    scored = stream.selectExpr(*curation_projection("spark"))
     out, ckpt = os.path.join(base, "scored"), os.path.join(base, "ckpt")
     (
         scored.writeStream.format("parquet")
@@ -115,9 +121,8 @@ def dsir_apply_streaming(
     out = os.path.join(base, "scored")
 
     def scored(batch: DataFrame) -> DataFrame:
-        batch.createOrReplaceTempView("__dsir_stream_batch")
         return batch.sparkSession.sql(
-            dsir_apply_sql("spark", artifact, "__dsir_stream_batch")
+            dsir_apply_sql("spark", artifact, "{batch}"), batch=batch
         )
 
     replay_epochs(

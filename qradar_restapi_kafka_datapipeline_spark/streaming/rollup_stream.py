@@ -292,8 +292,7 @@ def globalview_streaming_parts(
     parts = os.path.join(base, "view_parts")
 
     def view_part(batch: DataFrame) -> DataFrame:
-        batch.createOrReplaceTempView("__gvs_batch")
-        return batch.sparkSession.sql(globalview_sql(view, "__gvs_batch"))
+        return batch.sparkSession.sql(globalview_sql(view, "{batch}"), batch=batch)
 
     replay_epochs(
         spark, cols, [F.unix_micros("ts"), *_VIEW_DIMS, "eventCount"],
@@ -345,12 +344,11 @@ def anomaly_scores_streaming(spark, sf_dir: str, n_batches: int = 3) -> DataFram
     parity entry hashes this against the oracle's one-shot raw-events
     aggregate + the SAME scoring SQL, so a drop/double-count anywhere in the
     streaming path fails the gate."""
-    hourly = rollup_events_streaming_watermarked(spark, sf_dir, n_batches)
-    hourly.createOrReplaceTempView("__stream_hourly_anomaly")
     return spark.sql(
         volume_anomaly_sql(
             "SELECT Start_Time AS h, eventName, "
             "CAST(SUM(Event_Count) AS BIGINT) AS n "
-            "FROM __stream_hourly_anomaly GROUP BY 1, 2"
-        )
+            "FROM {hourly} GROUP BY 1, 2"
+        ),
+        hourly=rollup_events_streaming_watermarked(spark, sf_dir, n_batches),
     )

@@ -159,10 +159,9 @@ def update_globalviews_incremental(
     """
     from qradar_restapi_kafka_datapipeline_spark.operators.rollup import merge_rollup
 
-    new_events.createOrReplaceTempView("__gv_increment")
     for name in GLOBALVIEW_SPECS if names is None else names:
         _migrate_view_schema(spark, base_path, name, rebuild_source)
-        inc = spark.sql(globalview_sql(name, "__gv_increment"))
+        inc = spark.sql(globalview_sql(name, "{inc}"), inc=new_events)
         merge_rollup(
             spark,
             inc,

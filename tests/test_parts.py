@@ -211,6 +211,30 @@ def test_union_find_gate_keeps_float_ids_distributed(spark, monkeypatch):
     assert D._numeric_or_string(pairs.schema["id_a"].dataType) is False
 
 
+def test_operators_hand_relations_to_sql_as_arguments():
+    """Operators put a DataFrame into SQL text only as a ``spark.sql``
+    keyword argument, which names it for the analysis and drops it after;
+    a view an operator registers itself outlives the call."""
+    import re
+
+    pkg = os.path.dirname(engine.__file__)
+    scanned = [os.path.join(pkg, "parts.py"), os.path.join(pkg, "engine.py")]
+    for sub in ("operators", "streaming"):
+        scanned += [
+            os.path.join(pkg, sub, f)
+            for f in sorted(os.listdir(os.path.join(pkg, sub)))
+            if f.endswith(".py")
+        ]
+    banned = re.compile(r"createOrReplaceTempView|dropTempView|\bunique_view\b")
+    hits = []
+    for path in scanned:
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                if banned.search(line):
+                    hits.append(f"{os.path.relpath(path, pkg)}:{n}")
+    assert not hits, hits
+
+
 def test_bounded_serves_leave_no_temp_views(spark, tables, tmp_path):
     base = str(tmp_path / "ivfpq")
     S.build_ivfpq_index(spark, spark.table("embeddings"), base)
@@ -226,3 +250,21 @@ def test_bounded_serves_leave_no_temp_views(spark, tables, tmp_path):
     # the returned plans stay valid after their views are dropped
     assert S.knn_ivfpq_from_index(spark, base, dim=64).count() > 0
     assert K.kmv_jaccard(spark).count() == 1
+    # operators that pin, materialize or share an intermediate relation
+    daily = K.kmv_daily_rows(spark)
+    ops = [
+        lambda: T.hashed_semantic_pairs(spark),
+        lambda: K.hdr_quantiles(spark),
+        lambda: K.hdr_grouped_quantiles(spark),
+        lambda: K.hist_quantiles(spark),
+        lambda: K.hll_rolling_distinct(spark),
+        lambda: K.kmv_cohort(spark, daily_rows=daily),
+        lambda: K.kmv_retention(spark),
+        lambda: T.chunk_knn(spark),
+        lambda: D.exact_substring_pairs(spark),
+    ]
+    tables_before = sorted(t.name for t in spark.catalog.listTables())
+    results = [op() for _ in range(3) for op in ops]
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables_before
+    for df in results[-len(ops):]:
+        df.count()

@@ -960,23 +960,18 @@ class TestHybridQualityContract:
         return rel
 
     def test_fused_tracks_best_constituent_and_beats_weaker(
-        self, spark, tables
+        self, spark, tables, tmp_path
     ):
-        from qradar_restapi_kafka_datapipeline_spark.engine import (
-            materialize_view,
-        )
         from qradar_restapi_kafka_datapipeline_spark.operators import text as T
 
         rel = self._relevance()
         assert len(rel) >= 10, "seeded relevance set degenerated"
         # dense rankings for ALL queries in one pass, served from a
         # materialized postings relation (the serving posture)
-        posts = materialize_view(
-            spark,
-            spark.sql(T.hashed_embedding_postings_sql("spark", 4096,
-                                                      "documents")),
-            "__hybq_posts",
-        )
+        spark.sql(
+            T.hashed_embedding_postings_sql("spark", 4096, "documents")
+        ).write.parquet(str(tmp_path / "posts"))
+        posts = f"parquet.`{tmp_path / 'posts'}`"
         den_all = spark.sql(T.hashed_text_knn_sql(
             "spark", query_max=self.QUERY_RANGE, k=self.K, dim=4096,
             posts_rel=posts,

@@ -103,6 +103,27 @@ def test_pipeline_run_all(spark, sf_dir, tmp_path):
     assert "Event_Count" in rolled.columns and "event_date" in rolled.columns
 
 
+def test_pipeline_run_all_skips_globalview_units(spark, sf_dir, tmp_path):
+    """A full run over the whole corpus: GLOBALVIEW results carry ``ts``,
+    not the ``Start Time``/``Time`` that normalize derives dates from, and
+    manage their own grain, so their units are skipped; only raw-event
+    queries write roll-ups."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import (
+        AQL_CORPUS,
+        GLOBALVIEW_QUERIES,
+    )
+
+    register_qevents(spark, sf_dir)
+    register_globalviews(spark)
+    register_ref_sets(spark)
+    p = Pipeline(spark, sink_base=str(tmp_path / "sinks_all"))
+    runs = p.run_all(["customer_1"], "2024-01-01 00:00:00", "2024-01-21 00:00:00")
+    names = {r.query_name for r in runs}
+    assert "AllowedOutboundTraffic" in names
+    assert names <= set(AQL_CORPUS) - set(GLOBALVIEW_QUERIES)
+    assert all(r.rows > 0 for r in runs)
+
+
 def test_pipeline_run_from_ep_clients(spark, sf_dir, tmp_path):
     """ep_clients.json channel parity (reference attributes.py:38-39 +
     run.py:44-51): EP→customer mapping loaded from disk with the error-context

@@ -129,40 +129,41 @@ def test_bucketed_lag_equals_plain_lag_with_nulls(spark):
     assert got == want
 
 
-def test_persist_view_releases_previous_relation(spark):
+def test_persist_tracked_releases_previous_relation(spark):
     """ADVICE r3: operators that persist intermediates must release the prior
-    invocation's relation and never clobber a shared fixed view name."""
+    invocation's relation."""
     from qradar_restapi_kafka_datapipeline_spark import engine
 
     df1 = spark.range(10)
     df2 = spark.range(20)
-    v1 = engine.persist_view(df1, "__t_pv")
+    p1 = engine.persist_tracked(df1, "__t_pv")
     held1 = engine._PERSISTED["__t_pv"]
     assert held1.storageLevel.useMemory
-    v2 = engine.persist_view(df2, "__t_pv")
-    assert v1 != v2  # per-invocation names: no clobbering
+    p2 = engine.persist_tracked(df2, "__t_pv")
     assert not held1.storageLevel.useMemory  # previous relation unpersisted
-    assert spark.table(v2).count() == 20
-    assert spark.table(v1).count() == 10  # old view still resolvable (uncached)
+    assert p2.count() == 20
+    assert p1.count() == 10  # old relation still computes (uncached)
     engine._PERSISTED.pop("__t_pv").unpersist()
 
 def test_materialize_view_reclaims_old_generations(spark):
     """ADVICE r5: materialize_view must bound scratch growth — generation
     N-2 is deleted on the Nth invocation while N-1 (plans may still hold
-    it) stays readable."""
+    it) stays readable; no generation leaves a catalog entry."""
     import os
 
     from qradar_restapi_kafka_datapipeline_spark import engine
 
     key = "__t_mat"
     engine._MAT_GENERATIONS.pop(key, None)
-    names, paths = [], []
+    tables_before = sorted(t.name for t in spark.catalog.listTables())
+    dfs, paths = [], []
     for n in (5, 6, 7):
-        names.append(engine.materialize_view(spark, spark.range(n), key))
+        dfs.append(engine.materialize_view(spark, spark.range(n), key))
         paths.append(engine._MAT_GENERATIONS[key][-1])
     assert len(engine._MAT_GENERATIONS[key]) == engine._MAT_RETAIN
     assert not os.path.exists(paths[0])          # N-2 reclaimed
     assert os.path.exists(paths[1]) and os.path.exists(paths[2])
-    assert spark.table(names[-1]).count() == 7   # newest serves
-    assert spark.table(names[-2]).count() == 6   # N-1 plans still valid
+    assert dfs[-1].count() == 7                  # newest serves
+    assert dfs[-2].count() == 6                  # N-1 plans still valid
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables_before
     engine._MAT_GENERATIONS.pop(key, None)
