@@ -4129,10 +4129,7 @@ def _north_star_entries(q: dict[str, Q]) -> None:
         lambda spark, sf: M.extract_features(
             M.attach_binary_payload(spark.table("documents"))
         ),
-        "SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes, "
-        "CAST(64 + (length(text) % 16) * 32 AS INT) AS width, "
-        "CAST(64 + (ascii(substr(text, 1, 1)) % 8) * 32 AS INT) AS height, "
-        "CAST((length(text) % 7) + 1 AS INT) AS n_frames FROM documents",
+        M.features_oracle_sql(),
     )
     q["multimodal_frame_sample"] = _df_entry(
         lambda spark, sf: M.frame_sample(
@@ -4143,73 +4140,25 @@ def _north_star_entries(q: dict[str, Q]) -> None:
         "UNNEST(generate_series(0, d.n_frames - 1, 2)) AS t(i)",
     )
 
-    # ---- real binary decode: BMP encode → decode roundtrip -------------------
-    # Two Arrow stages (encode kernel, decode kernel); every output value is
-    # parsed from bytes — header offsets AND the stride-aware pixel checksum —
-    # and must match the oracle's recomputation of the encoder spec.
-    q["multimodal_bmp_decode"] = _df_entry(
-        lambda spark, sf: M.extract_bmp_features(
-            M.attach_bmp_payload(spark.table("documents"))
-        ),
-        M.bmp_decode_oracle_sql(),
-    )
-    # Resize (round 8): the remaining multimodal verb — real stride-aware
-    # pixel walk → nearest-neighbor resample → re-encode → re-DECODE; the
-    # oracle recomputes resized dims/stride/checksum from the encoder
-    # spec, so index math that strays into row padding hash-fails.
-    q["multimodal_bmp_resize"] = _df_entry(
-        lambda spark, sf: M.resize_bmp(
-            M.attach_bmp_payload(spark.table("documents"))
-        ),
-        M.bmp_resize_oracle_sql(),
-    )
-
-    # ---- real binary decode #2: WAV encode → RIFF chunk-walk decode ---------
-    # The audio twin of the BMP entry: rate/length/PCM checksum parsed from
-    # bytes; a third of the payloads carry a junk LIST chunk before fmt, so
-    # a fixed-offset (non-walking) decoder hash-fails.
-    q["multimodal_wav_decode"] = _df_entry(
-        lambda spark, sf: M.extract_wav_features(
-            M.attach_wav_payload(spark.table("documents"))
-        ),
-        M.wav_decode_oracle_sql(),
-    )
-
-    # ---- real binary decode #3: PNG encode → zlib inflate + filter reversal -
-    # Unlike BMP/WAV's fixed headers this decodes a real COMPRESSED
-    # bitstream with stdlib zlib: chunk walk w/ CRC verify, multi-IDAT
-    # concatenation (every 4th doc splits the stream), tEXt chunks to defeat
-    # fixed offsets (every 3rd doc), and None/Sub/Up scanline-filter
-    # reversal; the positional pixel checksum hash-fails any shortcut.
-    q["multimodal_png_decode"] = _df_entry(
-        lambda spark, sf: M.extract_png_features(
-            M.attach_png_payload(spark.table("documents"))
-        ),
-        M.png_decode_oracle_sql(),
-    )
-    # Baseline-DCT JPEG (VERDICT r3 #8): real entropy-coded bitstream —
-    # canonical Huffman from DHT, byte-unstuffed bit reads, DC diff chain,
-    # dequantize, general numpy IDCT, MCU pad + crop; DC-only payloads keep
-    # every reconstructed pixel integer-exact so the oracle recomputes the
-    # positional checksum from the encoder spec.
-    q["multimodal_jpeg_decode"] = _df_entry(
-        lambda spark, sf: M.extract_jpeg_features(
-            M.attach_jpeg_payload(spark.table("documents"))
-        ),
-        M.jpeg_decode_oracle_sql(),
-    )
-    # Video frame sampling (round 10) — the container member of the
-    # decode family: a length-prefixed MJPEG-shaped frame stream, sampled
-    # every 2nd frame by a kernel that SEEKS over unsampled frames via
-    # the length prefixes (decode cost ∝ kept frames) and decodes kept
-    # ones through the real BMP parser; per-frame fills vary with the
-    # index, so the closed-form oracle catches seek/index off-by-ones.
-    q["multimodal_video_frames"] = _df_entry(
-        lambda spark, sf: M.video_frame_sample_features(
-            M.attach_video_payload(spark.table("documents")), every_nth=2
-        ),
-        M.video_frame_sample_oracle_sql(every_nth=2),
-    )
+    # ---- real binary decode: one entry per codec-table format -------------
+    # Two Arrow stages (the encode kernel, the decode kernel); every output
+    # value is parsed from bytes and must match the oracle's recomputation
+    # of the encoder spec.  The hazard each encoder plants for its oracle
+    # is named on its ``M.CODECS`` row.
+    for name, fmt in [
+        ("multimodal_bmp_decode", "bmp"),
+        ("multimodal_bmp_resize", "bmp_resize"),
+        ("multimodal_wav_decode", "wav"),
+        ("multimodal_png_decode", "png"),
+        ("multimodal_jpeg_decode", "jpeg"),
+        ("multimodal_video_frames", "video"),
+    ]:
+        q[name] = _df_entry(
+            lambda spark, sf, fmt=fmt: M.media_features(
+                spark.table("documents"), fmt
+            ),
+            M.CODECS[fmt].oracle,
+        )
     # Perceptual-hash image dedup (round 9, VERDICT r8 #4): textured BMPs
     # → REAL byte-walking dHash kernel (stride walk, integer nearest-
     # neighbor 9×8 resample, adjacent-pixel comparisons) → Hamming-banded
@@ -4245,16 +4194,18 @@ def _north_star_entries(q: dict[str, Q]) -> None:
     # all cross-checked.  max_hamming=3: the corpus' content-driven
     # near-dup band (word substitutions at aligned positions).
     q["dedup_audio_fingerprint"] = _df_entry(
-        lambda spark, sf: M.audio_fingerprint_pairs(
-            spark, spark.table("documents"), max_hamming=3
+        lambda spark, sf: M.hamming_dedup(
+            spark, spark.table("documents"), "audio_fp",
+            M.phash_pairs_expanded_sql, 3, "__audio_fp",
         ),
         M.audio_fp_pairs_oracle_sql(max_hamming=3),
     )
     # The 100-TB shape, like the image twin: identical fingerprints
     # collapse first, banding runs over DISTINCT fingerprints only.
     q["dedup_audio_fingerprint_clusters"] = _df_entry(
-        lambda spark, sf: M.audio_fingerprint_clusters(
-            spark, spark.table("documents"), max_hamming=3
+        lambda spark, sf: M.hamming_dedup(
+            spark, spark.table("documents"), "audio_fp",
+            M.phash_clusters_sql, 3, "__audio_fp_cl",
         ),
         M.audio_fp_clusters_oracle_sql(max_hamming=3),
     )

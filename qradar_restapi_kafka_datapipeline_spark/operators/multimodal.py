@@ -1,38 +1,116 @@
 """Multimodal column plumbing (north-star M6).
 
 Image/audio/video payloads are opaque ``binary`` columns with typed metadata;
-heavy per-item work (decode, feature-extract, resize, frame-sample) runs as
-Arrow-batched ``mapInPandas`` — vectorized Python at partition granularity, the
-only sane shape for media work at 100 TB (the bytes never leave the executor,
-batches amortize Python overhead).
+heavy per-item work (encode, decode, feature-extract, resize, frame-sample)
+runs as Arrow-batched ``mapInPandas`` — vectorized Python at partition
+granularity, the only sane shape for media work at 100 TB (the bytes never
+leave the executor, batches amortize Python overhead).  There are exactly two
+kernels: :func:`attach_payload` runs a per-document ``encode(doc_id, text)``
+and :func:`decode_features` runs a per-payload ``rows_of(payload)``.  Each
+format is one row of :data:`CODECS` naming its encoder, its row function, its
+output schema and the DuckDB oracle that recomputes those rows from the
+encoder spec.
 
-The heavy codecs (PIL/ffmpeg/librosa) are NOT in this container, so those
-decode kernels are stubbed: ``decode_image``/``decode_audio`` raise
-``NotImplementedError`` with the dependency named, and the deterministic fake
-extractor exercises the real plumbing (schema, batching, partitioning) so the
-pipeline around the stub is fully tested.  BMP needs no codec — its decode
-(:func:`decode_bmp`) is REAL byte parsing (magic, header offsets, stride-aware
-pixel walk), value-gated against an SQL oracle recomputing the encoder's spec.
+The heavy codecs (PIL/ffmpeg/librosa) are NOT in this container, so
+:func:`decode_image` is a stub that raises ``NotImplementedError`` with the
+dependency named, and :func:`extract_features` is a deterministic fake that
+exercises the real plumbing (schema, batching, partitioning).  BMP, WAV, PNG,
+baseline JPEG and the video container need no external codec: their decoders
+are REAL byte parsing, value-gated against SQL oracles recomputing each
+encoder's spec.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
 )
+
+_I, _L = IntegerType(), LongType()
+_PAYLOAD_SCHEMA = StructType(
+    [StructField("doc_id", _L), StructField("payload", BinaryType())]
+)
+_HASH_COLS = ("doc_id", "hash_hi", "hash_lo")
+
+
+def _rows_schema(**cols) -> StructType:
+    """``doc_id LONG`` followed by ``cols`` (name → type, in order): the
+    output schema of a :func:`decode_features` row function."""
+    return StructType(
+        [StructField(n, t) for n, t in {"doc_id": _L, **cols}.items()]
+    )
+
+
+def attach_payload(
+    df: DataFrame,
+    encode: Callable[[int, str], bytes],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """``(doc_id, payload)`` with ``encode(doc_id, text)`` per document —
+    the one Arrow-batched encode kernel."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf[id_col],
+                    "payload": [
+                        encode(int(i), t)
+                        for i, t in zip(pdf[id_col], pdf[text_col])
+                    ],
+                }
+            )
+
+    return df.select(id_col, text_col).mapInPandas(
+        kernel, schema=_PAYLOAD_SCHEMA
+    )
+
+
+def decode_features(
+    media: DataFrame,
+    rows_of: Callable[[bytes], list[tuple]],
+    schema: StructType,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The one Arrow-batched decode kernel: each payload's
+    ``rows_of(payload)`` rows, prefixed with its id — zero, one or many
+    rows per payload (the video sampler is a flat-map).  ``schema`` is a
+    :func:`_rows_schema` whose names label the columns, read without a
+    JVM call, so the kernel also runs on a bare ``mapInPandas`` stand-in."""
+    names = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (int(i), *row)
+                    for i, b in zip(pdf[id_col], pdf[payload_col])
+                    for row in rows_of(bytes(b))
+                ],
+                columns=names,
+            )
+
+    return media.mapInPandas(kernel, schema=schema)
+
+
+def _one_row(decode: Callable[..., tuple], payload: bytes, **kw) -> list[tuple]:
+    """Adapt a one-result decoder to :func:`decode_features`' row contract."""
+    return [decode(payload, **kw)]
 
 
 def attach_binary_payload(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -50,77 +128,71 @@ def decode_image(payload: bytes):
     )
 
 
-def decode_audio(payload: bytes):
-    raise NotImplementedError(
-        "audio decode requires librosa/ffmpeg (not installed); "
-        "swap in a real kernel here — the mapInPandas plumbing is unchanged"
-    )
+def _fake_features(payload: bytes) -> tuple[int, int, int, int]:
+    """Deterministic fake "decoded" dims standing in for
+    :func:`decode_image`: ``(n_bytes, width, height, n_frames)``."""
+    n = len(payload)
+    first = payload[0] if n else 0
+    return n, 64 + (n % 16) * 32, 64 + (first % 8) * 32, (n % 7) + 1
 
 
 def extract_features(
     media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
+    """Arrow-batched feature extraction over binary payloads through the
+    fake row function; everything around it — partition-wise iteration,
+    Arrow batch shape, output schema — is the production path."""
+    c = CODECS["features"]
+    return decode_features(media, c.rows_of, c.schema, id_col, payload_col)
 
-    The kernel here is a deterministic fake (dimensions derived from payload
-    bytes) standing in for decode_image; everything around it — partition-wise
-    iteration, Arrow batch shape, output schema — is the production path.
-    """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes = pdf[payload_col].map(len)
-            first = pdf[payload_col].map(lambda b: b[0] if len(b) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": n_bytes.astype("int64"),
-                    # fake "decoded" dims: deterministic function of content
-                    "width": (64 + (n_bytes % 16) * 32).astype("int32"),
-                    "height": (64 + (first.astype("int64") % 8) * 32).astype("int32"),
-                    "n_frames": ((n_bytes % 7) + 1).astype("int32"),
-                }
-            )
-
-    return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+def features_oracle_sql() -> str:
+    """DuckDB recomputation of :func:`_fake_features` over the UTF-8 text."""
+    return (
+        "SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes, "
+        "CAST(64 + (length(text) % 16) * 32 AS INT) AS width, "
+        "CAST(64 + (ascii(substr(text, 1, 1)) % 8) * 32 AS INT) AS height, "
+        "CAST((length(text) % 7) + 1 AS INT) AS n_frames FROM documents"
+    )
 
 
 # ---------------------------------------------------------------------------
 # Real binary decode: BMP (no external codec needed — pure struct parsing).
-# PIL/ffmpeg formats stay behind the stubs above; BMP's fixed little-endian
-# header makes it the honest, fully-testable member of the decode family.
+# BMP's fixed little-endian header makes it the simplest fully-testable
+# member of the decode family.
 # ---------------------------------------------------------------------------
 
 BMP_CHECKSUM_MOD = 1_000_000_007
 
 
-def encode_bmp(doc_id: int, text: str) -> bytes:
-    """A VALID minimal 24-bit BMP whose dimensions derive deterministically
-    from the document (width 4–11 from text length, height 2–6 from id) and
-    whose pixels are a constant fill — so an SQL oracle can recompute every
-    decoded property without touching bytes."""
-    import struct
+def _image_dims(doc_id: int, text: str) -> tuple[int, int]:
+    """Width 4–11 from the text length, height 2–6 from the id."""
+    return 4 + len(text) % 8, 2 + doc_id % 5
 
-    w = 4 + len(text) % 8
-    h = 2 + doc_id % 5
-    row = 3 * w
-    pad = (4 - row % 4) % 4
-    fill = doc_id % 256
-    data = (bytes([fill]) * row + b"\x00" * pad) * h
-    size = 54 + len(data)
-    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
+
+def _bmp_write(w: int, h: int, rows: list[bytes]) -> bytes:
+    """A valid 24-bit BMP from ``h`` unpadded pixel rows of ``3·w`` bytes:
+    the 54-byte header, then each row padded to a 4-byte boundary."""
+    pad = b"\x00" * ((4 - 3 * w % 4) % 4)
+    data = b"".join(r + pad for r in rows)
+    return (
+        struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
+        + struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
+        )
+        + data
     )
-    return header + data
 
 
-def decode_bmp(payload: bytes) -> tuple[int, int, int, int, int]:
-    """Parse a BMP from raw bytes: magic check, header-offset reads, and a
-    stride-aware pixel walk (rows are padded to 4-byte boundaries — the
-    checksum sums ONLY pixel bytes, proving the stride logic is real).
-    Returns ``(width, height, bpp, n_bytes, pixel_checksum)``."""
-    import struct
+def _bmp_solid(w: int, h: int, fill: int) -> bytes:
+    """A valid 24-bit BMP whose every byte is ``fill % 256``."""
+    return _bmp_write(w, h, [bytes([fill % 256]) * (3 * w)] * h)
 
+
+def _bmp_rows(payload: bytes) -> tuple[int, int, int, int, list[bytes]]:
+    """``(width, height, bpp, file_size, rows)`` of a BMP: magic check,
+    header-offset reads, and the unpadded pixel rows found by a
+    stride-aware walk (rows are padded to 4-byte boundaries)."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     size = struct.unpack_from("<I", payload, 2)[0]
@@ -130,62 +202,47 @@ def decode_bmp(payload: bytes) -> tuple[int, int, int, int, int]:
     bpp = struct.unpack_from("<H", payload, 28)[0]
     row = w * bpp // 8
     stride = (row + 3) // 4 * 4
-    psum = 0
-    for r in range(h):
-        start = offset + r * stride
-        psum += sum(payload[start : start + row])
-    return w, h, bpp, size, psum % BMP_CHECKSUM_MOD
+    rows = [
+        payload[offset + r * stride : offset + r * stride + row]
+        for r in range(h)
+    ]
+    return w, h, bpp, size, rows
 
 
-def attach_bmp_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(id, payload)`` with a real BMP per document — Arrow-batched encode."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_bmp(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
+def encode_bmp(doc_id: int, text: str) -> bytes:
+    """A VALID minimal 24-bit BMP whose dimensions derive deterministically
+    from the document (width 4–11 from text length, height 2–6 from id) and
+    whose pixels are a constant fill — so an SQL oracle can recompute every
+    decoded property without touching bytes."""
+    return _bmp_solid(*_image_dims(doc_id, text), doc_id)
 
 
-def extract_bmp_features(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """The real-decode twin of :func:`extract_features`: every output value
-    comes out of :func:`decode_bmp`'s byte parsing, not a formula — the gate
-    oracle recomputes the expected values from the encoder's spec, so an
-    off-by-one in either the header layout or the stride walk hash-fails."""
+def decode_bmp(payload: bytes) -> tuple[int, int, int, int, int]:
+    """Parse a BMP from raw bytes: magic check, header-offset reads, and a
+    stride-aware pixel walk (rows are padded to 4-byte boundaries — the
+    checksum sums ONLY pixel bytes, proving the stride logic is real).
+    Returns ``(width, height, bpp, n_bytes, pixel_checksum)``; the oracle
+    recomputes each from the encoder spec, so an off-by-one in either the
+    header layout or the stride walk hash-fails."""
+    w, h, bpp, size, rows = _bmp_rows(payload)
+    return w, h, bpp, size, sum(map(sum, rows)) % BMP_CHECKSUM_MOD
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *decode_bmp(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "bpp", "n_bytes",
-                    "pixel_checksum",
-                ],
-            )
 
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, width INT, height INT, bpp INT, "
-        "n_bytes LONG, pixel_checksum LONG",
-    )
+def _bmp_resize(payload: bytes, scale_den: int) -> tuple[int, int, int, int, int]:
+    """Nearest-neighbor downsample to ``(max(1, w//scale_den),
+    max(1, h//scale_den))``: index-map ``src = (dst · old) // new`` per
+    axis, re-encode a valid padded BMP, and re-decode THAT — returns
+    ``(width, height, n_bytes, pixel_checksum, src_pixels)``."""
+    w, h, _, _, px = _bmp_rows(payload)
+    nw, nh = max(1, w // scale_den), max(1, h // scale_den)
+    out = []
+    for r in range(nh):
+        src_r = px[(r * h) // nh]
+        out.append(b"".join(
+            src_r[3 * sc : 3 * sc + 3] for sc in ((c * w) // nw for c in range(nw))
+        ))
+    rw, rh, _, rsize, rsum = decode_bmp(_bmp_write(nw, nh, out))
+    return rw, rh, rsize, rsum, w * h
 
 
 def resize_bmp(
@@ -194,65 +251,16 @@ def resize_bmp(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Nearest-neighbor downsample to ``(max(1, w//scale_den),
-    max(1, h//scale_den))`` — the resize member of the
-    decode/extract/resize/frame-sample verb set, and REAL work end to
-    end: the kernel walks the source pixels stride-aware into an array,
-    index-maps ``src = (dst · old) // new`` per axis, re-encodes a valid
-    padded BMP, and re-decodes THAT to produce the emitted features — so
-    the gate oracle (which recomputes dims/stride/checksum from the
-    encoder spec) fails on any indexing slip that touches a padding byte
-    or mis-sizes the output header.  Arrow-batched mapInPandas, no
-    driver involvement; at 100 TB this is the shape every image-pipeline
-    map stage takes (decode → transform → re-encode per partition)."""
-    import struct
-
-    def _resize_one(payload: bytes) -> tuple[int, int, int, int, int]:
-        if payload[:2] != b"BM":
-            raise ValueError("not a BMP payload")
-        offset = struct.unpack_from("<I", payload, 10)[0]
-        w = struct.unpack_from("<i", payload, 18)[0]
-        h = struct.unpack_from("<i", payload, 22)[0]
-        bpp = struct.unpack_from("<H", payload, 28)[0]
-        row = w * bpp // 8
-        stride = (row + 3) // 4 * 4
-        px = [payload[offset + r * stride: offset + r * stride + row]
-              for r in range(h)]
-        nw, nh = max(1, w // scale_den), max(1, h // scale_den)
-        nrow = 3 * nw
-        npad = (4 - nrow % 4) % 4
-        out_rows = []
-        for r in range(nh):
-            src_r = px[(r * h) // nh]
-            buf = bytearray()
-            for c in range(nw):
-                sc = (c * w) // nw
-                buf += src_r[3 * sc: 3 * sc + 3]
-            out_rows.append(bytes(buf) + b"\x00" * npad)
-        data = b"".join(out_rows)
-        size = 54 + len(data)
-        header = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54) + struct.pack(
-            "<IiiHHIIiiII", 40, nw, nh, 1, 24, 0, len(data), 2835, 2835, 0, 0
-        )
-        rw, rh, _, rsize, rsum = decode_bmp(header + data)
-        return rw, rh, rsize, rsum, w * h
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *_resize_one(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "n_bytes",
-                         "pixel_checksum", "src_pixels"],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, width INT, height INT, n_bytes LONG, "
-        "pixel_checksum LONG, src_pixels LONG",
+    """Nearest-neighbor downsample (:func:`_bmp_resize`) — the resize
+    member of the decode/extract/resize/frame-sample verb set, and REAL
+    work end to end: the gate oracle (which recomputes dims/stride/
+    checksum from the encoder spec) fails on any indexing slip that
+    touches a padding byte or mis-sizes the output header.  At 100 TB
+    this is the shape every image-pipeline map stage takes (decode →
+    transform → re-encode per partition)."""
+    return decode_features(
+        media, partial(_one_row, _bmp_resize, scale_den=scale_den),
+        CODECS["bmp_resize"].schema, id_col, payload_col,
     )
 
 
@@ -302,48 +310,25 @@ def encode_bmp_textured(doc_id: int, text: str) -> bytes:
     constant-fill :func:`encode_bmp` is degenerate for perceptual
     hashing: every gradient is zero).  Same header/stride layout; pixel
     (r, c) carries the formula value in all three channels."""
-    import struct
-
-    w = 4 + len(text) % 8
-    h = 2 + doc_id % 5
+    w, h = _image_dims(doc_id, text)
     seed = doc_id % PHASH_SEED_MOD
-    row_len = 3 * w
-    pad = (4 - row_len % 4) % 4
-    rows = []
-    for r in range(h):
-        buf = bytearray()
-        for c in range(w):
-            v = (seed * _K_SEED + r * _K_ROW + c * _K_COL) % 256
-            buf += bytes([v, v, v])
-        rows.append(bytes(buf) + b"\x00" * pad)
-    data = b"".join(rows)
-    size = 54 + len(data)
-    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    return header + data
+    return _bmp_write(w, h, [
+        bytes(v for c in range(w)
+              for v in [(seed * _K_SEED + r * _K_ROW + c * _K_COL) % 256] * 3)
+        for r in range(h)
+    ])
 
 
-def attach_textured_bmp_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(doc_id, payload)`` with a textured BMP per document."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_bmp_textured(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
+def _dhash(payload: bytes) -> tuple[int, int, int, int]:
+    """``(hash_hi, hash_lo, width, height)`` — see :func:`image_dhash`."""
+    w, h, _, _, px = _bmp_rows(payload)
+    bits = 0
+    for r in range(8):
+        src_r = px[(r * h) // 8]
+        for c in range(8):
+            if src_r[3 * (((c + 1) * w) // 9)] > src_r[3 * ((c * w) // 9)]:
+                bits |= 1 << (r * 8 + c)
+    return bits >> 32, bits & 0xFFFFFFFF, w, h
 
 
 def image_dhash(
@@ -361,52 +346,10 @@ def image_dhash(
     The image-dedup fingerprint every multimodal training pipeline
     computes (dHash over an 8×8 downsample is the standard cheap
     perceptual hash); downstream, Hamming-banded pair generation stays
-    NO-all-pairs (:func:`phash_pairs_sql`).  Arrow-batched mapInPandas.
+    NO-all-pairs (:func:`phash_pairs_sql`).
     """
-    import struct
-
-    def _one(payload: bytes) -> tuple[int, int, int, int]:
-        if payload[:2] != b"BM":
-            raise ValueError("not a BMP payload")
-        offset = struct.unpack_from("<I", payload, 10)[0]
-        w = struct.unpack_from("<i", payload, 18)[0]
-        h = struct.unpack_from("<i", payload, 22)[0]
-        row_len = 3 * w
-        stride = (row_len + 3) // 4 * 4
-        px = [
-            payload[offset + r * stride : offset + r * stride + row_len]
-            for r in range(h)
-        ]
-        hi = lo = 0
-        for r in range(8):
-            src_r = px[(r * h) // 8]
-            for c in range(8):
-                v0 = src_r[3 * ((c * w) // 9)]
-                v1 = src_r[3 * (((c + 1) * w) // 9)]
-                if v1 > v0:
-                    k = r * 8 + c
-                    if k < 32:
-                        lo |= 1 << k
-                    else:
-                        hi |= 1 << (k - 32)
-        return hi, lo, w, h
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *_one(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "hash_hi", "hash_lo", "width", "height"],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, hash_hi LONG, hash_lo LONG, "
-        "width INT, height INT",
-    )
+    c = CODECS["dhash"]
+    return decode_features(media, c.rows_of, c.schema, id_col, payload_col)
 
 
 def dhash_oracle_sql(dialect: str, source: str = "documents") -> str:
@@ -495,7 +438,8 @@ def phash_pairs_sql(
 
     ``hash_rel`` is any relation/CTE body yielding
     ``(doc_id, hash_hi, hash_lo)`` — the Spark entry feeds the REAL
-    byte-walking kernel's output through a temp view while the DuckDB
+    byte-walking kernel's output as a ``spark.sql`` argument (see
+    :func:`hamming_dedup`) while the DuckDB
     oracle feeds :func:`dhash_oracle_sql`; identical pair logic on both
     sides makes the whole pipeline value-hash-checkable."""
     if not 0 <= max_hamming <= 7:
@@ -588,6 +532,34 @@ def phash_pairs_expanded_sql(
     """
 
 
+def hamming_dedup(
+    spark,
+    docs: DataFrame,
+    fmt: str,
+    pairs_sql: Callable[[str, str, int], str],
+    max_hamming: int,
+    key: str,
+) -> DataFrame:
+    """The one Hamming-dedup body: ``fmt``'s 64-bit fingerprint rows
+    (``"dhash"`` or ``"audio_fp"`` in :data:`CODECS`) → one of the banded
+    builders (:func:`phash_pairs_expanded_sql`, :func:`phash_clusters_sql`).
+    The hash relation is tiny (two BIGINTs per item) but its lineage
+    crosses two Python kernel stages AND the pair SQL references it
+    through WITH-CTE definitions (both join sides) — the exact shape where
+    cache substitution does not reach (round-4 CacheManager finding), so it
+    is MATERIALIZED under ``key``, not persisted: each band side scans
+    compact parquet instead of re-running the encode+hash kernels."""
+    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
+
+    hashes = media_features(docs, fmt).select(*_HASH_COLS)
+    return spark.sql(
+        pairs_sql(
+            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
+        ),
+        hashes=materialize_view(spark, hashes, key),
+    )
+
+
 def image_phash_pairs(
     spark,
     docs: DataFrame,
@@ -597,24 +569,9 @@ def image_phash_pairs(
     REAL dHash kernel (:func:`image_dhash`) → group-expansion pair
     join (:func:`phash_pairs_expanded_sql`; the gate oracle stays the
     independent simple banded form, so the two formulations check
-    each other).  The hash relation is tiny (two BIGINTs
-    per image) but its lineage crosses two Python kernel stages AND the
-    pair SQL references it through WITH-CTE definitions (both join
-    sides) — the exact shape where cache substitution does not reach
-    (round-4 CacheManager finding), so it is MATERIALIZED, not
-    persisted: each band side scans compact parquet instead of
-    re-running the encode+hash kernels."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
-
-    hashes = image_dhash(attach_textured_bmp_payload(docs)).select(
-        "doc_id", "hash_hi", "hash_lo"
-    )
-    return spark.sql(
-        phash_pairs_expanded_sql(
-            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
-        ),
-        hashes=materialize_view(spark, hashes, "__phash_hashes"),
-    )
+    each other)."""
+    return hamming_dedup(spark, docs, "dhash", phash_pairs_expanded_sql,
+                         max_hamming, "__phash_hashes")
 
 
 def phash_pairs_oracle_sql(max_hamming: int = 2) -> str:
@@ -684,19 +641,9 @@ def image_phash_clusters(
     max_hamming: int = 2,
 ) -> DataFrame:
     """End-to-end cluster form: real dHash kernel → identical-hash
-    collapse → banded near-pairs over distinct hashes (same materialized
-    hash relation posture as :func:`image_phash_pairs`)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
-
-    hashes = image_dhash(attach_textured_bmp_payload(docs)).select(
-        "doc_id", "hash_hi", "hash_lo"
-    )
-    return spark.sql(
-        phash_clusters_sql(
-            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
-        ),
-        hashes=materialize_view(spark, hashes, "__phash_hashes"),
-    )
+    collapse → banded near-pairs over distinct hashes."""
+    return hamming_dedup(spark, docs, "dhash", phash_clusters_sql,
+                         max_hamming, "__phash_hashes")
 
 
 def phash_clusters_oracle_sql(max_hamming: int = 2) -> str:
@@ -738,9 +685,7 @@ def phash_index_streaming(
     ckpt = replay_epochs(
         spark, spark.table(source).select("doc_id", "text"), ["doc_id"],
         n_batches, base, parts,
-        lambda batch: image_dhash(attach_textured_bmp_payload(batch)).select(
-            "doc_id", "hash_hi", "hash_lo"
-        ),
+        lambda batch: media_features(batch, "dhash").select(*_HASH_COLS),
         crash_after_write_epoch=_crash_after_write_epoch,
     )
     if _parts_out is not None:
@@ -812,22 +757,17 @@ def bmp_decode_oracle_sql(source: str = "documents") -> str:
 
 # ---------------------------------------------------------------------------
 # WAV: the audio member of the real-decode family (RIFF chunk walking + PCM
-# sample checksum — pure stdlib byte parsing, same honesty contract as BMP;
-# compressed codecs stay behind the decode_audio stub).
+# sample checksum — pure stdlib byte parsing, same honesty contract as BMP).
 # ---------------------------------------------------------------------------
 
 
-def encode_wav(doc_id: int, text: str) -> bytes:
-    """A VALID 16-bit mono PCM WAV with deterministic rate/length/samples —
-    every decoded property is recomputable by an SQL oracle.  Every third
-    document carries a junk LIST chunk BEFORE fmt, so a decoder that assumes
-    fixed offsets (instead of walking RIFF chunks) fails the gate."""
-    import struct
-
+def _wav_write(doc_id: int, samples: list[int]) -> bytes:
+    """A valid 16-bit mono PCM WAV at ``8000 + (doc_id % 4)·4000`` Hz.
+    Every third document carries a junk LIST chunk BEFORE fmt, so a
+    decoder that assumes fixed offsets (instead of walking RIFF chunks)
+    fails the gate."""
     rate = 8000 + (doc_id % 4) * 4000
-    n = 50 + len(text) % 100
-    samples = [((doc_id * 31 + i * 17) % 65536) - 32768 for i in range(n)]
-    data = struct.pack(f"<{n}h", *samples)
+    data = struct.pack(f"<{len(samples)}h", *samples)
     fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
     chunks = b""
     if doc_id % 3 == 0:
@@ -838,13 +778,10 @@ def encode_wav(doc_id: int, text: str) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
-    """Parse a WAV from raw bytes by WALKING the RIFF chunk list (fmt may
-    not be first — word-aligned skips over unknown chunks), returning
-    ``(sample_rate, channels, bits, n_samples, duration_ms, checksum)``
-    where the checksum sums the unsigned-offset PCM samples."""
-    import struct
-
+def _wav_chunks(payload: bytes) -> tuple[tuple, bytes]:
+    """``(fmt fields, data body)`` of a WAV, found by WALKING the RIFF
+    chunk list (fmt may not be first — word-aligned skips over unknown
+    chunks)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
     pos, fmt, data = 12, None, None
@@ -859,62 +796,30 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
         pos += 8 + clen + (clen % 2)  # RIFF chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
-    _, channels, rate, _, _, bits = fmt
+    return fmt, data
+
+
+def encode_wav(doc_id: int, text: str) -> bytes:
+    """A VALID 16-bit mono PCM WAV with deterministic rate/length/samples —
+    every decoded property is recomputable by an SQL oracle."""
+    n = 50 + len(text) % 100
+    return _wav_write(
+        doc_id, [((doc_id * 31 + i * 17) % 65536) - 32768 for i in range(n)]
+    )
+
+
+def decode_wav(payload: bytes) -> tuple[int, int, int, int, int, int]:
+    """Parse a WAV from raw bytes by walking the RIFF chunk list, returning
+    ``(sample_rate, channels, bits, n_samples, duration_ms, checksum)``
+    where the checksum sums the unsigned-offset PCM samples — the oracle
+    recomputes each from the encoder spec, so a broken chunk walk or
+    sample unpack hash-fails."""
+    (_, channels, rate, _, _, bits), data = _wav_chunks(payload)
     n = len(data) // (bits // 8) // channels
     samples = struct.unpack(f"<{n * channels}h", data[: n * channels * 2])
     checksum = sum(s + 32768 for s in samples) % BMP_CHECKSUM_MOD
     duration_ms = n * 1000 // rate
     return rate, channels, bits, n, duration_ms, checksum
-
-
-def attach_wav_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(id, payload)`` with a real WAV per document — Arrow-batched encode."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_wav(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
-
-
-def extract_wav_features(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Real-decode audio features: every value parsed out of the RIFF bytes
-    by :func:`decode_wav` — the oracle recomputes them from the encoder
-    spec, so a broken chunk walk or sample unpack hash-fails."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *decode_wav(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "bits",
-                    "n_samples", "duration_ms", "sample_checksum",
-                ],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, sample_rate INT, channels INT, bits INT, "
-        "n_samples LONG, duration_ms LONG, sample_checksum LONG",
-    )
 
 
 def wav_decode_oracle_sql(source: str = "documents") -> str:
@@ -971,48 +876,34 @@ def encode_wav_voiced(doc_id: int, text: str) -> bytes:
     ``(amp_f+1)·(s+1)·13 + 5·f − 32768`` — amplitudes small enough that
     the 16-bit lattice never wraps, so frame energy is the closed form
     ``130·(amp_f+1) + 20·f``.  Same RIFF layout as :func:`encode_wav`,
-    including the junk LIST chunk before fmt on every third document
-    (a decoder that assumes fixed offsets fails the gate)."""
-    import struct
-
-    rate = 8000 + (doc_id % 4) * 4000
+    including the junk LIST chunk before fmt on every third document."""
     words = text.split()
-    samples = []
-    for f in range(AUDIO_FP_FRAMES):
-        amp = _word_amp(words, f)
-        for s in range(AUDIO_FP_SPF):
-            samples.append((amp + 1) * (s + 1) * 13 + 5 * f - 32768)
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    chunks = b""
-    if doc_id % 3 == 0:
-        junk = b"notacodecpayload"
-        chunks += b"LIST" + struct.pack("<I", len(junk)) + junk
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    amps = [_word_amp(words, f) for f in range(AUDIO_FP_FRAMES)]
+    return _wav_write(doc_id, [
+        (amp + 1) * (s + 1) * 13 + 5 * f - 32768
+        for f, amp in enumerate(amps)
+        for s in range(AUDIO_FP_SPF)
+    ])
 
 
-def attach_voiced_wav_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(doc_id, payload)`` with a voiced WAV per document."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_wav_voiced(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
+def _audio_fp(payload: bytes) -> tuple[int, int]:
+    """``(hash_hi, hash_lo)`` — see :func:`audio_fingerprint`."""
+    _, data = _wav_chunks(payload)
+    n = len(data) // 2
+    if n != AUDIO_FP_FRAMES * AUDIO_FP_SPF:
+        raise ValueError(f"fingerprint expects "
+                         f"{AUDIO_FP_FRAMES * AUDIO_FP_SPF} samples, "
+                         f"got {n}")
+    u = [s + 32768 for s in struct.unpack(f"<{n}h", data)]
+    energies = [
+        sum(u[f * AUDIO_FP_SPF : (f + 1) * AUDIO_FP_SPF])
+        for f in range(AUDIO_FP_FRAMES)
+    ]
+    bits = 0
+    for k in range(AUDIO_FP_FRAMES - 1):
+        if energies[k + 1] > energies[k]:
+            bits |= 1 << k
+    return bits >> 32, bits & 0xFFFFFFFF
 
 
 def audio_fingerprint(
@@ -1028,53 +919,8 @@ def audio_fingerprint(
     is shared with the image family.  The kernel never sees the encoder
     formula — it walks bytes; :func:`audio_fp_oracle_sql` recomputes
     the fingerprint from the spec in closed form."""
-    import struct
-
-    def _one(payload: bytes) -> tuple[int, int]:
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError("not a WAV payload")
-        pos, fmt, data = 12, None, None
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            clen = struct.unpack_from("<I", payload, pos + 4)[0]
-            body = payload[pos + 8 : pos + 8 + clen]
-            if cid == b"fmt ":
-                fmt = struct.unpack_from("<HHIIHH", body, 0)
-            elif cid == b"data":
-                data = body
-            pos += 8 + clen + (clen % 2)
-        if fmt is None or data is None:
-            raise ValueError("missing fmt/data chunk")
-        n = len(data) // 2
-        if n != AUDIO_FP_FRAMES * AUDIO_FP_SPF:
-            raise ValueError(f"fingerprint expects "
-                             f"{AUDIO_FP_FRAMES * AUDIO_FP_SPF} samples, "
-                             f"got {n}")
-        u = [s + 32768 for s in struct.unpack(f"<{n}h", data)]
-        energies = [
-            sum(u[f * AUDIO_FP_SPF : (f + 1) * AUDIO_FP_SPF])
-            for f in range(AUDIO_FP_FRAMES)
-        ]
-        hi = lo = 0
-        for k in range(AUDIO_FP_FRAMES - 1):
-            if energies[k + 1] > energies[k]:
-                if k < 32:
-                    lo |= 1 << k
-                else:
-                    hi |= 1 << (k - 32)
-        return hi, lo
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *_one(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "hash_hi", "hash_lo"])
-
-    return media.mapInPandas(
-        kernel, schema="doc_id LONG, hash_hi LONG, hash_lo LONG"
-    )
+    c = CODECS["audio_fp"]
+    return decode_features(media, c.rows_of, c.schema, id_col, payload_col)
 
 
 def audio_fp_oracle_sql(source: str = "documents") -> str:
@@ -1129,61 +975,17 @@ def audio_fp_oracle_sql(source: str = "documents") -> str:
     """
 
 
-def audio_fingerprint_pairs(
-    spark,
-    docs: DataFrame,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """End-to-end audio near-dup dedup: voiced-WAV payloads → REAL
-    RIFF-walking fingerprint kernel → group-expansion pair join
-    (:func:`phash_pairs_expanded_sql`; the gate oracle stays the
-    independent simple banded form over the closed-form fingerprint
-    recomputation, so kernel, encoder AND pair logic are all
-    cross-checked).  Same materialize posture as the image twin: the
-    hash relation's lineage crosses two Python kernel stages and feeds
-    both join sides through CTE definitions."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
-
-    hashes = audio_fingerprint(attach_voiced_wav_payload(docs)).select(
-        "doc_id", "hash_hi", "hash_lo"
-    )
-    return spark.sql(
-        phash_pairs_expanded_sql(
-            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
-        ),
-        hashes=materialize_view(spark, hashes, "__audio_fp"),
-    )
-
-
 def audio_fp_pairs_oracle_sql(max_hamming: int = 2) -> str:
-    """DuckDB twin of :func:`audio_fingerprint_pairs`: fingerprints from
-    the encoder spec, then the simple banded pair form."""
+    """DuckDB twin of the audio pair dedup (:func:`hamming_dedup` over
+    ``"audio_fp"`` with :func:`phash_pairs_expanded_sql`): fingerprints
+    from the encoder spec, then the independent simple banded pair form,
+    so kernel, encoder AND pair logic are all cross-checked."""
     return phash_pairs_sql("duckdb", audio_fp_oracle_sql(), max_hamming)
 
 
-def audio_fingerprint_clusters(
-    spark,
-    docs: DataFrame,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """Cluster form (the 100-TB shape, like :func:`image_phash_clusters`):
-    identical fingerprints collapse in one linear groupBy, banding runs
-    over DISTINCT fingerprints only."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import materialize_view
-
-    hashes = audio_fingerprint(attach_voiced_wav_payload(docs)).select(
-        "doc_id", "hash_hi", "hash_lo"
-    )
-    return spark.sql(
-        phash_clusters_sql(
-            "spark", "SELECT doc_id, hash_hi, hash_lo FROM {hashes}", max_hamming
-        ),
-        hashes=materialize_view(spark, hashes, "__audio_fp_cl"),
-    )
-
-
 def audio_fp_clusters_oracle_sql(max_hamming: int = 2) -> str:
-    """DuckDB twin of :func:`audio_fingerprint_clusters`."""
+    """DuckDB twin of the audio cluster dedup (:func:`hamming_dedup` over
+    ``"audio_fp"`` with :func:`phash_clusters_sql`)."""
     return phash_clusters_sql("duckdb", audio_fp_oracle_sql(), max_hamming)
 
 
@@ -1212,9 +1014,6 @@ def frame_sample(
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + ctype
@@ -1231,11 +1030,7 @@ def encode_png(doc_id: int, text: str) -> bytes:
     skipping filter reversal fails), every third doc carries a tEXt chunk
     before IDAT (fixed-offset readers fail), and every fourth doc splits the
     deflate stream across TWO IDAT chunks (per-chunk inflaters fail)."""
-    import struct
-    import zlib
-
-    w = 4 + len(text) % 8
-    h = 2 + doc_id % 5
+    w, h = _image_dims(doc_id, text)
     raw = [
         bytes((doc_id * 7 + y * 13 + x * 3) % 256 for x in range(w))
         for y in range(h)
@@ -1273,9 +1068,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int, int, int]:
     color_type, n_chunks, pixel_checksum)`` where the checksum positionally
     weights every RECONSTRUCTED pixel — a decode that skips filter reversal,
     transposes, or drops a scanline hash-fails."""
-    import struct
-    import zlib
-
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     pos, n_chunks, idat, ihdr = 8, 0, b"", None
@@ -1320,57 +1112,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int, int, int]:
             checksum += recon[x] * (1 + (y * w + x) % 97)
         prior = bytes(recon)
     return w, h, depth, ctype_id, n_chunks, checksum % BMP_CHECKSUM_MOD
-
-
-def attach_png_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(id, payload)`` with a real PNG per document — Arrow-batched encode."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_png(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
-
-
-def extract_png_features(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Real-decode PNG features: every value comes out of
-    :func:`decode_png`'s chunk walk + inflate + filter reversal — the oracle
-    recomputes them from the encoder spec, so a wrong filter pass, skipped
-    IDAT, or CRC shortcut hash-fails."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *decode_png(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "bit_depth", "color_type",
-                    "n_chunks", "pixel_checksum",
-                ],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, width INT, height INT, bit_depth INT, "
-        "color_type INT, n_chunks INT, pixel_checksum LONG",
-    )
 
 
 def png_decode_oracle_sql(source: str = "documents") -> str:
@@ -1474,8 +1215,6 @@ def encode_jpeg(doc_id: int, text: str) -> bytes:
     into ONE DHT segment (multi-table DHT — fixed-per-segment readers
     fail); dimensions are not MCU-aligned, so the decoder must pad to the
     8×8 grid and crop back; the entropy stream is byte-stuffed."""
-    import struct
-
     w, h = _jpeg_dims(doc_id, text)
     bpr, bpc = (w + 7) // 8, (h + 7) // 8
     qtab = [16] + [17 + (i * 7) % 99 for i in range(1, 64)]  # q[0]=16: dc·16/8 exact
@@ -1577,8 +1316,6 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, int, int, int]:
     positionally weights every RECONSTRUCTED pixel, so a wrong Huffman
     table, skipped dequantize, transposed IDCT, or missing crop hash-fails.
     """
-    import struct
-
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -1676,55 +1413,6 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, int, int, int]:
     return w, h, precision, n_segments, n_blocks, checksum
 
 
-def attach_jpeg_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(id, payload)`` with a real baseline JPEG per document."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_jpeg(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
-
-
-def extract_jpeg_features(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Real-decode JPEG features: every value comes out of
-    :func:`decode_jpeg`'s entropy decode + IDCT."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(i), *decode_jpeg(bytes(b)))
-                for i, b in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "precision", "n_segments",
-                    "n_blocks", "pixel_checksum",
-                ],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, width INT, height INT, precision INT, "
-        "n_segments INT, n_blocks INT, pixel_checksum LONG",
-    )
-
-
 def jpeg_decode_oracle_sql(source: str = "documents") -> str:
     """DuckDB recomputation of every decoded JPEG property from the encoder
     spec: pixels are the integer 128 + 2·DC of the MCU block covering each
@@ -1767,36 +1455,17 @@ def jpeg_decode_oracle_sql(source: str = "documents") -> str:
 VIDEO_MAGIC = b"VID0"
 
 
-def _bmp_frame_bytes(w: int, h: int, fill: int) -> bytes:
-    """A valid 24-bit BMP with a constant ``fill`` — :func:`encode_bmp`'s
-    layout factored over explicit (w, h, fill) so container frames can
-    vary per index while decoding through the same real parser."""
-    import struct
-
-    row = 3 * w
-    pad = (4 - row % 4) % 4
-    data = (bytes([fill % 256]) * row + b"\x00" * pad) * h
-    size = 54 + len(data)
-    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    return header + data
-
-
 def encode_video(doc_id: int, text: str) -> bytes:
     """A valid container: ``VID0 | n_frames u32 | w u16 | h u16`` then
     ``n_frames`` length-prefixed BMP frames.  Dimensions reuse the BMP
     derivation (width 4–11 from text, height 2–6 from id); frame count is
     2–5 from id; frame ``f``'s fill is ``(doc_id + 7·f) % 256`` so every
     frame's checksum is distinct and index-sensitive."""
-    import struct
-
-    w = 4 + len(text) % 8
-    h = 2 + doc_id % 5
+    w, h = _image_dims(doc_id, text)
     n_frames = 2 + doc_id % 4
     parts = [VIDEO_MAGIC + struct.pack("<IHH", n_frames, w, h)]
     for f in range(n_frames):
-        frame = _bmp_frame_bytes(w, h, doc_id + 7 * f)
+        frame = _bmp_solid(w, h, doc_id + 7 * f)
         parts.append(struct.pack("<I", len(frame)) + frame)
     return b"".join(parts)
 
@@ -1808,9 +1477,9 @@ def decode_video_frame_samples(
     REAL :func:`decode_bmp` parser, and SKIP the rest via their length
     prefixes (no parse — the seek is the point).  Returns
     ``[(frame_idx, width, height, pixel_checksum)]``; malformed magic,
-    a truncated frame, or trailing bytes raise."""
-    import struct
-
+    a truncated frame, or trailing bytes raise.  The oracle recomputes
+    the sampled rows in closed form, so an off-by-one in the seek
+    arithmetic, the frame indexing, or the per-frame fill hash-fails."""
     if payload[:4] != VIDEO_MAGIC:
         raise ValueError("not a VID0 payload")
     n_frames, w, h = struct.unpack_from("<IHH", payload, 4)
@@ -1832,62 +1501,6 @@ def decode_video_frame_samples(
     if off != len(payload):
         raise ValueError("trailing bytes after last frame")
     return out
-
-
-def attach_video_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``(id, payload)`` with a real video container per document."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        encode_video(int(i), t)
-                        for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, schema="doc_id LONG, payload BINARY"
-    )
-
-
-def video_frame_sample_features(
-    media: DataFrame,
-    every_nth: int = 2,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """One row per SAMPLED frame, every value from the real byte walk —
-    the gate oracle recomputes the expectation from the encoder spec in
-    closed form, so an off-by-one in the seek arithmetic, the frame
-    indexing, or the per-frame fill derivation hash-fails."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                for idx, fw, fh, psum in decode_video_frame_samples(
-                    bytes(b), every_nth
-                ):
-                    rows.append((int(i), idx, fw, fh, psum))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "pixel_checksum",
-                ],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        schema="doc_id LONG, frame_idx INT, width INT, height INT, "
-        "pixel_checksum LONG",
-    )
 
 
 def video_frame_sample_oracle_sql(
@@ -1912,3 +1525,96 @@ def video_frame_sample_oracle_sql(
          UNNEST(list_transform(
            generate_series(0, n_frames - 1, {every_nth}), i -> i)) AS u(idx)
     """
+
+
+# ---------------------------------------------------------------------------
+# The codec table: one row per format.  Each oracle recomputes the decoded
+# rows from the encoder spec without touching bytes; the comment on a row
+# names the hazard its encoder plants for that oracle to catch.
+# ---------------------------------------------------------------------------
+
+
+class Codec(NamedTuple):
+    """``encode(doc_id, text)`` builds a document's payload (``None``: the
+    UTF-8 text itself, via :func:`attach_binary_payload`);
+    ``rows_of(payload)`` returns its output rows, labelled by ``schema``;
+    ``oracle`` is the DuckDB SQL recomputing those rows (on the
+    ``documents`` table) from the encoder spec."""
+
+    encode: Callable[[int, str], bytes] | None
+    rows_of: Callable[[bytes], list[tuple]]
+    schema: StructType
+    oracle: str
+
+
+CODECS: dict[str, Codec] = {
+    # fake dims derived from the payload bytes (no codec in the container)
+    "features": Codec(
+        None, partial(_one_row, _fake_features),
+        _rows_schema(n_bytes=_L, width=_I, height=_I, n_frames=_I),
+        features_oracle_sql(),
+    ),
+    # header offsets + padded-stride pixel walk
+    "bmp": Codec(
+        encode_bmp, partial(_one_row, decode_bmp),
+        _rows_schema(width=_I, height=_I, bpp=_I, n_bytes=_L,
+                     pixel_checksum=_L),
+        bmp_decode_oracle_sql(),
+    ),
+    # resample index math that strays into row padding, output header size
+    "bmp_resize": Codec(
+        encode_bmp, partial(_one_row, _bmp_resize, scale_den=2),
+        _rows_schema(width=_I, height=_I, n_bytes=_L, pixel_checksum=_L,
+                     src_pixels=_L),
+        bmp_resize_oracle_sql(),
+    ),
+    # textured pixels: stride, header offset and the 9-column index map
+    "dhash": Codec(
+        encode_bmp_textured, partial(_one_row, _dhash),
+        _rows_schema(hash_hi=_L, hash_lo=_L, width=_I, height=_I),
+        dhash_oracle_sql("duckdb"),
+    ),
+    # junk LIST chunk before fmt on every third doc: fixed-offset readers
+    "wav": Codec(
+        encode_wav, partial(_one_row, decode_wav),
+        _rows_schema(sample_rate=_I, channels=_I, bits=_I, n_samples=_L,
+                     duration_ms=_L, sample_checksum=_L),
+        wav_decode_oracle_sql(),
+    ),
+    # word-driven samples: frame slicing, signed/unsigned energy sums
+    "audio_fp": Codec(
+        encode_wav_voiced, partial(_one_row, _audio_fp),
+        _rows_schema(hash_hi=_L, hash_lo=_L),
+        audio_fp_oracle_sql(),
+    ),
+    # cycling scanline filters, tEXt before IDAT, IDAT split in two
+    "png": Codec(
+        encode_png, partial(_one_row, decode_png),
+        _rows_schema(width=_I, height=_I, bit_depth=_I, color_type=_I,
+                     n_chunks=_I, pixel_checksum=_L),
+        png_decode_oracle_sql(),
+    ),
+    # COM segment, two-table DHT, MCU pad + crop, byte-stuffed entropy
+    "jpeg": Codec(
+        encode_jpeg, partial(_one_row, decode_jpeg),
+        _rows_schema(width=_I, height=_I, precision=_I, n_segments=_I,
+                     n_blocks=_I, pixel_checksum=_L),
+        jpeg_decode_oracle_sql(),
+    ),
+    # per-frame fills: seek arithmetic and frame indexing (one row per
+    # sampled frame)
+    "video": Codec(
+        encode_video, partial(decode_video_frame_samples, every_nth=2),
+        _rows_schema(frame_idx=_I, width=_I, height=_I, pixel_checksum=_L),
+        video_frame_sample_oracle_sql(every_nth=2),
+    ),
+}
+
+
+def media_features(docs: DataFrame, fmt: str) -> DataFrame:
+    """``docs (doc_id, text)`` → ``fmt``'s decoded rows: the encode kernel,
+    then the decode kernel, both driven by the :data:`CODECS` row."""
+    c = CODECS[fmt]
+    media = (attach_binary_payload(docs) if c.encode is None
+             else attach_payload(docs, c.encode))
+    return decode_features(media, c.rows_of, c.schema)

@@ -156,12 +156,17 @@ def update_globalviews_incremental(
 
     Use from a streaming foreachBatch:
         lambda batch, _: update_globalviews_incremental(spark, path, batch)
+    The fold's SQL runs on ``new_events.sparkSession``: a foreachBatch batch
+    belongs to the stream's cloned session, where the outer session cannot
+    resolve it.
     """
     from qradar_restapi_kafka_datapipeline_spark.operators.rollup import merge_rollup
 
     for name in GLOBALVIEW_SPECS if names is None else names:
         _migrate_view_schema(spark, base_path, name, rebuild_source)
-        inc = spark.sql(globalview_sql(name, "{inc}"), inc=new_events)
+        inc = new_events.sparkSession.sql(
+            globalview_sql(name, "{inc}"), inc=new_events
+        )
         merge_rollup(
             spark,
             inc,

@@ -107,3 +107,41 @@ def test_incremental_update_migrates_pre_minmax_schema(spark, sf_dir, tmp_path):
         for r in spark.sql(globalview_sql(name, "qevents")).collect()
     }
     assert got == want
+
+
+def test_incremental_update_runs_inside_foreach_batch(spark, sf_dir, tmp_path):
+    """The docstring's usage: a foreachBatch batch belongs to the stream's
+    cloned session, so the fold's SQL must run on that session — the outer
+    ``spark.sql`` cannot resolve the batch relation."""
+    register_qevents(spark, sf_dir)
+    register_globalviews(spark)
+    base = str(tmp_path / "views")
+    materialize_globalviews(spark, base, names=["MongoDB_UBA"])
+    before = (
+        spark.read.parquet(f"{base}/MongoDB_UBA")
+        .agg(F.sum("SUM_eventCount")).first()[0]
+    )
+    src = str(tmp_path / "landing")
+    spark.sql(
+        "SELECT * FROM qevents WHERE eventName = 'view' LIMIT 10"
+    ).write.parquet(src)
+    landed = spark.read.parquet(src)
+    batch_sum = landed.agg(F.sum("eventCount")).first()[0]
+    q = (
+        spark.readStream.schema(landed.schema).parquet(src)
+        .writeStream.foreachBatch(
+            lambda batch, _: update_globalviews_incremental(
+                spark, base, batch, names=["MongoDB_UBA"]
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    after = (
+        spark.read.parquet(f"{base}/MongoDB_UBA")
+        .agg(F.sum("SUM_eventCount")).first()[0]
+    )
+    assert batch_sum > 0
+    assert after == before + batch_sum

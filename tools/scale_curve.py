@@ -461,7 +461,7 @@ def _bpe(spark):
 def _jpeg(spark):
     from qradar_restapi_kafka_datapipeline_spark.operators import multimodal as M
 
-    return M.extract_jpeg_features(M.attach_jpeg_payload(spark.table("documents")))
+    return M.media_features(spark.table("documents"), "jpeg")
 
 
 if __name__ == "__main__":
