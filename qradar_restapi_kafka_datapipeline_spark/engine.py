@@ -17,6 +17,7 @@ import weakref
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 _SCRATCH_ROOT: str | None = None
 
@@ -54,8 +55,9 @@ def read_artifact(spark, path: str, base_path: str | None = None):
     """Open a maintained-index parquet artifact, memoizing its schema per
     (session, path) under ``("artifact_schema", path)``: every
     ``spark.read.parquet`` of an index artifact pays a 1-task footer job
-    for schema inference, so the first open infers and later opens supply
-    the schema explicitly.  Only METADATA is memoized (artifact schemas are
+    for schema inference, so the first open infers (unless
+    :func:`write_artifact` seeded the entry) and later opens supply the
+    schema explicitly.  Only METADATA is memoized (artifact schemas are
     fixed shapes); the data is re-read on every execution, and
     ``parts.swap_dir`` (the only place a live tree is replaced) drops the
     entries under the swapped path.  ``base_path`` preserves partition
@@ -73,10 +75,75 @@ def read_artifact(spark, path: str, base_path: str | None = None):
     return df
 
 
+def write_artifact(spark, df, path: str, partition_by: str | None = None):
+    """Write ``df`` as the parquet tree at ``path`` (overwrite) and seed
+    :func:`read_artifact`'s schema memo with the schema a read would infer,
+    so the first open after an in-session build runs no footer job.
+    Inference returns every field nullable and the partition column last;
+    the partition column keeps its written type, which is what inference
+    returns for an INT column (the only partitioned caller)."""
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    fields = [f for f in df.schema if f.name != partition_by]
+    if partition_by is not None:
+        fields.append(df.schema[partition_by])
+    session_state(spark)[("artifact_schema", path)] = _as_nullable(
+        StructType(fields)
+    )
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, array element and map value nullable: the
+    schema a parquet read infers for data Spark wrote as ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def local_relation(spark, rows, schema):
+    """Rows the driver already holds as a JVM-side local relation with
+    ``schema`` (a ``StructType`` or DDL string).  ``rows`` is a sequence of
+    tuples, or a ``pyarrow.Table`` — ``rel.toArrow()`` pins a collected
+    relation as ``local_relation(spark, rel.toArrow(), rel.schema)``.
+
+    The rows cross to the JVM as Arrow batches and the plan's leaf is a
+    ``LocalRelation``.  ``createDataFrame(<list>)`` instead builds a
+    parallelized Python RDD: every plan reading it starts Python workers
+    and runs a job just to unpickle rows the driver built."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(schema)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(rows, schema)
+
+
 def persist_tracked(df, key: str):
     """Persist ``df``, releasing the relation the SAME operator persisted
     previously.  Callers that still hold a prior invocation's DataFrame lose
-    only its cache (it recomputes), never its correctness.
+    only its cache (it recomputes), never its correctness.  A previous
+    relation with the same plan is kept: Spark's CacheManager matches
+    cached data by plan, so ``df`` reuses that entry, and an operator
+    re-run on an unchanged input does not recompute it (Spark writes to
+    the input refresh the entry).
 
     CAVEAT (measured, round 4): Spark's CacheManager does NOT substitute a
     cached plan that is referenced through a ``WITH`` CTE — a single
@@ -84,9 +151,15 @@ def persist_tracked(df, key: str):
     lineage per reference (0 InMemoryRelation in the optimized plan).  Use
     this only for DataFrame-API consumers (joins built on the returned
     relation object); SQL-CTE consumers must use :func:`materialize_view`.
+    On pyspark 4.1.2 the swap also fails outright in one shape: persisting
+    ``hashed_semantic_pairs``' postings/top-m relations and passing them as
+    ``spark.sql`` arguments into its CTE statement raised
+    ``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND``.
     """
     prev = _PERSISTED.pop(key, None)
-    if prev is not None:
+    if prev is not None and not prev._jdf.queryExecution().normalized().sameResult(
+        df._jdf.queryExecution().normalized()
+    ):
         prev.unpersist()
     df = df.persist()
     _PERSISTED[key] = df
@@ -182,7 +255,8 @@ def materialize_view(spark, df, key: str):
     gens.append(path)
     while len(gens) > _MAT_RETAIN:
         shutil.rmtree(gens.pop(0), ignore_errors=True)
-    return spark.read.parquet(path)
+    # the written schema, as inference would return it: no footer job
+    return spark.read.schema(_as_nullable(df.schema)).parquet(path)
 
 
 def scratch_dir(prefix: str) -> str:

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.functions.ip import cidr_bounds, ip_to_long
 
 
@@ -115,8 +116,10 @@ def default_networks_df(spark: SparkSession) -> DataFrame:
     rows = [
         (d, c.split("/")[0], int(c.split("/")[1]), n) for d, c, n in DEFAULT_NETWORKS
     ]
-    return spark.createDataFrame(
-        rows, "domainId BIGINT, cidr STRING, prefix_len INT, network_name STRING"
+    return local_relation(
+        spark,
+        rows,
+        "domainId BIGINT, cidr STRING, prefix_len INT, network_name STRING",
     )
 
 

@@ -105,8 +105,7 @@ def boilerplate_coverage(
 
     The source is spread first (CLAUDE.md explode rule: single-file inputs
     scan as one partition).  Cache contract as in ``dedup.minhash_lsh_pairs``:
-    the returned plan reads ``g`` lazily — callers that materialize and move
-    on release it via ``spark.catalog.clearCache()``.
+    the returned plan reads ``g`` lazily; the next call releases it.
     """
     from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread

@@ -41,6 +41,7 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.operators.text import token_positions_sql
 
 
@@ -115,7 +116,7 @@ def train_bpe(
 
 def write_bpe_vocab(spark, tokens: list[str], path: str) -> None:
     """Persist the learned vocabulary as the oracle-readable artifact."""
-    df = spark.createDataFrame([(t,) for t in tokens], "token STRING")
+    df = local_relation(spark, [(t,) for t in tokens], "token STRING")
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -130,8 +131,8 @@ def _word_steps(spark, tokens: list[str], words: DataFrame) -> DataFrame:
     )
     if not lens:  # no merges learned: every char is its own token
         return pos.withColumn("step", F.lit(1))
-    vocab = spark.createDataFrame(
-        [(t, len(t)) for t in tokens], "vtok STRING, vl INT"
+    vocab = local_relation(
+        spark, [(t, len(t)) for t in tokens], "vtok STRING, vl INT"
     )
     cand = pos.withColumn(
         "l", F.explode(F.array(*[F.lit(int(x)) for x in lens]))

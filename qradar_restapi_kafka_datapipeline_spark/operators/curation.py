@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.operators.text import (
     bpe_token_estimate_sql,
     lang_id_sql,
@@ -584,7 +585,7 @@ def write_quality_classifier(
     rows = [(-1, float(bias))] + [
         (i, float(v)) for i, v in enumerate(weights) if v != 0.0
     ]
-    spark.createDataFrame(rows, "bucket BIGINT, w DOUBLE").coalesce(
+    local_relation(spark, rows, "bucket BIGINT, w DOUBLE").coalesce(
         1
     ).write.mode("overwrite").parquet(path)
 

@@ -24,7 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qradar_restapi_kafka_datapipeline_spark.engine import input_size_bytes
+from qradar_restapi_kafka_datapipeline_spark.engine import (
+    input_size_bytes,
+    local_relation,
+    persist_tracked,
+)
 from qradar_restapi_kafka_datapipeline_spark.operators.text import normalized_md5
 
 
@@ -310,7 +314,8 @@ def minhash_lsh_pairs(
 
     The shingle relation feeds signatures AND the verify join — persist it so
     the explode+distinct runs once, not three times (AQE then broadcasts the
-    tiny candidate set into the verify joins).
+    tiny candidate set into the verify joins).  The returned plan reads it
+    lazily; the next call releases it (:func:`engine.persist_tracked`).
 
     Recall note: with b bands of r rows, a pair of true Jaccard s is a
     candidate with probability 1-(1-s^r)^b — the s-curve midpoint for the
@@ -323,7 +328,9 @@ def minhash_lsh_pairs(
     pipeline — banding included — recomputable in DuckDB
     (:func:`minhash_lsh_duckdb_sql`); xxhash64 is the production mode.
     """
-    sh = _word_shingles(df, id_col, text_col, shingle_k).persist()
+    sh = persist_tracked(
+        _word_shingles(df, id_col, text_col, shingle_k), "__minhash_shingles"
+    )
     sigs = _minhash_sigs_from_shingles(sh, id_col, num_hashes, portable_hash)
     cands = minhash_lsh_candidates(
         sigs, id_col, num_hashes, bands, portable_hash=portable_hash
@@ -490,7 +497,7 @@ def _dup_clusters_driver(spark, rows, id_type) -> DataFrame:
             StructField("cluster_id", id_type, True),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return local_relation(spark, out_rows, schema)
 
 
 def dup_clusters(
@@ -1180,12 +1187,15 @@ def incremental_minhash_pairs(
     cross-restricted full pipeline is unit-tested (tests/test_northstar.py).
 
     Cache contract (same as :func:`minhash_lsh_pairs`): the shingle
-    relations stay persisted because the RETURNED plan reads them lazily —
-    callers that materialize the result and move on should release them
-    (``spark.catalog.clearCache()`` between unrelated jobs).
+    relations stay persisted because the RETURNED plan reads them lazily;
+    the next call releases them.
     """
-    sh_new = _word_shingles(new_df, id_col, text_col, shingle_k).persist()
-    sh_old = _word_shingles(corpus_df, id_col, text_col, shingle_k).persist()
+    sh_new = persist_tracked(
+        _word_shingles(new_df, id_col, text_col, shingle_k), "__minhash_incr_new"
+    )
+    sh_old = persist_tracked(
+        _word_shingles(corpus_df, id_col, text_col, shingle_k), "__minhash_incr_old"
+    )
     sigs_new = _minhash_sigs_from_shingles(sh_new, id_col, num_hashes, portable_hash)
     sigs_old = _minhash_sigs_from_shingles(sh_old, id_col, num_hashes, portable_hash)
     ba = _banded_signatures(sigs_new, id_col, num_hashes, bands, portable_hash)
@@ -1448,10 +1458,11 @@ def passage_dedup(
     executor memory is safe at any scale; the corpus-wide shuffles are the
     passage-hash count and the per-doc aggregates, all on narrow rows.
     """
-    chunks = (
-        passage_chunks(spark.table(table), k=k)
-        .withColumn("ph", F.expr(_passage_hash("spark")))
-        .persist()
+    chunks = persist_tracked(
+        passage_chunks(spark.table(table), k=k).withColumn(
+            "ph", F.expr(_passage_hash("spark"))
+        ),
+        "__passage_chunks",
     )
     dup_keys = (
         chunks.groupBy("ph")

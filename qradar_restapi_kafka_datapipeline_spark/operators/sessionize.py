@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
+
 
 def sessionize(
     df: DataFrame,
@@ -855,7 +857,6 @@ def hysteresis_streaming(
                 "spark", hi_pct, lo_pct, rates_rel=merged
             )
         )
-        rows = episodes.collect()
-        return spark.createDataFrame(rows, episodes.schema)
+        return local_relation(spark, episodes.toArrow(), episodes.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.operators.dedup import cosine_expr
 from qradar_restapi_kafka_datapipeline_spark.parts import (
     INDEX_KINDS,
@@ -333,6 +334,17 @@ def knn_ivf_recall_report(
     )
 
 
+def _centroid_rel(spark, cents) -> DataFrame:
+    """The trained centroids as the ``(cid, cv)`` relation: the broadcast
+    side of :func:`_assign_cells_join` and the persisted ``centroids/``
+    artifact."""
+    return local_relation(
+        spark,
+        [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
+        "cid INT, cv ARRAY<DOUBLE>",
+    )
+
+
 def _assign_cells_join(
     emb: DataFrame,
     cents: list[list[float]],
@@ -352,10 +364,7 @@ def _assign_cells_join(
     plan that survives thousands of cells.
     """
     spark = emb.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    )
+    cent_df = _centroid_rel(spark, cents)
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), F.col("cv"), lambda x, w: x.cast("double") * w),
         F.lit(0.0),
@@ -694,10 +703,9 @@ def build_ivf_index(
     """
     n_centroids, sample_n = _resolve_nlist(emb, n_centroids, sample_n)
     cents = _train_ivf_centroids(emb, n_centroids, id_col, vec_col, sample_n, iters)
-    spark.createDataFrame(
-        [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _centroid_rel(spark, cents).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
     _assign(emb, cents, 1, id_col, vec_col).write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(f"{path}/assignments")
@@ -780,7 +788,8 @@ def knn_ivf_from_index(
     q_rows = q.limit(_SERVE_COLLECT_CAP + 1).collect()
     if len(q_rows) <= _SERVE_COLLECT_CAP:
         probed = sorted({r["list_id"] for r in q_rows})
-        q = spark.createDataFrame(
+        q = local_relation(
+            spark,
             [(r["q_id"], r["qv"], r["list_id"]) for r in q_rows],
             _serve_q_schema(queries.schema, id_col, vec_col),
         )
@@ -1080,10 +1089,7 @@ def rebalance_ivf_index(
     )
 
     def write(tmp: str) -> None:
-        spark.createDataFrame(
-            [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
-            "cid INT, cv ARRAY<DOUBLE>",
-        ).coalesce(1).write.parquet(f"{tmp}/centroids")
+        _centroid_rel(spark, cents).coalesce(1).write.parquet(f"{tmp}/centroids")
         _assign(emb, cents, 1, id_col, vec_col).write.partitionBy(
             "list_id"
         ).parquet(f"{tmp}/assignments")
@@ -1190,7 +1196,7 @@ def write_pq_codebooks(spark, books: list[list[list[float]]], path: str) -> None
         for mi, book in enumerate(books)
         for j, cv in enumerate(book)
     ]
-    spark.createDataFrame(rows, "m INT, j INT, cv ARRAY<DOUBLE>").coalesce(
+    local_relation(spark, rows, "m INT, j INT, cv ARRAY<DOUBLE>").coalesce(
         1
     ).write.mode("overwrite").parquet(path)
 
@@ -1553,10 +1559,9 @@ def build_ivfpq_index(
     dim = len(emb.select("embedding").first()[0])
     cents = _train_ivf_centroids(emb, n_centroids, "vec_id", "embedding",
                                  sample_n, iters)
-    spark.createDataFrame(
-        [(cid, [float(x) for x in cv]) for cid, cv in enumerate(cents)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _centroid_rel(spark, cents).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
     books = train_pq_codebooks(emb, m=m, ksub=ksub, sample_n=sample_n,
                                iters=iters)
     write_pq_codebooks(spark, books, f"{path}/codebooks")
@@ -1619,7 +1624,7 @@ def knn_ivfpq_from_index(
     # one less execution of the assignment subplan per serve.
     probe_rows = probes.collect()
     probed = sorted({r["list_id"] for r in probe_rows})
-    probes = spark.createDataFrame(probe_rows, probes.schema)
+    probes = local_relation(spark, probe_rows, probes.schema)
     # base ∪ streamed codes (ivfpq_append_streaming) in the probed lists,
     # tombstones (delete_from_ivf_index) masked on the code scan, so
     # deleted vectors can neither rank nor enter a refine shortlist
@@ -1969,8 +1974,8 @@ def _mmr_greedy(
     if not pool_rows:
         # empty pool (tiny corpus / sparse probes): degrade to 0 picks, the
         # union-chain variant's behavior — never crash the greedy
-        return pool.sparkSession.createDataFrame(
-            [], "rk INT, n_id BIGINT, cos DOUBLE"
+        return local_relation(
+            pool.sparkSession, [], "rk INT, n_id BIGINT, cos DOUBLE"
         )
     ids = [int(i) for i, _ in pool_rows]
     pv = emb.where(F.col(id_col).isin(ids)).select(
@@ -2008,8 +2013,8 @@ def _mmr_greedy(
             break
         picked.append((step, best[1], cos[best[1]]))
         sel.append(best[1])
-    return pool.sparkSession.createDataFrame(
-        picked, "rk INT, n_id BIGINT, cos DOUBLE"
+    return local_relation(
+        pool.sparkSession, picked, "rk INT, n_id BIGINT, cos DOUBLE"
     )
 
 

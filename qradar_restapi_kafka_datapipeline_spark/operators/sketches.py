@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.parts import (
     heal_swap,
     list_names,
@@ -484,7 +485,7 @@ def kmv_jaccard(
       ) d
     ) r WHERE rk <= {k}
     """)
-    both = spark.createDataFrame(both.collect(), both.schema)
+    both = local_relation(spark, both.toArrow(), both.schema)
     est_u = kmv_estimate_sql("spark", "SELECT h FROM u", k)
     return spark.sql(f"""
     WITH u AS (
@@ -838,7 +839,7 @@ def hdr_grouped_quantiles(
         hdr_grouped_quantiles_sql(
             "spark", "SELECT g, hk, c FROM {cells}", qs_permille, m, scale
         ),
-        cells=spark.createDataFrame(cells.collect(), cells.schema),
+        cells=local_relation(spark, cells.toArrow(), cells.schema),
     )
 
 
@@ -960,7 +961,7 @@ def hdr_quantiles(
         hdr_quantiles_sql(
             "spark", "SELECT hk, c FROM {cells}", qs_permille, m, scale
         ),
-        cells=spark.createDataFrame(cells.collect(), cells.schema),
+        cells=local_relation(spark, cells.toArrow(), cells.schema),
     )
 
 
@@ -1266,7 +1267,7 @@ def hist_quantiles(
     cells = spark.sql(hist_cells_sql("spark", value_expr, source, lo, hi, bins))
     return spark.sql(
         hist_quantiles_sql("spark", "SELECT bin, c FROM {cells}", qs, lo, hi, bins),
-        cells=spark.createDataFrame(cells.collect(), cells.schema),
+        cells=local_relation(spark, cells.toArrow(), cells.schema),
     )
 
 
@@ -1479,7 +1480,7 @@ def hll_rolling_distinct(
     """
     return spark.sql(
         hll_grouped_estimate_sql("spark", win, "day_id", p),
-        regs=spark.createDataFrame(day_regs.collect(), day_regs.schema),
+        regs=local_relation(spark, day_regs.toArrow(), day_regs.schema),
     )
 
 
@@ -1708,7 +1709,7 @@ def kmv_daily_rows(
     re-scan the posture forbids.  The registry memoizes per (session, sf)
     in ``entry_queries``."""
     daily = spark.sql(kmv_daily_sketches_sql("spark", key_expr, source, k))
-    return spark.createDataFrame(daily.collect(), daily.schema)
+    return local_relation(spark, daily.toArrow(), daily.schema)
 
 
 def kmv_cohort(

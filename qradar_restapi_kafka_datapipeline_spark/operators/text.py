@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.parts import (
     anti_join,
     anti_join_sql,
@@ -507,8 +508,8 @@ def winnow_overlap(
     The source is spread first (single-file tables scan as one partition —
     the md5-heavy explode must run wave-parallel; no-op on already-split
     inputs).  Cache contract as in :func:`dedup.minhash_lsh_pairs`: the
-    returned plan reads the persisted relation lazily — callers that
-    materialize and move on release it via ``spark.catalog.clearCache()``.
+    returned plan reads the persisted relation lazily; the next call
+    releases it.
     """
     from qradar_restapi_kafka_datapipeline_spark.engine import persist_tracked
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
@@ -1243,30 +1244,46 @@ def build_text_index(
     query that hashed it anyway would add false dot-product contributions.
     (Real search engines ship index-time analyzers for the same reason.)
     """
+    from qradar_restapi_kafka_datapipeline_spark.engine import (
+        read_artifact,
+        write_artifact,
+    )
     from qradar_restapi_kafka_datapipeline_spark.operators.dedup import _spread
 
     src = _spread(spark.table(source), by="doc_id")
     posts = spark.sql(hashed_embedding_postings_sql("spark", dim, "{src}"), src=src)
-    posts.withColumn(
-        "bucket_group", F.pmod(F.col("bucket"), F.lit(n_groups)).cast("int")
-    ).write.mode("overwrite").partitionBy("bucket_group").parquet(
-        f"{path}/postings"
+    postings = f"{path}/postings"
+    write_artifact(
+        spark,
+        posts.withColumn(
+            "bucket_group", F.pmod(F.col("bucket"), F.lit(n_groups)).cast("int")
+        ),
+        postings,
+        partition_by="bucket_group",
     )
-    spark.read.parquet(f"{path}/postings").groupBy("doc_id").agg(
-        F.sum(F.col("w") * F.col("w")).cast("long").alias("n2")
-    ).write.mode("overwrite").parquet(f"{path}/norms")
+    write_artifact(
+        spark,
+        read_artifact(spark, postings, base_path=postings).groupBy("doc_id").agg(
+            F.sum(F.col("w") * F.col("w")).cast("long").alias("n2")
+        ),
+        f"{path}/norms",
+    )
     feats = bigram_feats_sql("spark", "{src}")
-    spark.sql(
-        f"""
-        WITH tf AS (SELECT doc_id, feat FROM ({feats}) f
-                    GROUP BY doc_id, feat),
-        ndocs AS ({ndocs_ge2_tokens_sql("spark", "{src}")})
-        SELECT DISTINCT feat FROM (
-          SELECT feat, COUNT(*) OVER (PARTITION BY feat) AS df FROM tf) x
-        WHERE df * 2 > (SELECT n FROM ndocs)
-        """,
-        src=src,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stoplist")
+    write_artifact(
+        spark,
+        spark.sql(
+            f"""
+            WITH tf AS (SELECT doc_id, feat FROM ({feats}) f
+                        GROUP BY doc_id, feat),
+            ndocs AS ({ndocs_ge2_tokens_sql("spark", "{src}")})
+            SELECT DISTINCT feat FROM (
+              SELECT feat, COUNT(*) OVER (PARTITION BY feat) AS df FROM tf) x
+            WHERE df * 2 > (SELECT n FROM ndocs)
+            """,
+            src=src,
+        ).coalesce(1),
+        f"{path}/stoplist",
+    )
 
 
 def _query_postings(text: str, stoplist: set, dim: int) -> dict[int, int]:
@@ -1319,12 +1336,12 @@ def text_knn_from_index(
     }
     qp = _query_postings(query_text, stoplist, dim)
     if not qp:
-        return spark.createDataFrame(
-            [], "q_id LONG, n_id LONG, cos DOUBLE, rk INT"
+        return local_relation(
+            spark, [], "q_id LONG, n_id LONG, cos DOUBLE, rk INT"
         )
     groups = sorted({b % n_groups for b in qp})
-    qdf = spark.createDataFrame(
-        [(b, w) for b, w in qp.items()], "bucket BIGINT, qw BIGINT"
+    qdf = local_relation(
+        spark, list(qp.items()), "bucket BIGINT, qw BIGINT"
     )
     n2q = sum(w * w for w in qp.values())
     cand = (
@@ -2259,7 +2276,7 @@ def chunk_knn(
     return spark.sql(
         _swap_qp(sql, "{qvec}"),
         cp=cp,
-        qvec=spark.createDataFrame(q.collect(), q.schema),
+        qvec=local_relation(spark, q.toArrow(), q.schema),
     )
 
 

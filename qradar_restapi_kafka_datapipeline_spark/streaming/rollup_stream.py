@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from qradar_restapi_kafka_datapipeline_spark.engine import local_relation
 from qradar_restapi_kafka_datapipeline_spark.operators.rollup import (
     DEFAULT_MEASURE,
     DEFAULT_TIME_COL,
@@ -197,7 +198,7 @@ def rollup_events_streaming_watermarked(
     batches = [keyed.where(F.col("__b") == i).drop("__b") for i in range(n_batches)]
     y2034 = datetime(2034, 1, 1, tzinfo=timezone.utc)
     batches += [
-        spark.createDataFrame([(ts, -1, "__sentinel__", 0)], cols.schema)
+        local_relation(spark, [(ts, -1, "__sentinel__", 0)], cols.schema)
         for ts in (y2034, y2034 + timedelta(days=1))
     ]
     stream = land(spark, batches, os.path.join(base, "landing"))

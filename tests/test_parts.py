@@ -235,6 +235,106 @@ def test_operators_hand_relations_to_sql_as_arguments():
     assert not hits, hits
 
 
+
+def _package_files(pkg: str) -> list[str]:
+    return sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(pkg)
+        for f in fs
+        if f.endswith(".py")
+    )
+
+
+def test_driver_rows_reach_spark_only_through_local_relation():
+    """``createDataFrame(<list>)`` leaves a Python-RDD leaf that starts
+    Python workers to unpickle rows the driver built; driver rows go
+    through ``engine.local_relation`` (Arrow → LocalRelation) instead."""
+    import inspect
+
+    pkg = os.path.dirname(engine.__file__)
+    src, first = inspect.getsourcelines(engine.local_relation)
+    helper = range(first, first + len(src))
+    hits = []
+    for path in _package_files(pkg):
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                if "createDataFrame(" in line and not (
+                    path == engine.__file__ and n in helper
+                ):
+                    hits.append(f"{os.path.relpath(path, pkg)}:{n}")
+    assert not hits, hits
+
+
+def test_foreach_batch_bodies_run_sql_on_the_batch_session():
+    """A foreachBatch batch belongs to the stream's cloned session, which
+    an outer session cannot resolve (TABLE_OR_VIEW_NOT_FOUND): every
+    ``.sql(`` call in a foreachBatch body runs on the batch's own
+    ``sparkSession``.  Bodies are the functions that ``streaming/``,
+    ``views.py`` and ``parts.py`` hand to ``.foreachBatch(...)``, plus the
+    documented foreachBatch entry points in ``documented`` with their batch
+    parameter."""
+    import ast
+
+    pkg = os.path.dirname(engine.__file__)
+    documented = {"update_globalviews_incremental": "new_events"}
+    scanned = _package_files(os.path.join(pkg, "streaming")) + [
+        os.path.join(pkg, "views.py"),
+        os.path.join(pkg, "parts.py"),
+    ]
+    checked, hits = [], []
+    for path in scanned:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        defs = {
+            n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+        }
+        bodies = [
+            (defs[name], batch) for name, batch in documented.items()
+            if name in defs
+        ]
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "foreachBatch"
+            ):
+                fn = n.args[0]
+                fn = defs[fn.id] if isinstance(fn, ast.Name) else fn
+                bodies.append((fn, fn.args.args[0].arg))
+        for fn, batch in bodies:
+            checked.append(f"{os.path.relpath(path, pkg)}:{fn.lineno}")
+
+            def is_batch_session(e):
+                return (
+                    isinstance(e, ast.Attribute)
+                    and e.attr == "sparkSession"
+                    and isinstance(e.value, ast.Name)
+                    and e.value.id == batch
+                )
+
+            aliases = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and is_batch_session(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            for n in ast.walk(fn):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "sql"
+                    and not is_batch_session(n.func.value)
+                    and not (
+                        isinstance(n.func.value, ast.Name)
+                        and n.func.value.id in aliases
+                    )
+                ):
+                    hits.append(f"{os.path.relpath(path, pkg)}:{n.lineno}")
+    assert any(c.startswith("views.py:") for c in checked), checked
+    assert any(c.startswith("streaming/") for c in checked), checked
+    assert not hits, hits
+
 def test_bounded_serves_leave_no_temp_views(spark, tables, tmp_path):
     base = str(tmp_path / "ivfpq")
     S.build_ivfpq_index(spark, spark.table("embeddings"), base)
@@ -268,3 +368,29 @@ def test_bounded_serves_leave_no_temp_views(spark, tables, tmp_path):
     assert sorted(t.name for t in spark.catalog.listTables()) == tables_before
     for df in results[-len(ops):]:
         df.count()
+
+
+def test_dedup_operators_release_their_previous_cache(spark, tables):
+    """The shingle and passage relations go through ``persist_tracked``: a
+    second call on another input releases the first call's cache, so at
+    most one cached relation per key stays behind; a re-run on the same
+    input keeps it."""
+    jsc = spark.sparkContext._jsc
+    docs = spark.table("documents")
+
+    def half(i):
+        return docs.where(f"doc_id % 2 = {i}")
+
+    ops = [
+        (1, lambda i: D.minhash_lsh_pairs(half(i))),
+        (2, lambda i: D.incremental_minhash_pairs(half(i), docs)),
+        (1, lambda i: D.passage_dedup(spark, k=5 + i)),
+    ]
+    for keys, op in ops:
+        before = jsc.getPersistentRDDs().size()
+        for i in (0, 1):
+            op(i).collect()
+        assert jsc.getPersistentRDDs().size() - before <= keys
+        cached = set(jsc.getPersistentRDDs().keys())
+        op(1).collect()
+        assert set(jsc.getPersistentRDDs().keys()) == cached

@@ -9,7 +9,7 @@ import ipaddress
 
 import pytest
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from qradar_restapi_kafka_datapipeline_spark.functions import incidr, ip_to_long, prev_saturday
@@ -1816,10 +1816,12 @@ def _ref_dsir_topk(texts_sources, target_pred, dim, top_k):
     def h60(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
-    def round_half_away(v, scale):
+    def half_away_units(v, scale):
+        # integer-exact: dividing by scale and multiplying back can land
+        # one unit short (-1009000 / 1e6 * 1e6 truncates to -1008999)
         x = v * scale
         r = math.floor(abs(x) + 0.5)
-        return (r if x >= 0 else -r) / scale
+        return r if x >= 0 else -r
 
     cnts = {}
     for d, (text, _src) in enumerate(texts_sources):
@@ -1842,12 +1844,12 @@ def _ref_dsir_topk(texts_sources, target_pred, dim, top_k):
             )
             + 1e-9
         )
-        l6[bkt] = int(round_half_away(v, 1_000_000) * 1_000_000)
+        l6[bkt] = half_away_units(v, 1_000_000)
     scores = {}
     for (d, bkt), c in cnts.items():
         scores[d] = scores.get(d, 0) + c * l6[bkt]
     ranked = sorted(
-        ((round_half_away(s / 1_000_000 + 1e-9, 1_000_000), d)
+        ((half_away_units(s / 1_000_000 + 1e-9, 1_000_000) / 1_000_000, d)
          for d, s in scores.items()),
         key=lambda x: (-x[0], x[1]),
     )
@@ -1872,6 +1874,7 @@ class TestDsirDifferential:
 
     @settings(max_examples=10, deadline=None, database=None)
     @given(_texts, st.integers(min_value=1, max_value=4))
+    @example(texts=["", "b a a a"], mod=1)
     def test_matches_reference(self, spark, texts, mod):
         from qradar_restapi_kafka_datapipeline_spark.operators.curation import (
             dsir_cnts_sql,
