@@ -157,13 +157,22 @@ def persist_tracked(df, key: str):
     ``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND``.
     """
     prev = _PERSISTED.pop(key, None)
-    if prev is not None and not prev._jdf.queryExecution().normalized().sameResult(
-        df._jdf.queryExecution().normalized()
+    # The cache entry is per plan, not per key: keep ``prev`` cached while
+    # any tracked key still holds a relation with its plan (an operator
+    # called with its inputs swapped persists one plan under both keys).
+    if prev is not None and not any(
+        _same_plan(prev, held) for held in [df, *_PERSISTED.values()]
     ):
         prev.unpersist()
     df = df.persist()
     _PERSISTED[key] = df
     return df
+
+
+def _same_plan(a, b) -> bool:
+    return a._jdf.queryExecution().normalized().sameResult(
+        b._jdf.queryExecution().normalized()
+    )
 
 
 #: share_view's cutover between persisted blocks and scratch parquet.

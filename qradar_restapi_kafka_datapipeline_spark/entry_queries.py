@@ -528,35 +528,6 @@ def registry() -> dict[str, Q]:
         f"FROM ({_fnn_ips_rel}) ips CROSS JOIN ({_fnn_dom_rel}) ds"
     )
 
-    # The broadcast-join LPM path (functions.decode.full_network_name — the
-    # scale form for network tables too large to fold) must agree with the
-    # folded-CASE oracle on the same per-domain config.
-    def _fnn_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from qradar_restapi_kafka_datapipeline_spark.functions.decode import (
-            default_networks_df,
-            full_network_name,
-        )
-
-        out = full_network_name(
-            spark.table("qevents"),
-            default_networks_df(spark),
-            "sourceip",
-            "src_net",
-            domain_col="domainId",
-        )
-        return out.groupBy("domainId", "src_net").agg(F.count(F.lit(1)).alias("n"))
-
-    q["full_network_name_join_path"] = _df_entry(
-        _fnn_join_run,
-        _duck_cte(
-            "SELECT domainId, "
-            f"{fullnetworkname_expr('sourceip', domain_col='domainId')} AS src_net, "
-            "COUNT(*) AS n FROM qevents GROUP BY 1, 2"
-        ),
-    )
-
     # ---- A9: reference-set membership (broadcast semi-join in Spark) --------
     q["refset_membership"] = _shared_sql_entry(
         "SELECT CASE WHEN destinationip IN "

@@ -1,4 +1,8 @@
-"""AQL scalar-function library as native Column expressions (SURVEY §2 A8–A12)."""
+"""Date functions as native Column expressions (SURVEY §2 A12).
+
+The other AQL scalar functions (INCIDR, FULLNETWORKNAME, the decodes) are SQL
+text built by :mod:`qradar_restapi_kafka_datapipeline_spark.plans.dialect`.
+"""
 
 from qradar_restapi_kafka_datapipeline_spark.functions.dates import (
     date_format_fn,
@@ -7,35 +11,11 @@ from qradar_restapi_kafka_datapipeline_spark.functions.dates import (
     report_date,
     week_from,
 )
-from qradar_restapi_kafka_datapipeline_spark.functions.decode import (
-    build_dims,
-    decode_join,
-    default_networks_df,
-    full_network_name,
-    network_name_expr,
-    reference_set_contains,
-)
-from qradar_restapi_kafka_datapipeline_spark.functions.ip import (
-    cidr_bounds,
-    incidr,
-    ip_to_long,
-    long_to_ip,
-)
 
 __all__ = [
-    "build_dims",
-    "cidr_bounds",
     "date_format_fn",
-    "decode_join",
-    "default_networks_df",
     "epoch_to_ts",
-    "full_network_name",
-    "incidr",
-    "ip_to_long",
-    "long_to_ip",
-    "network_name_expr",
     "prev_saturday",
-    "reference_set_contains",
     "report_date",
     "week_from",
 ]

@@ -4,22 +4,21 @@ The reference declares its query surface as AQL template strings shipped to
 QRadar's Ariel engine (``qradar/input/queries.json:2-3``,
 ``qradar/input/new_queries.json:2-12``, templating ``qradar/query_builder.py:59-66``).
 This module makes that surface native: a token-level rewriter from AQL to
-executable SQL, emitting either
-
-- **Spark SQL** (the engine): scalar functions resolve to SQL UDFs registered by
-  :func:`register_aql_functions` — Catalyst inlines SQL-UDF bodies, so the whole
-  translated query is one declarative tree (pushdown, pruning, whole-stage
-  codegen all apply; no Python in the row path); or
-- **DuckDB SQL** (the correctness oracle): scalar functions are inlined as
-  expressions from ``plans.dialect`` and the event relation/reference sets
-  become CTEs — so oracle and engine both derive from the *same AQL text*.
+executable SQL, emitting either **Spark SQL** (the engine) or **DuckDB SQL**
+(the correctness oracle).  In both dialects every AQL scalar function call is
+replaced by the expression :mod:`.dialect` builds for it, so the translated
+query is one declarative tree (pushdown, pruning and whole-stage codegen all
+apply; no Python in the row path).  For DuckDB the event relation and the
+reference sets also become CTEs — so oracle and engine both derive from the
+*same AQL text*.
 
 Translation passes (SURVEY §7.1 M2):
   {param} substitution (A16) → strip PARAMETERS REMOTESERVERS (A14) →
   GLOBALVIEW routing (A2) → REFERENCESETCONTAINS → IN-subquery (A9, a broadcast
-  semi-join in Spark) → quote normalization (A3) → START/STOP → event-time range
-  predicate (A13) → identifier-case normalization (AQL is case-insensitive on
-  columns; the Spark session is case-sensitive).
+  semi-join in Spark) → scalar-function inlining (A8–A12) → quote
+  normalization (A3) → START/STOP → event-time range predicate (A13) →
+  identifier-case normalization (AQL is case-insensitive on columns; the
+  Spark session is case-sensitive).
 """
 
 from __future__ import annotations
@@ -31,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
     DECODE_EXPRS,
     fullnetworkname_expr,
+    incidr_dynamic_expr,
     incidr_expr,
-    ip2long_expr,
 )
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
@@ -45,43 +44,6 @@ def _java_fmt_to_strftime(fmt: str) -> str:
                       ("mm", "%M"), ("ss", "%S")):
         out = out.replace(java, pct)
     return out
-
-
-def register_aql_functions(spark: SparkSession) -> None:
-    """Register the AQL scalar library as SQL UDFs (inlined by Catalyst).
-
-    SQL function names are case-insensitive, so AQL's ``DOMAINNAME(...)`` /
-    ``incidr(...)`` / ``INCIDR (...)`` spellings all resolve unrewritten.
-    """
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION aql_ip2long(ip STRING) RETURNS BIGINT RETURN "
-        "CASE WHEN ip RLIKE '^\\\\d{1,3}\\\\.\\\\d{1,3}\\\\.\\\\d{1,3}\\\\.\\\\d{1,3}$' "
-        f"THEN {ip2long_expr('ip')} END"
-    )
-    # Dynamic-argument INCIDR: parse the CIDR in SQL. pow(2, 32-plen) is exact
-    # in double up to 2^32; a missing '/len' means a /32 host route.
-    _mask = (
-        "(4294967296 - CAST(pow(2.0, 32 - CAST(coalesce(nullif("
-        "split_part(cidr, '/', 2), ''), '32') AS INT)) AS BIGINT))"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION incidr(cidr STRING, ip STRING) RETURNS BOOLEAN RETURN "
-        f"coalesce((aql_ip2long(ip) & {_mask}) = "
-        f"(aql_ip2long(split_part(cidr, '/', 1)) & {_mask}), false)"
-    )
-    for fname, expr_fn in DECODE_EXPRS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {fname}(id BIGINT) RETURNS STRING "
-            f"RETURN {expr_fn('id')}"
-        )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION fullnetworkname(ip STRING, domain BIGINT) "
-        f"RETURNS STRING RETURN {fullnetworkname_expr('ip', domain_col='domain')}"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION dateformat(ts TIMESTAMP, fmt STRING) "
-        "RETURNS STRING RETURN date_format(ts, fmt)"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -202,22 +164,17 @@ def _top_level_search(
     return None
 
 
-def _last_call(
-    q: str, fname: str, end_before: int | None = None
-) -> tuple[int, int, list[str]] | None:
-    """Locate the LAST ``fname( ... )`` call in ``q`` (optionally starting
-    strictly before ``end_before``) and split its arguments.
+def _last_call(q: str, fname: str) -> tuple[int, int, list[str]] | None:
+    """Locate the LAST ``fname( ... )`` call in ``q`` and split its arguments.
 
     Paren-BALANCED and quote-AWARE: nested calls, parenthesized expressions,
     and string literals containing ``,``/``(``/``)`` (with ``''`` escapes) all
     parse correctly — the failure mode of the old ``[^()]*`` regexes was
     silently mistranslating exactly those shapes.  Match sites inside quoted
     literals/identifiers are skipped (a query comparing a column to the TEXT
-    'see CATEGORYNAME(4001)' must not rewrite inside the string), and the
-    ``end_before`` bound replaces prefix slicing so the argument scan always
-    runs on the FULL balanced string (truncating mid-expression used to
-    raise on well-formed queries).  Malformed text (unbalanced parens,
-    unterminated literal) raises instead of passing through.
+    'see CATEGORYNAME(4001)' must not rewrite inside the string).  Malformed
+    text (unbalanced parens, unterminated literal) raises instead of passing
+    through.
 
     Returns ``(start, end, args)`` over the original string, or None if no
     call remains.  Processing the last call first keeps earlier offsets valid
@@ -233,7 +190,6 @@ def _last_call(
         m
         for m in re.finditer(rf"\b{fname}\s*\(", q, flags=re.I)
         if not in_literal(m.start())
-        and (end_before is None or m.start() < end_before)
     ]
     if not matches:
         return None
@@ -285,28 +241,18 @@ def _last_call(
 
 
 def _rewrite_calls(q: str, fname: str, render) -> str:
-    """Replace every ``fname(...)`` call via ``render(args) -> str | None``
-    (None = leave this call for the runtime UDF), looping to fixpoint so
-    same-function nesting resolves innermost-first."""
+    """Replace every ``fname(...)`` call via ``render(args) -> str``, looping
+    to fixpoint so same-function nesting resolves innermost-first."""
     guard = 0
-    skip_before: int | None = None
     while True:
         guard += 1
         if guard > 500:  # no sane query has hundreds of nested calls
             raise ValueError(f"runaway rewrite loop for {fname}")
-        # bound the SEARCH, never slice the string: truncating q mid-argument
-        # would cut an enclosing call's parens and raise on valid queries
-        found = _last_call(q, fname, end_before=skip_before)
+        found = _last_call(q, fname)
         if found is None:
             return q
         start, end, args = found
-        repl = render(args)
-        if repl is None:
-            # leave untouched; continue scanning strictly before this call
-            skip_before = start
-            continue
-        q = q[:start] + repl + q[end:]
-        skip_before = None
+        q = q[:start] + render(args) + q[end:]
 
 
 def _is_str_literal(s: str) -> bool:
@@ -314,28 +260,25 @@ def _is_str_literal(s: str) -> bool:
 
 
 def _inline_functions(q: str, dialect: str) -> str:
-    """Replace AQL scalar calls with dialect-shared constant-folded expressions.
-
-    Inlining (rather than calling the registered SQL UDFs) matters for Spark:
-    the dynamic-CIDR UDF body expands ~9 INCIDR + 2 FULLNETWORKNAME calls past
-    janino's 64 KB codegen limit, forcing interpreted fallback. The folded forms
-    keep the WHERE clause inside whole-stage codegen. The same expression text
-    runs on DuckDB, keeping the oracle bit-identical.
+    """Replace AQL scalar calls with the :mod:`.dialect` expressions, the only
+    definition of their semantics.  The same text runs on Spark and DuckDB
+    (only DATEFORMAT's pattern differs), keeping the oracle bit-identical.
+    A literal CIDR folds to two constants, which keeps the flagship WHERE
+    clause inside whole-stage codegen; a non-literal CIDR is parsed per row.
 
     Argument extraction is paren-balanced and quote-aware (see
     :func:`_last_call`), so nested calls — ``DATEFORMAT(DOMAINNAME(x), ...)``,
     ``INCIDR`` under ``NOT`` with comma-bearing literals — translate correctly;
-    malformed calls raise.  A non-literal CIDR (dynamic first argument) is left
-    as a call for the runtime ``incidr`` UDF rather than mis-folded.
+    malformed calls raise.
     """
 
-    def sub_incidr(args: list[str]) -> str | None:
+    def sub_incidr(args: list[str]) -> str:
         if len(args) != 2:
             raise ValueError(f"INCIDR expects 2 arguments, got {len(args)}")
         cidr, col = args
-        if not _is_str_literal(cidr):
-            return None  # dynamic CIDR → runtime UDF path
-        return incidr_expr(cidr[1:-1], col)
+        if _is_str_literal(cidr):
+            return incidr_expr(cidr[1:-1], col)
+        return incidr_dynamic_expr(cidr, col)
 
     q = _rewrite_calls(q, "INCIDR", sub_incidr)
 
@@ -622,7 +565,6 @@ class AQLFrontend:
         self.time_col = time_col
         self.ref_sets_view = ref_sets_view
         self.partition_col = partition_col
-        register_aql_functions(spark)
 
     def translate(self, aql: str, params: dict[str, str] | None = None) -> str:
         m = re.search(r"\bFROM\s+(?:GLOBALVIEW\s*\(\s*'([^']+)'|(\w+))", aql, flags=re.I)

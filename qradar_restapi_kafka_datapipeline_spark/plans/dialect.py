@@ -1,9 +1,12 @@
-"""Dialect-shared SQL expression builders.
+"""The AQL scalar functions, as SQL text for both engines.
 
-Every AQL scalar function (SURVEY §2 A8–A12) has one canonical semantics; these
-helpers emit that semantics as an SQL expression string valid in BOTH Spark SQL
-and DuckDB (the correctness oracle).  Restricting to the dialect intersection
-(split_part, CASE, ||, &, CAST) means the engine and the oracle can never drift.
+This module is the one definition of the AQL scalar semantics (SURVEY §2
+A8–A12: ``INCIDR``, ``FULLNETWORKNAME``, the ``DOMAINNAME``/``QIDNAME``/…
+decodes).  The AQL frontend (:mod:`.aql`) inlines these expressions into
+every translated query, and each helper emits text valid in BOTH Spark SQL
+and DuckDB (the correctness oracle).  Restricting to the dialect
+intersection (regexp_extract, TRY_CAST, split_part, CASE, ||, &, CAST) means
+the engine and the oracle can never drift.
 
 INCIDR constants are folded in Python at plan-build time — the emitted predicate
 is one AND + one comparison, fully inside whole-stage codegen.
@@ -11,7 +14,22 @@ is one AND + one comparison, fully inside whole-stage codegen.
 
 from __future__ import annotations
 
-from qradar_restapi_kafka_datapipeline_spark.functions.ip import _parse_cidr
+_MAX_IP = 0xFFFFFFFF
+
+
+def _parse_cidr(cidr: str) -> tuple[int, int]:
+    """'a.b.c.d/len' → (network_long, mask_long). Python-side constant folding."""
+    net, _, plen_s = cidr.partition("/")
+    plen = int(plen_s) if plen_s else 32
+    if not 0 <= plen <= 32:
+        raise ValueError(f"bad prefix length in CIDR {cidr!r}")
+    o = [int(x) for x in net.split(".")]
+    if len(o) != 4 or any(not 0 <= x <= 255 for x in o):
+        raise ValueError(f"bad IPv4 network in CIDR {cidr!r}")
+    net_long = (o[0] << 24) | (o[1] << 16) | (o[2] << 8) | o[3]
+    mask = (_MAX_IP << (32 - plen)) & _MAX_IP if plen else 0
+    return net_long & mask, mask
+
 
 # The engine's default network hierarchy backing FULLNETWORKNAME, PER DOMAIN —
 # QRadar's network table is domain-scoped and the reference passes the domain
@@ -59,10 +77,20 @@ IPLONG_TWINS = {
 }
 
 
+#: One dotted-quad octet, 0..255 (a leading zero is allowed: '010' is 10).
+_OCTET = "(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])"
+#: Four octets, each followed by a dot.  ip2long matches ``ip || '.'``: Java's
+#: ``$`` also matches before a trailing line terminator and RE2's does not,
+#: and ending the pattern on the appended dot makes the two engines agree.
+#: It has no backslashes, so neither engine's string escaping touches it.
+_DOTTED_QUAD = "^" + "[.]".join([_OCTET] * 4) + "[.]$"
+
+
 def ip2long_expr(col: str) -> str:
-    """Dotted-quad → int64. Valid in Spark SQL and DuckDB (split_part is 1-based
-    in both).  Columns with a precomputed long twin (:data:`IPLONG_TWINS`)
-    emit the twin column instead of the split-recombine chain."""
+    """Dotted-quad → int64; NULL for a NULL or malformed value (reference
+    ``clickhouse/helpers.py:122-128`` rejects non-IPv4 text).  Columns with
+    a precomputed long twin (:data:`IPLONG_TWINS`) emit the twin column
+    instead of the parse."""
     # AQL is case-insensitive on identifiers (the corpus writes `SourceIP`);
     # the lookup matches accordingly and emits the canonical column name,
     # which both engines resolve (Spark via the translator's identifier-case
@@ -70,14 +98,32 @@ def ip2long_expr(col: str) -> str:
     twin = IPLONG_TWINS.get(col.strip().lower())
     if twin is not None:
         return twin
-    p = [f"CAST(split_part({col}, '.', {i}) AS BIGINT)" for i in (1, 2, 3, 4)]
+    p = [
+        f"TRY_CAST(regexp_extract(({col}) || '.', '{_DOTTED_QUAD}', {i}) AS BIGINT)"
+        for i in (1, 2, 3, 4)
+    ]
     return f"({p[0]}*16777216 + {p[1]}*65536 + {p[2]}*256 + {p[3]})"
 
 
 def incidr_expr(cidr: str, col: str) -> str:
-    """AQL INCIDR with the CIDR literal folded to (net, mask) int constants."""
+    """AQL INCIDR with the CIDR literal folded to (net, mask) int constants.
+    A NULL or malformed IP gives NULL (false as a filter)."""
     net, mask = _parse_cidr(cidr)
     return f"(({ip2long_expr(col)} & {mask}) = {net})"
+
+
+def incidr_dynamic_expr(cidr: str, col: str) -> str:
+    """AQL INCIDR whose CIDR is an SQL expression, parsed per row, with the
+    NULL semantics of :func:`incidr_expr`.  A missing '/len' is a /32 host
+    route; a malformed network or a length outside 0..32 gives NULL.
+    pow(2, 32-len) is exact in double up to 2^32."""
+    plen = f"TRY_CAST(coalesce(nullif(split_part({cidr}, '/', 2), ''), '32') AS BIGINT)"
+    mask = (
+        f"(CASE WHEN {plen} BETWEEN 0 AND 32 "
+        f"THEN 4294967296 - CAST(pow(2.0, 32 - {plen}) AS BIGINT) END)"
+    )
+    net = ip2long_expr(f"split_part({cidr}, '/', 1)")
+    return f"(({ip2long_expr(col)} & {mask}) = ({net} & {mask}))"
 
 
 def _lpm_chain(ip: str, networks: list[tuple[str, str]], default: str) -> str:
@@ -110,10 +156,7 @@ def fullnetworkname_expr(
     domain-scoped (reference qradar/input/queries.json:2-3 passes DomainID in
     every call).  Without it, the chain of ``DEFAULT_DOMAIN`` applies (the
     one-arg AQL form resolves in the default domain).  ``networks`` rows are
-    (domainId, cidr, name).  For network tables too large to fold (thousands
-    of rows), use the broadcast-join path
-    :func:`~qradar_restapi_kafka_datapipeline_spark.functions.decode.full_network_name`
-    instead — same semantics, join instead of codegen.
+    (domainId, cidr, name).
     """
     networks = DEFAULT_NETWORKS if networks is None else networks
     by_domain: dict[int, list[tuple[str, str]]] = {}
@@ -130,8 +173,8 @@ def fullnetworkname_expr(
 
 
 # --- dimension decodes -------------------------------------------------------
-# Semantics identical to functions.decode.build_dims (the broadcast-join path);
-# as expressions they inline into SQL for both engines.
+# The engine owns these synthetic dimensions (the reference reads QRadar's
+# internal tables); an ID outside a dimension's range decodes to NULL.
 
 def domainname_expr(col: str) -> str:
     return f"(CASE WHEN {col} >= 0 AND {col} <= 4 THEN 'customer_' || CAST({col} AS STRING) END)"

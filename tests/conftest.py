@@ -28,3 +28,30 @@ def tables(spark, sf_dir):
     from qradar_restapi_kafka_datapipeline_spark.sources.registry import load_tables
 
     return load_tables(spark, sf_dir)
+
+
+def _nulls_last(row):
+    return tuple((v is None, v) for v in row)
+
+
+@pytest.fixture(scope="session")
+def run_both(spark):
+    """Run one SQL text in Spark and in DuckDB (the oracle engine).  Each
+    ``{name}`` in the text is a relation given as ``name=(ddl, rows)``;
+    returns both results as sorted lists of tuples (NULLs last)."""
+    import duckdb
+
+    def run(sql: str, **relations):
+        con = duckdb.connect()
+        dfs = {}
+        for name, (ddl, rows) in relations.items():
+            con.execute(f"CREATE TABLE {name} ({ddl})")
+            marks = ", ".join("?" * len(rows[0]))
+            con.executemany(f"INSERT INTO {name} VALUES ({marks})", rows)
+            dfs[name] = spark.createDataFrame(rows, ddl)
+        got_spark = [tuple(r) for r in spark.sql(sql, **dfs).collect()]
+        got_duck = con.execute(sql.format(**{n: n for n in relations})).fetchall()
+        con.close()
+        return sorted(got_spark, key=_nulls_last), sorted(got_duck, key=_nulls_last)
+
+    return run

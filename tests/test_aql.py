@@ -172,12 +172,33 @@ def test_fullnetworkname_threads_domain_argument():
     assert "net_dmz_d1" in two and "net_dmz_d1" not in one
 
 
-def test_dynamic_cidr_left_for_runtime_udf():
-    out = translate(
-        "SELECT COUNT(*) AS n FROM events WHERE INCIDR(cidr_col, sourceip)",
-        dialect="spark",
+def test_dynamic_cidr_inlined_in_both_dialects():
+    aql = "SELECT COUNT(*) AS n FROM events WHERE INCIDR(cidr_col, sourceip)"
+    out = translate(aql, dialect="spark")
+    assert out == translate(aql, dialect="duckdb")
+    assert "INCIDR" not in out.upper()
+    assert "split_part(cidr_col, '/', 2)" in out and "sourceIPlong" in out
+
+
+def test_dynamic_cidr_query_matches_oracle_and_literal_form(frontend, duck):
+    """A per-row CIDR runs on both engines and selects what the folded
+    literal CIDRs select."""
+    dynamic = (
+        "SELECT domainId, COUNT(*) AS n FROM events WHERE INCIDR(CASE "
+        "WHEN domainId < 2 THEN '10.0.0.0/8' WHEN domainId < 4 "
+        "THEN '192.168.0.0/16' ELSE '172.16.0.0/12' END, sourceip) "
+        "GROUP BY domainId"
     )
-    assert "INCIDR(cidr_col, sourceip)" in out  # untouched → runtime UDF
+    literal = (
+        "SELECT domainId, COUNT(*) AS n FROM events WHERE CASE "
+        "WHEN domainId < 2 THEN INCIDR('10.0.0.0/8', sourceip) "
+        "WHEN domainId < 4 THEN INCIDR('192.168.0.0/16', sourceip) "
+        "ELSE INCIDR('172.16.0.0/12', sourceip) END GROUP BY domainId"
+    )
+    spd = frontend.sql(dynamic).toPandas()
+    assert len(spd) == 5 and spd["n"].min() > 0
+    assert _rows_key(spd) == _rows_key(duck.execute(aql_oracle_sql(dynamic)).df())
+    assert _rows_key(spd) == _rows_key(frontend.sql(literal).toPandas())
 
 
 @pytest.mark.parametrize(
@@ -267,18 +288,19 @@ class TestRewriterRobustness:
         assert '"QIDNAME(x)"' in out or "`QIDNAME(x)`" in out
 
     def test_skipped_dynamic_call_inside_enclosing_call(self):
-        # dynamic-CIDR INCIDR (left for the runtime UDF) nested inside
-        # DATEFORMAT: the rewriter must not truncate the enclosing call's
-        # argument list while rescanning (used to raise 'unbalanced
-        # parentheses' on this well-formed query)
+        # dynamic-CIDR INCIDR nested inside DATEFORMAT: both calls inline,
+        # and the enclosing call keeps its whole argument list (a rewriter
+        # that once skipped the dynamic call raised 'unbalanced parentheses'
+        # on this well-formed query)
         aql = (
             "SELECT DATEFORMAT(CASE WHEN INCIDR(cidr_col, sourceip) "
             "THEN startTime ELSE startTime END, 'yyyy-MM-dd') AS d "
             "FROM events"
         )
         out = translate(aql, dialect="spark")
-        assert "INCIDR(cidr_col, sourceip)" in out  # UDF path preserved
-        assert "date_format" in out.lower() or "DATEFORMAT" not in out
+        assert "INCIDR" not in out.upper() and "split_part(cidr_col" in out
+        assert out.startswith("SELECT date_format(CASE WHEN ((sourceIPlong & ")
+        assert out.endswith("THEN startTime ELSE startTime END, 'yyyy-MM-dd') AS d FROM qevents")
 
 
 class TestLiteralPreservation:

@@ -1,62 +1,121 @@
-"""Dimension decode / reference set / FULLNETWORKNAME tests (SURVEY §2 A9-A11)."""
+"""Dimension decode / reference set / FULLNETWORKNAME tests (SURVEY §2 A9-A11).
 
-from pyspark.sql import functions as F
+Each check runs the SQL the AQL frontend emits (:mod:`plans.dialect`, the
+REFERENCESETCONTAINS rewrite) in Spark and in DuckDB against a Python
+reference.
+"""
 
-from qradar_restapi_kafka_datapipeline_spark.functions.decode import (
-    build_dims,
-    decode_join,
-    full_network_name,
-    reference_set_contains,
+import ipaddress
+import random
+
+from qradar_restapi_kafka_datapipeline_spark.plans.aql import translate
+from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+    DECODE_EXPRS,
+    DEFAULT_DOMAIN,
+    DEFAULT_NETWORKS,
+    fullnetworkname_expr,
 )
 
-
-def test_decode_join_with_default(spark):
-    dims = build_dims(spark)
-    df = spark.createDataFrame([(0,), (4,), (99,)], ["domainId"])
-    out = decode_join(df, dims["dim_domain"], "domainId", "domainId", "domainName",
-                      "domainName", default="unknown")
-    got = {r["domainId"]: r["domainName"] for r in out.collect()}
-    assert got == {0: "customer_0", 4: "customer_4", 99: "unknown"}
-
-
-def test_device_type_dim_has_custom_rule_engine(spark):
-    dims = build_dims(spark)
-    r = dims["dim_device_type"].where(F.col("devicetype") == 0).first()
-    assert r["log_source_type_name"] == "Custom Rule Engine"
+#: Python reference of each decode: (lo, hi, prefix) — an ID in lo..hi
+#: decodes to prefix + ID, any other ID to NULL.
+DECODE_RANGES = {
+    "domainname": (0, 4, "customer_"),
+    "qidname": (0, 99, "event_"),
+    "logsourcename": (0, 49, "logsource_"),
+    "sensordevicename": (0, 49, "logsource_"),
+    "logsourcetypename": (1, 19, "devicetype_"),
+    "sensordevicetypename": (1, 19, "devicetype_"),
+    "categoryname": (4000, 4039, "cat_"),
+}
 
 
-def test_reference_set_contains(spark):
+def _decode(fname, v):
+    if v == 0 and fname in ("logsourcetypename", "sensordevicetypename"):
+        return "Custom Rule Engine"
+    lo, hi, prefix = DECODE_RANGES[fname]
+    return f"{prefix}{v}" if v is not None and lo <= v <= hi else None
+
+
+def test_decode_truth_table(run_both):
+    assert set(DECODE_EXPRS) == set(DECODE_RANGES)
+    ids = [None, -1, 0, 1, 4, 5, 19, 20, 49, 50, 99, 100, 3999, 4000, 4039, 4040]
+    rows = list(enumerate(ids))
+    names = sorted(DECODE_EXPRS)
+    cols = ", ".join(f"{DECODE_EXPRS[f]('v')} AS {f}" for f in names)
+    got = run_both(f"SELECT i, {cols} FROM {{t}}", t=("i INT, v BIGINT", rows))
+    want = [(i, *(_decode(f, v) for f in names)) for i, v in rows]
+    assert got[0] == got[1] == want
+
+
+def test_device_type_dim_has_custom_rule_engine(run_both):
+    aql = "SELECT LOGSOURCETYPENAME(devicetype) AS n FROM {t}"
+    sql = translate(aql, dialect="spark")
+    assert sql == translate(aql, dialect="duckdb")
+    got = run_both(sql, t=("devicetype INT", [(0,)]))
+    assert got[0] == got[1] == [("Custom Rule Engine",)]
+
+
+def test_reference_set_contains(run_both):
     # REFERENCESETCONTAINS('Known DNS traffic', destinationIP)
     # (reference qradar/input/queries.json:2)
-    refs = spark.createDataFrame(
-        [("Known DNS traffic", "8.8.8.8"), ("Known DNS traffic", "1.1.1.1"),
-         ("Other Set", "9.9.9.9")],
-        ["set_name", "value"],
-    )
-    df = spark.createDataFrame([("8.8.8.8",), ("9.9.9.9",), ("5.5.5.5",)], ["dst"])
-    inside = reference_set_contains(df, refs, "Known DNS traffic", "dst")
-    assert {r["dst"] for r in inside.collect()} == {"8.8.8.8"}
-    outside = reference_set_contains(df, refs, "Known DNS traffic", "dst", negate=True)
-    assert {r["dst"] for r in outside.collect()} == {"9.9.9.9", "5.5.5.5"}
+    refs = [("Known DNS traffic", "8.8.8.8"), ("Known DNS traffic", "1.1.1.1"),
+            ("Other Set", "9.9.9.9")]
+    dsts = [("8.8.8.8",), ("9.9.9.9",), ("5.5.5.5",)]
+    for neg, want in (("", [("8.8.8.8",)]), ("NOT ", [("5.5.5.5",), ("9.9.9.9",)])):
+        aql = (
+            "SELECT dst FROM {t} "
+            f"WHERE {neg}REFERENCESETCONTAINS('Known DNS traffic', dst)"
+        )
+        sql = translate(aql, dialect="spark", ref_sets_view="{ref_sets}")
+        assert sql == translate(aql, dialect="duckdb", ref_sets_view="{ref_sets}")
+        got = run_both(
+            sql,
+            t=("dst STRING", dsts),
+            ref_sets=("set_name STRING, value STRING", refs),
+        )
+        assert got[0] == got[1] == want
 
 
-def test_full_network_name_longest_prefix_and_other(spark):
-    nets = spark.createDataFrame(
-        [(0, "10.0.0.0", 8, "corp"),
-         (0, "10.1.0.0", 16, "corp-dc1"),
-         (1, "10.0.0.0", 8, "tenant1-net")],
-        ["domainId", "cidr", "prefix_len", "network_name"],
+def _lpm(ip, domain):
+    """Longest-prefix match over DEFAULT_NETWORKS in ``domain``."""
+    try:
+        addr = ipaddress.IPv4Address(ip)
+    except ipaddress.AddressValueError:
+        return "other"
+    hits = [
+        (ipaddress.IPv4Network(cidr).prefixlen, name)
+        for dom, cidr, name in DEFAULT_NETWORKS
+        if dom == domain and addr in ipaddress.IPv4Network(cidr)
+    ]
+    return min(hits, key=lambda h: (-h[0], h[1]))[1] if hits else "other"
+
+
+def test_full_network_name_longest_prefix_and_other(run_both):
+    """FULLNETWORKNAME(ip, domainId) and FULLNETWORKNAME(ip) over random
+    IPs in every domain (plus an unknown and a NULL domain) against a
+    Python longest-prefix match; unmatched and malformed IPs give 'other'."""
+    rng = random.Random(7)
+    ips = []
+    for _, cidr, _ in DEFAULT_NETWORKS:  # hosts inside every network
+        net = ipaddress.IPv4Network(cidr)
+        ips += [str(net[rng.randrange(net.num_addresses)]) for _ in range(3)]
+    ips += [str(ipaddress.IPv4Address(rng.getrandbits(32))) for _ in range(40)]
+    ips += ["10.70.1.1", "10.63.255.255", "10.64.0.0", "garbage", None]
+    ips = sorted(set(ips), key=str)
+    rows = [
+        (i, ip, d)
+        for i, (ip, d) in enumerate((ip, d) for ip in ips for d in [*range(5), 7, None])
+    ]
+    got = run_both(
+        f"SELECT i, {fullnetworkname_expr('ip', domain_col='d')} AS two, "
+        f"{fullnetworkname_expr('ip')} AS one FROM {{t}}",
+        t=("i INT, ip STRING, d BIGINT", rows),
     )
-    df = spark.createDataFrame(
-        [(0, "10.1.2.3"), (0, "10.9.9.9"), (0, "8.8.8.8"), (1, "10.1.2.3")],
-        ["domainId", "ip"],
-    )
-    out = full_network_name(df, nets, "ip", "net", domain_col="domainId")
-    got = {(r["domainId"], r["ip"]): r["net"] for r in out.collect()}
-    assert got == {
-        (0, "10.1.2.3"): "corp-dc1",   # longest prefix wins
-        (0, "10.9.9.9"): "corp",
-        (0, "8.8.8.8"): "other",       # default used as a value (and in predicates)
-        (1, "10.1.2.3"): "tenant1-net",  # domain-scoped
-    }
-    assert out.count() == 4  # no row duplication from multi-match
+    want = [
+        (i, "other" if d not in range(5) else _lpm(ip, d), _lpm(ip, DEFAULT_DOMAIN))
+        for i, ip, d in rows
+    ]
+    assert got[0] == got[1] == want
+    # the domains disagree on 10.70.1.1 (10.64/10 is renamed in 1, absent in 2)
+    assert {_lpm("10.70.1.1", d) for d in range(5)} == {
+        "net_10_64", "net_dmz_d1", "net_10"}

@@ -54,11 +54,16 @@ RULES: list[tuple[str, tuple[str, ...], list[tuple]]] = [
     ]),
     ("decode-functions", ("refset_membership", "incidr_classification",
                           "full_network_name", "normalize_dates"), [
+        # the plans/dialect text the AQL frontend inlines, run in Spark and
+        # DuckDB against ipaddress / a Python LPM / a decode table
         ("pytest", "test_properties.py", "TestIncidrVsStdlib"),
         ("pytest", "test_properties.py",
          "test_prev_saturday_matches_dateutil_semantics"),
         ("pytest", "test_decode.py",
          "test_full_network_name_longest_prefix_and_other"),
+        ("pytest", "test_decode.py", "test_decode_truth_table"),
+        ("pytest", "test_decode.py", "test_reference_set_contains"),
+        ("pytest", "test_functions.py", "test_ip_to_long_roundtrip"),
     ]),
     ("sessionize", ("sessionize_events", "session_window_native"), [
         ("pytest", "test_properties.py",

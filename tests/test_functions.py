@@ -1,50 +1,69 @@
-"""Unit tests for the AQL scalar-function library (SURVEY §5 item 3)."""
+"""Unit tests for the AQL scalar functions (SURVEY §5 item 3).
+
+The IP functions are the SQL text :mod:`plans.dialect` emits for the AQL
+frontend; each check runs that text in Spark AND in DuckDB against a Python
+reference.
+"""
 
 import datetime
 
-from pyspark.sql import Row
-from pyspark.sql import functions as F
-
 from qradar_restapi_kafka_datapipeline_spark.functions import (
     epoch_to_ts,
-    incidr,
-    ip_to_long,
-    long_to_ip,
-    network_name_expr,
     prev_saturday,
     report_date,
     week_from,
 )
+from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+    DEFAULT_DOMAIN,
+    fullnetworkname_expr,
+    incidr_dynamic_expr,
+    incidr_expr,
+    ip2long_expr,
+)
 
-
-def _one(spark, col):
-    return spark.range(1).select(col.alias("v")).first()["v"]
+#: Not an IPv4 dotted quad: each parses to NULL in both engines.
+MALFORMED = [
+    "999.1.1.1", "not-an-ip", "abc", "1.2.3", "1.2.3.4.5", "300.1.1.1",
+    " 10.1.2.3", "10.1.2.3 ", "+1.2.3.4", "-0.1.2.3", "1..2.3", "",
+    "1.2.3.4\n", "1.2.3.4.", None,
+]
 
 
 class TestIp:
-    def test_ip_to_long_roundtrip(self, spark):
-        rows = spark.createDataFrame(
-            [("0.0.0.0",), ("255.255.255.255",), ("10.1.2.3",), ("192.168.0.1",)],
-            ["ip"],
-        ).select(
-            "ip",
-            ip_to_long("ip").alias("n"),
-            long_to_ip(ip_to_long("ip")).alias("back"),
-        ).collect()
-        for r in rows:
-            assert r["back"] == r["ip"]
-        vals = {r["ip"]: r["n"] for r in rows}
-        assert vals["0.0.0.0"] == 0
-        assert vals["255.255.255.255"] == 0xFFFFFFFF
-        assert vals["10.1.2.3"] == (10 << 24) + (1 << 16) + (2 << 8) + 3
+    def test_ip_to_long_roundtrip(self, spark, tables, sf_dir):
+        """qevents renders each dotted-quad string from its long twin;
+        parsing the string back gives the twin on every row."""
+        import duckdb
 
-    def test_ip_to_long_malformed(self, spark):
-        rows = spark.createDataFrame(
-            [("999.1.1.1",), ("not-an-ip",), ("1.2.3",), (None,)], ["ip"]
-        ).select(ip_to_long("ip").alias("n")).collect()
-        assert all(r["n"] is None for r in rows)
+        from qradar_restapi_kafka_datapipeline_spark.sources.qevents import (
+            qevents_sql,
+        )
 
-    def test_incidr_truth_table(self, spark):
+        sql = (
+            "SELECT COUNT(*) AS n, "
+            f"COUNT_IF({ip2long_expr('q.sourceip')} IS DISTINCT FROM q.sourceIPlong) "
+            "+ COUNT_IF("
+            f"{ip2long_expr('q.destinationip')} IS DISTINCT FROM q.destinationIPlong"
+            ") AS bad FROM ({qevents}) q"
+        )
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+        got_duck = con.execute(sql.format(qevents=qevents_sql("duckdb"))).fetchone()
+        con.close()
+        got_spark = tuple(spark.sql(sql.format(qevents=qevents_sql("spark"))).first())
+        assert got_spark == got_duck
+        n, bad = got_spark
+        assert n > 0 and bad == 0
+
+    def test_ip_to_long_malformed(self, run_both):
+        rows = [(i, s) for i, s in enumerate(MALFORMED)]
+        got = run_both(
+            f"SELECT i, {ip2long_expr('ip')} AS n FROM {{t}}",
+            t=("i INT, ip STRING", rows),
+        )
+        assert got[0] == got[1] == [(i, None) for i in range(len(MALFORMED))]
+
+    def test_incidr_truth_table(self, run_both):
         # CIDR literals from reference qradar/input/queries.json:2 + FIXTURES A5
         # boundary IPs.
         cases = [
@@ -61,25 +80,46 @@ class TestIp:
             ("127.0.0.0/8", "127.0.0.1", True),
             ("0.0.0.0/8", "0.1.2.3", True),
             ("0.0.0.0/8", "1.0.0.0", False),
-            ("10.0.0.0/8", "garbage", False),  # malformed IP tests False
+            ("0.0.0.0/0", "255.255.255.255", True),
+            ("10.1.2.3", "10.1.2.3", True),  # no '/len': a /32 host route
+            ("10.1.2.3", "10.1.2.4", False),
+            ("10.0.0.0/8", "garbage", None),  # malformed IP: NULL
+            ("10.0.0.0/8", None, None),
         ]
-        df = spark.createDataFrame([(c, i, e) for c, i, e in cases], ["cidr", "ip", "want"])
-        for cidr in {c for c, _, _ in cases}:
-            got = (
-                df.where(F.col("cidr") == cidr)
-                .select("ip", "want", incidr(cidr, F.col("ip")).alias("got"))
-                .collect()
-            )
-            for r in got:
-                assert r["got"] == r["want"], (cidr, r["ip"])
+        rows = [(i, c, ip) for i, (c, ip, _) in enumerate(cases)]
+        literal = " ".join(
+            f"WHEN {i} THEN {incidr_expr(c, 'ip')}" for i, c, _ in rows
+        )
+        got = run_both(
+            f"SELECT i, CASE i {literal} END AS lit, "
+            f"{incidr_dynamic_expr('cidr', 'ip')} AS dyn FROM {{t}}",
+            t=("i INT, cidr STRING, ip STRING", rows),
+        )
+        want = [(i, w, w) for i, (_, _, w) in enumerate(cases)]
+        assert got[0] == got[1] == want
 
-    def test_network_name_expr_longest_prefix(self, spark):
-        nets = [("10.0.0.0/8", 8, "corp"), ("10.1.0.0/16", 16, "corp-dc1")]
-        df = spark.createDataFrame(
-            [("10.1.2.3",), ("10.2.2.3",), ("8.8.8.8",)], ["ip"]
-        ).select("ip", network_name_expr(ip_to_long("ip"), nets).alias("net"))
-        got = {r["ip"]: r["net"] for r in df.collect()}
-        assert got == {"10.1.2.3": "corp-dc1", "10.2.2.3": "corp", "8.8.8.8": "other"}
+    def test_dynamic_incidr_bad_cidr_is_null(self, run_both):
+        rows = [(0, "10.0.0.0/33"), (1, "10.0.0.0/x"), (2, "10.0.0/8"),
+                (3, None), (4, "10.0.0.0/-1")]
+        hit = incidr_dynamic_expr("cidr", "'10.1.1.1'")
+        got = run_both(
+            f"SELECT i, {hit} AS hit FROM {{t}}",
+            t=("i INT, cidr STRING", rows),
+        )
+        assert got[0] == got[1] == [(i, None) for i in range(5)]
+
+    def test_network_name_expr_longest_prefix(self, run_both):
+        # Listed shortest prefix first: the emitted chain must still try
+        # the /16 before the /8.
+        nets = [(DEFAULT_DOMAIN, "10.0.0.0/8", "corp"),
+                (DEFAULT_DOMAIN, "10.1.0.0/16", "corp-dc1")]
+        rows = [(0, "10.1.2.3"), (1, "10.2.2.3"), (2, "8.8.8.8")]
+        got = run_both(
+            f"SELECT i, {fullnetworkname_expr('ip', networks=nets)} AS net "
+            "FROM {t}",
+            t=("i INT, ip STRING", rows),
+        )
+        assert got[0] == got[1] == [(0, "corp-dc1"), (1, "corp"), (2, "other")]
 
 
 class TestDates:

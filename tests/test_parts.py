@@ -265,6 +265,34 @@ def test_driver_rows_reach_spark_only_through_local_relation():
     assert not hits, hits
 
 
+def test_aql_scalar_semantics_live_only_in_dialect():
+    """INCIDR, ip2long and the longest-prefix match have one definition,
+    ``plans/dialect.py``, which the AQL frontend inlines for both engines:
+    no module registers a session SQL function, and no module-level
+    function elsewhere defines IP, CIDR or network-name semantics."""
+    import ast
+    import re
+
+    pkg = os.path.dirname(engine.__file__)
+    dialect = os.path.join(pkg, "plans", "dialect.py")
+    ip_name = re.compile(
+        r"incidr|ip2long|ip_?to_?long|long_?to_?ip|cidr|network_?name|lpm", re.I
+    )
+    hits = []
+    for path in _package_files(pkg):
+        with open(path) as fh:
+            src = fh.read()
+        rel = os.path.relpath(path, pkg)
+        if re.search(r"TEMPORARY\s+FUNCTION", src, re.I):
+            hits.append(f"{rel}: TEMPORARY FUNCTION")
+        if path == dialect:
+            continue
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) and ip_name.search(node.name):
+                hits.append(f"{rel}:{node.lineno} {node.name}")
+    assert not hits, hits
+
+
 def test_foreach_batch_bodies_run_sql_on_the_batch_session():
     """A foreachBatch batch belongs to the stream's cloned session, which
     an outer session cannot resolve (TABLE_OR_VIEW_NOT_FOUND): every
@@ -394,3 +422,22 @@ def test_dedup_operators_release_their_previous_cache(spark, tables):
         cached = set(jsc.getPersistentRDDs().keys())
         op(1).collect()
         assert set(jsc.getPersistentRDDs().keys()) == cached
+
+
+def test_swapped_inputs_keep_both_keys_cached(spark, tables):
+    """``incremental_minhash_pairs(a, b)`` then ``(b, a)`` persists one
+    plan under both shingle keys; releasing one key's previous relation
+    must not drop the cache the other key still holds."""
+    from pyspark import StorageLevel
+
+    jsc = spark.sparkContext._jsc
+    docs = spark.table("documents")
+    a, b = docs.where("doc_id % 2 = 0"), docs.where("doc_id % 2 = 1")
+    D.incremental_minhash_pairs(a, b).collect()
+    D.incremental_minhash_pairs(b, a).collect()
+    keys = ("__minhash_incr_new", "__minhash_incr_old")
+    for key in keys:
+        assert engine._PERSISTED[key].storageLevel != StorageLevel.NONE, key
+    cached = set(jsc.getPersistentRDDs().keys())
+    D.incremental_minhash_pairs(b, a).collect()
+    assert set(jsc.getPersistentRDDs().keys()) == cached

@@ -10,7 +10,6 @@ import io
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _formatted_plan(df) -> str:
@@ -54,16 +53,6 @@ def test_view_derivation_prunes_to_used_columns(spark, reg, sf_dir):
 def test_dim_joins_broadcast(spark, reg, sf_dir):
     plan = _formatted_plan(reg["revenue_by_nation"].run(spark, sf_dir))
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" in plan
-
-
-def test_decode_join_broadcasts(spark, sf_dir):
-    from qradar_restapi_kafka_datapipeline_spark.functions.decode import build_dims, decode_join
-
-    events = spark.range(1000).select((F.col("id") % 5).alias("domainId"))
-    out = decode_join(events, build_dims(spark)["dim_domain"], "domainId",
-                      "domainId", "domainName", "name")
-    plan = _formatted_plan(out)
-    assert "BroadcastHashJoin" in plan
 
 
 def test_rollup_partial_aggregation(spark, reg, sf_dir):

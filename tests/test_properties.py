@@ -10,10 +10,14 @@ import ipaddress
 import pytest
 
 from hypothesis import example, given, settings, strategies as st
-from pyspark.sql import functions as F
 
-from qradar_restapi_kafka_datapipeline_spark.functions import incidr, ip_to_long, prev_saturday
+from qradar_restapi_kafka_datapipeline_spark.functions import prev_saturday
 from qradar_restapi_kafka_datapipeline_spark.operators.normalize import clean_column_name
+from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+    incidr_dynamic_expr,
+    incidr_expr,
+    ip2long_expr,
+)
 
 ips = st.integers(min_value=0, max_value=0xFFFFFFFF).map(
     lambda n: str(ipaddress.IPv4Address(n))
@@ -24,9 +28,11 @@ cidrs = st.tuples(
 
 
 class TestIncidrVsStdlib:
-    """One big batch: 300 random (cidr, ip) cases vs `ipaddress` truth."""
+    """INCIDR and ip2long as :mod:`plans.dialect` emits them for the AQL
+    frontend, run in Spark and in DuckDB against ``ipaddress``: one query
+    per engine evaluates every case."""
 
-    def test_incidr_matches_ipaddress(self, spark):
+    def test_incidr_matches_ipaddress(self, run_both):
         cases = []
         gen = st.tuples(cidrs, ips)
 
@@ -36,29 +42,41 @@ class TestIncidrVsStdlib:
             cases.append(case)
 
         collect()
-        rows = [
-            (cidr, ip,
-             ipaddress.IPv4Address(ip) in ipaddress.IPv4Network(cidr, strict=False))
-            for cidr, ip in cases
-        ]
-        df = spark.createDataFrame(rows, ["cidr", "ip", "want"])
-        # evaluate per distinct cidr literal (incidr folds the literal)
-        for cidr in {c for c, _, _ in rows}:
-            got = (
-                df.where(F.col("cidr") == cidr)
-                .select("ip", "want", incidr(cidr, F.col("ip")).alias("got"))
-                .collect()
-            )
-            for r in got:
-                assert r["got"] == r["want"], (cidr, r["ip"])
+        rows = [(i, cidr, ip) for i, (cidr, ip) in enumerate(cases)]
+        # the literal form folds its CIDR: one CASE branch per case
+        literal = " ".join(
+            f"WHEN {i} THEN {incidr_expr(cidr, 'ip')}" for i, cidr, _ in rows
+        )
+        got = run_both(
+            f"SELECT i, CASE i {literal} END AS lit, "
+            f"{incidr_dynamic_expr('cidr', 'ip')} AS dyn FROM {{t}}",
+            t=("i INT, cidr STRING, ip STRING", rows),
+        )
+        want = []
+        for i, cidr, ip in rows:
+            hit = ipaddress.IPv4Address(ip) in ipaddress.IPv4Network(cidr, strict=False)
+            want.append((i, hit, hit))
+        assert got[0] == want
+        assert got[1] == want
 
-    def test_ip_to_long_matches_ipaddress(self, spark):
+    def test_ip_to_long_matches_ipaddress(self, run_both):
         sample = [str(ipaddress.IPv4Address(n)) for n in
                   range(0, 0xFFFFFFFF, 0x01234567)] + ["255.255.255.255"]
-        df = spark.createDataFrame([(s,) for s in sample], ["ip"])
-        got = {r["ip"]: r["n"] for r in df.select("ip", ip_to_long("ip").alias("n")).collect()}
-        for ip in sample:
-            assert got[ip] == int(ipaddress.IPv4Address(ip))
+        sample += ["999.1.1.1", "not-an-ip", "1.2.3", "1.2.3.4.5", " 10.1.2.3",
+                   "+1.2.3.4", "-0.1.2.3", "1.2.3.4\n", "", None]
+        rows = list(enumerate(sample))
+        got = run_both(
+            f"SELECT i, {ip2long_expr('ip')} AS n FROM {{t}}",
+            t=("i INT, ip STRING", rows),
+        )
+
+        def want(s):
+            try:
+                return int(ipaddress.IPv4Address(s))
+            except ipaddress.AddressValueError:
+                return None
+
+        assert got[0] == got[1] == [(i, want(s)) for i, s in rows]
 
 
 def test_prev_saturday_matches_dateutil_semantics(spark):

@@ -200,6 +200,7 @@ class TestIplongTwinIdentity:
 
     def test_expr_builder_emits_twin(self):
         from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+            IPLONG_TWINS,
             incidr_expr,
             ip2long_expr,
         )
@@ -207,9 +208,11 @@ class TestIplongTwinIdentity:
         assert ip2long_expr("sourceip") == "sourceIPlong"
         assert ip2long_expr("SourceIP") == "sourceIPlong"
         assert ip2long_expr("destinationip") == "destinationIPlong"
-        # non-twin columns keep the split chain
-        assert "split_part" in ip2long_expr("ip")
-        assert "split_part" in ip2long_expr("COALESCE(sourceip, '0.0.0.0')")
+        # non-twin columns parse the string and never emit a twin
+        for col in ("ip", "COALESCE(sourceip, '0.0.0.0')"):
+            out = ip2long_expr(col)
+            assert col in out
+            assert not any(t in out for t in IPLONG_TWINS.values())
         assert "sourceIPlong" in incidr_expr("10.0.0.0/8", "sourceip")
 
 
