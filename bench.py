@@ -127,9 +127,8 @@ HEADLINE = [
     "curate_quality_classifier",
     # persisted text-search serving (cold pass pays the index build, memoized)
     "text_knn_indexed",
-    # round 5b: broadcast-Bloom prefilter decontamination (map-side candidate
-    # elimination; output hash-equal to the exact semi-join path)
-    "decontaminate_bloom",
+    # train-side decontamination (semi-join against the eval shingles)
+    "decontaminate_train",
     # round 5b: CCNet head/middle/tail terciles over the bigram-LM score
     "curate_ccnet_buckets",
     # round 5b: quality-aware canonical per near-dup cluster

@@ -51,6 +51,23 @@ def session_state(spark) -> dict:
     return _SESSION_STATE.setdefault(spark, {})
 
 
+#: ``session_state`` kinds keyed ``(kind, tree_path)`` that hold what was
+#: read from an artifact tree: its schema, and a text index's stoplist.
+_TREE_MEMOS = ("artifact_schema", "stoplist")
+
+
+def forget_tree_memos(live: str) -> None:
+    """Drop every session's memos of the trees at or under ``live``: the
+    tree there was just replaced and may hold other columns or values."""
+    live = live.rstrip("/")
+    for memo in list(_SESSION_STATE.values()):
+        for key in list(memo):
+            if key[0] in _TREE_MEMOS and (
+                key[1] == live or key[1].startswith(live + "/")
+            ):
+                memo.pop(key, None)
+
+
 def read_artifact(spark, path: str, base_path: str | None = None):
     """Open a maintained-index parquet artifact, memoizing its schema per
     (session, path) under ``("artifact_schema", path)``: every
@@ -59,9 +76,9 @@ def read_artifact(spark, path: str, base_path: str | None = None):
     :func:`write_artifact` seeded the entry) and later opens supply the
     schema explicitly.  Only METADATA is memoized (artifact schemas are
     fixed shapes); the data is re-read on every execution, and
-    ``parts.swap_dir`` (the only place a live tree is replaced) drops the
-    entries under the swapped path.  ``base_path`` preserves partition
-    columns for partitioned trees."""
+    :func:`write_artifact` and ``parts.swap_dir`` (the places a live tree
+    is replaced) drop the entries under the replaced path.  ``base_path``
+    preserves partition columns for partitioned trees."""
     memo = session_state(spark)
     key = ("artifact_schema", base_path or path)
     reader = spark.read
@@ -76,9 +93,10 @@ def read_artifact(spark, path: str, base_path: str | None = None):
 
 
 def write_artifact(spark, df, path: str, partition_by: str | None = None):
-    """Write ``df`` as the parquet tree at ``path`` (overwrite) and seed
-    :func:`read_artifact`'s schema memo with the schema a read would infer,
-    so the first open after an in-session build runs no footer job.
+    """Write ``df`` as the parquet tree at ``path`` (overwrite), drop the
+    memos of the tree it replaced and seed :func:`read_artifact`'s schema
+    memo with the schema a read would infer, so the first open after an
+    in-session build runs no footer job.
     Inference returns every field nullable and the partition column last;
     the partition column keeps its written type, which is what inference
     returns for an INT column (the only partitioned caller)."""
@@ -86,6 +104,7 @@ def write_artifact(spark, df, path: str, partition_by: str | None = None):
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
     writer.parquet(path)
+    forget_tree_memos(path)
     fields = [f for f in df.schema if f.name != partition_by]
     if partition_by is not None:
         fields.append(df.schema[partition_by])
@@ -389,6 +408,12 @@ _DEFAULT_CONF: dict[str, str] = {
         "SPARK_GRAFT_PART_DISCOVERY_THRESHOLD", "128"
     ),
     "spark.ui.enabled": "false",
+    # Generated classes stay compiled for the session.  Spark's default
+    # keeps 100, fewer than one pass of the 17 AQL searches and six corpus
+    # operators generates (140 distinct classes at sf0.001), so a class
+    # was evicted before its next use and a repeat search recompiled.  A
+    # static conf: it only takes effect when the session is built.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

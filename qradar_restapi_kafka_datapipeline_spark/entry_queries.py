@@ -33,7 +33,10 @@ from qradar_restapi_kafka_datapipeline_spark.plans.aql import (
     AQLFrontend,
     aql_oracle_sql,
 )
-from qradar_restapi_kafka_datapipeline_spark.plans.dialect import fullnetworkname_expr
+from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+    fullnetworkname_expr,
+    incidr_expr,
+)
 from qradar_restapi_kafka_datapipeline_spark.sources.qevents import qevents_sql
 from qradar_restapi_kafka_datapipeline_spark.sources.registry import (
     load_tables,
@@ -479,19 +482,15 @@ def registry() -> dict[str, Q]:
     # ---- A8: INCIDR classification over the event stream -------------------
     q["incidr_classification"] = _shared_sql_entry(
         "SELECT CASE "
-        "WHEN ((CAST(split_part(sourceip, '.', 1) AS BIGINT)*16777216 + "
-        "CAST(split_part(sourceip, '.', 2) AS BIGINT)*65536 + "
-        "CAST(split_part(sourceip, '.', 3) AS BIGINT)*256 + "
-        "CAST(split_part(sourceip, '.', 4) AS BIGINT)) & 4278190080) = 167772160 THEN 'rfc1918_10' "
-        "WHEN ((CAST(split_part(sourceip, '.', 1) AS BIGINT)*16777216 + "
-        "CAST(split_part(sourceip, '.', 2) AS BIGINT)*65536 + "
-        "CAST(split_part(sourceip, '.', 3) AS BIGINT)*256 + "
-        "CAST(split_part(sourceip, '.', 4) AS BIGINT)) & 4293918720) = 2886729728 THEN 'rfc1918_172' "
-        "WHEN ((CAST(split_part(sourceip, '.', 1) AS BIGINT)*16777216 + "
-        "CAST(split_part(sourceip, '.', 2) AS BIGINT)*65536 + "
-        "CAST(split_part(sourceip, '.', 3) AS BIGINT)*256 + "
-        "CAST(split_part(sourceip, '.', 4) AS BIGINT)) & 4294901760) = 3232235520 THEN 'rfc1918_192' "
-        "ELSE 'public' END AS ip_class, "
+        + " ".join(
+            f"WHEN {incidr_expr(cidr, 'sourceip')} THEN '{label}'"
+            for cidr, label in (
+                ("10.0.0.0/8", "rfc1918_10"),
+                ("172.16.0.0/12", "rfc1918_172"),
+                ("192.168.0.0/16", "rfc1918_192"),
+            )
+        )
+        + " ELSE 'public' END AS ip_class, "
         "COUNT(*) AS n, CAST(SUM(eventCount) AS BIGINT) AS total_events "
         "FROM qevents GROUP BY 1"
     )
@@ -1404,6 +1403,9 @@ def _sketch_entries(q: dict[str, Q]) -> None:
 #: keeps streaming_ivfpq_append_parity + knn_ivfpq_auto_refined +
 #: takedown_all's two vector slices in the window; rebalance stays
 #: mirror-checked with its emitted oracle + pytests).
+#: decontaminate_train took decontaminate_bloom's slot when the Bloom
+#: prefilter was deleted (it filtered nothing: Catalyst ran the exact
+#: semi-join below the bit tests), so the entry was a second run of it.
 GATE_WINDOW: tuple[str, ...] = (
     "aql_AllowedInboundTraffic",
     "aql_parameterized",
@@ -1447,7 +1449,7 @@ GATE_WINDOW: tuple[str, ...] = (
     "text_bpe_fertility_by_lang",
     "pii_redaction_report",
     "boilerplate_doc_coverage",
-    "decontaminate_bloom",
+    "decontaminate_train",
     "curate_blocklist",
     "curate_quality_classifier",
     "pack_sequences_bpe_contract",
@@ -3518,21 +3520,6 @@ def _north_star_entries(q: dict[str, Q]) -> None:
         ),
         decontaminate_oracle_sql(),
     )
-    # The 100 TB shape of the same decision: broadcast Bloom-bitmap prefilter
-    # eliminates non-candidate train shingles MAP-SIDE (zero shuffle for the
-    # bulk), exact verify only on survivors.  The oracle is the SAME raw
-    # exact SQL — a bitmap/hash bug (dropped true positive) hash-fails here.
-    from qradar_restapi_kafka_datapipeline_spark.operators.contamination import (
-        decontaminate_train_bloom,
-    )
-
-    q["decontaminate_bloom"] = _df_entry(
-        lambda spark, sf: decontaminate_train_bloom(spark.table("documents")).select(
-            "doc_id", "source", "lang"
-        ),
-        decontaminate_oracle_sql(),
-    )
-
     # ---- prefix dedup (first-N-words fingerprint) ----------------------------
     q["dedup_prefix"] = _df_entry(
         lambda spark, sf: D.prefix_dup_groups(spark.table("documents")),

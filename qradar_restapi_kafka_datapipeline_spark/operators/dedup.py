@@ -218,7 +218,10 @@ def _minhash_sigs_from_shingles(
 
     |shingles(doc)| rides along in the SAME aggregate as the minhashes —
     the verify step needs it, and folding it here saves two whole extra
-    aggregation passes (shuffle each) over the shingle relation.
+    aggregation passes (shuffle each) over the shingle relation.  It
+    reaches the verify through the band rows (:func:`_banded_signatures`),
+    so the aggregate runs once per side of the band join and no count join
+    runs it again.
     """
     if portable_hash:
         mins = [
@@ -246,9 +249,11 @@ def _banded_signatures(
     bands: int,
     portable_hash: bool,
 ) -> DataFrame:
-    """(id, band_id, band_hash): one row per band per doc — the LSH bucket
-    keys.  ``portable_hash`` keys bands by the colon-joined minhash tuple
-    instead of xxhash64 of it (engine-neutral decimal text)."""
+    """(id, band_id, band_hash, n): one row per band per doc — the LSH
+    bucket keys, carrying the doc's shingle count ``__n`` as ``n`` for the
+    Jaccard verify.  ``portable_hash`` keys bands by the colon-joined
+    minhash tuple instead of xxhash64 of it (engine-neutral decimal
+    text)."""
     rows_per_band = num_hashes // bands
 
     def band_key(b: int):
@@ -262,8 +267,10 @@ def _banded_signatures(
         for b in range(bands)
     ]
     return signatures.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_hash")
+        F.col(id_col),
+        F.col("__n").alias("n"),
+        F.explode(F.array(*band_structs)).alias("band"),
+    ).select(id_col, "band.band_id", "band.band_hash", "n")
 
 
 def minhash_lsh_candidates(
@@ -273,7 +280,9 @@ def minhash_lsh_candidates(
     bands: int = 16,
     portable_hash: bool = False,
 ) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any (band, band-hash) bucket.
+    """Candidate near-dup pairs ``(id_a, id_b, na, nb)``: docs sharing any
+    (band, band-hash) bucket, with their shingle counts.  ``signatures``
+    is :func:`_minhash_sigs_from_shingles` output (it carries ``__n``).
 
     rows_per_band = num_hashes // bands; the bucket join is an equi-join on
     (band_id, band_hash) — shuffle-partitioned by bucket, no cross product.
@@ -294,7 +303,10 @@ def minhash_lsh_candidates(
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.n").alias("na"),
+            F.col("b.n").alias("nb"),
         )
         .distinct()
     )
@@ -335,8 +347,7 @@ def minhash_lsh_pairs(
     cands = minhash_lsh_candidates(
         sigs, id_col, num_hashes, bands, portable_hash=portable_hash
     )
-    counts = sigs.select(F.col(id_col), F.col("__n").alias("n"))
-    return _verify_jaccard(cands, sh, id_col, threshold, counts=counts)
+    return _verify_jaccard(cands, sh, id_col, threshold)
 
 
 def minhash_lsh_duckdb_sql(
@@ -407,23 +418,17 @@ def _verify_jaccard(
     shingles: DataFrame,
     id_col: str,
     threshold: float,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
-    if counts is None:
-        counts = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    """Exact Jaccard of candidate ``pairs`` ``(id_a, id_b, na, nb)`` — the
+    shingle counts come with the pairs — over the DISTINCT ``shingles``,
+    keeping pairs at or above ``threshold``."""
     sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
     sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    common = (
+    return (
         pairs.join(sa, "id_a")
         .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
+        .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("common"))
-    )
-    ca = counts.withColumnRenamed(id_col, "id_a").withColumnRenamed("n", "na")
-    cb = counts.withColumnRenamed(id_col, "id_b").withColumnRenamed("n", "nb")
-    return (
-        common.join(ca, "id_a")
-        .join(cb, "id_b")
         .withColumn(
             "jaccard",
             F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6),
@@ -1201,19 +1206,21 @@ def incremental_minhash_pairs(
     ba = _banded_signatures(sigs_new, id_col, num_hashes, bands, portable_hash)
     bb = _banded_signatures(sigs_old, id_col, num_hashes, bands, portable_hash)
     cands = (
-        ba.select(F.col(id_col).alias("id_a"), "band_id", "band_hash")
+        ba.select(
+            F.col(id_col).alias("id_a"), "band_id", "band_hash",
+            F.col("n").alias("na"),
+        )
         .join(
-            bb.select(F.col(id_col).alias("id_b"), "band_id", "band_hash"),
+            bb.select(
+                F.col(id_col).alias("id_b"), "band_id", "band_hash",
+                F.col("n").alias("nb"),
+            ),
             ["band_id", "band_hash"],
         )
-        .select("id_a", "id_b")
+        .select("id_a", "id_b", "na", "nb")
         .distinct()
     )
-    sh_all = sh_new.unionByName(sh_old)
-    counts = sigs_new.select(F.col(id_col), F.col("__n").alias("n")).unionByName(
-        sigs_old.select(F.col(id_col), F.col("__n").alias("n"))
-    )
-    return _verify_jaccard(cands, sh_all, id_col, threshold, counts=counts)
+    return _verify_jaccard(cands, sh_new.unionByName(sh_old), id_col, threshold)
 
 
 def incremental_minhash_duckdb_sql(

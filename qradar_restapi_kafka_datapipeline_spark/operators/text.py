@@ -1286,6 +1286,24 @@ def build_text_index(
     )
 
 
+def _index_stoplist(spark, path: str) -> frozenset:
+    """The text index at ``path``'s stoplist, read once per session under
+    ``("stoplist", <stoplist tree>)``.  Rewriting or swapping the tree
+    drops the entry (``engine.forget_tree_memos``)."""
+    from qradar_restapi_kafka_datapipeline_spark.engine import (
+        read_artifact,
+        session_state,
+    )
+
+    memo = session_state(spark)
+    key = ("stoplist", f"{path}/stoplist")
+    if key not in memo:
+        memo[key] = frozenset(
+            r["feat"] for r in read_artifact(spark, key[1]).collect()
+        )
+    return memo[key]
+
+
 def _query_postings(text: str, stoplist: set, dim: int) -> dict[int, int]:
     """Driver-side featurizer for ONE query text — the exact Python replica
     of :func:`hashed_embedding_postings_sql`'s per-doc pipeline (whitespace
@@ -1328,21 +1346,21 @@ def text_knn_from_index(
     identical to :func:`hashed_text_knn_sql` — exact BIGINT dots, positive
     filter, one terminal sqrt/divide, (cos DESC, n_id) ties — so a query
     using an indexed document's own text reproduces that entry's rows
-    exactly (the gate proves it)."""
+    exactly (the gate proves it).
+
+    A serve runs no job for values the driver already holds: the stoplist
+    is read once per session (:func:`_index_stoplist`), and the query
+    weights ride in the plan as a literal map, which the ``bucket IN``
+    predicate guarantees holds every scanned row's bucket."""
     from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
 
-    stoplist = {
-        r["feat"] for r in read_artifact(spark, f"{path}/stoplist").collect()
-    }
-    qp = _query_postings(query_text, stoplist, dim)
+    qp = _query_postings(query_text, _index_stoplist(spark, path), dim)
     if not qp:
         return local_relation(
             spark, [], "q_id LONG, n_id LONG, cos DOUBLE, rk INT"
         )
     groups = sorted({b % n_groups for b in qp})
-    qdf = local_relation(
-        spark, list(qp.items()), "bucket BIGINT, qw BIGINT"
-    )
+    weights = ", ".join(f"{b}L, {w}L" for b, w in qp.items())
     n2q = sum(w * w for w in qp.values())
     cand = (
         read_artifact(
@@ -1350,7 +1368,7 @@ def text_knn_from_index(
         )
         .where(F.col("bucket_group").isin(groups))
         .where(F.col("bucket").isin([int(b) for b in qp]))
-        .join(F.broadcast(qdf), "bucket")
+        .withColumn("qw", F.expr(f"element_at(map({weights}), bucket)"))
     )
     if exclude_id is not None:
         cand = cand.where(F.col("doc_id") != exclude_id)

@@ -210,18 +210,6 @@ def replay_epochs(
 # --- two-rename swap and its recovery -------------------------------------------
 
 
-def _forget_schemas(live: str) -> None:
-    """Drop the memoized artifact schemas at or under ``live``: the tree
-    there was just replaced and may carry a different column set."""
-    live = live.rstrip("/")
-    for memo in list(engine._SESSION_STATE.values()):
-        for key in list(memo):
-            if key[0] == "artifact_schema" and (
-                key[1] == live or key[1].startswith(live + "/")
-            ):
-                memo.pop(key, None)
-
-
 def swap_dir(
     spark,
     live: str,
@@ -247,7 +235,7 @@ def swap_dir(
         fs.rename(hpath(old), hpath(live))
         raise RuntimeError(f"{what}: rename failed for {tmp}")
     fs.delete(hpath(old), True)
-    _forget_schemas(live)
+    engine.forget_tree_memos(live)
     return out
 
 
@@ -272,7 +260,7 @@ def heal_swap(spark, live: str, tmp: str, old: str) -> str:
         else:
             fs.delete(hpath(old), True)
             did = "dropped_stale_old"
-        _forget_schemas(live)
+        engine.forget_tree_memos(live)
     if fs.exists(hpath(tmp)):
         fs.delete(hpath(tmp), True)
         if did == "ok":

@@ -190,7 +190,7 @@ def test_gate_window_leads_registry_and_is_fully_oracled():
         "pipeline_corpus_funnel",
         "streaming_dsir_apply_parity",
         "curate_quality_classifier",
-        "decontaminate_bloom",
+        "decontaminate_train",
         "zorder_layout_keys",
         "sketch_cm_heavy_hitters",
         "curate_dsir_topk",

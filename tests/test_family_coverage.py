@@ -162,7 +162,7 @@ RULES: list[tuple[str, tuple[str, ...], list[tuple]]] = [
         ("dual", "knn_ivf_exhaustive_cosine"),
     ]),
     ("contamination", ("contamination_check", "decontaminate_"), [
-        ("pytest", "test_northstar.py", "TestBloomDecontamination"),
+        ("pytest", "test_northstar.py", "TestDecontamination"),
         ("pytest", "test_northstar.py", "test_contamination_report_planted"),
     ]),
     ("text-stats-lm", ("text_unigram_loglik", "text_bigram_loglik",

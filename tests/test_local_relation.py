@@ -2,7 +2,6 @@
 relation this session just wrote is read back with the schema it wrote:
 neither starts a Spark job of its own."""
 
-import uuid
 from datetime import datetime, timezone
 
 from qradar_restapi_kafka_datapipeline_spark import engine
@@ -23,20 +22,6 @@ def _lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 
 
-def _jobs(spark, action) -> int:
-    """Spark jobs ``action`` submits, broadcast threads included (they
-    inherit the job group)."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_local_relation_round_trips_every_site_shape(spark):
     want = spark.createDataFrame(ROWS, SHAPES)
     assert "PythonRDD" in _lineage(want)
@@ -52,7 +37,7 @@ def test_local_relation_round_trips_every_site_shape(spark):
         assert "PythonRDD" not in _lineage(got)
 
 
-def test_materialize_view_reads_back_without_a_job(spark):
+def test_materialize_view_reads_back_without_a_job(spark, count_jobs):
     df = spark.range(10).selectExpr("id", "array(id * 0.5) AS v")
     back = []
 
@@ -60,16 +45,20 @@ def test_materialize_view_reads_back_without_a_job(spark):
         back.append(engine.materialize_view(spark, df, "__test_readback"))
 
     # the write is the one job; the read-back infers nothing
-    assert _jobs(spark, run) == 1
+    assert count_jobs(run) == 1
     (back,) = back
     assert back.schema == spark.read.parquet(back.inputFiles()[0]).schema
     assert sorted(back.collect()) == sorted(df.collect())
 
 
-def test_first_index_serve_after_build_job_budget(spark, tables, tmp_path):
+def test_first_index_serve_after_build_job_budget(
+    spark, tables, tmp_path, count_jobs
+):
     """The build seeds the three trees' schemas, so the first serve opens
-    them without footer jobs, and its query-postings leaf starts no Python
-    workers (8 jobs when both were paid)."""
+    them without footer jobs, and the query weights ride in the plan as
+    literals (8 jobs when footers and a Python-read query relation were
+    paid, 5 with a broadcast query relation).  The one stoplist read is
+    the first serve's only job beyond the scoring query."""
     base = str(tmp_path / "text_index")
     T.build_text_index(spark, base, dim=4096)
     text = spark.table("documents").where("doc_id = 0").first()["text"]
@@ -79,7 +68,7 @@ def test_first_index_serve_after_build_job_budget(spark, tables, tmp_path):
             spark, base, text, k=5, dim=4096, query_id=0, exclude_id=0
         ).collect()
 
-    assert _jobs(spark, serve) <= 5
+    assert count_jobs(serve) <= 4
     # the seeded schemas are what inference returns
     memo = engine.session_state(spark)
     for tree in ("postings", "norms", "stoplist"):

@@ -1063,10 +1063,8 @@ def test_ivfpq_retrieves_clusters_end_to_end(spark, tmp_path):
         assert len(found & cluster) >= 7, (q, sorted(found))
 
 
-class TestBloomDecontamination:
-    """The Bloom-prefilter path must be VALUE-IDENTICAL to the exact
-    semi-join path — false positives are removed by the exact verify,
-    false negatives are impossible."""
+class TestDecontamination:
+    """Train docs that leak eval shingles above the rate are dropped."""
 
     def _docs(self, spark):
         leak = "alpha beta gamma delta epsilon zeta"
@@ -1081,37 +1079,16 @@ class TestBloomDecontamination:
             rows, "doc_id BIGINT, text STRING, source STRING, lang STRING"
         )
 
-    def test_bloom_equals_exact_and_expected(self, spark):
+    def test_flags_leaking_train_docs(self, spark):
         from qradar_restapi_kafka_datapipeline_spark.operators.contamination import (
             decontaminate_train,
-            decontaminate_train_bloom,
         )
 
         docs = self._docs(spark)
-        exact = {r["doc_id"] for r in decontaminate_train(docs).collect()}
-        bloom = {r["doc_id"] for r in decontaminate_train_bloom(docs).collect()}
-        assert bloom == exact
+        kept = {r["doc_id"] for r in decontaminate_train(docs).collect()}
         # docs 0 and 5 are the eval split (%5==0); train doc 1 leaks 4/6
         # distinct shingles of eval doc 0 → flagged; 2 and 3 survive
-        assert exact == {2, 3}
-
-    def test_tiny_bitmap_false_positive_stress(self, spark):
-        """256-bit bitmap over the full corpus's eval shingles: nearly every
-        probe collides, so the exact verify must carry the decision alone."""
-        from qradar_restapi_kafka_datapipeline_spark.operators.contamination import (
-            decontaminate_train,
-            decontaminate_train_bloom,
-        )
-
-        docs = self._docs(spark)
-        tiny = {
-            r["doc_id"]
-            for r in decontaminate_train_bloom(
-                docs, m_bits=256, n_hashes=2
-            ).collect()
-        }
-        exact = {r["doc_id"] for r in decontaminate_train(docs).collect()}
-        assert tiny == exact
+        assert kept == {2, 3}
 
 
 class TestClusterRepresentatives:

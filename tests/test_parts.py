@@ -4,6 +4,7 @@ memo invalidation on swap, empty pipeline units, the union-find gate and
 temp-view hygiene of the bounded serves."""
 
 import os
+import shutil
 
 import pytest
 
@@ -142,6 +143,27 @@ def test_swap_drops_memoized_schema_of_the_swapped_tree(spark, tmp_path):
     assert ("artifact_schema", other) in schemas
 
 
+def test_swap_drops_memoized_stoplist_of_the_swapped_tree(spark, tmp_path):
+    """The text-index serve memoizes the stoplist it read under
+    ``("stoplist", <stoplist tree>)``; a swap of that tree or of the whole
+    index drops it, a swap of a sibling tree keeps it."""
+    index = str(tmp_path / "index")
+    stoplist = f"{index}/stoplist"
+    key = ("stoplist", stoplist)
+    memo = engine.session_state(spark)
+    spark.createDataFrame([("a b",)], "feat STRING").write.parquet(stoplist)
+    spark.createDataFrame([(1, 2)], "doc_id BIGINT, n2 BIGINT") \
+        .write.parquet(f"{index}/norms")
+
+    for live, dropped in ((stoplist, True), (f"{index}/norms", False),
+                          (index, True)):
+        assert T._index_stoplist(spark, index) == {"a b"}
+        assert key in memo
+        P.swap_dir(spark, live, f"{live}.tmp", f"{live}.old",
+                   lambda tmp: shutil.copytree(live, tmp), "test")
+        assert (key not in memo) == dropped, live
+
+
 def test_pipeline_skips_empty_unit_then_merges(spark, sf_dir, tmp_path):
     from qradar_restapi_kafka_datapipeline_spark.pipeline import Pipeline
     from qradar_restapi_kafka_datapipeline_spark.sources.registry import (
@@ -268,8 +290,10 @@ def test_driver_rows_reach_spark_only_through_local_relation():
 def test_aql_scalar_semantics_live_only_in_dialect():
     """INCIDR, ip2long and the longest-prefix match have one definition,
     ``plans/dialect.py``, which the AQL frontend inlines for both engines:
-    no module registers a session SQL function, and no module-level
-    function elsewhere defines IP, CIDR or network-name semantics."""
+    no module registers a session SQL function, no module-level function
+    elsewhere defines IP, CIDR or network-name semantics, and no SQL text
+    elsewhere spells an octet parse out (``split_part(ip, '.', n) AS
+    BIGINT``)."""
     import ast
     import re
 
@@ -277,6 +301,9 @@ def test_aql_scalar_semantics_live_only_in_dialect():
     dialect = os.path.join(pkg, "plans", "dialect.py")
     ip_name = re.compile(
         r"incidr|ip2long|ip_?to_?long|long_?to_?ip|cidr|network_?name|lpm", re.I
+    )
+    octet_parse = re.compile(
+        r"split_part\(\s*\w+\s*,\s*'\.'\s*,\s*\d+\s*\)\s*AS\s+BIGINT", re.I
     )
     hits = []
     for path in _package_files(pkg):
@@ -290,6 +317,9 @@ def test_aql_scalar_semantics_live_only_in_dialect():
         for node in ast.parse(src).body:
             if isinstance(node, ast.FunctionDef) and ip_name.search(node.name):
                 hits.append(f"{rel}:{node.lineno} {node.name}")
+        for m in octet_parse.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            hits.append(f"{rel}:{line} {m[0]}")
     assert not hits, hits
 
 

@@ -419,3 +419,100 @@ def test_chunk_knn_serving_broadcasts_query_vector(spark, reg, sf_dir):
     assert "BroadcastHashJoin" in plan
     for m in _re.finditer(r"\(\d+\) SortMergeJoin[^(]*(?:\n.*){0,4}", plan):
         assert "bucket" not in m.group(0), m.group(0)
+
+
+# --- per-call job budgets of the corpus operators ------------------------------
+# Counted in the status store; at small inputs each job is a fixed cost of
+# 140-230 ms, so a budget pins the operator's fixed overhead.  A budget may
+# only go down.
+
+
+def test_decontamination_job_budget_and_no_bitmap_join(spark, reg, count_jobs):
+    """The exact semi-join is the whole plan: no nested-loop join testing
+    bitmap bits (Catalyst ran the semi-join below it, so it filtered
+    nothing) and at most 7 jobs per call (10 with the bitmap)."""
+    from qradar_restapi_kafka_datapipeline_spark.operators.contamination import (
+        decontaminate_train_bloom,
+    )
+
+    def call():
+        return decontaminate_train_bloom(spark.table("documents")).select(
+            "doc_id", "source", "lang"
+        )
+
+    assert "BroadcastNestedLoopJoin" not in _formatted_plan(call())
+    assert count_jobs(lambda: call().collect()) <= 7
+
+
+def test_minhash_steady_call_job_budget(spark, reg, count_jobs):
+    """A steady ``minhash_lsh_pairs`` call runs at most 4 jobs: the shingle
+    counts ride the band rows, so no count join re-runs the signature
+    aggregate (6 jobs when it did)."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
+
+    def call():
+        D.minhash_lsh_pairs(spark.table("documents"), threshold=0.85).collect()
+
+    call()
+    assert count_jobs(call) <= 4
+
+
+def test_text_index_steady_serve_job_budget(spark, reg, tmp_path, count_jobs):
+    """A steady serve runs at most 3 jobs: the stoplist is read once per
+    session and the query weights are plan literals (5 jobs when the
+    stoplist was collected and a query relation broadcast per serve)."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import text as T
+
+    path = str(tmp_path / "text_index")
+    T.build_text_index(spark, path, dim=4096)
+    texts = [
+        r["text"]
+        for r in spark.table("documents").where("doc_id < 2").orderBy("doc_id")
+        .collect()
+    ]
+
+    def serve(i):
+        T.text_knn_from_index(
+            spark, path, texts[i], k=5, dim=4096, query_id=i, exclude_id=i
+        ).collect()
+
+    serve(0)
+    assert count_jobs(lambda: serve(1)) <= 3
+
+
+def test_codegen_cache_holds_a_search_pass(spark, reg, sf_dir, tmp_path):
+    """One pass of the 17 searches (the AQL corpus plus the routable
+    aggregates) and the six corpus operators generates more classes than
+    Spark's default 100-entry codegen cache holds; sized for the session,
+    a repeat of the first search compiles nothing."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import AQL_CORPUS
+    from qradar_restapi_kafka_datapipeline_spark.operators import contamination as C
+    from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
+    from qradar_restapi_kafka_datapipeline_spark.operators import sketches as K
+    from qradar_restapi_kafka_datapipeline_spark.operators import text as T
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    searches = [f"aql_{q}" for q in AQL_CORPUS] + sorted(
+        n for n in reg if n.startswith("aql_auto_rollup_")
+    )
+    assert len(searches) == 17
+    path = str(tmp_path / "text_index")
+    T.build_text_index(spark, path, dim=4096)
+    text = spark.table("documents").where("doc_id = 0").first()["text"]
+    for name in searches:
+        reg[name].run(spark, sf_dir).collect()
+    docs = spark.table("documents")
+    for df in (
+        D.minhash_lsh_pairs(docs, threshold=0.85),
+        T.hashed_semantic_pairs(
+            spark, dim=4096, threshold=0.5, prefix_m=4, max_bucket_docs=64
+        ),
+        C.decontaminate_train(docs),
+        spark.sql(K.kmv_distinct_sql("spark")),
+        spark.sql(K.hll_distinct_sql("spark")),
+        T.text_knn_from_index(spark, path, text, k=5, dim=4096, query_id=0),
+    ):
+        df.collect()
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount()
+    reg[searches[0]].run(spark, sf_dir).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiles

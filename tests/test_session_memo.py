@@ -99,3 +99,40 @@ def test_chunk_knn_memo_survives_materialize_gc(spark, sf_dir):
     assert entry.run(spark, sf_dir).count() == before
     assert before > 0
 
+
+
+def test_text_index_rebuild_drops_the_memoized_stoplist(spark, tmp_path):
+    """A text index rebuilt at the same path over a corpus with another
+    stoplist serves what a fresh session serves: the rebuild drops the
+    stoplist the earlier serve memoized.  Under the stale (empty)
+    stoplist the query's stopword bigram would count in its norm."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import text as T
+
+    schema = "doc_id BIGINT, text STRING"
+    spark.createDataFrame(
+        [(1, "red fox jumps high"), (2, "blue fish swims deep"),
+         (3, "green frog leaps far")], schema,
+    ).createOrReplaceTempView("__stoplist_corpus_a")
+    spark.createDataFrame(
+        [(1, "the cat red fox jumps"), (2, "the cat blue fish swims"),
+         (3, "the cat green frog leaps"), (4, "a dog sleeps")], schema,
+    ).createOrReplaceTempView("__stoplist_corpus_b")
+    path = str(tmp_path / "text_index")
+    key = ("stoplist", f"{path}/stoplist")
+    query = "the cat red fox jumps"
+
+    def serve(session):
+        return sorted(
+            T.text_knn_from_index(session, path, query, k=3, dim=4096)
+            .collect()
+        )
+
+    T.build_text_index(spark, path, dim=4096, source="__stoplist_corpus_a")
+    serve(spark)
+    assert engine.session_state(spark)[key] == frozenset()
+    T.build_text_index(spark, path, dim=4096, source="__stoplist_corpus_b")
+    assert key not in engine.session_state(spark)
+    got = serve(spark)
+    assert engine.session_state(spark)[key] == {"the cat"}
+    assert got == serve(spark.newSession())
+    assert got

@@ -299,7 +299,6 @@ def _uniform_ops(spark, k: int):
     from qradar_restapi_kafka_datapipeline_spark.operators.contamination import (
         contamination_report,
         decontaminate_train,
-        decontaminate_train_bloom,
     )
     from qradar_restapi_kafka_datapipeline_spark.operators.sessionize import (
         sessionize,
@@ -413,14 +412,9 @@ def _uniform_ops(spark, k: int):
                     gap_minutes=30,
                     agg_cols={"value": "total_value"},
                 ),
-                # round-5b: exact vs Bloom-prefiltered decontamination — the
-                # curve that justifies the broadcast bitmap: the exact path's
-                # semi-join shuffles EVERY train shingle, the bloom path only
-                # the candidates; both outputs are value-identical
+                # train-side decontamination: explode + semi-join against
+                # the distinct eval shingles
                 "decontaminate_train": lambda: decontaminate_train(
-                    spark.table("documents")
-                ),
-                "decontaminate_bloom": lambda: decontaminate_train_bloom(
                     spark.table("documents")
                 ),
                 # round-5b: CCNet terciles — bigram explode + vocab joins +
