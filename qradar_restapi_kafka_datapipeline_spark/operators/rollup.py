@@ -91,8 +91,11 @@ def merge_rollup(spark, increment: DataFrame, path: str,
 
     SummingMergeTree accepts unbounded lateness (rows merge whenever they arrive).
     Streaming watermarks can't, so the exact-parity mode is this batch MERGE:
-    read current ∪ increment → re-collapse → atomically replace affected day
-    partitions. Used by the foreachBatch sink (streaming/rollup_stream.py).
+    read current ∪ increment → re-collapse → overwrite the day partitions of
+    the result. ``current`` is the whole table, so every merge reads and
+    rewrites EVERY existing day, not only the increment's days: write cost
+    grows with the table, not with the increment. Used by the foreachBatch
+    sink (streaming/rollup_stream.py).
     """
     ms = _measures(measure)
     inc = summing_rollup(increment, measure=ms, time_col=time_col)
@@ -107,7 +110,8 @@ def merge_rollup(spark, increment: DataFrame, path: str,
         .groupBy(*[F.col(f"`{d}`") for d in dims])
         .agg(*[_AGG[fn](F.col(f"`{m}`")).alias(m) for m, fn in ms.items()])
     )
-    # Dynamic partition overwrite keeps untouched days in place.
+    # Dynamic partition overwrite replaces the days `merged` holds -- all of
+    # them, since `current` is unrestricted.
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

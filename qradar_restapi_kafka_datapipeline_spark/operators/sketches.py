@@ -200,22 +200,16 @@ def hll_registers_sql(
     """
 
 
-def hll_estimate_sql(
-    dialect: str,
-    regs_rel: str,
-    p: int = HLL_P,
-    exact_rel: str | None = None,
-) -> str:
-    """The estimator over ANY register relation: one self-auditing row
-    ``(m, zero_registers, distinct_est[, n_exact])``.
+def hll_estimate_sql(dialect: str, regs_rel: str, p: int = HLL_P) -> str:
+    """The estimator over ANY register relation: one row
+    ``(m, zero_registers, distinct_est)``.
 
     The 2^-r series is summed as EXACT integers (2^(RMAX-r) ≤ 2^51; total
     ≤ m·2^51 fits BIGINT) — summing doubles of mixed magnitude rounds
     differently per partial-sum order.  Missing buckets are zero registers
     (2^0 each → 2^RMAX integer units).  Doubles enter only in the final
     shared-text expression; Flajolet small-range correction (linear
-    counting) applies below 2.5m when zero registers exist.  ``exact_rel``
-    (a one-column relation of the keys) rides along as the audit column."""
+    counting) applies below 2.5m when zero registers exist."""
     m = 1 << p
     rmax = _HASH_BITS - p + 1
     # integer units per 2^0 register: 2^rmax, so the deepest rank r=rmax
@@ -223,21 +217,13 @@ def hll_estimate_sql(
     # m * 2^rmax = 2^(p + 61 - p) = 2^61 — BIGINT-safe at any p
     unit = float(2 ** rmax)
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    exact_cte = (
-        f", exact AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact "
-        f"FROM ({exact_rel}) ek)"
-        if exact_rel
-        else ""
-    )
-    exact_col = ", exact.n_exact" if exact_rel else ""
-    exact_join = ", exact" if exact_rel else ""
     return f"""
     WITH agg AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS nb,
              CAST(SUM(CAST(POWER(2.0, {rmax} - r) AS BIGINT)) AS BIGINT)
                AS s_int
       FROM ({regs_rel}) regs
-    ){exact_cte},
+    ),
     scored AS (
       SELECT nb, ({m} - nb) AS v,
              (CAST({alpha!r} AS DOUBLE) * {m} * {m})
@@ -250,8 +236,7 @@ def hll_estimate_sql(
            ROUND(CASE WHEN raw <= 2.5 * {m} AND v > 0
                       THEN {m} * LN({m} * 1.0 / v)
                       ELSE raw END + 1e-9, 6) AS distinct_est
-           {exact_col}
-    FROM scored{exact_join}
+    FROM scored
     """
 
 
@@ -261,12 +246,11 @@ def hll_distinct_sql(
     source: str = "events",
     p: int = HLL_P,
 ) -> str:
-    """Whole-corpus register build + estimate + exact-count audit column."""
+    """Whole-corpus register build + estimate.  No exact count rides
+    along: a ``SELECT DISTINCT`` over the corpus is the work the sketch
+    exists to avoid."""
     return hll_estimate_sql(
-        dialect,
-        hll_registers_sql(dialect, key_expr, source, p),
-        p,
-        exact_rel=f"SELECT DISTINCT {key_expr} AS k FROM {source}",
+        dialect, hll_registers_sql(dialect, key_expr, source, p), p
     )
 
 

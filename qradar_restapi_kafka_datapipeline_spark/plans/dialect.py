@@ -150,26 +150,40 @@ def fullnetworkname_expr(
     """AQL ``FULLNETWORKNAME(ip[, domainId])`` as a folded CASE (SURVEY §2 A11).
 
     For a plan-time-known network table a folded CASE beats a join: zero
-    shuffle, pure codegen.  Within a domain, branch order = prefix length
-    descending, so the first hit IS the longest prefix.  With ``domain_col``
-    the outer simple CASE selects that domain's chain — QRadar's LPM is
-    domain-scoped (reference qradar/input/queries.json:2-3 passes DomainID in
-    every call).  Without it, the chain of ``DEFAULT_DOMAIN`` applies (the
-    one-arg AQL form resolves in the default domain).  ``networks`` rows are
-    (domainId, cidr, name).
+    shuffle, pure codegen.  Branch order = prefix length descending, so the
+    first hit IS the longest prefix.  Without ``domain_col`` the chain of
+    ``DEFAULT_DOMAIN`` applies (the one-arg AQL form resolves in the default
+    domain).  With it, QRadar's LPM is domain-scoped (reference
+    qradar/input/queries.json:2-3 passes DomainID in every call): the CASE
+    has one WHEN per distinct (cidr, name) pair, guarded by the domains that
+    list it, so its size grows with the distinct networks, not with domains
+    × networks.  Restricted to one domain, the WHENs keep that domain's
+    chain order; a NULL or unlisted domain matches none and gives
+    ``default``.  ``networks`` rows are (domainId, cidr, name).
     """
     networks = DEFAULT_NETWORKS if networks is None else networks
-    by_domain: dict[int, list[tuple[str, str]]] = {}
-    for dom, cidr, name in networks:
-        by_domain.setdefault(dom, []).append((cidr, name))
     ip = ip2long_expr(col)
     if domain_col is None:
-        return _lpm_chain(ip, by_domain.get(DEFAULT_DOMAIN, []), default)
+        return _lpm_chain(
+            ip,
+            [(cidr, name) for dom, cidr, name in networks if dom == DEFAULT_DOMAIN],
+            default,
+        )
+    domains: dict[tuple[str, str], set[int]] = {}
+    for dom, cidr, name in networks:
+        domains.setdefault((cidr, name), set()).add(dom)
+    parsed = []
+    for (cidr, name), doms in domains.items():
+        net, mask = _parse_cidr(cidr)
+        parsed.append((-bin(mask).count("1"), name, net, mask, sorted(doms)))
+    parsed.sort(key=lambda t: t[:3])
+    dom_expr = f"CAST({domain_col} AS BIGINT)"
     whens = " ".join(
-        f"WHEN {dom} THEN {_lpm_chain(ip, doms, default)}"
-        for dom, doms in sorted(by_domain.items())
+        f"WHEN {dom_expr} IN ({', '.join(map(str, doms))}) AND (({ip} & {mask}) = {net}) "
+        f"THEN '{name}'"
+        for _plen, name, net, mask, doms in parsed
     )
-    return f"(CASE CAST({domain_col} AS BIGINT) {whens} ELSE '{default}' END)"
+    return f"(CASE {whens} ELSE '{default}' END)"
 
 
 # --- dimension decodes -------------------------------------------------------

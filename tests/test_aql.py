@@ -165,7 +165,8 @@ def test_fullnetworkname_threads_domain_argument():
     two = translate(
         "SELECT FULLNETWORKNAME(sourceip, domainId) AS n FROM events", dialect="spark"
     )
-    # two-arg form emits the per-domain outer CASE; one-arg form does not
+    # two-arg form guards each network's WHEN with the domains that list it;
+    # one-arg form has no domain test
     assert "CAST(domainId AS BIGINT)" in two
     assert "CAST(" not in one.split("FROM")[0] or "domainId" not in one
     # the domains genuinely disagree on the 10.64/10 overlay

@@ -119,3 +119,17 @@ def test_full_network_name_longest_prefix_and_other(run_both):
     # the domains disagree on 10.70.1.1 (10.64/10 is renamed in 1, absent in 2)
     assert {_lpm("10.70.1.1", d) for d in range(5)} == {
         "net_10_64", "net_dmz_d1", "net_10"}
+
+
+def test_full_network_name_one_when_per_distinct_network():
+    """The two-argument form has one WHEN per distinct (cidr, name) pair,
+    so its size follows the distinct networks, not domains × networks: 7
+    for DEFAULT_NETWORKS, and still 7 with the six base CIDRs copied over
+    50 more domains."""
+    base = [(cidr, name) for dom, cidr, name in DEFAULT_NETWORKS if dom == 0]
+    wide = DEFAULT_NETWORKS + [
+        (dom, cidr, name) for dom in range(5, 55) for cidr, name in base
+    ]
+    for networks in (DEFAULT_NETWORKS, wide):
+        expr = fullnetworkname_expr("ip", domain_col="d", networks=networks)
+        assert expr.count("WHEN ") == 7, expr

@@ -480,6 +480,110 @@ def test_text_index_steady_serve_job_budget(spark, reg, tmp_path, count_jobs):
     assert count_jobs(lambda: serve(1)) <= 3
 
 
+def test_hll_distinct_job_budget(spark, reg, count_jobs):
+    """A whole-corpus HLL estimate runs at most 3 jobs: the register build
+    and the estimate, with no exact ``SELECT DISTINCT`` audit beside them
+    (6 jobs when it rode along)."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import sketches as K
+
+    def call():
+        spark.sql(K.hll_distinct_sql("spark")).collect()
+
+    call()
+    assert count_jobs(call) <= 3
+
+
+# --- generated code per search ------------------------------------------------
+# START/STOP reach the scan as TIMESTAMP literals, which codegen inlines as
+# Java constants: every new window compiles its scan stage again.  So the
+# code generated per search must stay small, and each method must stay under
+# HotSpot's 8,000-byte huge-method limit, past which it runs interpreted.
+
+
+def _codegen_stages(df):
+    """``(source chars, largest method's bytecode bytes)`` per
+    WholeStageCodegenExec in ``df``'s final executed plan.  The chars are
+    the length of the source a new window compiles (what
+    ``CodegenMetrics.METRIC_SOURCE_CODE_SIZE`` records per compile); the
+    bytes come from compiling it with ``CodeGenerator.compile``."""
+    jvm = df.sparkSession._jvm
+    codegen = getattr(
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen, "CodeGenerator$"
+    ).__getattr__("MODULE$")
+    stages = []
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "WholeStageCodegenExec":
+            code = node.doCodeGen()._2()
+            stats = codegen.compile(code)._2()
+            stages.append((len(code.body()), stats.maxMethodCodeSize()))
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        for seq in (node.children(), node.subqueries()):
+            for i in range(seq.size()):
+                walk(seq.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return stages
+
+
+@pytest.fixture(scope="module")
+def served_fe(spark, reg, tmp_path_factory):
+    """A frontend over qevents materialized to parquet, as the search
+    workload serves it (the registry's view re-derives every column)."""
+    from qradar_restapi_kafka_datapipeline_spark.plans.aql import AQLFrontend
+
+    path = str(tmp_path_factory.mktemp("served") / "qevents")
+    spark.table("qevents").write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("qevents_served")
+    return AQLFrontend(spark, events_view="qevents_served")
+
+
+def test_search_methods_fit_the_jit(spark, reg, sf_dir, served_fe):
+    """Every generated method of the 17 searches (the AQL corpus over
+    served qevents plus the routable aggregates) is under 8,000 bytes of
+    bytecode.  With per-domain FULLNETWORKNAME chains, the raw-event
+    searches' processNext was 12,039 and 9,774 bytes."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import (
+        AQL_CORPUS,
+        DEFAULT_PARAMS,
+    )
+
+    dfs = {q: served_fe.sql(aql, DEFAULT_PARAMS) for q, aql in AQL_CORPUS.items()}
+    dfs.update(
+        (n, reg[n].run(spark, sf_dir)) for n in reg if n.startswith("aql_auto_rollup_")
+    )
+    assert len(dfs) == 17
+    for name, df in dfs.items():
+        df.collect()
+        stages = _codegen_stages(df)
+        assert stages, name
+        for _chars, method_bytes in stages:
+            assert 0 < method_bytes < 8000, (name, stages)
+
+
+def test_new_window_search_source_budget(served_fe):
+    """A new window's AllowedInboundTraffic search compiles at most 60,600
+    chars of source per stage (90,035 with per-domain FULLNETWORKNAME
+    chains).  A budget may only go down."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import (
+        AQL_CORPUS,
+        DEFAULT_PARAMS,
+    )
+
+    params = dict(
+        DEFAULT_PARAMS,
+        start_time="2024-01-13 00:00:00",
+        stop_time="2024-01-14 00:00:00",
+    )
+    df = served_fe.sql(AQL_CORPUS["AllowedInboundTraffic"], params)
+    df.collect()
+    assert max(chars for chars, _ in _codegen_stages(df)) <= 60_600
+
+
 def test_codegen_cache_holds_a_search_pass(spark, reg, sf_dir, tmp_path):
     """One pass of the 17 searches (the AQL corpus plus the routable
     aggregates) and the six corpus operators generates more classes than

@@ -42,7 +42,12 @@ def value_hash(df) -> tuple[int, str, list[str]]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefixes = tuple(sys.argv[2:])
-    spark = get_spark(app_name="check-correctness")
+    # no console progress bar: its \r-written bars would land inside the
+    # OK/FAIL lines when stderr is folded into stdout
+    spark = get_spark(
+        app_name="check-correctness",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
