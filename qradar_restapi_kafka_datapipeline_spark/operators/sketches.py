@@ -200,9 +200,13 @@ def hll_registers_sql(
     """
 
 
-def hll_estimate_sql(dialect: str, regs_rel: str, p: int = HLL_P) -> str:
-    """The estimator over ANY register relation: one row
-    ``(m, zero_registers, distinct_est)``.
+def hll_estimate_sql(
+    dialect: str, regs_rel: str, p: int = HLL_P, group_col: str | None = None
+) -> str:
+    """The estimator over ANY register relation.  Without ``group_col``
+    it is one row ``(m, zero_registers, distinct_est)``, also over an empty
+    relation; with it, one ``(group_col, zero_registers, distinct_est)``
+    row per group of a ``(group_col, bucket, r)`` relation.
 
     The 2^-r series is summed as EXACT integers (2^(RMAX-r) ≤ 2^51; total
     ≤ m·2^51 fits BIGINT) — summing doubles of mixed magnitude rounds
@@ -217,21 +221,25 @@ def hll_estimate_sql(dialect: str, regs_rel: str, p: int = HLL_P) -> str:
     # m * 2^rmax = 2^(p + 61 - p) = 2^61 — BIGINT-safe at any p
     unit = float(2 ** rmax)
     alpha = 0.7213 / (1.0 + 1.079 / m)
+    key = f"{group_col}, " if group_col else ""
+    group_by = f"GROUP BY {group_col}" if group_col else ""
+    out_key = group_col or f"CAST({m} AS BIGINT) AS m"
     return f"""
     WITH agg AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS nb,
+      SELECT {key}CAST(COUNT(*) AS BIGINT) AS nb,
              CAST(SUM(CAST(POWER(2.0, {rmax} - r) AS BIGINT)) AS BIGINT)
                AS s_int
       FROM ({regs_rel}) regs
+      {group_by}
     ),
     scored AS (
-      SELECT nb, ({m} - nb) AS v,
+      SELECT {key}({m} - nb) AS v,
              (CAST({alpha!r} AS DOUBLE) * {m} * {m})
                / ((CAST(s_int AS DOUBLE) + ({m} - nb) * {unit!r})
                   / {unit!r}) AS raw
       FROM agg
     )
-    SELECT CAST({m} AS BIGINT) AS m,
+    SELECT {out_key},
            CAST(v AS BIGINT) AS zero_registers,
            ROUND(CASE WHEN raw <= 2.5 * {m} AND v > 0
                       THEN {m} * LN({m} * 1.0 / v)
@@ -1096,44 +1104,6 @@ def hll_hourly_registers_sql(
     """
 
 
-def hll_grouped_estimate_sql(
-    dialect: str,
-    regs_rel: str,
-    group_col: str = "day_id",
-    p: int = HLL_P,
-) -> str:
-    """The estimator per GROUP over any ``({group_col}, bucket, r)``
-    relation — same exact-integer series and shared-text doubles as
-    :func:`hll_estimate_sql`, one output row per group."""
-    m = 1 << p
-    rmax = _HASH_BITS - p + 1
-    unit = float(2 ** rmax)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    return f"""
-    WITH agg AS (
-      SELECT {group_col},
-             CAST(COUNT(*) AS BIGINT) AS nb,
-             CAST(SUM(CAST(POWER(2.0, {rmax} - r) AS BIGINT)) AS BIGINT)
-               AS s_int
-      FROM ({regs_rel}) regs
-      GROUP BY {group_col}
-    ),
-    scored AS (
-      SELECT {group_col}, ({m} - nb) AS v,
-             (CAST({alpha!r} AS DOUBLE) * {m} * {m})
-               / ((CAST(s_int AS DOUBLE) + ({m} - nb) * {unit!r})
-                  / {unit!r}) AS raw
-      FROM agg
-    )
-    SELECT {group_col},
-           CAST(v AS BIGINT) AS zero_registers,
-           ROUND(CASE WHEN raw <= 2.5 * {m} AND v > 0
-                      THEN {m} * LN({m} * 1.0 / v)
-                      ELSE raw END + 1e-9, 6) AS distinct_est
-    FROM scored
-    """
-
-
 def hll_daily_from_hourly_sql(
     dialect: str,
     key_expr: str = "CAST(user_id AS STRING)",
@@ -1152,7 +1122,7 @@ def hll_daily_from_hourly_sql(
       FROM ({hourly}) h
       GROUP BY hour_id {div} 24, bucket
     """
-    return hll_grouped_estimate_sql(dialect, daily_regs, "day_id", p)
+    return hll_estimate_sql(dialect, daily_regs, p, group_col="day_id")
 
 
 def hll_daily_direct_sql(
@@ -1181,7 +1151,7 @@ def hll_daily_direct_sql(
       ) ranked
       GROUP BY day_id, bucket
     """
-    return hll_grouped_estimate_sql(dialect, daily_regs, "day_id", p)
+    return hll_estimate_sql(dialect, daily_regs, p, group_col="day_id")
 
 
 def hll_cube_streaming(
@@ -1230,7 +1200,7 @@ def hll_cube_streaming(
       FROM parquet.`{cube_path}`
       GROUP BY hour_id {div} 24, bucket
     """
-    return spark.sql(hll_grouped_estimate_sql("spark", daily, "day_id", p))
+    return spark.sql(hll_estimate_sql("spark", daily, p, group_col="day_id"))
 
 
 def hist_quantiles(
@@ -1430,7 +1400,7 @@ def hll_rolling_distinct_sql(
         ON dd.day_id = c.t_day
       GROUP BY dd.day_id, c.bucket
     """
-    return hll_grouped_estimate_sql(dialect, win, "day_id", p)
+    return hll_estimate_sql(dialect, win, p, group_col="day_id")
 
 
 def hll_rolling_distinct(
@@ -1463,7 +1433,7 @@ def hll_rolling_distinct(
       GROUP BY dd.day_id, c.bucket
     """
     return spark.sql(
-        hll_grouped_estimate_sql("spark", win, "day_id", p),
+        hll_estimate_sql("spark", win, p, group_col="day_id"),
         regs=local_relation(spark, day_regs.toArrow(), day_regs.schema),
     )
 

@@ -375,30 +375,70 @@ def _inject_where_pred(q: str, pred: str) -> str:
     return q[:at] + f" WHERE {pred} " + q[at:]
 
 
-def _rewrite_last(q: str, time_col: str, now_expr: str | None) -> str:
+def _time_bound(dialect: str, time_col: str, op: str, bound: str) -> str:
+    """``time_col op bound`` for one time-range bound.
+
+    For Spark both sides compare as ``DECIMAL(18,0)`` microseconds.  Constant
+    folding turns the bound into a DECIMAL literal, and codegen keeps a
+    DECIMAL literal in the stage's ``references`` array instead of writing it
+    into the Java source (a TIMESTAMP literal is written in as a ``long``),
+    so every window generates the same source and hits the codegen cache.
+    The precision matters: a cast from BIGINT to ``DECIMAL(20,0)`` or wider
+    is an up-cast, and ``UnwrapCastInBinaryComparison`` turns it back into a
+    BIGINT compare with a ``long`` literal.  ``unix_micros`` is exact at µs
+    precision, so the half-open bounds keep their meaning, and a NULL time
+    matches neither bound.  DuckDB (the oracle) compares timestamps."""
+    if dialect != "spark":
+        return f"{time_col} {op} {bound}"
+    return (
+        f"CAST(unix_micros({time_col}) AS DECIMAL(18,0)) {op} "
+        f"CAST(unix_micros({bound}) AS DECIMAL(18,0))"
+    )
+
+
+def _rewrite_last(
+    q: str, time_col: str, now_expr: str | None, dialect: str = "spark"
+) -> str:
     """AQL ``LAST n MINUTES|HOURS|DAYS`` → sliding time-range predicate.
 
     ``now_expr`` anchors the window (SQL expression text); defaults to the
     engine clock — pass a timestamp literal for reproducible runs/tests.
+    For Spark the bound is a ``DECIMAL(18,0)`` µs compare (see
+    :func:`_time_bound`, which also says why 18 and not wider): a
+    per-search value must reach Spark as a DECIMAL(≤18,0) or STRING literal,
+    never as a TIMESTAMP, DATE or numeric one, which codegen writes into the
+    Java source.  ``current_timestamp()`` folds to a new value on every
+    call, so as a TIMESTAMP literal it recompiled the scan stage of even a
+    repeated search.
     """
     m = re.search(r"\bLAST\s+(\d+)\s+(MINUTES?|HOURS?|DAYS?)\b", q, flags=re.I)
     if not m:
         return q
     n, unit = m.group(1), m.group(2).upper().rstrip("S")
     now = now_expr or "current_timestamp()"
-    pred = f"({time_col} >= {now} - INTERVAL '{n}' {unit})"
+    bound = f"{now} - INTERVAL '{n}' {unit}"
+    pred = f"({_time_bound(dialect, time_col, '>=', bound)})"
     return _inject_where_pred(q[: m.start()] + q[m.end():], pred)
 
 
 def _rewrite_start_stop(
-    q: str, time_col: str, partition_col: str | None = None
+    q: str, time_col: str, partition_col: str | None = None, dialect: str = "spark"
 ) -> str:
     """AQL ``START '{t0}' STOP '{t1}'`` → half-open time-range predicate.
+
+    For Spark each bound is a ``DECIMAL(18,0)`` µs compare over the
+    ``timestamp'<t>'`` literal (see :func:`_time_bound`, which also says why
+    18 and not wider): a per-search value must reach Spark as a
+    DECIMAL(≤18,0) or STRING literal, never as a TIMESTAMP, DATE or numeric
+    one, which codegen writes into the Java source — a new window would
+    then compile its scan stage again.  The literal itself still parses as
+    before, so the frontend accepts and rejects the same time strings.
 
     With ``partition_col`` set (an ``event_date``-style DAY partition column
     on the events relation), the rewrite ALSO derives the implied partition
     predicate — constant DATE bounds Catalyst turns into file-level partition
-    pruning.  This is the 100 TB scan-economics path: the ``ts`` bound alone
+    pruning.  They land in PartitionFilters, not in generated code.  This is
+    the 100 TB scan-economics path: the ``ts`` bound alone
     filters rows AFTER the scan (Spark does not infer ``date(ts)`` bounds
     from ``ts`` bounds), so without the derived predicate a 2-day query
     still reads every day's files.  STOP is exclusive, so a stop at exactly
@@ -408,7 +448,9 @@ def _rewrite_start_stop(
     if not m:
         return q
     t0, t1 = m.group(1), m.group(2)
-    pred = f"({time_col} >= timestamp'{t0}' AND {time_col} < timestamp'{t1}')"
+    lo = _time_bound(dialect, time_col, ">=", f"timestamp'{t0}'")
+    hi = _time_bound(dialect, time_col, "<", f"timestamp'{t1}'")
+    pred = f"({lo} AND {hi})"
     if partition_col:
         import datetime as _dt
 
@@ -472,8 +514,8 @@ def translate(
     q = _rewrite_refset(q, ref_sets_view)
     q = _inline_functions(q, dialect)
     q = _rewrite_quotes(q, dialect)
-    q = _rewrite_start_stop(q, time_col, partition_col)
-    q = _rewrite_last(q, time_col, now_expr)
+    q = _rewrite_start_stop(q, time_col, partition_col, dialect)
+    q = _rewrite_last(q, time_col, now_expr, dialect)
     if dialect == "spark" and columns:
         q = _normalize_identifier_case(q, columns)
     return q
@@ -488,7 +530,9 @@ def bind_parameters(
 
     Three shapes, in order: ``timestamp'{p}'`` (the START/STOP rewrite's
     output) becomes ``CAST(:p AS TIMESTAMP)`` so the bound string still
-    compares as a timestamp; a placeholder that IS a whole string literal
+    compares as a timestamp (for Spark it then sits inside the DECIMAL µs
+    bound, which folds to a DECIMAL literal as in the spliced form); a
+    placeholder that IS a whole string literal
     (``'{p}'``) becomes ``:p``; bare ``{p}`` OUTSIDE string literals becomes
     ``:p`` (a brace inside a literal's text is data, never a parameter).
     Returns the rewritten SQL and the referenced parameter names — bind with

@@ -157,7 +157,8 @@ def fullnetworkname_expr(
     qradar/input/queries.json:2-3 passes DomainID in every call): the CASE
     has one WHEN per distinct (cidr, name) pair, guarded by the domains that
     list it, so its size grows with the distinct networks, not with domains
-    × networks.  Restricted to one domain, the WHENs keep that domain's
+    × networks.  A guard over a contiguous run of domains is a ``BETWEEN``.
+    Restricted to one domain, the WHENs keep that domain's
     chain order; a NULL or unlisted domain matches none and gives
     ``default``.  ``networks`` rows are (domainId, cidr, name).
     """
@@ -178,9 +179,15 @@ def fullnetworkname_expr(
         parsed.append((-bin(mask).count("1"), name, net, mask, sorted(doms)))
     parsed.sort(key=lambda t: t[:3])
     dom_expr = f"CAST({domain_col} AS BIGINT)"
+
+    def guard(doms: list[int]) -> str:
+        # a contiguous run is two compares, not one per domain
+        if len(doms) > 1 and doms[-1] - doms[0] == len(doms) - 1:
+            return f"{dom_expr} BETWEEN {doms[0]} AND {doms[-1]}"
+        return f"{dom_expr} IN ({', '.join(map(str, doms))})"
+
     whens = " ".join(
-        f"WHEN {dom_expr} IN ({', '.join(map(str, doms))}) AND (({ip} & {mask}) = {net}) "
-        f"THEN '{name}'"
+        f"WHEN {guard(doms)} AND (({ip} & {mask}) = {net}) THEN '{name}'"
         for _plen, name, net, mask, doms in parsed
     )
     return f"(CASE {whens} ELSE '{default}' END)"

@@ -58,10 +58,11 @@ def _nulls_last(row):
 def run_both(spark):
     """Run one SQL text in Spark and in DuckDB (the oracle engine).  Each
     ``{name}`` in the text is a relation given as ``name=(ddl, rows)``;
-    returns both results as sorted lists of tuples (NULLs last)."""
+    returns both results as sorted lists of tuples (NULLs last).
+    ``duck_sql`` runs in DuckDB instead, where the dialects' texts differ."""
     import duckdb
 
-    def run(sql: str, **relations):
+    def run(sql: str, duck_sql: str | None = None, **relations):
         con = duckdb.connect()
         dfs = {}
         for name, (ddl, rows) in relations.items():
@@ -70,7 +71,9 @@ def run_both(spark):
             con.executemany(f"INSERT INTO {name} VALUES ({marks})", rows)
             dfs[name] = spark.createDataFrame(rows, ddl)
         got_spark = [tuple(r) for r in spark.sql(sql, **dfs).collect()]
-        got_duck = con.execute(sql.format(**{n: n for n in relations})).fetchall()
+        got_duck = con.execute(
+            (duck_sql or sql).format(**{n: n for n in relations})
+        ).fetchall()
         con.close()
         return sorted(got_spark, key=_nulls_last), sorted(got_duck, key=_nulls_last)
 

@@ -90,7 +90,19 @@ def test_translate_shapes():
     assert "`Event Count`" in out and "`Rule Name`" in out
     assert "INCIDR" not in out.upper() or "& 4278190080" in out  # folded
     assert "IN (SELECT value FROM ref_sets" in out
-    assert "ts >= timestamp'2024-01-01 00:00:00'" in out
+    # Spark compares DECIMAL(18,0) µs, which codegen keeps out of the Java
+    # source; the DuckDB oracle keeps its TIMESTAMP bounds
+    assert (
+        "(CAST(unix_micros(ts) AS DECIMAL(18,0)) >= "
+        "CAST(unix_micros(timestamp'2024-01-01 00:00:00') AS DECIMAL(18,0)) AND "
+        "CAST(unix_micros(ts) AS DECIMAL(18,0)) < "
+        "CAST(unix_micros(timestamp'2024-01-02 00:00:00') AS DECIMAL(18,0)))"
+    ) in out
+    duck = translate(aql, dialect="duckdb")
+    assert (
+        "(ts >= timestamp'2024-01-01 00:00:00' AND ts < timestamp'2024-01-02 00:00:00')"
+    ) in duck
+    assert "unix_micros" not in duck
     # case-normalized to canonical column
     assert "destinationip IN" in out
 
@@ -111,13 +123,19 @@ def test_translate_last_clause_with_group_by():
     aql = ("SELECT eventName, SUM(eventCount) AS total FROM events "
            "WHERE magnitude > 3 GROUP BY eventName ORDER BY total DESC "
            "LIMIT 5 LAST 30 MINUTES")
-    out = translate(aql, dialect="spark",
-                    now_expr="timestamp'2024-01-15 12:00:00'")
+    now = "timestamp'2024-01-15 12:00:00'"
+    out = translate(aql, dialect="spark", now_expr=now)
     assert "LAST" not in out.upper().replace("'", "")
-    assert "ts >= timestamp'2024-01-15 12:00:00' - INTERVAL '30' MINUTE" in out
+    assert (
+        "(CAST(unix_micros(ts) AS DECIMAL(18,0)) >= CAST(unix_micros("
+        "timestamp'2024-01-15 12:00:00' - INTERVAL '30' MINUTE) AS DECIMAL(18,0)))"
+    ) in out
     assert out.index("INTERVAL") < out.index("GROUP BY")  # pred inside WHERE
     assert "AND (magnitude > 3)" in out
     assert "ORDER BY total DESC" in out and "LIMIT 5" in out
+    duck = translate(aql, dialect="duckdb", now_expr=now)
+    assert "(ts >= timestamp'2024-01-15 12:00:00' - INTERVAL '30' MINUTE)" in duck
+    assert duck.index("INTERVAL") < duck.index("GROUP BY")
 
 
 def test_last_clause_executes(frontend):
@@ -381,14 +399,94 @@ def test_non_iso_start_stop_skips_partition_bounds_not_translation():
     from qradar_restapi_kafka_datapipeline_spark.plans.aql import _rewrite_start_stop
 
     q = "SELECT * FROM ev START '01/02/2024 00:00' STOP '01/03/2024 00:00'"
-    out = _rewrite_start_stop(q, "ts", partition_col="event_date")
+    out = _rewrite_start_stop(q, "ts", partition_col="event_date", dialect="spark")
     assert "event_date" not in out  # pruning skipped, not raised
-    assert "ts >= timestamp'01/02/2024 00:00'" in out
-    # ISO bounds still derive the pruning predicate
+    assert (
+        "CAST(unix_micros(ts) AS DECIMAL(18,0)) >= "
+        "CAST(unix_micros(timestamp'01/02/2024 00:00') AS DECIMAL(18,0))"
+    ) in out
+    duck = _rewrite_start_stop(q, "ts", partition_col="event_date", dialect="duckdb")
+    assert "event_date" not in duck
+    assert "ts >= timestamp'01/02/2024 00:00'" in duck
+    # ISO bounds still derive the pruning predicate, as DATE literals in both
+    # dialects (they prune at file listing, outside the generated code)
     q2 = "SELECT * FROM ev START '2024-01-02 00:00:00' STOP '2024-01-03 00:00:00'"
-    out2 = _rewrite_start_stop(q2, "ts", partition_col="event_date")
-    assert "event_date >= DATE'2024-01-02'" in out2
-    assert "event_date <= DATE'2024-01-02'" in out2
+    for dialect in ("spark", "duckdb"):
+        out2 = _rewrite_start_stop(q2, "ts", partition_col="event_date", dialect=dialect)
+        assert "event_date >= DATE'2024-01-02'" in out2
+        assert "event_date <= DATE'2024-01-02'" in out2
+
+
+# Rows at each edge of START '2024-01-02 00:00:00' STOP '2024-01-03 00:00:00',
+# plus a NULL time.  The events relation casts the strings in each engine, so
+# no Python-side time zone enters.
+_EDGE_ROWS = [
+    (1, "2024-01-01 23:59:59.999999"),  # START - 1 µs
+    (2, "2024-01-02 00:00:00"),  # START
+    (3, "2024-01-02 23:59:59.999999"),  # STOP - 1 µs
+    (4, "2024-01-03 00:00:00"),  # STOP
+    (5, None),
+]
+_EDGE_VIEW = "(SELECT id, CAST(ts_s AS TIMESTAMP) AS ts FROM {ev}) e"
+
+
+def _edge_run(run_both, aql, **kw):
+    spark_sql, duck_sql = (
+        translate(aql, dialect=d, events_view=_EDGE_VIEW, **kw)
+        for d in ("spark", "duckdb")
+    )
+    assert "DECIMAL(18,0)" in spark_sql and "unix_micros" not in duck_sql
+    return run_both(
+        spark_sql, duck_sql=duck_sql, ev=("id INT, ts_s STRING", _EDGE_ROWS)
+    )
+
+
+def test_time_bounds_keep_edges_in_both_engines(run_both):
+    """Spark's DECIMAL µs bounds and DuckDB's TIMESTAMP bounds keep the same
+    rows: START is inclusive, STOP exclusive, at µs precision, and a NULL
+    time matches no bound."""
+    got = _edge_run(
+        run_both,
+        "SELECT id FROM events "
+        "START '2024-01-02 00:00:00' STOP '2024-01-03 00:00:00'",
+    )
+    assert got[0] == got[1] == [(2,), (3,)]
+    got = _edge_run(
+        run_both,
+        "SELECT id FROM events LAST 1 DAYS",
+        now_expr="timestamp'2024-01-03 00:00:00'",
+    )
+    assert got[0] == got[1] == [(2,), (3,), (4,)]
+
+
+@pytest.mark.parametrize(
+    "t0",
+    [
+        "2024-01-02 00:00:00",
+        "2024-01-02",
+        "2024-01-02T00:00:00",
+        "2024-01-02 00:00:00.000001",
+        "01/02/2024 00:00",
+        "2024-13-01 00:00:00",
+        "not a time",
+    ],
+)
+def test_time_bound_accepts_the_same_start_strings(spark, t0):
+    """The DECIMAL bound wraps the same ``timestamp'<t>'`` literal, so
+    Spark accepts or rejects a START string exactly as the plain TIMESTAMP
+    compare does (the DuckDB-dialect text, which is that compare), and an
+    accepted one keeps the same rows."""
+    ev = spark.createDataFrame(_EDGE_ROWS, "id INT, ts_s STRING")
+    aql = f"SELECT id FROM events START '{t0}' STOP '2024-01-03 00:00:00'"
+
+    def outcome(dialect):
+        sql = translate(aql, dialect=dialect, events_view=_EDGE_VIEW)
+        try:
+            return sorted(r.id for r in spark.sql(sql, ev=ev).collect())
+        except Exception as e:  # the parse error of a bad literal
+            return type(e).__name__
+
+    assert outcome("spark") == outcome("duckdb")
 
 
 @pytest.mark.skipif(not CORPUS, reason="reference corpus not available")

@@ -494,30 +494,22 @@ def test_hll_distinct_job_budget(spark, reg, count_jobs):
 
 
 # --- generated code per search ------------------------------------------------
-# START/STOP reach the scan as TIMESTAMP literals, which codegen inlines as
-# Java constants: every new window compiles its scan stage again.  So the
-# code generated per search must stay small, and each method must stay under
-# HotSpot's 8,000-byte huge-method limit, past which it runs interpreted.
+# Every per-search value reaches the plan as a DECIMAL(18,0) or STRING
+# literal, which codegen keeps in the stage's ``references`` array, so a new
+# window generates the same source as the last one and compiles nothing.
+# What a search compiles once must still stay small, and each generated
+# method must stay under HotSpot's 8,000-byte huge-method limit, past which
+# it runs interpreted.
 
 
-def _codegen_stages(df):
-    """``(source chars, largest method's bytecode bytes)`` per
-    WholeStageCodegenExec in ``df``'s final executed plan.  The chars are
-    the length of the source a new window compiles (what
-    ``CodegenMetrics.METRIC_SOURCE_CODE_SIZE`` records per compile); the
-    bytes come from compiling it with ``CodeGenerator.compile``."""
-    jvm = df.sparkSession._jvm
-    codegen = getattr(
-        jvm.org.apache.spark.sql.catalyst.expressions.codegen, "CodeGenerator$"
-    ).__getattr__("MODULE$")
-    stages = []
+def _codegen_nodes(df):
+    """Every WholeStageCodegenExec in ``df``'s final executed plan."""
+    nodes = []
 
     def walk(node):
         kind = node.getClass().getSimpleName()
         if kind == "WholeStageCodegenExec":
-            code = node.doCodeGen()._2()
-            stats = codegen.compile(code)._2()
-            stages.append((len(code.body()), stats.maxMethodCodeSize()))
+            nodes.append(node)
         if kind == "AdaptiveSparkPlanExec":
             return walk(node.executedPlan())
         if kind.endswith("QueryStageExec"):
@@ -527,7 +519,30 @@ def _codegen_stages(df):
                 walk(seq.apply(i))
 
     walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def _codegen_stages(df):
+    """``(source chars, largest method's bytecode bytes)`` per
+    WholeStageCodegenExec in ``df``'s final executed plan.  The chars are
+    the length of the source a search compiles (what
+    ``CodegenMetrics.METRIC_SOURCE_CODE_SIZE`` records per compile); the
+    bytes come from compiling it with ``CodeGenerator.compile``."""
+    codegen = getattr(
+        df.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions.codegen,
+        "CodeGenerator$",
+    ).__getattr__("MODULE$")
+    stages = []
+    for node in _codegen_nodes(df):
+        code = node.doCodeGen()._2()
+        stats = codegen.compile(code)._2()
+        stages.append((len(code.body()), stats.maxMethodCodeSize()))
     return stages
+
+
+def _stage_bodies(df):
+    """The generated source of each codegen stage in ``df``'s final plan."""
+    return sorted(node.doCodeGen()._2().body() for node in _codegen_nodes(df))
 
 
 @pytest.fixture(scope="module")
@@ -566,9 +581,10 @@ def test_search_methods_fit_the_jit(spark, reg, sf_dir, served_fe):
 
 
 def test_new_window_search_source_budget(served_fe):
-    """A new window's AllowedInboundTraffic search compiles at most 60,600
-    chars of source per stage (90,035 with per-domain FULLNETWORKNAME
-    chains).  A budget may only go down."""
+    """AllowedInboundTraffic's largest stage is at most 57,265 chars of
+    source (90,035 with per-domain FULLNETWORKNAME chains, 60,600 with
+    TIMESTAMP bounds and IN-listed domain guards).  A budget may only go
+    down."""
     from qradar_restapi_kafka_datapipeline_spark.aql_corpus import (
         AQL_CORPUS,
         DEFAULT_PARAMS,
@@ -581,7 +597,7 @@ def test_new_window_search_source_budget(served_fe):
     )
     df = served_fe.sql(AQL_CORPUS["AllowedInboundTraffic"], params)
     df.collect()
-    assert max(chars for chars, _ in _codegen_stages(df)) <= 60_600
+    assert max(chars for chars, _ in _codegen_stages(df)) <= 57_265
 
 
 def test_codegen_cache_holds_a_search_pass(spark, reg, sf_dir, tmp_path):
@@ -620,3 +636,143 @@ def test_codegen_cache_holds_a_search_pass(spark, reg, sf_dir, tmp_path):
     compiles = metrics.METRIC_COMPILATION_TIME().getCount()
     reg[searches[0]].run(spark, sf_dir).collect()
     assert metrics.METRIC_COMPILATION_TIME().getCount() == compiles
+
+
+# --- a new search window compiles nothing --------------------------------------
+# Windows no other test searches, so each is new to the session's codegen
+# cache.  At sf0.001 every search below finds customer_2 events in the
+# first two, and AllowedOutboundTraffic in all three: AQE plans an empty
+# result differently.  Before START/STOP became DECIMAL(18,0) µs bounds,
+# each new window compiled the scan stage again: 2 classes per raw-event
+# search.
+_NEW_WINDOWS = [
+    ("2024-01-01 05:00:00", "2024-01-11 05:00:00"),
+    ("2024-01-11 05:00:00", "2024-01-21 05:00:00"),
+    ("2024-01-21 05:00:00", "2024-01-31 05:00:00"),
+]
+
+
+def _window(i):
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import DEFAULT_PARAMS
+
+    start, stop = _NEW_WINDOWS[i]
+    return dict(
+        DEFAULT_PARAMS, customer_name="customer_2", start_time=start, stop_time=stop
+    )
+
+
+def _compiles(spark):
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _assert_new_window_compiles_nothing(spark, name, search):
+    """``search(params)`` is a DataFrame.  At a second new window it
+    compiles no class, and every stage's source equals the first
+    window's."""
+    first = search(_window(0))
+    first.collect()
+    before = _compiles(spark)
+    second = search(_window(1))
+    second.collect()
+    assert _compiles(spark) - before == 0, name
+    assert _stage_bodies(second) == _stage_bodies(first), name
+
+
+def test_new_window_compiles_nothing(spark, reg, sf_dir, served_fe):
+    """The 17 searches of :func:`test_search_methods_fit_the_jit`: the AQL
+    corpus over served qevents, and the routable aggregates through the
+    registry's frontend (one of those six carries a window)."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import AQL_CORPUS
+    from qradar_restapi_kafka_datapipeline_spark.entry_queries import (
+        AUTO_ROLLUP_AQL,
+        setup,
+    )
+
+    fe = setup(spark, sf_dir)
+    searches = {
+        q: (lambda p, aql=aql: served_fe.sql(aql, p)) for q, aql in AQL_CORPUS.items()
+    }
+    searches.update(
+        (n, lambda p, aql=aql: fe.sql(aql, p, auto_route=True))
+        for n, aql in AUTO_ROLLUP_AQL.items()
+    )
+    assert len(searches) == 17
+    for name, search in searches.items():
+        _assert_new_window_compiles_nothing(spark, name, search)
+
+
+def test_new_window_bound_and_last_compile_nothing(spark, served_fe):
+    """Bound parameters sit inside the same DECIMAL bounds, and ``LAST n``
+    over the engine clock folds to a new DECIMAL literal per call, so a
+    repeated ``LAST`` search compiles nothing either."""
+    from qradar_restapi_kafka_datapipeline_spark.aql_corpus import AQL_CORPUS
+
+    aql = AQL_CORPUS["AllowedOutboundTraffic"]
+    _assert_new_window_compiles_nothing(
+        spark, "sql_bound", lambda p: served_fe.sql_bound(aql, p)
+    )
+    last = (
+        "SELECT eventName, CAST(SUM(eventCount) AS BIGINT) AS total "
+        "FROM events WHERE magnitude > 3 GROUP BY eventName LAST 30 MINUTES"
+    )
+    _assert_new_window_compiles_nothing(
+        spark, "LAST", lambda _p: served_fe.sql(last)
+    )
+
+
+def test_new_window_pipeline_unit_compiles_nothing(spark, reg, tmp_path):
+    """One scheduled-run unit (search plus ``merge_rollup``) over the
+    derived qevents view.  The first two windows warm the first write of a
+    new sink and a merge into an existing one; the third compiles nothing
+    (2 classes with TIMESTAMP bounds)."""
+    from qradar_restapi_kafka_datapipeline_spark.pipeline import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "sinks"))
+
+    def unit(i):
+        start, stop = _NEW_WINDOWS[i]
+        runs = pipe.run_all(
+            ["customer_2"], start, stop, query_names=["AllowedOutboundTraffic"]
+        )
+        assert runs, f"window {i} wrote nothing"
+
+    unit(0)
+    unit(1)
+    before = _compiles(spark)
+    unit(2)
+    assert _compiles(spark) - before == 0
+
+
+def test_day_pruned_scan_new_window_keeps_date_partition_filters(spark, reg, sf_dir):
+    """The day-partitioned scan keeps constant DATE PartitionFilters (they
+    prune at file listing, outside the generated code), and a second window
+    generates the same stages."""
+    from qradar_restapi_kafka_datapipeline_spark.plans.aql import AQLFrontend
+
+    reg["aql_day_pruned_scan"].run(spark, sf_dir)  # registers qevents_day
+    fe = AQLFrontend(spark, events_view="qevents_day", partition_col="event_date")
+    aql = (
+        "SELECT eventName, CAST(SUM(eventCount) AS BIGINT) AS total FROM events "
+        "GROUP BY eventName START '{start_time}' STOP '{stop_time}'"
+    )
+    for i, (start, _stop) in enumerate(_NEW_WINDOWS[:2]):
+        plan = _formatted_plan(fe.sql(aql, _window(i)))
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and re.search(rf"event_date#\d+ >= {start[:10]}\)", m.group(1)), plan
+    _assert_new_window_compiles_nothing(
+        spark, "aql_day_pruned_scan", lambda p: fe.sql(aql, p)
+    )
+
+
+def test_fullnetworkname_guards_contiguous_domains_with_between():
+    """A guard over a contiguous run of domains is one BETWEEN; any other
+    domain set keeps its IN list."""
+    from qradar_restapi_kafka_datapipeline_spark.plans.dialect import (
+        fullnetworkname_expr,
+    )
+
+    expr = fullnetworkname_expr("ip", domain_col="d")
+    assert "CAST(d AS BIGINT) BETWEEN 0 AND 4 AND" in expr
+    assert "CAST(d AS BIGINT) IN (0, 3, 4) AND" in expr  # 10.64/10: not in 1, 2
+    assert "CAST(d AS BIGINT) IN (1) AND" in expr

@@ -50,6 +50,22 @@ def test_hll_estimate_within_error_band(spark, ev):
     assert abs(row["distinct_est"] - exact) / exact <= 3 * 1.04 / m ** 0.5
 
 
+def test_hll_estimate_over_no_registers(run_both):
+    """One estimator serves both forms: without a group key an empty
+    register relation still gives its one ``m`` row (every register zero),
+    with one it gives no group row, in both engines."""
+    regs = ("bucket BIGINT, r INT", [(0, 1)])
+    empty = "SELECT * FROM {regs} WHERE r < 0"
+    whole = run_both(K.hll_estimate_sql("spark", empty), regs=regs)
+    assert whole[0] == whole[1]
+    assert [row[:2] for row in whole[0]] == [(1 << K.HLL_P, 1 << K.HLL_P)]
+    by_day = f"SELECT 0 AS day_id, * FROM ({empty})"
+    grouped = run_both(
+        K.hll_estimate_sql("spark", by_day, group_col="day_id"), regs=regs
+    )
+    assert grouped == ([], [])
+
+
 def test_hll_merged_halves_equal_whole_corpus_registers(spark, ev):
     whole = spark.sql(K.hll_registers_sql("spark")).collect()
     merged = spark.sql(K.hll_merged_halves_registers_sql("spark")).collect()
